@@ -17,9 +17,9 @@ first (wordcount, the cheapest shuffle there is), after which every
 training round touches only |vocab| rows.  Per round: one map-side-
 combining pair count (≤ |vocab|·max_word_len rows pre-combine), one
 1-row argmax collect, one narrow fold.  The driver holds the merge
-table (n_merges rows) — never data.  Rounds materialize via
-operators/materialize.py so the plan stays round-sized instead of
-accumulating n_merges nested folds.
+table (n_merges rows) — never data.  The training loop is
+operators/fixpoint.py's, pinning every few rounds so the plan stays
+chunk-sized instead of accumulating n_merges nested folds.
 
 Determinism: the argmax tiebreak is (count DESC, left ASC, right ASC)
 — total order, so any partitioning/any engine learns the identical
@@ -40,7 +40,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from event_streaming_spark.operators.fixpoint import Round, iterate
 from event_streaming_spark.operators.materialize import materialize
+
+#: Merges chained UNMATERIALIZED between pins.  _merge_once is a
+#: vocabulary-sized narrow fold — exactly what bpe_encode chains n_merges
+#: deep in ONE expression — so re-deriving ≤3 folds inside the next argmax
+#: job is far cheaper than a checkpoint job per merge (graph.py's
+#: _PR_CHUNK device).
+_TRAIN_CHUNK = 4
 
 
 def chars(c: Column) -> Column:
@@ -104,33 +112,25 @@ def bpe_train(
         name="bpe-syms",
     )
     merges: list[tuple[int, str, str, int]] = []
-    # Merges CHAIN unmaterialized between argmax jobs (r12): _merge_once
-    # is a vocabulary-sized narrow fold — exactly what bpe_encode already
-    # chains n_merges deep in ONE expression — so re-deriving ≤3 folds
-    # inside the next argmax job is far cheaper than the per-round
-    # checkpoint job the r11 loop paid (2 driver-synchronized jobs per
-    # merge → 1, plus one pin per chunk).  Lineage is cut every
-    # _TRAIN_CHUNK rounds so the plan stays chunk-sized, mirroring
-    # graph.py's _PR_CHUNK device.
-    _TRAIN_CHUNK = 4
-    since_pin = 0
-    for step in range(1, n_merges + 1):
+
+    def step(syms: DataFrame, rnd: int) -> Round:
+        # the argmax first() is the round's convergence read
         best = (
             pair_counts(syms)
             .orderBy(F.desc("cnt"), F.asc("l"), F.asc("r"))
             .first()
         )
         if best is None or best["cnt"] < min_count:
-            break
+            return Round(syms, done=True)
         l, r = best["l"], best["r"]
-        merges.append((step, l, r, int(best["cnt"])))
-        syms = syms.select(_merge_once(F.col("s"), l, r).alias("s"), "wc")
-        since_pin += 1
-        if since_pin == _TRAIN_CHUNK and step < n_merges:
-            # the post-final-merge state is never read (only the merge
-            # TABLE is returned), so the last chunk needs no pin at all
-            syms = materialize(syms, name=f"bpe-round-{step}")
-            since_pin = 0
+        merges.append((rnd + 1, l, r, int(best["cnt"])))
+        return Round(syms.select(_merge_once(F.col("s"), l, r).alias("s"), "wc"))
+
+    # the post-final-merge state is never read (only the merge TABLE is
+    # returned), so it is dropped unpinned
+    iterate(
+        "bpe-round", syms, step, max_rounds=n_merges, pin_every=_TRAIN_CHUNK, bound="contract"
+    )
     return merges
 
 

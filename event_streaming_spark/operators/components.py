@@ -12,27 +12,22 @@ its own and its neighbors' labels.  Converges in O(component diameter)
 rounds; near-dup clusters are shallow (dozens of docs, diameter ≲ 5), so
 3-4 rounds in practice.  Per round: one shuffle join (edges ⋈ labels on
 src) + one shuffle agg (min per node) — both partition on the same key,
-so AQE coalesces.  Each round is pinned via the pluggable materializer
-(operators/materialize.py) to truncate lineage (without it the plan
-doubles per iteration and the job dies at scale); the ``table`` strategy
-makes the rounds fault-tolerant on a real cluster.
+so AQE coalesces.  The loop, its pins, its observed convergence metric
+and its safety cap are operators/fixpoint.py's.
 
-Convergence detection is O(1) driver-side: labels only ever decrease, so
-the label set changes until fixpoint; an unchanged (count,
-bit_xor-of-xxhash64) checksum ⇒ no label moved ⇒ done (type-safe for any
-orderable node id and overflow-free under ANSI mode, unlike a plain
-SUM).  For graphs with pathological diameters
-(long chains — not a dedup shape) the literature fix is the
-large-star/small-star contraction (Kiveris et al., "Connected Components
-in MapReduce and Beyond"), which converges in O(log²n); the loop below
-accepts the same edge input, so swapping the step is local.
+For graphs with pathological diameters (long chains — not a dedup
+shape) the literature fix is the large-star/small-star contraction
+(Kiveris et al., "Connected Components in MapReduce and Beyond"), which
+converges in O(log²n); it accepts the same edge input (below).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from event_streaming_spark.operators.fixpoint import Round, iterate, pin_observed
+from event_streaming_spark.operators.graph import symmetrized
 from event_streaming_spark.operators.materialize import materialize
 
 
@@ -66,34 +61,18 @@ def connected_components(
     extra hop is one equi-join over the (node-count-sized) label frame.
     """
     n_col = nodes.columns[0]
-    s_col, d_col = edges.columns[0], edges.columns[1]
-    # Symmetrize with ONE evaluation of the edge subplan (in near-dup
-    # callers that subplan is the whole LSH candidate pipeline): each raw
-    # edge explodes into both directions inside the same pass, so the
-    # former pin-then-union-then-pin (2 materialization jobs + 1 count
-    # job) collapses to a single pinned job whose edge count rides along
-    # as an OBSERVED metric (r11: 3 setup jobs → 1; guide §1.2 remove
-    # passes first).
-    obs = Observation("cc-n-edges")
-    bidir = materialize(
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(s_col).alias("src"), F.col(d_col).alias("dst")),
-                    F.struct(F.col(d_col).alias("src"), F.col(s_col).alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .distinct()
-        .observe(obs, F.count(F.lit(1)).alias("n")),
+    # One evaluation of the edge subplan (in near-dup callers it is the
+    # whole LSH candidate pipeline), one pin job, edge count observed on it.
+    bidir, m = pin_observed(
+        symmetrized(edges, edges.columns[0], edges.columns[1]).distinct(),
         "cc-edges",
+        F.count(F.lit(1)).alias("n"),
     )
     # Size every iteration shuffle to the measured edge volume, clamped
     # to the cluster's parallelism band — small graphs stop paying
     # per-task floors 2×/round, huge ones get partitions that fit in
     # executor memory.
-    n_edges = obs.get["n"]
+    n_edges = m["n"]
     sc = bidir.sparkSession.sparkContext
     p = int(max(2, min(sc.defaultParallelism * 4, n_edges // _CC_ROWS_PER_PARTITION + 2)))
     bidir = materialize(bidir.repartition(p, "src"), "cc-edges")
@@ -129,13 +108,8 @@ def connected_components(
         ``track_changes=True`` (the round's FINAL step): each node's
         pre-step label rides the aggregate as ``__old`` (the labels
         branch has exactly one row per node, so max() recovers it; the
-        min-label candidates carry NULL), and the step's changed-node
-        count is returned alongside for the caller to observe.  A step
-        that changes nothing IS the fixpoint (labels only decrease), so
-        observing the last step's change count stops the loop the moment
-        any step is an identity — up to one whole materialized round
-        earlier than the r11 across-round checksum, which could only
-        compare round OUTPUTS (guide §1.2: remove passes/rounds first).
+        min-label candidates carry NULL), so the round can count the
+        nodes this step changed.
         """
         if identity:
             nbr = bidir.select(F.col("dst").alias("node"), F.col("src").alias("component"))
@@ -167,47 +141,30 @@ def connected_components(
             .agg(*agg_cols)
         )
 
-    for rnd in range(max_iters):
+    def round_(labels: DataFrame, rnd: int) -> Round:
         # TWO propagation steps per materialized round: the per-round
-        # fixed floors (localCheckpoint job, AQE sub-jobs per exchange,
-        # driver analysis) dominate wall clock on every catalog graph —
-        # measured ~10 driver jobs per materialized round vs ~0.1 s of
-        # actual task work — so halving the materialization count nearly
-        # halves the loop's wall (guide §1.2: fix the pass structure
-        # first).  The middle step stays unmaterialized inside the same
-        # job; its repartition exchange is canonical-identical across
-        # its three consumers, so ReuseExchange computes it once.
-        #
-        # Convergence is the FINAL step's exact changed-label count,
-        # riding the materialization job as an OBSERVED metric
-        # (CollectMetrics over the aggregated rows — one job per round,
-        # no second action): a propagation step that changes no label IS
-        # the fixpoint (labels only decrease), so the loop stops the
-        # round convergence happens instead of paying an extra
-        # confirmation round for an across-round checksum to turn equal
-        # (r12; the r11 checksum always ran one round past fixpoint).
+        # fixed floors (pin job, AQE sub-jobs per exchange, driver
+        # analysis) dominate wall clock on every catalog graph, so
+        # halving the pin count nearly halves the loop's wall.  The
+        # middle step stays unmaterialized inside the same job; its
+        # repartition exchange is canonical-identical across its three
+        # consumers, so ReuseExchange computes it once.  Convergence is
+        # the FINAL step's exact changed-label count: a step that changes
+        # no label IS the fixpoint (labels only decrease).
+        labels = labels.select("node", "component")
         cand = _step(
             _step(labels, with_hop=rnd >= 1, identity=rnd == 0),
             with_hop=True,
             track_changes=True,
         )
-        obs = Observation(f"cc-chg-{rnd}")
-        new_labels = materialize(
-            cand.observe(
-                obs,
-                F.sum(
-                    (
-                        F.col("__old").isNull()
-                        | (F.col("component") < F.col("__old"))
-                    ).cast("long")
-                ).alias("n_changed"),
-            ).select("node", "component"),
-            "cc-labels",
-        )
-        labels = new_labels
-        if (obs.get["n_changed"] or 0) == 0:
-            break
-    return labels
+        changed = F.sum(
+            (F.col("__old").isNull() | (F.col("component") < F.col("__old"))).cast("long")
+        ).alias("n_changed")
+        return Round(cand, changed, lambda m: not m["n_changed"])
+
+    return iterate("cc-labels", labels, round_, max_rounds=max_iters, bound="cap").select(
+        "node", "component"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -274,44 +231,28 @@ def connected_components_star(
     with component = min reachable node id — but O(log² n) rounds on
     pathological diameters.  Convergence: the canonical edge list is a
     fixpoint of both operations exactly when every component is a star
-    centered at its min node; detected with an O(1)-driver checksum
-    (count + xxhash64 sum), each round pinned via the materializer.
+    centered at its min node; detected by an unchanged (count,
+    bit_xor-of-xxhash64) checksum of the edge list — type-safe for any
+    orderable node id and overflow-free under ANSI mode.
     """
     n_col = nodes.columns[0]
     s_col, d_col = edges.columns[0], edges.columns[1]
-    # The initial checksum rides the canonicalization job as an observed
-    # metric (r11: one setup job instead of two — the same move the loop
-    # below already makes per round).
-    obs0 = Observation("ccstar-sig-init")
-    cur = materialize(
-        _canon(edges.select(F.col(s_col).alias("a"), F.col(d_col).alias("b"))).observe(
-            obs0,
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("lo", "hi")).alias("h"),
-        ),
+    sig = (F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("lo", "hi")).alias("h"))
+    cur, prev = pin_observed(
+        _canon(edges.select(F.col(s_col).alias("a"), F.col(d_col).alias("b"))),
         "ccstar-edges",
+        *sig,
     )
-    m0 = obs0.get
-    prev = (m0["n"], m0["h"])
-    for rnd in range(max_iters):
-        # Checksum observed during the materialization job itself (one
-        # job per round, not two) — same count+bit_xor values, collected
-        # as CollectMetrics over the contracted edge rows (the identical
-        # move as connected_components' loop; guide §1.2: remove passes).
-        obs = Observation(f"ccstar-sig-{rnd}")
-        cur = materialize(
-            _small_star(_large_star(cur)).observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.bit_xor(F.xxhash64("lo", "hi")).alias("h"),
-            ),
-            "ccstar-edges",
-        )
-        m = obs.get
-        sig = (m["n"], m["h"])
-        if sig == prev:
-            break
-        prev = sig
+
+    def step(cur: DataFrame, _rnd: int) -> Round:
+        def unchanged(m: dict) -> bool:
+            nonlocal prev
+            same, prev = m == prev, m
+            return same
+
+        return Round(_small_star(_large_star(cur)), sig, unchanged)
+
+    cur = iterate("ccstar-edges", cur, step, max_rounds=max_iters, bound="cap")
 
     # Converged: each component is a star (center = min id = lo side).
     # Same contract as connected_components: endpoints that appear only

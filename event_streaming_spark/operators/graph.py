@@ -24,14 +24,19 @@ is ≤ outdeg ulps per node per round — irrelevant for ranking.
 Scale shape: each round is one shuffle join (ranks ⋈ edges on src) and
 one shuffle agg (sum per dst) — the same shape as a round of label
 propagation (components.py), partitioned on the same key so AQE
-coalesces; rounds are fixed (iters), not data-dependent.
+coalesces; rounds are fixed (iters), not data-dependent.  Every loop in
+this module runs through operators/fixpoint.py, which owns pinning,
+observed convergence metrics and what running out of rounds means.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from event_streaming_spark.operators.fixpoint import Round, iterate, pin_observed
 from event_streaming_spark.operators.materialize import materialize
 
 SCALE = 1_000_000
@@ -49,23 +54,68 @@ BASE = ((DAMP_DEN - DAMP_NUM) * SCALE) // DAMP_DEN
 _PR_CHUNK = 4
 
 
-def _symmetrized(edges: DataFrame, s: str, d: str, directed: bool) -> DataFrame:
-    """``(src, dst)`` projection of ``edges``; undirected graphs get both
-    directions from ONE evaluation of the edge subplan — explode a 2-array
-    of structs instead of union-ing two references to the subplan (which
-    would re-run it, or force an extra pin job before the union)."""
+def symmetrized(
+    edges: DataFrame, s: str, d: str, directed: bool = False, **carry: str
+) -> DataFrame:
+    """``(src, dst, *carry)`` projection of ``edges``, where ``carry`` maps
+    an output name to an input column copied onto both directions (an
+    edge weight).  Undirected graphs get both directions from ONE
+    evaluation of the edge subplan — explode a 2-array of structs instead
+    of union-ing two references to the subplan (which would re-run it, or
+    force an extra pin job before the union)."""
+    extra = [F.col(c).alias(k) for k, c in carry.items()]
     if directed:
-        return edges.select(F.col(s).alias("src"), F.col(d).alias("dst"))
+        return edges.select(F.col(s).alias("src"), F.col(d).alias("dst"), *extra)
     return (
         edges.select(
             F.explode(
                 F.array(
-                    F.struct(F.col(s).alias("src"), F.col(d).alias("dst")),
-                    F.struct(F.col(d).alias("src"), F.col(s).alias("dst")),
+                    F.struct(F.col(s).alias("src"), F.col(d).alias("dst"), *extra),
+                    F.struct(F.col(d).alias("src"), F.col(s).alias("dst"), *extra),
                 )
             ).alias("e")
-        ).select("e.src", "e.dst")
+        ).select("e.src", "e.dst", *(f"e.{k}" for k in carry))
     )
+
+
+def _ranked(
+    base: DataFrame, e: DataFrame, iters: int, init: Column, teleport: Column, name: str
+) -> DataFrame:
+    """The exact-integer PageRank loop shared by PageRank and PPR.
+
+    ``base``: the pinned node universe (its columns are carried);
+    ``e``: the pinned ``(src, dst)`` edges.  The new rank is ``teleport``
+    plus the damped contribution — it never reads the old rank directly —
+    so each round references the previous ranks frame exactly once and
+    rounds chain unmaterialized (_PR_CHUNK).  The final frame is pinned
+    so every consumer (often several joins downstream) reads a
+    checkpoint, not the unrolled chain."""
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+
+    def step(ranks: DataFrame, _rnd: int) -> Round:
+        contrib = (
+            ranks.join(deg, ranks.node == deg.src, "inner")
+            .select("src", F.expr("pr_scaled div outdeg").alias("c"))
+            .join(e, "src")
+            .groupBy("dst")
+            .agg(F.sum("c").alias("s"))
+        )
+        damped = F.expr(f"({DAMP_NUM} * coalesce(s, 0)) div {DAMP_DEN}")
+        return Round(
+            base.join(contrib, base.node == contrib.dst, "left").select(
+                *base.columns, (teleport + damped).cast("long").alias("pr_scaled")
+            )
+        )
+
+    ranks = iterate(
+        name,
+        base.withColumn("pr_scaled", init.cast("long")),
+        step,
+        max_rounds=iters,
+        pin_every=_PR_CHUNK,
+        bound="contract",
+    )
+    return materialize(ranks, name)
 
 
 def pagerank_integer(
@@ -85,38 +135,9 @@ def pagerank_integer(
     # the whole LSH candidate pipeline) and ONE materialization job: the
     # bidirectional expansion rides the same pass as explode(array(fwd,
     # rev)) instead of pin-then-union-then-pin (r11: 2 setup jobs → 1).
-    e = materialize(_symmetrized(edges, s, d, directed).distinct(), "pr-edges")
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # Pin the node universe once: the per-iteration update joins IT (the
-    # new rank is BASE + damped contribution — it never reads the old
-    # rank directly), so the previous ranks frame is referenced exactly
-    # once per iteration (inside contrib) and iterations chain
-    # unmaterialized (see _PR_CHUNK) — r12: 3 per-iteration checkpoint
-    # jobs + driver gaps removed from every catalog caller.
+    e = materialize(symmetrized(edges, s, d, directed).distinct(), "pr-edges")
     univ = materialize(nodes.select(F.col(n_col).alias("node")), "pr-nodes")
-    ranks = univ.withColumn("pr_scaled", F.lit(SCALE).cast("long"))
-    for it in range(iters):
-        contrib = (
-            ranks.join(deg, ranks.node == deg.src, "inner")
-            .select("src", F.expr("pr_scaled div outdeg").alias("c"))
-            .join(e, "src")
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = univ.join(contrib, univ.node == contrib.dst, "left").select(
-            "node",
-            (
-                F.lit(BASE)
-                + F.expr(f"({DAMP_NUM} * coalesce(s, 0)) div {DAMP_DEN}")
-            ).cast("long").alias("pr_scaled"),
-        )
-        if (it + 1) % _PR_CHUNK == 0 or it + 1 == iters:
-            # middle iterations chain unmaterialized; the FINAL frame is
-            # pinned so every consumer (often several joins downstream)
-            # reads a checkpoint, not the whole unrolled chain (r12:
-            # 3 checkpoint jobs/run -> 1)
-            ranks = materialize(ranks, "pr-ranks")
-    return ranks
+    return _ranked(univ, e, iters, F.lit(SCALE), F.lit(BASE), "pr-ranks")
 
 
 def sql_pagerank_integer(
@@ -170,48 +191,18 @@ def ppr_integer(
     Non-seed sinks decay toward 0; mass concentrates around the seeds'
     neighborhoods.  Every op is int64, bit-identical across engines.
     """
-    # one evaluation of the edge-producing subplan, one setup job: see
-    # _symmetrized (r11)
     e = materialize(
-        _symmetrized(edges, edges.columns[0], edges.columns[1], directed).distinct(),
+        symmetrized(edges, edges.columns[0], edges.columns[1], directed).distinct(),
         "ppr-edges",
     )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # Pinned node universe + once-per-iteration ranks reference, exactly
-    # as pagerank_integer: iterations chain unmaterialized (_PR_CHUNK),
-    # so the default 4-iteration schedule runs with zero per-iteration
-    # checkpoint jobs (r12).
     base = materialize(
         nodes.select(
             F.col("node"), F.col("is_seed").cast("long").alias("is_seed")
         ),
         "ppr-nodes",
     )
-    ranks = base.withColumn(
-        "pr_scaled", (F.col("is_seed") * SCALE).cast("long")
-    )
-    for it in range(iters):
-        contrib = (
-            ranks.join(deg, ranks.node == deg.src, "inner")
-            .select("src", F.expr("pr_scaled div outdeg").alias("c"))
-            .join(e, "src")
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = base.join(contrib, base.node == contrib.dst, "left").select(
-            "node",
-            "is_seed",
-            (
-                F.col("is_seed") * F.lit(BASE)
-                + F.expr(f"({DAMP_NUM} * coalesce(s, 0)) div {DAMP_DEN}")
-            )
-            .cast("long")
-            .alias("pr_scaled"),
-        )
-        if (it + 1) % _PR_CHUNK == 0 or it + 1 == iters:
-            # same device as pagerank_integer: chain middles, pin the end
-            ranks = materialize(ranks, "ppr-ranks")
-    return ranks
+    seed = F.col("is_seed")
+    return _ranked(base, e, iters, seed * SCALE, seed * F.lit(BASE), "ppr-ranks")
 
 
 def sql_ppr_integer(
@@ -357,48 +348,37 @@ def bfs_layers(
     Scale shape: textbook frontier BFS as joins — each round is ONE
     equi-join (frontier ⋈ edges on src), a distinct (shuffle bounded by
     the frontier's neighborhood, never the graph), and a left-anti
-    against the visited set; each LAYER is pinned through the
-    fault-tolerant materializer so round k+1 reads round k's output, not
-    its lineage, while ``visited`` stays an UNPINNED union of the pinned
-    layers (re-reading the union costs no recompute; its anti-join plan
-    grows linearly with depth).  Rounds are bounded by ``max_depth``;
-    the convergence probe is the layer's row count, observed on the
-    materialization job itself (no extra action per round).  Exact
-    integer distances: bit-identical on any partitioning/engine.
+    against the visited set.  Each LAYER is the pinned round state, and
+    ``visited`` stays an UNPINNED union of the pinned layers (re-reading
+    the union costs no recompute; its anti-join plan grows linearly with
+    depth).  The loop ends at ``max_depth`` or at the first empty layer.
+    Exact integer distances: bit-identical on any partitioning/engine.
     """
     s, d = edges.columns[0], edges.columns[1]
-    # one evaluation of the edge subplan, one setup job (r11): see
-    # _symmetrized
-    e = materialize(_symmetrized(edges, s, d, directed).distinct(), "bfs-edges")
+    e = materialize(symmetrized(edges, s, d, directed).distinct(), "bfs-edges")
     n_col = seeds.columns[0]
-    visited = materialize(
+    layers: list[DataFrame] = []
+
+    def step(frontier: DataFrame, rnd: int) -> Round:
+        layers.append(frontier)
+        nxt = (
+            frontier.join(e, frontier["node"] == e["src"])
+            .select(F.col("dst").alias("node"))
+            .distinct()
+            .join(reduce(DataFrame.union, layers).select("node"), "node", "left_anti")
+            .withColumn("dist", F.lit(rnd + 1).cast("int"))
+        )
+        return Round(nxt, F.count(F.lit(1)).alias("n"), lambda m: m["n"] == 0)
+
+    layer0 = materialize(
         seeds.select(F.col(n_col).alias("node")).distinct().withColumn(
             "dist", F.lit(0).cast("int")
         ),
         "bfs-layer0",
     )
-    frontier = visited.select("node")
-    for depth in range(1, max_depth + 1):
-        # The emptiness probe rides the layer's materialization job as an
-        # observed count, and the growing visited set stays an UNPINNED
-        # union of already-pinned layers (each piece is a checkpoint, so
-        # re-reading the union costs no recompute) — 3 jobs/round → 1
-        # (r11; guide §1.2 remove passes first).
-        obs = Observation(f"bfs-n{depth}")
-        nxt = materialize(
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(depth).cast("int"))
-            .observe(obs, F.count(F.lit(1)).alias("n")),
-            f"bfs-layer{depth}",
-        )
-        if obs.get["n"] == 0:
-            break
-        visited = visited.union(nxt)
-        frontier = nxt.select("node")
-    return visited
+    last = iterate("bfs-layer", layer0, step, max_rounds=max_depth, bound="contract")
+    # a sweep that stopped before max_depth stopped on an empty layer
+    return reduce(DataFrame.union, layers + ([last] if len(layers) == max_depth else []))
 
 
 # ---------------------------------------------------------------------------
@@ -417,65 +397,60 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
     Scale shape: each peeling round is one degree aggregate over the
     surviving edge set plus two semi-joins to drop edges touching peeled
     nodes — all key-partitioned shuffles, no windows.  Rounds end when a
-    round peels nothing (O(1) driver count check on the pinned degree
-    frame); ``max_rounds`` bounds pathological chains.  Deterministic:
-    peeling is order-independent (the k-core is unique), so any
-    partitioning/engine yields the same node set.
+    round drops no edge; ``max_rounds`` is a safety cap for pathological
+    chains.  Deterministic: peeling is order-independent (the k-core is
+    unique), so any partitioning/engine yields the same node set.
     """
     s, d = edges.columns[0], edges.columns[1]
-    # one evaluation of the edge subplan, one setup job (r11): see
-    # _symmetrized (self-loops dropped before the expansion).  The
-    # initial edge count rides the setup pin as an observed metric —
-    # it seeds the edge-count fixpoint test below.
-    obs0 = Observation("kcore-n-init")
-    e = materialize(
-        _symmetrized(
-            edges.where(F.col(s) != F.col(d)), s, d, directed=False
-        )
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n")),
+    n_edges = F.count(F.lit(1)).alias("n")
+    # self-loops dropped before the expansion; the initial edge count
+    # seeds the edge-count fixpoint test below
+    e, m0 = pin_observed(
+        symmetrized(edges.where(F.col(s) != F.col(d)), s, d).distinct(),
         "kcore-edges",
+        n_edges,
     )
-    prev_edges = obs0.get["n"] or 0
-    for rnd in range(max_rounds):
-        # ONE materialized job per peeling round (r12; was two — a deg
-        # pin plus an edge pin): the degree aggregate feeds both
-        # semi-joins unmaterialized (its exchange subplans are
-        # canonical-identical, so ReuseExchange computes it once inside
-        # the job), and convergence is the EDGE-COUNT fixpoint observed
-        # on the round's own materialization — peeling is monotone, so
-        # a round that drops zero edges dropped zero nodes and the
-        # surviving subgraph IS the k-core (every src of the
-        # symmetrized fixpoint has degree ≥ k by construction).
-        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        keep = deg.where(F.col("deg") >= k).select("src")
-        obs = Observation(f"kcore-n{rnd}")
-        e = materialize(
+    prev = m0["n"] or 0
+
+    def degrees(e: DataFrame) -> DataFrame:
+        return e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+
+    def step(e: DataFrame, _rnd: int) -> Round:
+        # The degree aggregate feeds both semi-joins unmaterialized (its
+        # exchange subplans are canonical-identical, so ReuseExchange
+        # computes it once).  Peeling is monotone, so a round that drops
+        # zero edges dropped zero nodes: the surviving subgraph IS the
+        # k-core.
+        keep = degrees(e).where(F.col("deg") >= k).select("src")
+
+        def peeled_nothing(m: dict) -> bool:
+            nonlocal prev
+            n, last = m["n"] or 0, prev
+            prev = n
+            return n in (0, last)
+
+        return Round(
             e.join(keep, "src", "left_semi")
-            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .observe(obs, F.count(F.lit(1)).alias("n")),
-            f"kcore-e{rnd}",
+            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi"),
+            n_edges,
+            peeled_nothing,
         )
-        n = obs.get["n"] or 0
-        if n == 0:
-            return e.select(F.col("src").alias("node")).distinct()
-        if n == prev_edges:
-            return e.select(F.col("src").alias("node")).distinct().orderBy("node")
-        prev_edges = n
-    # max_rounds exhausted without a fixpoint: the surviving edge set may
-    # still contain nodes of degree < k, so returning its node set verbatim
-    # would be a silently wrong "k-core" (ADVICE r4).  Apply one final
-    # degree filter.  One-sided guarantee (r5 ADVICE correction): the
-    # result is an OVER-approximation — a SUPERSET of the exact k-core —
-    # because the k-core survives every peeling round, so each true core
-    # node's degree in the surviving subgraph is ≥ its in-core degree ≥ k
-    # and the filter keeps it.  (It is NOT an under-approximation: the
-    # filter may also keep nodes the next peeling rounds would remove.)
-    # Callers that need the exact fixpoint raise max_rounds; each round
-    # strictly shrinks the node set, so #rounds ≤ graph degeneracy chain
-    # length and 50 covers any realistic near-dup graph.
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    return deg.where(F.col("deg") >= k).select(F.col("src").alias("node")).orderBy("node")
+
+    e = iterate("kcore-edges", e, step, max_rounds=max_rounds, bound="cap")
+    # At the fixpoint every surviving node has degree ≥ k and the final
+    # degree filter keeps them all.  When max_rounds runs out first the
+    # surviving edge set may still hold nodes of degree < k, so returning
+    # its node set verbatim would be a silently wrong "k-core" (ADVICE
+    # r4); the filter makes the answer a one-sided OVER-approximation — a
+    # SUPERSET of the exact k-core — because the k-core survives every
+    # peeling round, so each true core node's degree in the surviving
+    # subgraph is ≥ its in-core degree ≥ k.  (The filter may also keep
+    # nodes the next peeling rounds would remove.)  Callers that need the
+    # exact fixpoint raise max_rounds; each round strictly shrinks the
+    # node set, so 50 covers any realistic near-dup graph.
+    return (
+        degrees(e).where(F.col("deg") >= k).select(F.col("src").alias("node")).orderBy("node")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -503,64 +478,40 @@ def sssp_bounded(
 
     Scale shape: each round is one equi-join (dist ⋈ edges on src) and
     one min-aggregate on node — key-partitioned shuffles bounded by the
-    edge list, no windows; every round pins through the fault-tolerant
-    materializer; the convergence probe is an O(1) count of improved
-    nodes.  Integer weights ⇒ bit-identical on any partitioning/engine.
+    edge list, no windows; the convergence metric is the count of
+    improved nodes.  Integer weights ⇒ bit-identical on any
+    partitioning/engine.
     """
     s, d, w = weighted_edges.columns[:3]
-    if directed:
-        fwd = weighted_edges.select(
-            F.col(s).alias("src"), F.col(d).alias("dst"), F.col(w).alias("w")
-        )
-    else:
-        # both directions from ONE evaluation of the (possibly heavy)
-        # edge subplan — the weighted twin of _symmetrized (r11)
-        fwd = weighted_edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(s).alias("src"), F.col(d).alias("dst"), F.col(w).alias("w")
-                    ),
-                    F.struct(
-                        F.col(d).alias("src"), F.col(s).alias("dst"), F.col(w).alias("w")
-                    ),
-                )
-            ).alias("e")
-        ).select("e.src", "e.dst", "e.w")
-    e = materialize(fwd.distinct(), "sssp-edges")
+    e = materialize(symmetrized(weighted_edges, s, d, directed, w=w).distinct(), "sssp-edges")
     n_col = seeds.columns[0]
-    dist = materialize(
-        seeds.select(F.col(n_col).alias("node")).distinct().withColumn(
-            "dist", F.lit(0).cast("long")
-        ),
-        "sssp-d0",
-    )
-    for t in range(1, rounds + 1):
+
+    def step(dist: DataFrame, _rnd: int) -> Round:
+        dist = dist.select("node", "dist")
         relax = (
             dist.join(e, dist["node"] == e["src"])
             .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
         )
-        # Convergence probe rides the round's materialization: each node's
-        # OLD distance travels through the min-aggregate (a node has at
-        # most one row in `dist`, so max() of the tagged copy recovers it;
-        # newly-reached nodes have old=NULL), and the improved-node count
-        # is an observed metric — 2 jobs/round → 1 (r11).
-        obs = Observation(f"sssp-chg{t}")
+        # each node's OLD distance travels through the min-aggregate (a
+        # node has at most one row in `dist`, so max() of the tagged copy
+        # recovers it; newly-reached nodes have old=NULL)
         agg = (
             dist.withColumn("old", F.col("dist"))
             .unionByName(relax.withColumn("old", F.lit(None).cast("long")))
             .groupBy("node")
             .agg(F.min("dist").alias("dist"), F.max("old").alias("old"))
-            .observe(
-                obs,
-                F.sum(
-                    (F.col("old").isNull() | (F.col("dist") < F.col("old"))).cast("long")
-                ).alias("changed"),
-            )
         )
-        nxt = materialize(agg, f"sssp-d{t}")
-        changed = obs.get["changed"] or 0
-        dist = nxt.select("node", "dist")
-        if changed == 0:
-            break
-    return dist
+        changed = F.sum(
+            (F.col("old").isNull() | (F.col("dist") < F.col("old"))).cast("long")
+        ).alias("changed")
+        return Round(agg, changed, lambda m: not m["changed"])
+
+    dist0 = materialize(
+        seeds.select(F.col(n_col).alias("node")).distinct().withColumn(
+            "dist", F.lit(0).cast("long")
+        ),
+        "sssp-d0",
+    )
+    return iterate("sssp-d", dist0, step, max_rounds=rounds, bound="contract").select(
+        "node", "dist"
+    )

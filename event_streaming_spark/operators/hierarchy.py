@@ -9,9 +9,8 @@ in ceil(log2 d) rounds — 20 shuffle rounds for a million-deep chain.
 Per round: self-join of the pointer table on ``ptr = node`` (both sides
 partition on the same key) + accumulate the hop distance.  Roots
 (parent = self or NULL) carry a fixed point, so converged nodes pass
-through unchanged; the driver-side convergence check is the count of
-unresolved nodes, O(1) per round via the same materialized frame the
-next round needs anyway.
+through unchanged; the convergence metric is the count of unresolved
+nodes, observed on the round's pin (operators/fixpoint.py).
 
 The DuckDB oracle for queries built on this is a plain WITH RECURSIVE
 walk — one definition of the hierarchy, two traversal strategies.
@@ -22,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from event_streaming_spark.operators.fixpoint import Round, iterate
 from event_streaming_spark.operators.materialize import materialize
 
 
@@ -46,25 +46,24 @@ def resolve_to_root(
         ),
         "hier-frame",
     )
-    for _ in range(max_rounds):
-        pending = f.filter(~F.col("done")).count()
-        if pending == 0:
-            break
+
+    def step(f: DataFrame, _rnd: int) -> Round:
         g = f.select(
             F.col("node").alias("g_node"),
             F.col("ptr").alias("g_ptr"),
             F.col("dist").alias("g_dist"),
             F.col("done").alias("g_done"),
         )
-        f = materialize(
-            f.join(g, f.ptr == g.g_node, "left").select(
-                "node",
-                F.when(F.col("done"), F.col("ptr")).otherwise(F.col("g_ptr")).alias("ptr"),
-                F.when(F.col("done"), F.col("dist"))
-                .otherwise(F.col("dist") + F.col("g_dist"))
-                .alias("dist"),
-                (F.col("done") | F.col("g_done")).alias("done"),
-            ),
-            "hier-frame",
+        nxt = f.join(g, f.ptr == g.g_node, "left").select(
+            "node",
+            F.when(F.col("done"), F.col("ptr")).otherwise(F.col("g_ptr")).alias("ptr"),
+            F.when(F.col("done"), F.col("dist"))
+            .otherwise(F.col("dist") + F.col("g_dist"))
+            .alias("dist"),
+            (F.col("done") | F.col("g_done")).alias("done"),
         )
+        pending = F.sum((~F.col("done")).cast("long")).alias("pending")
+        return Round(nxt, pending, lambda m: not m["pending"])
+
+    f = iterate("hier-frame", f, step, max_rounds=max_rounds, bound="cap")
     return f.select("node", F.col("ptr").alias("root"), F.col("dist").alias("depth"))

@@ -19,8 +19,8 @@ Two strategies:
   intermediate, which is small relative to the fact tables in every
   caller here.
 
-Selection: explicit ``strategy=`` argument, else the
-``SPARK_GRAFT_MATERIALIZER`` environment variable, else ``local``.
+Selection: the ``SPARK_GRAFT_MATERIALIZER`` environment variable, else
+``local``.
 """
 
 from __future__ import annotations
@@ -48,15 +48,12 @@ def _table_dir(df: DataFrame) -> str:
     return os.path.join(warehouse, "_materialized")
 
 
-def materialize(df: DataFrame, name: str = "intermediate", strategy: str | None = None) -> DataFrame:
+def materialize(df: DataFrame, name: str = "intermediate") -> DataFrame:
     """Pin ``df``'s contents (and therefore any nondeterministic values it
     carries, e.g. ``spark_partition_id()``) so later consumers all see the
     same rows without re-running its lineage."""
-    strategy = strategy or materializer_strategy()
-    if strategy == "local":
+    if materializer_strategy() == "local":
         return df.localCheckpoint(eager=True)
-    if strategy == "table":
-        path = os.path.join(_table_dir(df), f"{name}-{uuid.uuid4().hex[:12]}")
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
-    raise ValueError(f"unknown materializer strategy: {strategy!r}")
+    path = os.path.join(_table_dir(df), f"{name}-{uuid.uuid4().hex[:12]}")
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.parquet(path)

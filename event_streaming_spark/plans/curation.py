@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 
 from event_streaming_spark.functions.hashing import sql_stable_hash32, stable_hash32
 from event_streaming_spark.operators.components import connected_components
+from event_streaming_spark.operators.fixpoint import Round, iterate
+from event_streaming_spark.operators.graph import symmetrized
 from event_streaming_spark.operators.materialize import materialize
 from event_streaming_spark.functions.numeric import exact_avg, sql_exact_avg
 from event_streaming_spark.operators.text import (
@@ -789,19 +791,11 @@ SELECT node AS doc_id, label AS community FROM l3 ORDER BY doc_id
     tags=("llm", "dedup", "graph", "iterative"),
 )
 def graph_label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from event_streaming_spark.operators.materialize import materialize
-
     docs = load(spark, sf_dir, "documents").select("doc_id")
-    edges = minhash_lsh_near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    fwd = edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    bidir = materialize(
-        fwd.union(
-            fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct(),
-        name="lpa-edges",
-    )
-    labels = docs.select(F.col("doc_id").alias("node"), F.col("doc_id").alias("label"))
-    for _ in range(3):
+    edges = minhash_lsh_near_dup_pairs(spark, sf_dir)
+    bidir = materialize(symmetrized(edges, "doc_a", "doc_b").distinct(), name="lpa-edges")
+
+    def step(labels: DataFrame, _rnd: int) -> Round:
         votes = (
             bidir.join(labels, bidir.dst == labels.node)
             .groupBy(F.col("src"), F.col("label"))
@@ -813,13 +807,20 @@ def graph_label_propagation_communities(spark: SparkSession, sf_dir: str) -> Dat
             .where(F.col("rn") == 1)
             .select(F.col("src").alias("node"), F.col("label").alias("wlabel"))
         )
-        labels = materialize(
+        return Round(
             labels.join(winner, "node", "left").select(
                 "node", F.coalesce("wlabel", "label").alias("label")
-            ),
-            name="lpa-labels",
+            )
         )
-    return labels.select(
+
+    labels = iterate(
+        "lpa-labels",
+        docs.select(F.col("doc_id").alias("node"), F.col("doc_id").alias("label")),
+        step,
+        max_rounds=3,
+        bound="contract",
+    )
+    return materialize(labels, name="lpa-labels").select(
         F.col("node").alias("doc_id"), F.col("label").alias("community")
     ).orderBy("doc_id")
 

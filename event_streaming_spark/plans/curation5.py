@@ -163,7 +163,10 @@ def docs_exact_substring_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFr
     # positional table replaces the countDistinct aggregate PLUS the
     # join-back (which re-shuffled the corpus-linear sh frame by h a
     # second time).  Same task placement per h as the join's shuffle;
-    # per-task state is one hash's postings, bounded as before.
+    # per-task state is one hash's postings, bounded as before.  What the
+    # rewrite lost: AQE could split a hot h's skewed JOIN partition, and
+    # the aggregate leg had partial aggregation; a window partition is
+    # never split, so a very hot shingle hash runs on one task.
     wdup = Window.partitionBy("h")
     flagged = (
         sh.select("doc_id", "pos", "h")

@@ -183,7 +183,9 @@ def docs_prefix_filter_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFra
     # corpus-linear tok frame by sh twice (once under the aggregate,
     # once as the join probe); the window pays that exchange ONCE.
     # Each sh's rows (≤ one per doc, hs is array_distinct) share a task,
-    # the same placement the join's shuffle produced.
+    # the same placement the join's shuffle produced — but AQE could split
+    # a hot sh's skewed join partition and a window partition is never
+    # split, so a very common shingle now runs on one task.
     ranked = tok.withColumn(
         "dfc", F.count(F.lit(1)).over(Window.partitionBy("sh"))
     ).withColumn(
@@ -1755,8 +1757,8 @@ def text_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r5 (VERDICT r4 #3): oracle-paired via the fixed-round unroll.  The
 # query pins peeling to _KCORE_ROUNDS rounds on BOTH engines; after the
 # rounds each side emits the nodes with degree ≥ k in the surviving
-# subgraph (the same final filter operators/graph.py::k_core applies on
-# round exhaustion).  The two are then equal BY CONSTRUCTION whatever
+# subgraph (the same final filter operators/graph.py::k_core applies
+# after its loop: a no-op at the fixpoint, a superset on exhaustion).  The two are then equal BY CONSTRUCTION whatever
 # the data: if peeling converges at round j ≤ R the extra rounds no-op
 # on both sides, and if it doesn't both compute the identical R-round
 # function.  Peeling on observed LSH graphs converges in ≤3 rounds, so

@@ -23,10 +23,10 @@ Scale design notes:
   the ln() inputs are identical doubles derived from exact integers
   (cnt+1)/(total_c+V) — the tfidf precedent.  Ties break by class name.
 * TEXTRANK: co-occurrence edges (window ≤ 2 over the ORIGINAL token
-  sequence, per the TextRank paper) are built with a doc+position
-  equi-join — two shifted projections of the posexploded tokens, never
-  a quadratic self-join; both endpoints must clear a global frequency
-  floor, so the graph is vocabulary-sized.  The rank loop is the
+  sequence, per the TextRank paper) are built with lead() over each
+  document's position order — one doc_id exchange and a linear window
+  pass, never a quadratic self-join; both endpoints must clear a global
+  frequency floor, so the graph is vocabulary-sized.  The rank loop is the
   repo's exact-integer PageRank kernel (operators/graph.py) — int64
   recurrence, 3 fixed rounds, oracle unrolled as chained CTEs.
 
@@ -286,7 +286,7 @@ JOIN nodes nb ON nb.node = pairs.dst
 def text_textrank_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-25 TextRank keyphrases over the corpus co-occurrence graph.
 
-    Edge build is two shifted projections joined on (doc_id, pos) —
+    Edge build is a lead() window over each document's position order —
     linear in tokens, never a quadratic self-join; the graph (and the
     PageRank loop) is vocabulary-sized, independent of corpus scale.
     """

@@ -168,13 +168,24 @@ class TopicContext:
             events = [events]
         if self.agency.log_format == "parquet":
             return self._publish_rows_parquet(list(events))
-        fname = os.path.join(self.log_dir, f"pub-{time.time_ns()}-{uuid.uuid4().hex[:8]}.json")
-        tmp = fname + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            for e in events:
-                fh.write(json.dumps(e) + "\n")
-        os.rename(tmp, fname)  # atomic visibility for the file source
+
+        def write(tmp: str) -> None:
+            with open(tmp, "w", encoding="utf-8") as fh:
+                for e in events:
+                    fh.write(json.dumps(e) + "\n")
+
+        self._publish_file("json", write)
         return 0
+
+    def _publish_file(self, ext: str, write: Callable[[str], None]) -> None:
+        """Add one ``pub-*.<ext>`` file to the log, atomically: ``write``
+        fills a dot-prefixed temp file in the same directory (Spark's file
+        source skips ``.``/``_`` names, so a half-written file is never
+        read), then a same-directory rename publishes it."""
+        name = f"pub-{time.time_ns()}-{uuid.uuid4().hex[:8]}.{ext}"
+        tmp = os.path.join(self.log_dir, f".{name}.tmp")
+        write(tmp)
+        os.rename(tmp, os.path.join(self.log_dir, name))
 
     def _publish_rows_parquet(self, rows: list[dict]) -> int:
         """Driver-side parquet append for small dict publishes — no Spark
@@ -210,12 +221,8 @@ class TopicContext:
                     arr = pc.assume_timezone(arr, sess_tz)
             arrays.append(arr.cast(at))
             names.append(f.name)
-        fname = os.path.join(
-            self.log_dir, f"pub-{time.time_ns()}-{uuid.uuid4().hex[:8]}.parquet"
-        )
-        tmp = fname + ".tmp"
-        pq.write_table(pa.Table.from_arrays(arrays, names=names), tmp)
-        os.rename(tmp, fname)  # atomic visibility for the file source
+        table = pa.Table.from_arrays(arrays, names=names)
+        self._publish_file("parquet", lambda tmp: pq.write_table(table, tmp))
         return 0
 
     # -- O2 consume -------------------------------------------------------------

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import collections
 
+import pytest
 from pyspark.sql import functions as F
 
 from event_streaming_spark.operators.bpe import bpe_encode, bpe_train, pair_counts
@@ -69,6 +70,7 @@ def _words_df(spark, words: dict[str, int]):
     )
 
 
+@pytest.mark.filterwarnings("error::event_streaming_spark.operators.fixpoint.NotConverged")
 def test_bpe_matches_reference_simple(spark):
     words = {"lower": 5, "low": 7, "newest": 6, "widest": 3, "new": 2}
     got = bpe_train(_words_df(spark, words), 8)

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -478,6 +479,7 @@ def test_n_buckets_distrusts_garbage_size_estimates(spark):
     assert _n_buckets(big) <= _SIZE_HEADROOM * base
 
 
+@pytest.mark.filterwarnings("error::event_streaming_spark.operators.fixpoint.NotConverged")
 def test_bfs_layers_matches_bruteforce(spark):
     """r4: frontier-join BFS equals single-machine BFS on random graphs,
     at any max_depth, including unreachable nodes (absent) and seeds in
@@ -549,6 +551,7 @@ def test_k_core_matches_bruteforce(spark):
         assert got == ref_core(k), k
 
 
+@pytest.mark.filterwarnings("error::event_streaming_spark.operators.fixpoint.NotConverged")
 def test_sssp_bounded_matches_bruteforce(spark):
     """r4s3: full-relaxation Bellman-Ford equals single-machine
     hop-bounded shortest paths on random weighted graphs — including
@@ -589,11 +592,14 @@ def test_k_core_round_exhaustion_filters_under_k_nodes(spark):
     the true 2-core is empty; after one round only the endpoints are
     peeled, and the old fallback returned all eight interior nodes
     including the two new degree-1 endpoints."""
+    from event_streaming_spark.operators.fixpoint import NotConverged
     from event_streaming_spark.operators.graph import k_core
 
     edges = [(i, i + 1) for i in range(9)]  # path 0-1-...-9
     edf = spark.createDataFrame(edges, "a INT, b INT")
-    got = {r["node"] for r in k_core(edf, 2, max_rounds=1).collect()}
+    # running out of rounds is declared, not silent
+    with pytest.warns(NotConverged, match="kcore"):
+        got = {r["node"] for r in k_core(edf, 2, max_rounds=1).collect()}
     # round 0 peeled {0, 9}; nodes 1 and 8 now have degree 1 and must be
     # filtered by the final degree pass
     assert got == set(range(2, 8))
@@ -637,8 +643,12 @@ def test_components_star_contract_matches_propagation(spark):
     star = {(r["node"], r["component"]) for r in star_rows}
     assert len(star_rows) == len({r["node"] for r in star_rows})  # unique per node
     assert star == prop == {(1, 1), (2, 2), (3, 1), (4, 1)}
-    # exhaustion short of the fixpoint still yields ONE row per node
-    exhausted = connected_components_star(nodes, edges, max_iters=1).collect()
+    # exhaustion short of the fixpoint still yields ONE row per node, and
+    # is declared
+    from event_streaming_spark.operators.fixpoint import NotConverged
+
+    with pytest.warns(NotConverged, match="ccstar"):
+        exhausted = connected_components_star(nodes, edges, max_iters=1).collect()
     assert len(exhausted) == len({r["node"] for r in exhausted})
 
 

@@ -29,6 +29,7 @@ from event_streaming_spark.operators.components import (
     connected_components,
     connected_components_star,
 )
+from event_streaming_spark.operators.fixpoint import NotConverged
 from event_streaming_spark.operators.graph import triangles
 
 
@@ -108,6 +109,9 @@ def test_cc_path_graph_converges_to_min_label(spark):
     got = _labels(connected_components(nodes, edges))
     want = {(i, 0) for i in range(n)} | {(99, 99)}
     assert got == want
+    # run past its safety cap, the loop says its answer is best-effort
+    with pytest.warns(NotConverged, match="cc-labels: no fixpoint after 1 rounds"):
+        connected_components(nodes, edges, max_iters=1).collect()
 
 
 def test_cc_two_components_and_star_agree(spark):

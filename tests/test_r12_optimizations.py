@@ -83,6 +83,7 @@ def _pr_reference(nodes, edges, iters, seeds=None):
 
 
 @pytest.mark.parametrize("iters", [1, 3, 5])
+@pytest.mark.filterwarnings("error::event_streaming_spark.operators.fixpoint.NotConverged")
 def test_pagerank_matches_unrolled_recurrence(spark, iters):
     # iters=5 crosses the _PR_CHUNK=4 boundary (one mid-chain pin)
     nodes = list(range(6))
@@ -96,6 +97,7 @@ def test_pagerank_matches_unrolled_recurrence(spark, iters):
     assert got == _pr_reference(nodes, edges, iters)
 
 
+@pytest.mark.filterwarnings("error::event_streaming_spark.operators.fixpoint.NotConverged")
 def test_ppr_matches_unrolled_recurrence(spark):
     nodes = list(range(5))
     seeds = {0, 3}

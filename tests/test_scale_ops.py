@@ -239,6 +239,11 @@ def test_pointer_doubling_deep_chain(spark):
     assert out[0] == (0, 0)
     assert out[n - 1] == (0, n - 1)
     assert all(out[i] == (0, i) for i in range(0, n, 97))
+    # capped at one round, far short of resolving: a declared best-effort answer
+    from event_streaming_spark.operators.fixpoint import NotConverged
+
+    with pytest.warns(NotConverged, match="hier-frame: no fixpoint after 1 rounds"):
+        assert resolve_to_root(parents, "node", "parent", max_rounds=1).count() == n
 
 
 def test_pointer_doubling_forest_with_null_roots(spark):

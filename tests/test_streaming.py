@@ -775,3 +775,36 @@ def test_mg_merge_tie_at_threshold_keeps_within_capacity():
     # all values tie: the (cap+1)-th largest equals them all → all drop
     terms, counts, dec = mg_merge([], [], {"a": 5, "b": 5, "c": 5}, 2)
     assert terms == [] and counts == [] and dec == 5
+
+
+@pytest.mark.parametrize("log_format", ["json", "parquet"])
+def test_publish_temp_file_is_hidden_from_the_stream(spark, tmp_path, monkeypatch, log_format):
+    """A dict publish writes its file under a temp name and renames it.
+    Spark's file source lists every name not starting with ``_`` or
+    ``.``, so the temp name must be dot-prefixed, and in the log dir
+    itself so the rename stays atomic; otherwise a micro-batch can read
+    a half-written file."""
+    import os
+
+    renames = []
+    real_rename = os.rename
+
+    def spy(src, dst):
+        renames.append((src, dst))
+        real_rename(src, dst)
+
+    a = EventsAgency(spark, root=str(tmp_path / "agency"), log_format=log_format)
+    try:
+        ctx = a.topic("b", "hidden")
+        monkeypatch.setattr(os, "rename", spy)
+        ctx.publish(ev(1, "2024-01-01T00:00:00", 1))
+        monkeypatch.undo()
+        [(src, dst)] = renames
+        assert os.path.basename(src).startswith(".")
+        assert os.path.dirname(src) == os.path.dirname(dst) == ctx.log_dir
+        assert os.listdir(ctx.log_dir) == [os.path.basename(dst)]
+        got = []
+        ctx.consume(lambda c, df, i: got.extend(df.collect()), once=True)
+        assert [r["event_id"] for r in got] == [1]
+    finally:
+        a.close()

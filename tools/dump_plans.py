@@ -1,24 +1,64 @@
-"""Dump `.explain("formatted")` for every bench-tagged query → EXPLAINS.md.
+"""Dump `.explain("formatted")` of catalog queries.
 
 An inspectable artifact of the physical plans: pushed filters, pruned
 read schemas, join strategies, exchange placement — reviewable without
-running Spark.
+running Spark.  Two modes:
+
+    python tools/dump_plans.py [sf_dir]
+        every bench-tagged query (plus the session additions) → EXPLAINS.md
+    python tools/dump_plans.py --out plans/<tag> --suffix before|after [--sf DIR] query...
+        one file per query, <out>/<query>_<suffix>.txt — a change's
+        before/after plan evidence (run once on each tree)
+
+The package is imported from the tree this script lives in.
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
+from __spark_entry__ import SF0001  # noqa: E402
 from event_streaming_spark.plans import REGISTRY  # noqa: E402
 from event_streaming_spark.session import get_spark  # noqa: E402
 
+DEFAULT_SF = os.path.join(os.path.dirname(SF0001), "sf0.1")
+
+
+def dump_subset(out_dir: str, suffix: str, names: list[str], sf: str) -> None:
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark(app_name=f"dump-plans-{suffix}")
+    spark.sparkContext.setLogLevel("ERROR")
+    for name in names:
+        df = REGISTRY[name].fn(spark, sf)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(f"# {name} — explain('formatted'), {suffix} (<sf> = the {os.path.basename(sf)} tables)\n\n")
+            fh.write(buf.getvalue().replace(os.path.abspath(sf), "<sf>"))
+        print("wrote", path, file=sys.stderr)
+    spark.stop()
+
 
 def main() -> None:
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    if "--out" in sys.argv:
+        ap = argparse.ArgumentParser()
+        ap.add_argument("--out", required=True)
+        ap.add_argument("--suffix", required=True)
+        ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF))
+        ap.add_argument("queries", nargs="+")
+        a = ap.parse_args()
+        dump_subset(a.out, a.suffix, a.queries, a.sf)
+        return
+    sf = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF
     spark = get_spark(app_name="dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     out = [
@@ -224,7 +264,7 @@ def main() -> None:
     if "PartitionFilters" not in ivf or "cell" not in ivf:  # -O-safe
         raise AssertionError("persisted-IVF search leg lost PartitionFilters")
 
-    with open("/root/repo/EXPLAINS.md", "w") as fh:
+    with open(os.path.join(REPO, "EXPLAINS.md"), "w") as fh:
         fh.write("\n".join(out))
     print(f"wrote EXPLAINS.md ({len(out)} sections); spot-asserts passed")
 
