@@ -1333,9 +1333,9 @@ def streaming_branch_staged_ingest(spark: SparkSession, sf_dir: str) -> DataFram
 # travel, asserted in-plan.  The graded output is the head rollup by
 # channel including the NULL (pre-evolution) bucket, which the oracle
 # reconstructs from the raw table + the declared evolution rule.
-# Scale: evolution is a manifest-schema change — no data rewrite; old
-# files are projected to the evolved schema at read (NULL fill), the
-# same mergeSchema read every lakehouse ships.
+# Scale: evolution is a manifest-schema change — no data rewrite; the
+# recorded schema is the read schema, so parquet fills the evolved
+# column with NULL on old files without opening a footer to infer one.
 # ---------------------------------------------------------------------------
 
 _SCHEMA_EVO_ORACLE = """

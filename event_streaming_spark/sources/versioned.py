@@ -31,6 +31,7 @@ column) is exactly Delta's copy-on-write semantics.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import shutil
@@ -38,6 +39,70 @@ import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from event_streaming_spark.functions.localframe import local_frame
+
+# A file's key range when no row of it has a non-NULL key: an equi-join
+# can never match it.  (``None`` means the footer cannot tell.)
+_NO_KEY = ()
+
+
+def _range_kind(dt) -> type | None:
+    """The Python type of a footer min/max whose order agrees with
+    Spark's equality on ``dt``: integral types, dates, and strings under
+    the default binary collation (parquet orders strings by unsigned
+    bytes, which for UTF-8 is code point order, as ``str`` compares).
+    None for every other type — its files get no range."""
+    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        return int
+    if isinstance(dt, T.DateType):
+        return datetime.date
+    if dt == T.StringType():
+        return str
+    return None
+
+
+def _footer_key_range(path: str, key: str, kind: type) -> tuple | None:
+    """``(min, max)`` of column ``key`` over a parquet file, from its
+    footer (driver-side, no Spark job): ``_NO_KEY`` when no row has a
+    non-NULL key, None when the footer cannot tell — the file predates
+    the column, a row group has no stats, or a bound is not a ``kind``."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    lo = hi = None
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        cols = [rg.column(j) for j in range(rg.num_columns)]
+        st = next((c.statistics for c in cols if c.path_in_schema == key), None)
+        if st is not None and st.has_min_max:
+            if type(st.min) is not kind or type(st.max) is not kind:
+                return None
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        elif st is None or st.null_count != rg.num_rows:
+            return None  # rows with keys the footer gives no range for
+    return _NO_KEY if lo is None else (lo, hi)
+
+
+def _span(ranges: list) -> tuple | None:
+    """The smallest range covering ``ranges``: None if any is unknown."""
+    if None in ranges:
+        return None
+    known = [r for r in ranges if r]
+    if not known:
+        return _NO_KEY
+    return min(r[0] for r in known), max(r[1] for r in known)
+
+
+def _may_match(r: tuple | None, span: tuple | None) -> bool:
+    """Can a file with key range ``r`` hold a key inside ``span``?"""
+    if r == _NO_KEY or span == _NO_KEY:
+        return False
+    if r is None or span is None:
+        return True
+    return r[0] <= span[1] and span[0] <= r[1]
 
 
 class CommitConflict(RuntimeError):
@@ -61,6 +126,8 @@ class VersionedStore:
         # committed_txns() cache: manifests are immutable, so the token a
         # version carries never changes — see committed_txns for why.
         self._txn_by_version: dict[int, str | None] = {}
+        # _key_range() cache: data files are immutable too.
+        self._key_ranges: dict[tuple, tuple | None] = {}
 
     # -- manifest plumbing ----------------------------------------------------
     def latest_version(self) -> int:
@@ -191,13 +258,11 @@ class VersionedStore:
         old version reads with the schema it was committed under), or
         None for pre-schema-tracking manifests (they fall back to
         parquet self-description)."""
-        from pyspark.sql.types import StructType
-
         v = self.latest_version() if version is None else version
         if v < 0:
             return None
         sj = self._manifest(v).get("schema")
-        return StructType.fromJson(json.loads(sj)) if sj else None
+        return T.StructType.fromJson(json.loads(sj)) if sj else None
 
     @staticmethod
     def _merged_schema(cur, new_schema, merge_schema: bool):
@@ -206,8 +271,6 @@ class VersionedStore:
         columns must keep their type; columns MISSING from the append
         are fine (read fills NULL); NEW columns require
         ``merge_schema=True`` and extend the table schema."""
-        from pyspark.sql.types import StructType
-
         cur_by_name = {f.name: f for f in cur.fields}
         added = []
         for f in new_schema.fields:
@@ -224,30 +287,34 @@ class VersionedStore:
                 f"append adds columns {[f.name for f in added]}; "
                 "pass merge_schema=True to evolve the table schema"
             )
-        return StructType(cur.fields + added)
+        return T.StructType(cur.fields + added)
 
-    def append(self, df: DataFrame, txn: str | None = None, merge_schema: bool = False) -> int:
-        if txn is not None and txn in self.committed_txns():
-            return self.latest_version()  # don't even stage replayed data
-        new = self._stage_files(df, "append")
-        df_schema_json = df.schema.json()
+    def _schema_after(self, df_schema, merge_schema: bool):
+        """``compute_schema`` for a commit that adds files written with
+        ``df_schema``: the first commit defines the table schema, later
+        ones must fit it (:meth:`_merged_schema`)."""
 
         def compute_schema(parent_manifest: dict) -> str:
-            from pyspark.sql.types import StructType
-
             sj = parent_manifest.get("schema")
             if sj is None and parent_manifest.get("files"):
                 # pre-tracking table: adopt its on-disk schema first
                 sj = self.read(parent_manifest["version"]).schema.json()
             if sj is None:
-                return df_schema_json  # first commit defines the schema
-            cur = StructType.fromJson(json.loads(sj))
-            return self._merged_schema(
-                cur, StructType.fromJson(json.loads(df_schema_json)), merge_schema
-            ).json()
+                return df_schema.json()  # first commit defines the schema
+            cur = T.StructType.fromJson(json.loads(sj))
+            return self._merged_schema(cur, df_schema, merge_schema).json()
 
+        return compute_schema
+
+    def append(self, df: DataFrame, txn: str | None = None, merge_schema: bool = False) -> int:
+        if txn is not None and txn in self.committed_txns():
+            return self.latest_version()  # don't even stage replayed data
+        new = self._stage_files(df, "append")
         return self._commit(
-            lambda prev: prev + new, "append", txn=txn, compute_schema=compute_schema
+            lambda prev: prev + new,
+            "append",
+            txn=txn,
+            compute_schema=self._schema_after(df.schema, merge_schema),
         )
 
     # -- tags (named immutable refs, Iceberg-style) ---------------------------
@@ -327,6 +394,7 @@ class VersionedStore:
         br.manifest_dir = os.path.join(self.manifest_dir, "branches", name)
         os.makedirs(br.manifest_dir, exist_ok=True)
         br._txn_by_version = {}
+        br._key_ranges = {}
         return br
 
     def branch(self, name: str, from_version: int | None = None) -> "VersionedStore":
@@ -401,21 +469,16 @@ class VersionedStore:
         )
 
     def _read_projected(self, files: list[str], schema) -> DataFrame:
-        """The one definition of the snapshot read: mergeSchema unions
-        the file schemas; projecting the manifest schema pins column
-        ORDER and surfaces evolved columns as NULL on files written
-        before the evolution (shared by read/read_files so the two can
-        never diverge)."""
+        """The one definition of the snapshot read (shared by read,
+        read_files and merge so they can never diverge): the manifest
+        schema IS the read schema.  It pins column order, and parquet
+        fills a column that a file predates (schema evolution) with
+        NULL, so no footer is opened to infer or union file schemas —
+        no ``mergeSchema`` job.  Pre-schema-tracking manifests (schema
+        None) fall back to parquet self-description."""
         if schema is None:
             return self.spark.read.parquet(*files)
-        df = self.spark.read.option("mergeSchema", "true").parquet(*files)
-        have = set(df.columns)
-        cols = [
-            F.col(f.name) if f.name in have
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ]
-        return df.select(*cols)
+        return self.spark.read.schema(schema).parquet(*files)
 
     def read(self, version: int | None = None, tag: str | None = None) -> DataFrame:
         if tag is not None:
@@ -437,8 +500,8 @@ class VersionedStore:
     def read_files(self, files: list[str], version: int | None = None) -> DataFrame:
         """Snapshot-consistent read of a SUBSET of a version's data files
         (the contract data-skipping layers need: prune the file list, but
-        keep the snapshot semantics).  Applies the same manifest-schema
-        projection and equality-tombstone anti-join as :meth:`read`, so a
+        keep the snapshot semantics).  Reads with the same manifest schema
+        and equality-tombstone anti-join as :meth:`read`, so a
         pruned scan can never resurrect deleted rows or see a
         pre-evolution schema.  ``files`` must belong to ``version``."""
         v = self.latest_version() if version is None else version
@@ -446,9 +509,14 @@ class VersionedStore:
         stray = [f for f in files if f not in allowed]
         if stray:
             raise ValueError(f"files not in snapshot v{v}: {stray[:3]}")
+        schema = self.table_schema(v)
         if not files:
+            if schema is not None:
+                # nothing to scan: an empty frame of the snapshot schema,
+                # built without listing or reading any file
+                return local_frame(self.spark, [], schema)
             return self.read(v).where(F.lit(False))
-        df = self._read_projected(files, self.table_schema(v))
+        df = self._read_projected(files, schema)
         return self._apply_deletes(df, v)
 
     def _apply_deletes(self, df: DataFrame, version: int | None) -> DataFrame:
@@ -458,13 +526,20 @@ class VersionedStore:
         dels = self._manifest(v).get("delete_files", []) if v >= 0 else []
         if not dels:
             return df
+        schema = self.table_schema(v)
         by_key: dict[str, list[str]] = {}
         for d in dels:
             by_key.setdefault(d["key"], []).append(
                 os.path.join(self.data_dir, d["file"])
             )
         for key, paths in sorted(by_key.items()):
-            keys = self.spark.read.parquet(*paths).select(key).distinct()
+            # a tombstone file holds the one key column, typed as the table's
+            key_schema = (
+                T.StructType([schema[key]])
+                if schema is not None and key in schema.fieldNames()
+                else None
+            )
+            keys = self._read_projected(paths, key_schema).select(key).distinct()
             df = df.join(keys, key, "left_anti")
         return df
 
@@ -535,6 +610,18 @@ class VersionedStore:
 
         return self._commit(compute, "delete")
 
+    def _key_range(self, name: str, key: str, kind: type | None) -> tuple | None:
+        """:func:`_footer_key_range` of data file ``name``, cached per
+        file name: data files are immutable."""
+        cache_key = (name, key, kind)
+        if cache_key not in self._key_ranges:
+            self._key_ranges[cache_key] = (
+                _footer_key_range(os.path.join(self.data_dir, name), key, kind)
+                if kind is not None
+                else None
+            )
+        return self._key_ranges[cache_key]
+
     def merge(self, updates: DataFrame, key: str, txn: str | None = None) -> int:
         """MERGE INTO (upsert by key), one atomic commit: rows whose key
         appears in ``updates`` are REPLACED, new keys are INSERTED.
@@ -544,20 +631,36 @@ class VersionedStore:
         survive verbatim); every other file carries over by reference;
         the update batch lands as new files.  Readers see the old or the
         new table, never a half-merged one — the replace and the insert
-        publish in the SAME manifest.  Cost scales with matched files +
-        update size, never the base table."""
+        publish in the SAME manifest.
+
+        Cost scales with the files the batch's keys can hit + update
+        size, not the base table: each data file's key ``(min, max)``
+        comes from its parquet footer (driver-side, cached per immutable
+        file), the batch's range from the footers of its staged files,
+        and only base files whose range overlaps the batch's are probed
+        and rewritten (``read_files`` keeps the tombstone anti-join and
+        the manifest schema).  A file whose footer gives no usable range
+        is always a candidate; with no candidate the batch commits
+        without a probe.  The first merge into an empty table records
+        the batch schema, so later reads never infer one."""
         if txn is not None and txn in self.committed_txns():
             return self.latest_version()
         base_v = self.latest_version()
-        if base_v < 0:
-            new = self._stage_files(updates, "merge")
-            return self._commit(lambda prev: prev + new, "merge", txn=txn)
-        df = self.read(base_v)
+        base_files = self._manifest(base_v)["files"] if base_v >= 0 else []
+        schema = self.table_schema(base_v)
+        if schema is not None:
+            # staged files carry the table's column order AND types, so
+            # the schema-known re-read below fits them
+            updates = updates.select(
+                *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
+            )
+        elif base_files:  # pre-schema-tracking table
+            updates = updates.select(*self.read(base_v).columns)
         # Stage the update batch FIRST: the staged parquet is the pinned
         # copy every later probe reads, so the update subplan (behind a
         # dropDuplicates shuffle on the streaming path) evaluates exactly
         # ONCE instead of once per probe job (r11).
-        upd_files = self._stage_files(updates.select(*df.columns), "merge")
+        upd_files = self._stage_files(updates, "merge")
         # Every file staged below is tracked so a failure AFTER staging
         # (probe error, CommitConflict, retried streaming batch) deletes
         # its orphans instead of leaving a full batch copy per attempt
@@ -565,34 +668,47 @@ class VersionedStore:
         # orphans — vacuum remains the backstop for that.
         staged_files = list(upd_files)
         try:
-            if not self._manifest(base_v)["files"]:
-                # empty base (e.g. the cursor-origin v0): nothing can
-                # match — skip the probe job outright
-                return self._commit(lambda prev: prev + upd_files, "merge", txn=txn)
-            staged = self.spark.read.parquet(
-                *[os.path.join(self.data_dir, f) for f in upd_files]
-            )
-            keys = staged.select(key).distinct()
-            # _metadata.file_path resolves only on the scan itself — pin
-            # it as an ordinary column before any join drops the
-            # pseudo-column
-            with_f = df.withColumn(
-                "__f", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-            )
-            hit_files = {
-                r["__f"]
-                for r in with_f.join(keys, key, "left_semi")
-                .select("__f")
-                .distinct()
-                .collect()
-            }
-            new = []
-            if hit_files:
-                survivors = (
-                    with_f.filter(F.col("__f").isin(*hit_files))
-                    .join(keys, key, "left_anti")
-                    .drop("__f")
+            if not base_files:
+                # empty base (a new table, the cursor-origin v0): nothing
+                # can match — commit without a probe, recording the schema
+                return self._commit(
+                    lambda prev: prev + upd_files,
+                    "merge",
+                    txn=txn,
+                    compute_schema=self._schema_after(updates.schema, False),
                 )
+            kind = _range_kind(updates.schema[key].dataType)
+            span = _span([self._key_range(f, key, kind) for f in upd_files])
+            candidates = [
+                f for f in base_files if _may_match(self._key_range(f, key, kind), span)
+            ]
+            hit_files: set[str] = set()
+            new = []
+            if candidates:
+                staged = self._read_projected(
+                    [os.path.join(self.data_dir, f) for f in upd_files], schema
+                )
+                keys = staged.select(key).distinct()
+                df = self.read_files(
+                    [os.path.join(self.data_dir, f) for f in candidates], base_v
+                )
+                # _metadata.file_path resolves only on the scan itself —
+                # pin it as an ordinary column before any join drops the
+                # pseudo-column
+                hit_files = {
+                    r["__f"]
+                    for r in df.withColumn(
+                        "__f", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
+                    )
+                    .join(keys, key, "left_semi")
+                    .select("__f")
+                    .distinct()
+                    .collect()
+                }
+            if hit_files:
+                survivors = self.read_files(
+                    [os.path.join(self.data_dir, f) for f in sorted(hit_files)], base_v
+                ).join(keys, key, "left_anti")
                 # The survivor count rides the staging WRITE as an
                 # observed metric (r12) — the r11 shape persisted the
                 # survivors and ran a separate count job first, one

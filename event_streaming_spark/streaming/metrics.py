@@ -32,6 +32,9 @@ class ProgressCollector(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = json.loads(event.progress.json)
+        durations = p.get("durationMs") or {}
+        # the first stateful operator's store (None for stateless queries)
+        state = (p.get("stateOperators") or [{}])[0]
         with self._lock:
             self.progress.append(
                 {
@@ -39,7 +42,13 @@ class ProgressCollector(StreamingQueryListener):
                     "name": p.get("name"),
                     "batch_id": p.get("batchId"),
                     "num_input_rows": p.get("numInputRows", 0),
-                    "batch_duration_ms": (p.get("durationMs") or {}).get("triggerExecution"),
+                    "batch_duration_ms": durations.get("triggerExecution"),
+                    # every micro-batch phase: addBatch, latestOffset,
+                    # queryPlanning, walCommit, commitOffsets, ...
+                    "duration_ms": durations,
+                    "state_commit_ms": state.get("commitTimeMs"),
+                    "state_memory_bytes": state.get("memoryUsedBytes"),
+                    "state_rows_total": state.get("numRowsTotal"),
                 }
             )
 
@@ -66,5 +75,6 @@ class ProgressCollector(StreamingQueryListener):
             spark,
             rows or [],
             "query_id STRING, name STRING, batch_id LONG, num_input_rows LONG, "
-            "batch_duration_ms LONG",
+            "batch_duration_ms LONG, duration_ms MAP<STRING, BIGINT>, "
+            "state_commit_ms LONG, state_memory_bytes LONG, state_rows_total LONG",
         )

@@ -423,6 +423,18 @@ def test_streaming_metrics_listener(spark, tmp_path):
         assert any(p["num_input_rows"] == 1 for p in collector.progress)
         mdf = collector.as_dataframe(spark)
         assert mdf.filter(F.col("num_input_rows") > 0).count() >= 1
+        # the whole micro-batch phase map is kept, not just triggerExecution
+        assert "addBatch" in next(
+            p["duration_ms"] for p in collector.progress if p["num_input_rows"] == 1
+        )
+        assert {"duration_ms", "state_commit_ms", "state_memory_bytes",
+                "state_rows_total"} <= set(mdf.columns)
+        assert (
+            mdf.filter(F.col("num_input_rows") > 0)
+            .where(F.col("duration_ms")["addBatch"].isNotNull())
+            .count()
+            >= 1
+        )
     finally:
         collector.detach(spark)
 

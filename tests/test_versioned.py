@@ -6,6 +6,8 @@ from __future__ import annotations
 import os
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from event_streaming_spark.sources.versioned import CommitConflict, VersionedStore
@@ -1190,3 +1192,152 @@ def test_branch_duplicate_name_rejected(spark, store):
     store.branch("dup")
     with pytest.raises(ValueError):
         store.branch("dup")
+
+
+# ---------------------------------------------------------------------------
+# key-range pruned merge and schema-known reads
+# ---------------------------------------------------------------------------
+
+
+def _job_ids(spark, fn):
+    """``(fn(), ids of the Spark jobs fn launched)``."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _record_read_files(monkeypatch, store) -> list[list[str]]:
+    calls: list[list[str]] = []
+    orig = store.read_files
+
+    def recording(files, version=None):
+        calls.append(list(files))
+        return orig(files, version)
+
+    monkeypatch.setattr(store, "read_files", recording)
+    return calls
+
+
+_clustered = st.builds(
+    lambda start, n: list(range(start, start + n)),
+    st.integers(-30, 60),
+    st.integers(1, 10),
+)
+_scattered = st.lists(st.integers(-40, 80), min_size=1, max_size=10, unique=True)
+_step = st.tuples(
+    st.sampled_from(["append", "merge"]),
+    st.one_of(_clustered, _scattered),
+    st.integers(0, 2),  # rows with a NULL key
+)
+
+
+@given(key_type=st.sampled_from(["long", "string"]), steps=st.lists(_step, min_size=2, max_size=4))
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+def test_pruned_merge_matches_dict_upsert(spark, tmp_path_factory, key_type, steps):
+    """Random appends and merges (clustered, scattered and NULL keys):
+    after every step the table equals a Python dict upsert.  String keys
+    are unpadded decimals, so their byte order differs from the numeric
+    one the files were clustered by."""
+    store = VersionedStore(spark, str(tmp_path_factory.mktemp("prop") / "t"))
+    as_key = int if key_type == "long" else str
+    latest: dict = {}  # non-NULL key -> value
+    null_rows: list[str] = []  # NULL keys never match: every one is kept
+    for i, (op, keys, n_null) in enumerate(steps):
+        if op == "append":  # fresh keys only, so the model stays a dict
+            keys = [k for k in keys if as_key(k) not in latest]
+        rows = [(as_key(k), f"{i}:{k}") for k in keys]
+        rows += [(None, f"{i}:null{j}") for j in range(n_null)]
+        if not rows:
+            continue
+        df = spark.createDataFrame(rows, f"k {key_type}, v string")
+        if op == "append":
+            store.append(df)
+        else:
+            store.merge(df, key="k")
+        latest.update((k, v) for k, v in rows if k is not None)
+        null_rows += [v for k, v in rows if k is None]
+        got = store.read().collect()
+        assert {r["k"]: r["v"] for r in got if r["k"] is not None} == latest, f"step {i}"
+        assert sum(r["k"] is not None for r in got) == len(latest), f"step {i}"
+        assert sorted(r["v"] for r in got if r["k"] is None) == sorted(null_rows)
+
+
+def test_merge_probes_only_files_whose_key_range_overlaps(spark, store, monkeypatch):
+    by_range = []
+    for i in range(6):
+        before = set(store.files())
+        store.append(
+            spark.range(i * 100, (i + 1) * 100)
+            .select(F.col("id"), F.lit(i).alias("v"))
+            .coalesce(1)
+        )
+        by_range.append(set(store.files()) - before)
+    probed = _record_read_files(monkeypatch, store)
+    v = store.merge(
+        spark.range(310, 320).select(F.col("id"), F.lit(99).alias("v")), key="id"
+    )
+    assert probed and all(set(files) <= by_range[3] for files in probed)
+    after = set(store.files(v))
+    for i in (0, 1, 2, 4, 5):
+        assert by_range[i] <= after  # carried over by name
+    # a batch whose one key is a file's max still hits that file
+    v = store.merge(spark.createDataFrame([(399, 7)], "id long, v int"), key="id")
+    rows = [(r["id"], r["v"]) for r in store.read(v).collect()]
+    assert len(rows) == 600
+    want = {k: 99 if 310 <= k < 320 else 7 if k == 399 else k // 100 for k in range(600)}
+    assert dict(rows) == want
+
+
+def test_merge_keeps_a_file_without_key_stats_as_candidate(spark, store, monkeypatch):
+    # the first file predates the key column (added by merge_schema), so
+    # its footer has no range for it
+    store.append(spark.createDataFrame([("a",), ("b",)], "v string").coalesce(1))
+    (keyless,) = store.files()
+    store.append(
+        spark.createDataFrame([("c", 1), ("d", 2)], "v string, id long").coalesce(1),
+        merge_schema=True,
+    )
+    probed = _record_read_files(monkeypatch, store)
+    store.merge(spark.createDataFrame([("D", 2), ("e", 3)], "v string, id long"), key="id")
+    assert keyless in probed[0]
+    got = sorted(((r["v"], r["id"]) for r in store.read().collect()), key=str)
+    assert got == sorted([("a", None), ("b", None), ("c", 1), ("D", 2), ("e", 3)], key=str)
+
+
+def test_first_merge_records_schema_and_read_builds_without_jobs(spark, store):
+    assert store.table_schema() is None
+    store.merge(spark.createDataFrame([(1, "x"), (2, "y")], "id long, k string"), key="id")
+    assert store.table_schema().simpleString() == "struct<id:bigint,k:string>"
+    store.merge(spark.createDataFrame([(2, "z"), (3, "w")], "id long, k string"), key="id")
+    assert len(store.files()) < 32  # parallel file listing starts at 32 paths
+    df, jobs = _job_ids(spark, store.read)
+    assert jobs == []
+    assert sorted(map(tuple, df.collect())) == [(1, "x"), (2, "z"), (3, "w")]
+
+
+def test_zonemap_box_missing_every_file_reads_no_file(spark, tmp_path):
+    from event_streaming_spark.operators.zonemap import IncrementalZoneMap
+
+    store = VersionedStore(spark, str(tmp_path / "zmiss"))
+    # over 32 files: a read of the snapshot would list them in a Spark job
+    store.append(spark.range(0, 80, 1, 40).select(F.col("id"), F.lit("a").alias("s")))
+    assert len(store.files()) > 32
+    zm = IncrementalZoneMap(store, "id")
+    zm.refresh()
+    (df, n_read, _), jobs = _job_ids(spark, lambda: zm.pruned_read(1000, 2000))
+    assert jobs == []
+    assert n_read == 0
+    assert df.columns == ["id", "s"]
+    assert df.count() == 0
