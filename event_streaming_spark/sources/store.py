@@ -23,6 +23,8 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from event_streaming_spark.streaming.sinks import ledgered_sink
+
 
 class EventStore:
     def __init__(
@@ -63,24 +65,8 @@ class EventStore:
         INSIDE the data manifest (the Delta ``txn`` action), so the
         change and its dedup mark publish atomically.
         """
-        import os
-
-        ledger = os.path.join(checkpoint, "store-ledger")
-
-        def _batch(batch_df: DataFrame, batch_id: int) -> None:
-            mark = os.path.join(ledger, f"batch-{batch_id}.done")
-            if os.path.exists(mark):  # replay after post-append failure
-                return
-            self.append(batch_df)
-            os.makedirs(ledger, exist_ok=True)
-            with open(mark, "w") as fh:
-                fh.write("done")
-
-        return (
-            stream_df.writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        return ledgered_sink(
+            stream_df, checkpoint, "store-ledger", lambda df, bid, scope: self.append(df)
         )
 
     def compact(

@@ -42,6 +42,26 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from event_streaming_spark.functions.localframe import local_frame
+from event_streaming_spark.streaming.sinks import ledgered_sink
+
+
+def _publish_json(directory: str, name: str, record: dict) -> bool:
+    """Atomically create ``directory/name`` holding ``record`` as JSON,
+    only if absent; returns whether this call created it.  The record is
+    staged to a ``.tmp-*`` file and hard-linked into place (one link
+    attempt: readers never see a partial file, and of two racing
+    publishers exactly one wins)."""
+    tmp = os.path.join(directory, f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as fh:
+        json.dump(record, fh)
+    try:
+        os.link(tmp, os.path.join(directory, name))  # atomic create-if-absent
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
 
 # A file's key range when no row of it has a non-NULL key: an equi-join
 # can never match it.  (``None`` means the footer cannot tell.)
@@ -202,17 +222,9 @@ class VersionedStore:
                 record["delete_files"] = deletes
             if txn is not None:
                 record["txn"] = txn
-            tmp = os.path.join(self.manifest_dir, f".tmp-{uuid.uuid4().hex}")
-            with open(tmp, "w") as fh:
-                json.dump(record, fh)
-            final = os.path.join(self.manifest_dir, f"v{nxt}.json")
-            try:
-                os.link(tmp, final)  # atomic create-if-absent
+            if _publish_json(self.manifest_dir, f"v{nxt}.json", record):
                 return nxt
-            except FileExistsError:
-                continue  # lost the race: retry on the new head
-            finally:
-                os.unlink(tmp)
+            # lost the race: retry on the new head
         raise CommitConflict(f"gave up after {retries} commit attempts ({op})")
 
     def committed_txns(self) -> set[str]:
@@ -343,15 +355,8 @@ class VersionedStore:
         v = self.latest_version() if version is None else version
         if v < 0 or not os.path.exists(os.path.join(self.manifest_dir, f"v{v}.json")):
             raise ValueError(f"no snapshot at version {v!r}")
-        tmp = os.path.join(self._refs_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump({"name": name, "version": v}, fh)
-        try:
-            os.link(tmp, os.path.join(self._refs_dir, f"{name}.json"))
-        except FileExistsError:
-            raise ValueError(f"tag exists: {name!r}") from None
-        finally:
-            os.unlink(tmp)
+        if not _publish_json(self._refs_dir, f"{name}.json", {"name": name, "version": v}):
+            raise ValueError(f"tag exists: {name!r}")
         return v
 
     def resolve_tag(self, name: str) -> int:
@@ -427,15 +432,8 @@ class VersionedStore:
             record["schema"] = fork["schema"]
         if fork.get("delete_files"):
             record["delete_files"] = fork["delete_files"]
-        tmp = os.path.join(br.manifest_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(record, fh)
-        try:
-            os.link(tmp, os.path.join(br.manifest_dir, "v0.json"))
-        except FileExistsError:
-            raise ValueError(f"branch exists: {name!r}") from None
-        finally:
-            os.unlink(tmp)
+        if not _publish_json(br.manifest_dir, "v0.json", record):
+            raise ValueError(f"branch exists: {name!r}")
         return br
 
     def merge_branch(self, name: str) -> int:
@@ -911,78 +909,36 @@ class VersionedStore:
         new = set(m_new["files"])
         added = [os.path.join(self.data_dir, f) for f in sorted(new - old)]
         removed = [os.path.join(self.data_dir, f) for f in sorted(old - new)]
-        # Tombstones (identical on both sides here) still gate row
-        # VISIBILITY: a tombstoned row inside an added/removed file was
-        # never visible in either snapshot, so it must not appear in
-        # the feed.
-        gate = lambda df: self._apply_deletes(df, to_version)  # noqa: E731
+        # Both sides are read with the target snapshot's schema, so a
+        # file that predates a schema evolution gets the evolved columns
+        # (NULL-filled).  Tombstones (identical on both sides here) still
+        # gate row VISIBILITY: a tombstoned row inside an added/removed
+        # file was never visible in either snapshot, so it must not
+        # appear in the feed.
+        schema = self.table_schema(to_version)
+        feed = lambda files: self._apply_deletes(  # noqa: E731
+            self._read_projected(files, schema), to_version
+        )
         if added and removed:
-            a = gate(self.spark.read.parquet(*added))
-            r = gate(self.spark.read.parquet(*removed))
+            a, r = feed(added), feed(removed)
             ins = a.exceptAll(r).withColumn("_change", F.lit("insert"))
             dels = r.exceptAll(a).withColumn("_change", F.lit("delete"))
             return ins.union(dels)
         if added:
-            return gate(self.spark.read.parquet(*added)).withColumn(
-                "_change", F.lit("insert")
-            )
+            return feed(added).withColumn("_change", F.lit("insert"))
         if removed:
-            return gate(self.spark.read.parquet(*removed)).withColumn(
-                "_change", F.lit("delete")
-            )
+            return feed(removed).withColumn("_change", F.lit("delete"))
         # no structural change: an EMPTY feed with the promised schema —
         # returning None crashed every caller that piped the feed into an
         # aggregate (IVM's apply_group_delta does changes.groupBy(...))
+        if schema is not None:
+            change = T.StructField("_change", T.StringType(), nullable=False)
+            return local_frame(self.spark, [], T.StructType([*schema.fields, change]))
         return (
             self.read(to_version)
             .where(F.lit(False))
             .withColumn("_change", F.lit("insert"))
         )
-
-    def _ledgered_sink(
-        self,
-        stream_df: DataFrame,
-        checkpoint: str,
-        ledger_name: str,
-        commit_batch,
-        available_now: bool = True,
-    ):
-        """Shared foreachBatch skeleton for the streaming sinks: per
-        micro-batch, skip if the checkpoint-local ledger marks the batch
-        done, else run ``commit_batch(batch_df, batch_id, txn_scope)``
-        (whose in-manifest txn token is the real idempotency record —
-        the ledger is only a fast-path cache) and write the mark.
-
-        ``available_now=False`` keeps ONE long-lived micro-batch query
-        instead of drain-and-terminate: a caller interleaving publishes
-        with derived-view maintenance synchronizes on
-        ``query.processAllAvailable()`` per wave and stops the query at
-        the end — each wave then costs zero query-startup/teardown
-        (checkpoint resolution, offset-log replay, trigger spin-up),
-        which on the continuous CDC→IVM loop was a restart per wave
-        (r12; the micro-batch engine fires no batch while no new files
-        exist, so idle periods between waves commit nothing)."""
-        ledger = os.path.join(checkpoint, ledger_name)
-        txn_scope = os.path.abspath(checkpoint)
-
-        def _batch(batch_df: DataFrame, batch_id: int) -> None:
-            mark = os.path.join(ledger, f"batch-{batch_id}.done")
-            if os.path.exists(mark):
-                return
-            v = commit_batch(batch_df, batch_id, txn_scope)
-            os.makedirs(ledger, exist_ok=True)
-            with open(mark, "w") as fh:
-                fh.write(str(v))
-
-        writer = stream_df.writeStream.foreachBatch(_batch).option(
-            "checkpointLocation", checkpoint
-        )
-        writer = (
-            writer.trigger(availableNow=True)
-            if available_now
-            else writer.trigger(processingTime="50 milliseconds")
-        )
-        return writer.start()
 
     def sink(self, stream_df: DataFrame, checkpoint: str):
         """Streaming append: each micro-batch commits ONE new version
@@ -993,7 +949,7 @@ class VersionedStore:
         impossible by construction.  The checkpoint-local ledger is only
         a fast-path cache (and covers replays older than the manifest
         retention window)."""
-        return self._ledgered_sink(
+        return ledgered_sink(
             stream_df,
             checkpoint,
             "vstore-ledger",
@@ -1013,7 +969,7 @@ class VersionedStore:
         the in-manifest ``txn`` record (ledger = fast-path cache, as in
         ``sink``).  Within one batch, the last row per key (by batch
         order) wins — dedupe upstream for a different policy."""
-        return self._ledgered_sink(
+        return ledgered_sink(
             stream_df,
             checkpoint,
             "vstore-upsert-ledger",

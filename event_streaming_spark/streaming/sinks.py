@@ -1,4 +1,5 @@
-"""Streaming sinks: memory/parquet helpers + the email alert sink.
+"""Streaming sinks: the ledgered micro-batch sink skeleton + the email
+alert sink.
 
 Reference parity:
   - O12/O13 SMTP sink with TLS/auth and chunked payload upload
@@ -13,6 +14,11 @@ exactly-once, so it is (a) DISABLED unless a transport is injected,
 skipped on replay, (c) the alert batch is collected only AFTER an
 aggressive filter — alerts are tiny by construction; the collect is a
 bounded driver hop, never a data-plane move.
+
+Every batch-id-idempotent streaming writer in the package
+(``VersionedStore.sink``/``upsert_sink``, ``EventStore.sink`` and the
+three streaming sketches) runs through :func:`ledgered_sink`, and every
+per-batch ledger mark is named by :func:`_batch_mark`.
 """
 
 from __future__ import annotations
@@ -24,6 +30,67 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 Transport = Callable[[str, list[str], str], None]  # (from, to_list, payload)
+
+
+def _batch_mark(ledger: str, batch_id: int) -> str:
+    """Path of the ledger mark that records ``batch_id`` as committed."""
+    return os.path.join(ledger, f"batch-{batch_id}.done")
+
+
+def _write_mark(ledger: str, batch_id: int, content: str = "done") -> None:
+    os.makedirs(ledger, exist_ok=True)
+    with open(_batch_mark(ledger, batch_id), "w") as fh:
+        fh.write(content)
+
+
+def ledgered_sink(
+    stream_df: DataFrame,
+    checkpoint: str,
+    ledger_name: str,
+    commit_batch: Callable[[DataFrame, int, str], object],
+    available_now: bool = True,
+):
+    """The foreachBatch skeleton of every idempotent streaming sink: per
+    micro-batch, skip if the checkpoint-local ledger
+    ``<checkpoint>/<ledger_name>`` marks the batch done, else run
+    ``commit_batch(batch_df, batch_id, txn_scope)`` and write the mark
+    (holding the commit's return value, or ``done`` for ``None``).
+
+    foreachBatch is at-least-once, so a crash after the commit but
+    before the mark replays the batch.  Writers that must be exactly
+    once make the commit itself idempotent: the versioned store records
+    ``txn_scope`` (the absolute checkpoint path) with the batch id inside
+    the committed manifest, and the sketch logs publish each batch under
+    a batch-id-named directory.  For them the ledger is only a fast-path
+    cache.
+
+    ``available_now=False`` keeps ONE long-lived micro-batch query
+    instead of drain-and-terminate: a caller interleaving publishes
+    with derived-view maintenance synchronizes on
+    ``query.processAllAvailable()`` per wave and stops the query at
+    the end — each wave then costs zero query-startup/teardown
+    (checkpoint resolution, offset-log replay, trigger spin-up),
+    which on the continuous CDC→IVM loop was a restart per wave
+    (the micro-batch engine fires no batch while no new files exist,
+    so idle periods between waves commit nothing)."""
+    ledger = os.path.join(checkpoint, ledger_name)
+    txn_scope = os.path.abspath(checkpoint)
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        if os.path.exists(_batch_mark(ledger, batch_id)):
+            return
+        v = commit_batch(batch_df, batch_id, txn_scope)
+        _write_mark(ledger, batch_id, "done" if v is None else str(v))
+
+    writer = stream_df.writeStream.foreachBatch(_batch).option(
+        "checkpointLocation", checkpoint
+    )
+    writer = (
+        writer.trigger(availableNow=True)
+        if available_now
+        else writer.trigger(processingTime="50 milliseconds")
+    )
+    return writer.start()
 
 
 def compose_alert_payload(
@@ -87,13 +154,11 @@ class EmailAlertSink:
     def _seen(self, batch_id: int) -> bool:
         if not self.ledger_dir:
             return False
-        return os.path.exists(os.path.join(self.ledger_dir, f"batch-{batch_id}.done"))
+        return os.path.exists(_batch_mark(self.ledger_dir, batch_id))
 
     def _mark(self, batch_id: int) -> None:
         if self.ledger_dir:
-            os.makedirs(self.ledger_dir, exist_ok=True)
-            with open(os.path.join(self.ledger_dir, f"batch-{batch_id}.done"), "w") as fh:
-                fh.write("done")
+            _write_mark(self.ledger_dir, batch_id)
             prog = os.path.join(self.ledger_dir, f"batch-{batch_id}.progress")
             if os.path.exists(prog):
                 os.remove(prog)

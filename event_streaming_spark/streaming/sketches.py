@@ -1,30 +1,34 @@
-"""Streaming distinct-count via mergeable HLL registers.
+"""Streaming sketches over one append-only per-batch log.
 
-The batch sketch (operators/sketches.py) is a per-bucket-max monoid, so
-streaming it needs NO new math: each micro-batch contributes its ≤ m
-register rows, appended to a durable register log; the estimate at any
-moment is merge-at-read (per-bucket max) + the shared finalizer.  This
-is the standard mergeable-summary pattern: state is O(m · #batches)
-until compaction, never O(#distinct keys), and the log is append-only —
-crash-safe without coordination.
+The batch sketches (operators/sketches.py) are monoids, so streaming them
+needs NO new math: each micro-batch appends its own small sketch frame to
+a durable log, and the live sketch is the monoid fold of the log at read
+time.  This is the standard mergeable-summary pattern: state is
+O(sketch size · #batches) until compaction, never O(#distinct keys), and
+the log is append-only — crash-safe without coordination.  HLL folds
+registers by per-bucket max, Count-Min counters by sum, theta hashes by
+bottom-k; :class:`_SketchLog` holds everything else.
 
-Idempotency: foreachBatch is at-least-once, so each batch's output is
-staged under a batch-id-derived hidden name and published with ONE
-atomic rename — the published directory itself IS the idempotency mark,
-so there is no window where the append landed but the mark did not (a
-crash there would have made replays double-append: harmless for HLL —
-max is idempotent — but it would inflate Count-Min counts).  The
-checkpoint-local ledger file remains as a fast-path skip only.
+Idempotency: the sink is the shared :func:`ledgered_sink`, and each
+batch's frame is staged under a batch-id-derived hidden name and
+published with ONE atomic rename — the published directory itself IS the
+idempotency mark, so there is no window where the append landed but the
+mark did not (a crash there would have made replays double-append:
+harmless for HLL — max is idempotent — but it would inflate Count-Min
+counts).  The checkpoint-local ledger is a fast-path skip only.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from event_streaming_spark.operators.sketches import (
+    count_min_lookup,
+    count_min_table,
     hll_finalize,
     hll_finalize_by,
     hll_merge,
@@ -32,9 +36,88 @@ from event_streaming_spark.operators.sketches import (
     hll_registers,
     hll_registers_by,
 )
+from event_streaming_spark.streaming.sinks import ledgered_sink
 
 
-class HllStreamingSketch:
+class _SketchLog:
+    """The per-batch log under ``self.path`` that every streaming sketch
+    shares.  A sketch names its ledger (``_ledger``) and says only what
+    differs: the frame one micro-batch appends (``_batch_frame``) and how
+    the log's rows fold at read time (``_fold``).
+
+    Publish: a batch's frame is staged under the dot-prefixed
+    ``._staging-batch-{id}`` (invisible to Spark's file lister; overwrite
+    clears any partial output a crashed run left) and published as
+    ``batch-{id}`` with one rename, skipped when that directory exists.
+
+    Compaction swap: the fold is written to ``<path>._compacting``, the
+    live log displaced to ``<path>._old``, the fold renamed into place and
+    ``._old`` removed.  Every read repairs an interrupted swap first
+    (``_recover``)."""
+
+    spark: SparkSession
+    path: str
+    _ledger: str
+
+    def _batch_frame(self, batch_df: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def _fold(self, raw: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def sink(self, stream_df: DataFrame, checkpoint: str):
+        """Drain ``stream_df`` into the log: one published batch per
+        micro-batch, idempotent under replay."""
+        return ledgered_sink(stream_df, checkpoint, self._ledger, self._publish)
+
+    def _publish(self, batch_df: DataFrame, batch_id: int, _txn_scope: str) -> None:
+        target = os.path.join(self.path, f"batch-{batch_id}")
+        if os.path.isdir(target):  # publish = atomic rename = mark
+            return
+        os.makedirs(self.path, exist_ok=True)
+        tmp = os.path.join(self.path, f"._staging-batch-{batch_id}")
+        self._batch_frame(batch_df).write.mode("overwrite").parquet(tmp)
+        os.rename(tmp, target)
+
+    def _swap_dirs(self) -> tuple[str, str]:
+        """(fold output, displaced live log) of the compaction swap."""
+        return self.path + "._compacting", self.path + "._old"
+
+    def _recover(self) -> None:
+        """Repair an interrupted compaction: data displaced to ``._old``
+        with the live path missing → restore it; stale ``._compacting``
+        output is garbage either way."""
+        tmp, bak = self._swap_dirs()
+        if os.path.isdir(bak):
+            if os.path.isdir(self.path):
+                shutil.rmtree(bak)
+            else:
+                os.rename(bak, self.path)
+        if os.path.isdir(tmp):
+            shutil.rmtree(tmp)
+
+    def _merged(self) -> DataFrame:
+        self._recover()
+        # per-batch subdirs + compacted top-level files in one listing
+        raw = self.spark.read.option("recursiveFileLookup", "true").parquet(self.path)
+        return self._fold(raw)
+
+    def _compact(self) -> None:
+        """Fold the log to one compacted file set (answers unchanged).
+        Run only while no stream is writing this log: compaction erases
+        the per-batch publish dirs that deduplicate replays, so a batch
+        whose stream died between publish and ledger mark could
+        re-append after a compact."""
+        tmp, bak = self._swap_dirs()
+        self._merged().coalesce(1).write.mode("overwrite").parquet(tmp)
+        os.rename(self.path, bak)
+        os.rename(tmp, self.path)
+        shutil.rmtree(bak)
+
+
+class HllStreamingSketch(_SketchLog):
+    _ledger = "hll-ledger"
+
     def __init__(
         self,
         spark: SparkSession,
@@ -54,60 +137,18 @@ class HllStreamingSketch:
         self.b = b
         self.group_cols = list(group_cols or [])
 
-    def sink(self, stream_df: DataFrame, checkpoint: str):
-        ledger = os.path.join(checkpoint, "hll-ledger")
+    def _batch_frame(self, batch_df: DataFrame) -> DataFrame:
+        if self.group_cols:
+            return hll_registers_by(batch_df, self.group_cols, F.col(self.key_col), self.b)
+        return hll_registers(batch_df, F.col(self.key_col), self.b)
 
-        def _batch(batch_df: DataFrame, batch_id: int) -> None:
-            mark = os.path.join(ledger, f"batch-{batch_id}.done")
-            if os.path.exists(mark):
-                return
-            target = os.path.join(self.path, f"batch-{batch_id}")
-            if not os.path.isdir(target):  # publish = atomic rename = mark
-                if self.group_cols:
-                    regs = hll_registers_by(
-                        batch_df, self.group_cols, F.col(self.key_col), self.b
-                    )
-                else:
-                    regs = hll_registers(batch_df, F.col(self.key_col), self.b)
-                os.makedirs(self.path, exist_ok=True)
-                # dot-prefixed staging is invisible to Spark's file lister;
-                # overwrite clears any partial output a crashed run left
-                tmp = os.path.join(self.path, f"._staging-batch-{batch_id}")
-                regs.write.mode("overwrite").parquet(tmp)
-                os.rename(tmp, target)
-            os.makedirs(ledger, exist_ok=True)
-            with open(mark, "w") as fh:
-                fh.write("done")
-
-        return (
-            stream_df.writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    def _recover(self) -> None:
-        """Repair an interrupted compact(): data displaced to ``._old``
-        with the live path missing → restore it; stale ``._compacting``
-        output is garbage either way."""
-        import shutil
-
-        bak, tmp = self.path + "._old", self.path + "._compacting"
-        if os.path.isdir(bak):
-            if os.path.isdir(self.path):
-                shutil.rmtree(bak)
-            else:
-                os.rename(bak, self.path)
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-
-    def registers(self) -> DataFrame:
-        self._recover()
-        # per-batch subdirs + compacted top-level files in one listing
-        raw = self.spark.read.option("recursiveFileLookup", "true").parquet(self.path)
+    def _fold(self, raw: DataFrame) -> DataFrame:
         if self.group_cols:
             return hll_merge_by(raw, self.group_cols)
         return hll_merge(raw)
+
+    def registers(self) -> DataFrame:
+        return self._merged()
 
     def estimates(self) -> DataFrame:
         """Per-group estimates (grouped mode only)."""
@@ -124,29 +165,19 @@ class HllStreamingSketch:
 
     def compact(self) -> None:
         """Fold the append-only log back to ≤ m rows (optional hygiene;
-        estimates are identical before and after).  Crash-recoverable:
-        an interrupted swap is repaired on the next read (``_recover``).
-        Run only while no stream is writing this log: compaction erases
-        the per-batch publish dirs that deduplicate replays, so a batch
-        whose stream died between publish and ledger mark could re-append
-        after a compact (harmless for HLL's max-merge, but the rule is
-        shared with the Count-Min log where it would inflate counts)."""
-        tmp = self.path + "._compacting"
-        self.registers().coalesce(1).write.mode("overwrite").parquet(tmp)
-        final, bak = self.path, self.path + "._old"
-        os.rename(final, bak)
-        os.rename(tmp, final)
-        import shutil
-
-        shutil.rmtree(bak)
+        estimates are identical before and after).  Crash-recoverable and
+        writer-exclusive as described in :meth:`_SketchLog._compact`."""
+        self._compact()
 
 
-class CountMinStreamingSketch:
+class CountMinStreamingSketch(_SketchLog):
     """Streaming heavy-hitter state: per-micro-batch CM counter tables
     appended to a log (idempotent via ledger); the live sketch is the
     per-(d,pos) SUM at read — Count-Min's merge monoid is addition, so
     stream-accumulated counters equal the batch sketch over all data
     EXACTLY (asserted in tests).  State: ≤ d·w rows per batch."""
+
+    _ledger = "cm-ledger"
 
     def __init__(
         self, spark: SparkSession, path: str, key_col: str, depth: int = 4, width: int = 256
@@ -157,50 +188,20 @@ class CountMinStreamingSketch:
         self.depth = depth
         self.width = width
 
-    def sink(self, stream_df: DataFrame, checkpoint: str):
-        from event_streaming_spark.operators.sketches import count_min_table
+    def _batch_frame(self, batch_df: DataFrame) -> DataFrame:
+        return count_min_table(batch_df, F.col(self.key_col), self.depth, self.width)
 
-        ledger = os.path.join(checkpoint, "cm-ledger")
-
-        def _batch(batch_df: DataFrame, batch_id: int) -> None:
-            mark = os.path.join(ledger, f"batch-{batch_id}.done")
-            if os.path.exists(mark):
-                return
-            target = os.path.join(self.path, f"batch-{batch_id}")
-            if not os.path.isdir(target):  # publish = atomic rename = mark
-                cm = count_min_table(
-                    batch_df, F.col(self.key_col), self.depth, self.width
-                )
-                os.makedirs(self.path, exist_ok=True)
-                tmp = os.path.join(self.path, f"._staging-batch-{batch_id}")
-                cm.write.mode("overwrite").parquet(tmp)
-                os.rename(tmp, target)
-            os.makedirs(ledger, exist_ok=True)
-            with open(mark, "w") as fh:
-                fh.write("done")
-
-        return (
-            stream_df.writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+    def _fold(self, raw: DataFrame) -> DataFrame:
+        return raw.groupBy("d", "pos").agg(F.sum("cnt").alias("cnt"))
 
     def table(self) -> DataFrame:
-        return (
-            self.spark.read.option("recursiveFileLookup", "true")
-            .parquet(self.path)
-            .groupBy("d", "pos")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
+        return self._merged()
 
     def lookup(self, keys: DataFrame, key_col: str) -> DataFrame:
-        from event_streaming_spark.operators.sketches import count_min_lookup
-
         return count_min_lookup(self.table(), keys, key_col, self.depth, self.width)
 
 
-class ThetaStreamingSketch:
+class ThetaStreamingSketch(_SketchLog):
     """Streaming KMV/theta sketch: mergeable distinct-count state that —
     unlike HLL — also supports direct SET OPERATIONS between two
     sketches (union / intersection estimates), the streaming twin of
@@ -219,6 +220,8 @@ class ThetaStreamingSketch:
     which degrades to the EXACT distinct count while unsaturated.
     """
 
+    _ledger = "theta-ledger"
+
     def __init__(
         self, spark: SparkSession, path: str, key_col: str, k: int = 256
     ) -> None:
@@ -227,43 +230,20 @@ class ThetaStreamingSketch:
         self.key_col = key_col
         self.k = k
 
-    def _hashes(self, df: DataFrame) -> DataFrame:
+    def _batch_frame(self, batch_df: DataFrame) -> DataFrame:
         from event_streaming_spark.functions.hashing import stable_hash32
 
         h = stable_hash32(
             F.concat(F.lit("theta|"), F.col(self.key_col).cast("string"))
         )
-        return df.select(h.alias("h")).distinct().orderBy("h").limit(self.k)
+        return self._fold(batch_df.select(h.alias("h")))
 
-    def sink(self, stream_df: DataFrame, checkpoint: str):
-        ledger = os.path.join(checkpoint, "theta-ledger")
-
-        def _batch(batch_df: DataFrame, batch_id: int) -> None:
-            mark = os.path.join(ledger, f"batch-{batch_id}.done")
-            if os.path.exists(mark):
-                return
-            target = os.path.join(self.path, f"batch-{batch_id}")
-            if not os.path.isdir(target):
-                os.makedirs(self.path, exist_ok=True)
-                tmp = os.path.join(self.path, f"._staging-batch-{batch_id}")
-                self._hashes(batch_df).write.mode("overwrite").parquet(tmp)
-                os.rename(tmp, target)
-            os.makedirs(ledger, exist_ok=True)
-            with open(mark, "w") as fh:
-                fh.write("done")
-
-        return (
-            stream_df.writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+    def _fold(self, raw: DataFrame) -> DataFrame:
+        return raw.distinct().orderBy("h").limit(self.k)
 
     def hashes(self) -> DataFrame:
         """Merged sketch: the k smallest distinct hashes across batches."""
-        raw = self.spark.read.option("recursiveFileLookup", "true").parquet(self.path)
-        return raw.distinct().orderBy("h").limit(self.k)
-
+        return self._merged()
     def estimate(self) -> int:
         rows = [r["h"] for r in self.hashes().collect()]
         return self._estimate_from(sorted(rows))
@@ -301,11 +281,4 @@ class ThetaStreamingSketch:
         """Fold the per-batch log to ≤ k rows (estimates unchanged).
         Same crash-repair contract as the HLL log; run only while no
         stream is writing."""
-        import shutil
-
-        tmp = self.path + "._compacting"
-        self.hashes().coalesce(1).write.mode("overwrite").parquet(tmp)
-        final, bak = self.path, self.path + "._old"
-        os.rename(final, bak)
-        os.rename(tmp, final)
-        shutil.rmtree(bak)
+        self._compact()

@@ -1,4 +1,4 @@
-"""MLlib LSH variants agree with the explicit constructions; UDTF works."""
+"""MLlib LSH variants agree with the explicit constructions."""
 
 from __future__ import annotations
 
@@ -36,18 +36,3 @@ def test_mllib_ann_returns_sane_neighbors(spark):
     dists = [r["dist"] for r in out]
     assert dists == sorted(dists)
 
-
-def test_udtf_split_interval(spark):
-    from event_streaming_spark.functions.udtf import SplitInterval
-
-    spark.udtf.register("split_interval", SplitInterval)
-    rows = spark.sql(
-        "SELECT s.* FROM LATERAL split_interval(0::BIGINT, 100::BIGINT, 3) AS s"
-    ).collect()
-    assert [(r["part"], r["start_ms"], r["end_ms"]) for r in rows] == [
-        (0, 0, 33), (1, 33, 66), (2, 66, 100),
-    ]
-    # degenerate inputs yield no rows
-    assert spark.sql(
-        "SELECT * FROM LATERAL split_interval(5::BIGINT, 5::BIGINT, 3)"
-    ).count() == 0

@@ -438,20 +438,27 @@ def test_hll_ignores_consistency_with_duckdb_on_null_keys(spark, duck):
     assert spark_est == duck_est
 
 
-def test_streaming_hll_compact_crash_recovery(spark, tmp_path):
+@pytest.mark.parametrize("sketch", ["HllStreamingSketch", "ThetaStreamingSketch"])
+def test_streaming_hll_compact_crash_recovery(spark, tmp_path, sketch):
     import os as _os
     import shutil as _shutil
 
-    from event_streaming_spark.streaming.sketches import HllStreamingSketch
+    from event_streaming_spark.streaming import sketches
 
-    sk = HllStreamingSketch(spark, str(tmp_path / "regs"), "k")
-    # seed the register log directly (no stream needed for this test)
+    sk = getattr(sketches, sketch)(spark, str(tmp_path / "regs"), "k")
+    # seed the log directly with the rows a batch appends (no stream
+    # needed for this test)
+    from event_streaming_spark.functions.hashing import stable_hash32
     from event_streaming_spark.operators.sketches import hll_registers
     from pyspark.sql import functions as _F
 
-    hll_registers(spark.range(5000).select(_F.col("id").alias("k")), _F.col("k")).write.mode(
-        "append"
-    ).parquet(sk.path)
+    keys = spark.range(5000).select(_F.col("id").alias("k"))
+    if sketch == "HllStreamingSketch":
+        rows = hll_registers(keys, _F.col("k"))
+    else:
+        theta_key = _F.concat(_F.lit("theta|"), _F.col("k").cast("string"))
+        rows = keys.select(stable_hash32(theta_key).alias("h"))
+    rows.write.mode("append").parquet(sk.path)
     est = sk.estimate()
     # simulate a crash between compact()'s two renames: live path moved
     # to ._old, replacement never landed

@@ -388,53 +388,6 @@ def test_clustering_compaction_restores_zone_selectivity(spark, tmp_path):
     assert store.read().count() == 800
 
 
-def _entropy_text(n: int) -> str:
-    """Deterministic high-entropy printable text (md5 chain)."""
-    import hashlib
-
-    out, seed = [], b"seed"
-    while sum(len(c) for c in out) < n:
-        seed = hashlib.md5(seed).digest()
-        out.append("".join(chr(33 + b % 94) for b in seed))
-    return "".join(out)[:n]
-
-
-def test_compression_ratio_quality_signal(spark):
-    from event_streaming_spark.operators.compressibility import with_compression_ratio
-
-    rows = [
-        (1, "the " * 500),                                   # boilerplate
-        (
-            2,
-            "The quick brown fox jumps over the lazy dog while seventeen "
-            "astronomers quietly measured parallax angles from volcanic "
-            "ridges; meanwhile, the harbor master catalogued brigs, "
-            "sloops, and schooners arriving with cargoes of indigo, "
-            "quicksilver, and juniper, noting each vessel's draft and "
-            "the peculiar weather glass reading at dusk.",
-        ),
-        (3, _entropy_text(2000)),  # high-entropy junk
-        (4, ""),
-        (5, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: r["zlib_permille"]
-        for r in with_compression_ratio(df, "text").collect()
-    }
-    assert got[1] < 100                 # repetition collapses
-    assert 100 < got[2] < 750           # prose compresses moderately
-    assert got[3] > 750                 # high-entropy junk barely compresses
-    assert got[1] < got[2] < got[3]     # the signal orders the three regimes
-    assert got[4] is None and got[5] is None
-    # deterministic across runs/partitionings
-    re_run = {
-        r["doc_id"]: r["zlib_permille"]
-        for r in with_compression_ratio(df.repartition(5), "text").collect()
-    }
-    assert re_run == got
-
-
 def test_zorder_2d_zone_maps_prune_on_both_dimensions(spark, tmp_path):
     """Z-order layout makes BOTH interleaved dimensions' zones tight;
     a box predicate must skip files, and so must each 1-D slab."""

@@ -339,51 +339,6 @@ def test_discover_topics_after_restart(spark, tmp_path):
     a2.close()
 
 
-def test_transform_with_state_running_stats(agency, spark):
-    """Spark 4 transformWithStateInPandas: lifetime per-key stats across
-    two micro-batch drains (typed ValueState survives between consumes).
-    Skipped where google.protobuf (the state protocol dep) is absent."""
-    from event_streaming_spark.streaming.processors import (
-        running_stats_stream,
-        tws_available,
-    )
-
-    if not tws_available():
-        import pytest as _pytest
-
-        with _pytest.raises(RuntimeError, match="protobuf"):
-            running_stats_stream(agency.topic("b", "tws").stream())
-        _pytest.skip("google.protobuf not in this container — API gated")
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        ctx = agency.topic("b", "tws")
-        ctx.publish([ev(1, "2024-01-01T00:00:00", 1, "click", 2.0),
-                     ev(2, "2024-01-01T00:01:00", 1, "click", 5.0),
-                     ev(3, "2024-01-01T00:02:00", 2, "view", 7.0)])
-        out1 = []
-        ctx.consume(lambda c, df, i: out1.extend(df.collect()), once=True,
-                    transform=running_stats_stream, output_mode="update")
-        got1 = {r["user_id"]: (r["n"], r["total"], r["max_value"]) for r in out1}
-        assert got1[1] == (2, 7.0, 5.0) and got1[2] == (1, 7.0, 7.0)
-
-        ctx.publish(ev(4, "2024-01-01T00:03:00", 1, "click", 1.0))
-        out2 = []
-        ctx.consume(lambda c, df, i: out2.extend(df.collect()), once=True,
-                    transform=running_stats_stream, output_mode="update")
-        got2 = {r["user_id"]: (r["n"], r["total"], r["max_value"]) for r in out2}
-        assert got2[1] == (3, 8.0, 5.0)  # lifetime state carried across batches
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_streaming_incremental_rollup_refresh(agency, spark, tmp_path):
     """Streaming → materialized rollup: each consumed micro-batch refreshes
     the partials store idempotently (partition overwrite keyed by batch);

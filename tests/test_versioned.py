@@ -1004,6 +1004,21 @@ def test_table_changes_empty_diff_returns_empty_feed(spark, store):
     assert "_change" in feed.columns and "id" in feed.columns
 
 
+def test_table_changes_across_schema_evolution(spark, store):
+    """The feed reads added and removed files with the target snapshot's
+    schema: a removed file written before a column was added lines up
+    with the rewritten one (the evolved column NULL-filled) instead of
+    failing the EXCEPT ALL on a column-count mismatch."""
+    store.append(spark.createDataFrame([(1, 10), (2, 20)], "a long, b long").coalesce(1))
+    store.append(
+        spark.createDataFrame([(3, 30, "x")], "a long, b long, c string"),
+        merge_schema=True,
+    )
+    store.delete_where("a = 1")
+    got = [tuple(r) for r in store.table_changes(1, 2).collect()]
+    assert got == [(1, 10, None, "delete")]
+
+
 def test_subscribe_replacement_gets_fresh_checkpoint_and_full_log(spark, tmp_path):
     """Replacing a subscriber (O4 last-write-wins) must hand the NEW
     subscriber the whole log, not the replaced query's committed
