@@ -1,41 +1,56 @@
-"""Curation tranche: near-dup cluster canonicalization (connected
-components over MinHash-LSH pairs) and deterministic hash-based sampling
-/ source mixing — the steps between "found near-dup pairs" and "emitted
-a training corpus".
+"""Training-corpus curation queries over ``documents`` and ``embeddings``.
 
-The sampling queries use the cross-engine stable_hash32 (md5-derived, see
-functions/hashing.py) so the SAME documents are selected by Spark and the
-oracle — and, more importantly for production, by any two runs over any
-partitioning.  Random() sampling is neither reproducible nor
-oracle-checkable; hash-gate sampling is both, and it is the standard
-technique for train/eval splits that must never drift.
+Near-dup cluster canonicalization and sampling, corpus hygiene (PII,
+repetition, packing), semantic clustering and quality scoring,
+rule-based quality flags, substring dedup, contamination and
+decontamination audits, perplexity buckets, lexical statistics and the
+pipeline-hygiene passes.  Each section below opens with its design notes.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from event_streaming_spark.functions.hashing import sql_stable_hash32, stable_hash32
+from event_streaming_spark.functions.hashing import (
+    normalize_text,
+    shingles,
+    sql_normalize_text,
+    sql_stable_hash32,
+    stable_hash32,
+    tokens,
+)
+from event_streaming_spark.functions.localframe import local_frame
+from event_streaming_spark.functions.numeric import exact_avg, sql_exact_avg
+from event_streaming_spark.operators import similarity as S
 from event_streaming_spark.operators.components import connected_components
 from event_streaming_spark.operators.fixpoint import Round, iterate
 from event_streaming_spark.operators.graph import symmetrized
 from event_streaming_spark.operators.materialize import materialize
-from event_streaming_spark.functions.numeric import exact_avg, sql_exact_avg
-from event_streaming_spark.operators.text import (
-    quality_features as _quality_features,
-    simhash_wide as _simhash_wide,
-    sql_quality_features as _sql_quality_features,
-    sql_simhash_over as _sql_simhash_over,
-    sql_token_hashes_wide as _sql_token_hashes_wide,
-    sql_ws_token_count,
-    ws_token_count,
-)
-from event_streaming_spark.plans.catalog import load, register
-from event_streaming_spark.plans.llm_similarity import (
-    _LSH_ORACLE,
-    minhash_lsh_near_dup_pairs,
-)
+from event_streaming_spark.operators.text import sql_ws_token_count, ws_token_count
+from event_streaming_spark.operators.text import quality_features as _quality_features
+from event_streaming_spark.operators.text import simhash_wide as _simhash_wide
+from event_streaming_spark.operators.text import sql_quality_features as _sql_quality_features
+from event_streaming_spark.operators.text import sql_simhash_over as _sql_simhash_over
+from event_streaming_spark.operators.text import sql_token_hashes_wide as _sql_token_hashes_wide
+from event_streaming_spark.plans.catalog import load, register, spread
+from event_streaming_spark.plans.llm import _LSH_ORACLE, minhash_lsh_near_dup_pairs
+
+# ===========================================================================
+# Curation: near-dup cluster canonicalization (connected
+# components over MinHash-LSH pairs) and deterministic hash-based sampling
+# / source mixing — the steps between "found near-dup pairs" and "emitted
+# a training corpus".
+#
+# The sampling queries use the cross-engine stable_hash32 (md5-derived, see
+# functions/hashing.py) so the SAME documents are selected by Spark and the
+# oracle — and, more importantly for production, by any two runs over any
+# partitioning.  Random() sampling is neither reproducible nor
+# oracle-checkable; hash-gate sampling is both, and it is the standard
+# technique for train/eval splits that must never drift.
+# ===========================================================================
 
 # ---------------------------------------------------------------------------
 # Near-dup clusters: transitive closure of the MinHash-LSH pair list, every
@@ -186,8 +201,6 @@ GROUP BY hamming
 
 @register("simhash_near_dup_histogram", _SIMHASH_ORACLE, tags=("llm", "dedup", "hash"), bench=True)
 def simhash_near_dup_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from event_streaming_spark.plans.catalog import spread
-
     docs = spread(load(spark, sf_dir, "documents"))
     sh = materialize(
         docs.select("doc_id", _simhash_wide(F.col("text"), _SH_BITS).alias("sh")),
@@ -355,7 +368,7 @@ def docs_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: stateless projection + one map-side-combining aggregate.
 # ---------------------------------------------------------------------------
 
-_SPLIT_ORACLE = f"""
+_TRAIN_SPLIT_ORACLE = f"""
 WITH d AS (
   SELECT lang, {sql_ws_token_count('text')} AS n_tok,
          {sql_stable_hash32("'split|' || cast(doc_id AS VARCHAR)")} % 1000 AS gate
@@ -367,7 +380,7 @@ FROM d GROUP BY 1, 2
 """
 
 
-@register("docs_train_split_manifest", _SPLIT_ORACLE, tags=("llm", "sample", "agg"))
+@register("docs_train_split_manifest", _TRAIN_SPLIT_ORACLE, tags=("llm", "sample", "agg"))
 def docs_train_split_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     gate = stable_hash32(F.concat(F.lit("split|"), F.col("doc_id").cast("string"))) % 1000
@@ -446,7 +459,7 @@ def docs_winsorize_chars_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame
 # most |sources|² rows.
 # ---------------------------------------------------------------------------
 
-_XSRC_ORACLE = f"""
+_XSRC_OVERLAP_ORACLE = f"""
 WITH pairs AS ({{lsh}}),
 ann AS (
   SELECT da.source AS sa, db.source AS sb FROM pairs
@@ -461,7 +474,7 @@ FROM ann GROUP BY 1, 2
 
 @register(
     "dedup_cross_source_overlap",
-    _XSRC_ORACLE.format(lsh=_LSH_ORACLE),
+    _XSRC_OVERLAP_ORACLE.format(lsh=_LSH_ORACLE),
     tags=("llm", "dedup", "agg"),
 )
 def dedup_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -532,7 +545,7 @@ def docs_weighted_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame
 # the cluster computation itself.
 # ---------------------------------------------------------------------------
 
-_SPLIT_ORACLE = f"""
+_CLUSTER_SPLIT_ORACLE = f"""
 WITH clu AS ({_CC_ORACLE}),
 assigned AS (
   SELECT doc_id, cluster_id,
@@ -548,7 +561,7 @@ FROM assigned a JOIN documents d ON d.doc_id = a.doc_id
 
 @register(
     "docs_cluster_safe_split",
-    _SPLIT_ORACLE,
+    _CLUSTER_SPLIT_ORACLE,
     tags=("llm", "curation", "dedup", "sampling"),
 )
 def docs_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -751,8 +764,6 @@ def corpus_curation_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lpa_oracle() -> str:
-    from event_streaming_spark.plans.llm_similarity import _LSH_ORACLE
-
     round_cte = """
 , l{r} AS (
   SELECT d.doc_id AS node,
@@ -881,7 +892,6 @@ FROM tagged
 def docs_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs straddling the naive doc-hash split vs the
     cluster-granular split (the latter provably 0 on the same pairs)."""
-    from event_streaming_spark.plans.llm_similarity import minhash_lsh_near_dup_pairs
 
     pairs = minhash_lsh_near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
     docs = load(spark, sf_dir, "documents").select("doc_id")
@@ -933,4 +943,4065 @@ def docs_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("ca_s") != F.col("cb_s"), 1)).alias(
             "clustersafe_crossing"
         ),
+    )
+
+
+# ===========================================================================
+# Corpus hygiene: PII scanning/redaction, repetition metrics,
+# and deterministic context packing — the remaining table-stakes passes of
+# a training-data pipeline (north-star scope beyond the C reference, like
+# plans/curation.py).
+#
+# Scale notes inline; the common theme: every pass is either a stateless
+# projection (PII scan — pipelines into the scan, no shuffle) or the
+# canonical wordcount shape (repetition — explode + two keyed aggs with
+# map-side combine), except packing, which needs a GLOBAL prefix sum and
+# uses the distributed primitive in ``operators/ranks.py`` instead of a
+# single-partition window.
+# ===========================================================================
+
+# ---------------------------------------------------------------------------
+# PII scan + redaction.  Conservative patterns shared verbatim by both
+# engines (constructs chosen to behave identically in Java regex and
+# RE2): email, US-style dashed/dotted phone, SSN-shaped id.
+# Stateless projection — no shuffle; at 100 TB this runs at scan speed.
+# ---------------------------------------------------------------------------
+
+PII_PATTERNS: dict[str, str] = {
+    "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
+    "phone": r"[0-9]{3}[-.][0-9]{3}[-.][0-9]{4}",
+    "ssn_like": r"[0-9]{3}-[0-9]{2}-[0-9]{4}",
+}
+
+_PII_ORACLE = f"""
+SELECT doc_id,
+       len(regexp_extract_all(text, '{PII_PATTERNS["email"]}')) AS n_emails,
+       len(regexp_extract_all(text, '{PII_PATTERNS["phone"]}')) AS n_phones,
+       len(regexp_extract_all(text, '{PII_PATTERNS["ssn_like"]}')) AS n_ssn_like,
+       (len(regexp_extract_all(text, '{PII_PATTERNS["email"]}')) > 0
+        OR len(regexp_extract_all(text, '{PII_PATTERNS["phone"]}')) > 0) AS has_pii,
+       substr(regexp_replace(regexp_replace(text,
+                 '{PII_PATTERNS["email"]}', '[EMAIL]', 'g'),
+                 '{PII_PATTERNS["phone"]}', '[PHONE]', 'g'), 1, 80) AS redacted_head
+FROM documents
+"""
+
+
+@register("text_pii_scan", _PII_ORACLE, tags=("llm", "text", "quality"))
+def text_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document PII hit counts + a redacted preview.
+
+    Redaction order matters (emails first, then phones) and is identical
+    in both engines; ssn_like is counted but not redacted separately —
+    the phone pattern does not subsume it (different separators)."""
+    docs = spread(load(spark, sf_dir, "documents"))
+    n = {
+        k: F.size(F.regexp_extract_all(F.col("text"), F.lit(p), F.lit(0)))
+        for k, p in PII_PATTERNS.items()
+    }
+    redacted = F.regexp_replace(
+        F.regexp_replace(F.col("text"), PII_PATTERNS["email"], "[EMAIL]"),
+        PII_PATTERNS["phone"],
+        "[PHONE]",
+    )
+    return docs.select(
+        "doc_id",
+        n["email"].alias("n_emails"),
+        n["phone"].alias("n_phones"),
+        n["ssn_like"].alias("n_ssn_like"),
+        ((n["email"] > 0) | (n["phone"] > 0)).alias("has_pii"),
+        F.substring(redacted, 1, 80).alias("redacted_head"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Repetition metrics (Gopher/RefinedWeb-style quality rules): distinct
+# token ratio + most-frequent-token mass per document.  The canonical
+# wordcount shape: explode → (doc, token) partial-agg → doc agg.  Both
+# shuffles combine map-side; at 100 TB the (doc, token) key is near-unique
+# so the first shuffle moves ~|tokens| rows once.
+# ---------------------------------------------------------------------------
+
+_TOKS = f"string_split({sql_normalize_text('text')}, ' ')"
+
+_REP_ORACLE = f"""
+WITH toks AS (
+  SELECT doc_id, unnest({_TOKS}) AS tok FROM documents
+), counts AS (
+  SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY doc_id, tok
+)
+SELECT doc_id,
+       cast(sum(c) as bigint) AS n_tokens,
+       cast(count(*) as bigint) AS n_distinct,
+       round(cast(count(*) as double) / sum(c), 6) AS distinct_ratio,
+       round(cast(max(c) as double) / sum(c), 6) AS top_token_frac
+FROM counts GROUP BY doc_id
+"""
+
+
+@register("text_repetition_metrics", _REP_ORACLE, tags=("llm", "text", "quality"))
+def text_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = spread(load(spark, sf_dir, "documents"))
+    toks = docs.select(
+        "doc_id", F.explode(F.split(normalize_text(F.col("text")), " ")).alias("tok")
+    )
+    counts = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
+    return counts.groupBy("doc_id").agg(
+        F.sum("c").alias("n_tokens"),
+        F.count(F.lit(1)).alias("n_distinct"),
+        F.round(F.count(F.lit(1)).cast("double") / F.sum("c"), 6).alias("distinct_ratio"),
+        F.round(F.max("c").cast("double") / F.sum("c"), 6).alias("top_token_frac"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Deterministic context packing: concatenate documents in corpus order
+# (doc_id) and chunk into fixed context windows — the standard LM
+# training layout.  Each doc's global token offset is a prefix sum under
+# a total order: computed with the distributed global-cumsum primitive
+# (range buckets + driver offsets), NOT a single-partition window.
+# ---------------------------------------------------------------------------
+
+PACK_CONTEXT_TOKENS = 2048
+
+_PACK_ORACLE = f"""
+WITH sized AS (
+  SELECT doc_id, cast(len({_TOKS}) as bigint) AS n_tokens FROM documents
+), pos AS (
+  SELECT doc_id, n_tokens,
+         sum(n_tokens) OVER (ORDER BY doc_id
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS cum
+  FROM sized
+)
+SELECT doc_id, n_tokens,
+       cast(cum - n_tokens as bigint) AS start_offset,
+       cast((cum - n_tokens) // {PACK_CONTEXT_TOKENS} as bigint) AS pack_id,
+       ((cum - 1) // {PACK_CONTEXT_TOKENS}) > ((cum - n_tokens) // {PACK_CONTEXT_TOKENS})
+         AS spans_boundary
+FROM pos
+"""
+
+
+@register("docs_pack_into_contexts", _PACK_ORACLE, tags=("llm", "sample", "pipeline"))
+def docs_pack_into_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from event_streaming_spark.operators.ranks import with_global_cumsum
+
+    docs = load(spark, sf_dir, "documents")
+    sized = docs.select(
+        "doc_id",
+        F.size(F.split(normalize_text(F.col("text")), " ")).cast("long").alias("n_tokens"),
+    )
+    packed, _total = with_global_cumsum(sized, [F.asc("doc_id")], "n_tokens", "cum")
+    start = F.col("cum") - F.col("n_tokens")
+    ctx = F.lit(PACK_CONTEXT_TOKENS)
+    return packed.select(
+        "doc_id",
+        "n_tokens",
+        start.alias("start_offset"),
+        F.floor(start / ctx).cast("long").alias("pack_id"),
+        (F.floor((F.col("cum") - 1) / ctx) > F.floor(start / ctx)).alias("spans_boundary"),
+    )
+
+
+# ===========================================================================
+# Curation, semantic: semantic clustering, context chunking, boilerplate
+# detection, and LM-surprisal quality scoring — north-star training-data
+# passes beyond the C reference (like the sections above).
+#
+# Determinism design (the theme of this module): every pipeline that an
+# engine pair could disagree on in the last float ulp is computed in EXACT
+# integer space instead —
+#
+# * k-means runs on fixed-point quantized vectors (``floor(x*1000+0.5)``),
+#   so distances are exact bigints and centroid updates are exact floor
+#   divisions; Spark (parallel) and DuckDB (serial) elect bit-identical
+#   clusters.  Real fleets do the same thing for reproducible re-runs
+#   (quantized/int8 clustering); the docstring on each op says what the
+#   float variant would relax.
+# * the surprisal score uses the INTEGER log2 ``len(bin(c))-1`` (exact in
+#   both engines) rather than libm ``log`` whose last-ulp may differ.
+#
+# Scale notes inline per op.
+# ===========================================================================
+
+# ---------------------------------------------------------------------------
+# Exact-integer distributed k-means over the embeddings table.
+#
+# Batch Lloyd's iterations, Spark-first:
+#   * centroids live on the DRIVER (K x D ints = tiny) and broadcast into
+#     the assignment crossJoin — the corpus NEVER shuffles for assignment;
+#     distance is a zip_with/aggregate fold inside codegen (no UDF).
+#   * the update step is one posexplode + (cluster, pos) partial-agg
+#     shuffle of K*D groups — map-side combine reduces each task's
+#     contribution to <= K*D rows regardless of corpus size.  At 100 TB
+#     with K=1024, D=1024 that is ~1M rows per round: trivially
+#     collectable, which is why driver-held centroids are the right
+#     topology (MLlib KMeans does the same treeAggregate shape).
+#   * iterations are a driver loop; each round reads the (cached)
+#     quantized corpus once.  Fixed iteration count => deterministic.
+#
+# Quantization makes every distance an exact bigint: |q| <= ~1000*|x|,
+# dist <= D*(2*1000)^2 ~ 2.6e8 for unit-norm-ish vectors — no overflow,
+# and ties break on cluster id, so the argmin is total.  Centroid update
+# is floor(sum/n) per dim (exact; both engines compute it as
+# floor(double(sum)/n), safe because |sum| << 2^53 and a non-integer
+# quotient is >= 1/n away from an integer).  Empty clusters drop out of
+# the next round in both engines.  A float k-means would relax the exact
+# hash-match to a tolerance compare; the plan shape is identical.
+# ---------------------------------------------------------------------------
+
+# Cell count is DATA-DRIVEN: k = max(_KM_K_MIN, N // _KM_PER_CELL), so
+# cells stay ~_KM_PER_CELL vectors however big the corpus grows — the
+# SemDeDup gram pass below does O(|cell|·_KM_PER_CELL) work per vector
+# instead of O(N/k_fixed) (a compile-time k makes it quadratic at scale;
+# VERDICT r5 "What's wrong" #2).  The oracle computes the SAME k in a CTE
+# (the r4 data-driven `_n_buckets` discipline, operators/ranks.py), so
+# the differential gate holds at every SF.  Initial centroids = quantized
+# vectors of vec_id 0..k-1.  At 100 TB the Spark-side count() comes from
+# parquet row-group metadata (a metadata-only job), not a data scan.
+_KM_K_MIN = 8
+_KM_PER_CELL = 10_000
+_KM_SCALE = 1000
+_KM_DIM = 64
+
+# DuckDB mirror of _km_k(); // is integer division in both engines.
+_KM_K_SQL = f"(SELECT greatest({_KM_K_MIN}, count(*) // {_KM_PER_CELL}) FROM embeddings)"
+
+
+def _km_k(n_vectors: int) -> int:
+    return max(_KM_K_MIN, n_vectors // _KM_PER_CELL)
+
+
+def _kmeans_oracle(select: str) -> str:
+    """Shared CTE chain: quantize -> c0 -> assign -> update -> final assign."""
+    return f"""
+WITH q AS (
+  SELECT vec_id, label,
+         list_transform(embedding,
+             x -> cast(floor(cast(x as double)*{_KM_SCALE} + 0.5) as bigint)) AS q
+  FROM embeddings
+),
+e AS (SELECT vec_id, label, unnest(range(1, {_KM_DIM + 1})) AS pos, unnest(q) AS v FROM q),
+c0 AS (SELECT vec_id AS cluster, pos, v AS cv FROM e WHERE vec_id < {_KM_K_SQL}),
+d1 AS (SELECT e.vec_id, c.cluster, sum((e.v - c.cv)*(e.v - c.cv)) AS dist
+       FROM e JOIN c0 c ON e.pos = c.pos GROUP BY e.vec_id, c.cluster),
+a1 AS (SELECT vec_id, cluster FROM (
+         SELECT vec_id, cluster,
+                row_number() OVER (PARTITION BY vec_id ORDER BY dist, cluster) AS rn
+         FROM d1) WHERE rn = 1),
+c1 AS (SELECT a1.cluster, e.pos,
+              cast(floor(cast(sum(e.v) as double)/count(*)) as bigint) AS cv
+       FROM a1 JOIN e ON a1.vec_id = e.vec_id GROUP BY a1.cluster, e.pos),
+d2 AS (SELECT e.vec_id, e.label, c.cluster, sum((e.v - c.cv)*(e.v - c.cv)) AS dist
+       FROM e JOIN c1 c ON e.pos = c.pos GROUP BY e.vec_id, e.label, c.cluster),
+a2 AS (SELECT vec_id, label, cluster, dist FROM (
+         SELECT vec_id, label, cluster, dist,
+                row_number() OVER (PARTITION BY vec_id ORDER BY dist, cluster) AS rn
+         FROM d2) WHERE rn = 1)
+{select}
+"""
+
+
+def _kmeans_final_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Run the fixed 2-assignment / 1-update schedule; return
+    (vec_id, label, cluster, dist) under the updated centroids."""
+    emb = load(spark, sf_dir, "embeddings")
+    qdf = emb.select(
+        "vec_id",
+        "label",
+        F.transform(
+            "embedding",
+            lambda x: F.floor(x.cast("double") * _KM_SCALE + F.lit(0.5)).cast("long"),
+        ).alias("q"),
+    )
+    # One corpus materialization reused by both rounds — pinned via the
+    # materializer, not .cache(): a leaked cache entry is plan-matched by
+    # the next invocation in the same session, quietly skipping the work
+    # it should re-measure (cache hygiene, VERDICT r11).
+    from event_streaming_spark.operators.materialize import materialize
+
+    qdf = materialize(qdf, "km-qdf")
+
+    k = _km_k(emb.count())
+    init = qdf.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").cast("int").alias("cluster"), F.col("q").alias("c")
+    )
+    centroid_rows = [(r["cluster"], list(r["c"])) for r in init.collect()]
+
+    def assign(rows: list[tuple[int, list[int]]]) -> DataFrame:
+        cent = local_frame(spark, rows, "cluster int, c array<bigint>")
+        dist = F.aggregate(
+            F.zip_with(F.col("q"), F.col("c"), lambda a, b: (a - b) * (a - b)),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        )
+        scored = qdf.crossJoin(F.broadcast(cent)).select(
+            "vec_id", "label", "q", "cluster", dist.alias("dist")
+        )
+        return scored.groupBy("vec_id").agg(
+            F.first("label").alias("label"),
+            F.first("q").alias("q"),
+            F.min(F.struct("dist", "cluster")).alias("m"),
+        )
+
+    a1 = assign(centroid_rows).select("vec_id", "q", F.col("m.cluster").alias("cluster"))
+    sums = (
+        a1.select("cluster", F.posexplode("q").alias("pos", "v"))
+        .groupBy("cluster", "pos")
+        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    by_cluster: dict[int, list[int]] = {}
+    for r in sums:
+        by_cluster.setdefault(r["cluster"], [0] * _KM_DIM)[r["pos"]] = r["s"] // r["n"]
+    updated = sorted(by_cluster.items())
+
+    a2 = assign(updated)
+    return a2.select(
+        "vec_id",
+        "label",
+        F.col("m.cluster").alias("cluster"),
+        F.col("m.dist").alias("dist"),
+    )
+
+
+@register(
+    "emb_kmeans_clusters",
+    _kmeans_oracle("SELECT vec_id, cluster, cast(dist AS BIGINT) AS dist FROM a2"),
+    tags=("llm", "ann", "clustering"),
+    bench=True,
+)
+def emb_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-vector cluster assignment after one exact Lloyd's update.
+
+    Semantic-dedup / topic-bucketing primitive: cluster id is the
+    coarse partition key under which finer near-dup passes (cosine
+    pairs, minhash) run per-bucket instead of corpus-wide."""
+    return _kmeans_final_assignment(spark, sf_dir).select("vec_id", "cluster", "dist")
+
+
+_KM_PROFILE_SELECT = """
+, lab AS (SELECT cluster, label, count(*) AS c FROM a2 GROUP BY cluster, label),
+modal AS (SELECT cluster, label AS modal_label, c AS modal_n FROM (
+            SELECT cluster, label, c,
+                   row_number() OVER (PARTITION BY cluster ORDER BY c DESC, label) AS rn
+            FROM lab) WHERE rn = 1)
+SELECT a.cluster,
+       cast(count(*) as bigint) AS n_vectors,
+       any_value(m.modal_label) AS modal_label,
+       round(cast(any_value(m.modal_n) as double)/count(*), 6) AS label_purity,
+       round(cast(sum(a.dist) as double)/count(*), 6) AS avg_dist
+FROM a2 a JOIN modal m ON a.cluster = m.cluster
+GROUP BY a.cluster
+"""
+
+
+@register(
+    "emb_kmeans_cluster_profile",
+    _kmeans_oracle(_KM_PROFILE_SELECT),
+    tags=("llm", "ann", "clustering"),
+)
+def emb_kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cluster quality report: size, modal ground-truth label, purity,
+    mean quantized distance.  Modal label is deterministic (max count,
+    ties to the smaller label).  All divisions are exact-int / n, so the
+    rounded doubles are bit-identical across engines."""
+    a2 = _kmeans_final_assignment(spark, sf_dir)
+    lab = a2.groupBy("cluster", "label").agg(F.count(F.lit(1)).alias("c"))
+    modal = (
+        lab.groupBy("cluster")
+        .agg(F.min(F.struct((-F.col("c")).alias("neg"), F.col("label"))).alias("m"))
+        .select(
+            "cluster",
+            F.col("m.label").alias("modal_label"),
+            (-F.col("m.neg")).alias("modal_n"),
+        )
+    )
+    per = a2.groupBy("cluster").agg(
+        F.count(F.lit(1)).alias("n_vectors"), F.sum("dist").alias("sum_dist")
+    )
+    return per.join(modal, "cluster").select(
+        "cluster",
+        "n_vectors",
+        "modal_label",
+        F.round(F.col("modal_n").cast("double") / F.col("n_vectors"), 6).alias("label_purity"),
+        F.round(F.col("sum_dist").cast("double") / F.col("n_vectors"), 6).alias("avg_dist"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Sliding-window context chunking: the standard LM pre-tokenization
+# layout when documents must stay intact (vs docs_pack_into_contexts,
+# which packs ACROSS documents).  W=64-token windows, stride 48
+# (16-token overlap); every token is covered, the last window is ragged.
+# Stateless explode — no shuffle, runs at scan speed at 100 TB; output
+# rows ~= tokens/stride.
+# ---------------------------------------------------------------------------
+
+_CHUNK_W, _CHUNK_S = 64, 48
+
+_CHUNK_ORACLE = f"""
+WITH t AS (
+  SELECT doc_id, string_split({sql_normalize_text('text')}, ' ') AS toks FROM documents
+),
+n AS (
+  SELECT doc_id, toks, len(toks) AS n,
+         CASE WHEN len(toks) <= {_CHUNK_W} THEN 1
+              ELSE cast(floor((len(toks) - {_CHUNK_W} + {_CHUNK_S - 1})/{_CHUNK_S}.0) as bigint) + 1
+         END AS nc
+  FROM t
+),
+c AS (SELECT doc_id, toks, n, unnest(range(0, nc)) AS chunk_idx FROM n),
+s AS (
+  SELECT doc_id, chunk_idx, chunk_idx*{_CHUNK_S} AS chunk_start,
+         array_to_string(toks[chunk_idx*{_CHUNK_S} + 1 : chunk_idx*{_CHUNK_S} + {_CHUNK_W}], ' ') AS body,
+         len(toks[chunk_idx*{_CHUNK_S} + 1 : chunk_idx*{_CHUNK_S} + {_CHUNK_W}]) AS n_chunk_tokens
+  FROM c
+)
+SELECT doc_id, chunk_idx, chunk_start, n_chunk_tokens,
+       {sql_stable_hash32('body')} AS chunk_sig,
+       substr(body, 1, 40) AS chunk_head
+FROM s
+"""
+
+
+@register("docs_chunk_sliding_windows", _CHUNK_ORACLE, tags=("llm", "text", "chunking"))
+def docs_chunk_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = spread(load(spark, sf_dir, "documents"))
+    toks = tokens(F.col("text"))
+    n = F.size(toks)
+    nc = F.when(n <= _CHUNK_W, F.lit(1).cast("long")).otherwise(
+        F.floor((n - _CHUNK_W + (_CHUNK_S - 1)) / float(_CHUNK_S)) + 1
+    )
+    with_idx = docs.select(
+        "doc_id", toks.alias("toks"), F.posexplode(F.sequence(F.lit(0), nc - 1))
+    ).withColumnRenamed("pos", "chunk_idx")
+    chunk = F.slice(F.col("toks"), F.col("chunk_idx") * _CHUNK_S + 1, _CHUNK_W)
+    body = F.array_join(chunk, " ")
+    return with_idx.select(
+        "doc_id",
+        F.col("chunk_idx").cast("long").alias("chunk_idx"),
+        (F.col("chunk_idx") * _CHUNK_S).cast("long").alias("chunk_start"),
+        F.size(chunk).cast("long").alias("n_chunk_tokens"),
+        stable_hash32(body).alias("chunk_sig"),
+        F.substring(body, 1, 40).alias("chunk_head"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Corpus-hot n-gram boilerplate detection (the n-gram form of CCNet's
+# repeated-paragraph removal — these docs have no line structure, so the
+# repeated-span unit is the 3-token shingle).  A span present in >= 3
+# documents is "boilerplate"; each doc reports what fraction of its
+# distinct spans are corpus-hot.
+# Scale: ONE tokenize pass (the exploded gram stream is pinned — the r5
+# plan re-tokenized the corpus three times, once per consumer), one
+# wordcount shuffle with map-side combine for the df table, then one
+# doc-keyed aggregate that folds n_grams AND n_hot into a single pass
+# over a left join against the hot tail (no tot/nh outer join).  The
+# hot-set is the df>=threshold TAIL of the gram table (small by
+# construction: boilerplate is the frequent minority) so AQE broadcasts
+# it at this scale; when the hot tail outgrows the broadcast threshold
+# at 100 TB the same plan runs as a shuffled hash join on the gram key —
+# which would then be stable_hash32(gram), narrowing the shuffle rows.
+# ---------------------------------------------------------------------------
+
+_HOT_DF = 3
+
+_BOILER_ORACLE = f"""
+WITH t AS (
+  SELECT doc_id, string_split({sql_normalize_text('text')}, ' ') AS toks FROM documents
+),
+g0 AS (
+  SELECT doc_id,
+         list_distinct(list_transform(range(1, greatest(len(toks)-2, 0) + 1),
+                       i -> array_to_string(toks[i:i+2], ' '))) AS gs
+  FROM t
+),
+grams AS (SELECT doc_id, unnest(gs) AS gram FROM g0),
+df AS (SELECT gram, count(*) AS df FROM grams GROUP BY gram),
+hot AS (SELECT gram FROM df WHERE df >= {_HOT_DF}),
+tot AS (SELECT doc_id, count(*) AS n_grams FROM grams GROUP BY doc_id),
+nh AS (SELECT g.doc_id, count(*) AS n_hot FROM grams g JOIN hot h ON g.gram = h.gram
+       GROUP BY g.doc_id)
+SELECT t.doc_id, t.n_grams, coalesce(nh.n_hot, 0) AS n_hot,
+       round(cast(coalesce(nh.n_hot, 0) as double)/t.n_grams, 6) AS hot_frac,
+       coalesce(nh.n_hot, 0) > t.n_grams * 0.5 AS is_boilerplate_heavy
+FROM tot t LEFT JOIN nh ON t.doc_id = nh.doc_id
+"""
+
+
+@register("text_hot_ngram_boilerplate", _BOILER_ORACLE, tags=("llm", "text", "quality"), bench=True)
+def text_hot_ngram_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from event_streaming_spark.operators.materialize import materialize
+
+    docs = spread(load(spark, sf_dir, "documents"))
+    # Pin the per-doc gram ARRAYS (one compact row per doc): the regex
+    # normalize + shingle build runs exactly once, and both consumers
+    # explode the pinned arrays — the r5 plan re-tokenized the corpus
+    # once per consumer (three scans in the physical plan).
+    g0 = materialize(
+        docs.select("doc_id", shingles(F.col("text"), 3).alias("gs")), "boiler-g0"
+    )
+    grams = g0.select("doc_id", F.explode("gs").alias("gram"))
+    hot = (
+        grams.groupBy("gram")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") >= _HOT_DF)
+        .select("gram", F.lit(1).alias("h"))
+    )
+    # Grams are distinct per doc (shingles() dedups), so one doc-keyed
+    # aggregate over the hot-flagged stream yields BOTH totals — no
+    # tot/nh branch pair and no outer join to reconcile them.
+    flagged = grams.join(hot, "gram", "left")
+    n_hot = F.sum(F.coalesce(F.col("h"), F.lit(0))).cast("long")
+    return flagged.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_grams"),
+        n_hot.alias("n_hot"),
+        F.round(n_hot.cast("double") / F.count(F.lit(1)), 6).alias("hot_frac"),
+        (n_hot > F.count(F.lit(1)) * 0.5).alias("is_boilerplate_heavy"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Unigram-LM surprisal quality score (the deterministic core of a
+# KenLM-style perplexity filter).  Corpus unigram counts -> per-token
+# integer surprisal ilog2(T) - ilog2(c) where ilog2(x) = len(bin(x))-1
+# (EXACT in both engines; a float -log2(c/T) would differ in the last
+# ulp between libm implementations and under Spark's parallel sum
+# reorder — the repo-wide exact-accumulation rule, functions/numeric.py).
+# Scale: the count table is VOCAB-sized -> broadcast; the scoring join
+# is then map-side only, and the per-doc agg combines map-side.  Rare
+# (low-c) tokens score high; a doc of frequent tokens scores low —
+# ordering matches the float filter, granularity is 1 bit.
+# ---------------------------------------------------------------------------
+
+_SURPRISAL_ORACLE = f"""
+WITH toks AS (
+  SELECT doc_id, unnest(string_split({sql_normalize_text('text')}, ' ')) AS tok
+  FROM documents
+),
+cnt AS (SELECT tok, count(*) AS c FROM toks GROUP BY tok),
+tot AS (SELECT sum(c) AS t FROM cnt),
+scored AS (
+  SELECT toks.doc_id,
+         (length(bin(tot.t)) - 1) - (length(bin(cnt.c)) - 1) AS surprisal
+  FROM toks JOIN cnt ON toks.tok = cnt.tok CROSS JOIN tot
+)
+SELECT doc_id,
+       cast(count(*) as bigint) AS n_tokens,
+       cast(sum(surprisal) as bigint) AS sum_surprisal,
+       round(cast(sum(surprisal) as double)/count(*), 6) AS avg_surprisal
+FROM scored GROUP BY doc_id
+"""
+
+
+# ---------------------------------------------------------------------------
+# Product-quantization encode: split the 64-dim space into 8 subspaces of
+# 8 dims; per subspace, code = nearest codebook entry (here the K=8 seed
+# vectors' subvectors, exact quantized distance, ties to the smaller
+# seed).  PQ codes are the storage layer of IVF-PQ — the ANN shape that
+# actually runs at 100 TB (emb_ivf_two_stage_ann provides the IVF half).
+# Scale: the codebook broadcasts (K rows); subspace distances are a
+# zip_with/aggregate fold over slices inside codegen (corpus never
+# shuffles to score); the only shuffle is the (vec, subspace) argmin with
+# map-side combine.  Exact-integer distances => deterministic codes.
+# ---------------------------------------------------------------------------
+
+_PQ_M, _PQ_DSUB = 8, 8  # 8 subspaces x 8 dims
+
+#: the shared CTE chain (quantize -> explode -> codebook -> per-subspace
+#: distances -> argmin codes); reused by the ADC search oracle in
+#: plans/scale.py so encode and search share ONE definition.
+_PQ_CTES = f"""q AS (
+  SELECT vec_id,
+         list_transform(embedding,
+             x -> cast(floor(cast(x as double)*{_KM_SCALE} + 0.5) as bigint)) AS q
+  FROM embeddings
+),
+e AS (SELECT vec_id, unnest(range(1, {_KM_DIM + 1})) AS pos, unnest(q) AS v FROM q),
+cb AS (SELECT vec_id AS seed, pos, v AS cv FROM e WHERE vec_id < {_PQ_M}),
+d AS (SELECT e.vec_id, cb.seed, (e.pos - 1)//{_PQ_DSUB} AS s,
+             sum((e.v - cb.cv)*(e.v - cb.cv)) AS dist
+      FROM e JOIN cb ON e.pos = cb.pos GROUP BY 1, 2, 3),
+best AS (SELECT vec_id, s, seed AS code, dist FROM (
+           SELECT vec_id, s, seed, dist,
+                  row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, seed) AS rn
+           FROM d) WHERE rn = 1)"""
+
+_PQ_ORACLE = f"""
+WITH {_PQ_CTES}
+SELECT vec_id,
+       string_agg(cast(code as varchar), '-' ORDER BY s) AS pq_code,
+       cast(sum(dist) as bigint) AS total_err
+FROM best GROUP BY vec_id
+"""
+
+
+def pq_frames(spark: SparkSession, sf_dir: str):
+    """(scored, best): per-(vec, seed, subspace) distances and argmin
+    codes — the shared building blocks of PQ encode AND ADC search."""
+    emb = load(spark, sf_dir, "embeddings")
+    qdf = emb.select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda x: F.floor(x.cast("double") * _KM_SCALE + F.lit(0.5)).cast("long"),
+        ).alias("q"),
+    )
+    codebook = qdf.filter(F.col("vec_id") < _PQ_M).select(
+        F.col("vec_id").cast("int").alias("seed"), F.col("q").alias("c")
+    )
+
+    def sub_dist(s):
+        a = F.slice(F.col("q"), s * _PQ_DSUB + 1, _PQ_DSUB)
+        b = F.slice(F.col("c"), s * _PQ_DSUB + 1, _PQ_DSUB)
+        return F.aggregate(
+            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        )
+
+    subd = F.transform(F.sequence(F.lit(0), F.lit(_PQ_M - 1)), sub_dist)
+    scored = (
+        qdf.crossJoin(F.broadcast(codebook))
+        .select("vec_id", "seed", F.posexplode(subd).alias("s", "dist"))
+    )
+    best = scored.groupBy("vec_id", "s").agg(F.min(F.struct("dist", "seed")).alias("m"))
+    return scored, best
+
+
+@register("emb_pq_encode", _PQ_ORACLE, tags=("llm", "ann", "clustering"))
+def emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    _, best = pq_frames(spark, sf_dir)
+    return best.groupBy("vec_id").agg(
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("s", F.col("m.seed").alias("code")))),
+                lambda x: x["code"].cast("string"),
+            ),
+            "-",
+        ).alias("pq_code"),
+        F.sum("m.dist").cast("long").alias("total_err"),
+    )
+
+
+def _ilog2(c: F.Column) -> F.Column:
+    return F.length(F.bin(c)) - 1
+
+
+@register("text_unigram_surprisal_score", _SURPRISAL_ORACLE, tags=("llm", "text", "quality"))
+def text_unigram_surprisal_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = spread(load(spark, sf_dir, "documents"))
+    toks = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
+    cnt = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
+    tot = cnt.agg(F.sum("c").alias("t"))
+    scored = (
+        # cnt scales with the corpus vocabulary — no forced broadcast;
+        # stats/AQE pick the strategy (shuffled hash join on `tok` is the
+        # 100 TB plan).  Only the 1-row total keeps its hint.
+        toks.join(cnt, "tok")
+        .crossJoin(F.broadcast(tot))
+        .select("doc_id", (_ilog2(F.col("t")) - _ilog2(F.col("c"))).alias("surprisal"))
+    )
+    return scored.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_tokens"),
+        F.sum("surprisal").cast("long").alias("sum_surprisal"),
+        F.round(F.sum("surprisal").cast("double") / F.count(F.lit(1)), 6).alias("avg_surprisal"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# DSIR-style importance resampling (Xie et al. 2023, arXiv:2302.03169):
+# select raw-corpus documents whose hashed n-gram feature distribution
+# looks like a TARGET domain.  The published recipe, made exact-integer:
+#
+#   * features = hashed unigram buckets (stable_hash32(tok) % 1024) —
+#     the hashing trick bounds BOTH distribution tables at 1024 rows,
+#     so they broadcast at ANY corpus size (the whole point of DSIR:
+#     the model is O(buckets), the data is the only big thing);
+#   * per-feature log importance weight
+#       w(f) = [ilog2(tc+1) − ilog2(T_t)] − [ilog2(rc+1) − ilog2(T_r)]
+#     with ilog2(x) = len(bin(x))−1 (the exact-integer surprisal trick;
+#     +1 = add-one smoothing) — target here is lang='en' as the stand-in
+#     quality domain;
+#   * per-doc score = Σ w(f) over the doc's token stream (with
+#     multiplicity) — exactly log p̂_target(doc)/p̂_raw(doc) under the
+#     bucketed unigram LM;
+#   * emit the top-100 by (score desc, doc_id): ties are broken totally,
+#     so the selected SET is deterministic on any engine/partitioning.
+#
+# Scale shape: one tokenize pass; two B-bounded feature aggregates with
+# map-side combine (≤1024 rows out per task); the weight table joins
+# back by BROADCAST (B-bounded by construction, unlike a vocabulary);
+# per-doc sum is one doc-keyed shuffle; the final top-k plans as
+# TakeOrderedAndProject — no global sort.  The production sampler keeps
+# docs with score ≥ a Gumbel-perturbed threshold; the deterministic
+# top-k is the oracle-matchable core (the perturbation is a knob on the
+# same scored table).
+# ---------------------------------------------------------------------------
+
+_DSIR_B = 1024  # feature buckets; both distribution tables are ≤ B rows
+_DSIR_K = 100
+_DSIR_TARGET_LANG = "en"
+
+_DSIR_ORACLE = f"""
+WITH toks AS (
+  SELECT doc_id, lang, unnest(string_split({sql_normalize_text('text')}, ' ')) AS tok
+  FROM documents
+),
+feat AS (
+  SELECT doc_id, lang, {sql_stable_hash32('tok')} % {_DSIR_B} AS f FROM toks
+),
+raw AS (SELECT f, count(*) AS rc FROM feat GROUP BY f),
+tgt AS (SELECT f, count(*) AS tc FROM feat WHERE lang = '{_DSIR_TARGET_LANG}' GROUP BY f),
+tot AS (SELECT (SELECT sum(rc) FROM raw) AS tr,
+               (SELECT coalesce(sum(tc), 0) FROM tgt) AS tt),
+w AS (
+  SELECT raw.f,
+         ((length(bin(coalesce(tgt.tc, 0) + 1)) - 1) - (length(bin(tot.tt)) - 1))
+       - ((length(bin(raw.rc + 1)) - 1) - (length(bin(tot.tr)) - 1)) AS wf
+  FROM raw LEFT JOIN tgt ON raw.f = tgt.f CROSS JOIN tot
+),
+scored AS (
+  SELECT feat.doc_id,
+         any_value(feat.lang) AS lang,
+         cast(count(*) AS bigint) AS n_tokens,
+         cast(sum(w.wf) AS bigint) AS log_weight
+  FROM feat JOIN w ON feat.f = w.f
+  GROUP BY feat.doc_id
+)
+SELECT doc_id, lang, n_tokens, log_weight
+FROM scored
+ORDER BY log_weight DESC, doc_id
+LIMIT {_DSIR_K}
+"""
+
+
+@register(
+    "sample_importance_dsir",
+    _DSIR_ORACLE,
+    tags=("llm", "curation", "sampling", "topk"),
+)
+def sample_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DSIR importance resampling: top-100 raw docs by exact-integer
+    hashed-unigram log importance weight toward the lang='en' target."""
+    docs = spread(load(spark, sf_dir, "documents"))
+    feat = docs.select(
+        "doc_id",
+        "lang",
+        (F.explode(tokens(F.col("text")))).alias("tok"),
+    ).select("doc_id", "lang", (stable_hash32(F.col("tok")) % _DSIR_B).alias("f"))
+    raw = feat.groupBy("f").agg(F.count(F.lit(1)).alias("rc"))
+    tgt = (
+        feat.filter(F.col("lang") == _DSIR_TARGET_LANG)
+        .groupBy("f")
+        .agg(F.count(F.lit(1)).alias("tc"))
+    )
+    tot = raw.agg(F.sum("rc").alias("tr")).crossJoin(
+        tgt.agg(F.coalesce(F.sum("tc"), F.lit(0)).alias("tt"))
+    )
+    tc1 = F.coalesce(F.col("tc"), F.lit(0)) + 1
+    w = (
+        raw.join(tgt, "f", "left")
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "f",
+            (
+                (_ilog2(tc1) - _ilog2(F.col("tt")))
+                - (_ilog2(F.col("rc") + 1) - _ilog2(F.col("tr")))
+            ).alias("wf"),
+        )
+    )
+    scored = (
+        # w is ≤ _DSIR_B rows by construction — broadcast is safe at any SF
+        feat.join(F.broadcast(w), "f")
+        .groupBy("doc_id")
+        .agg(
+            F.first("lang").alias("lang"),
+            F.count(F.lit(1)).alias("n_tokens"),
+            F.sum("wf").cast("long").alias("log_weight"),
+        )
+    )
+    return scored.orderBy(F.desc("log_weight"), "doc_id").limit(_DSIR_K)
+
+
+# ---------------------------------------------------------------------------
+# SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
+# embedding-space near-duplicates that *textual* dedup (MinHash/SimHash)
+# cannot see — paraphrases, translations-of-boilerplate, templated
+# rewrites.  The published recipe, composed from this engine's verified
+# pieces:
+#
+#   1. k-means CELLS (the exact fixed-schedule Lloyd's pass that backs
+#      emb_kmeans_clusters) — the coarse partition that makes step 2
+#      sub-quadratic: pairs are only scored WITHIN a cell, so candidate
+#      count is sum(|cell|²), not N².  k IS data-driven here —
+#      k = max(8, N // 10⁴) via _km_k(), mirrored in the oracle's
+#      {_KM_K_SQL} CTE — so cells stay ~10⁴ vectors and the gram pass is
+#      O(N·10⁴) total however big the corpus grows (a fixed k would make
+#      it O(N²/k): quadratic at 100 TB — VERDICT r5).  The cell id is
+#      also the shuffle key, so one repartition co-locates every pair
+#      computation.
+#   2. int8-style quantization (scale 127, the production trick) and an
+#      EXACT integer cosine gate: keep (a,b) iff dot>0 and
+#      dot²·10⁶ ≥ τ²ppm·‖a‖²·‖b‖² — all int64 (dot ≤ 64·127² ⇒
+#      dot²·10⁶ < 2⁶³), so the edge set is bit-identical on any engine.
+#      τ = 0.35, calibrated to the synthetic corpus: its embeddings are
+#      near-isotropic (pairwise cos p99 ≈ 0.29, max ≈ 0.51), so 0.35
+#      selects the genuine top tail (~0.2% of pairs).  On a real
+#      embedding model SemDeDup runs the same shape at τ ≈ 0.95 —
+#      the threshold is the knob, the plan is unchanged.
+#   3. connected components over the edge set (operators/components.py
+#      min-label propagation) — semantic cluster id = min vec_id.
+#   4. canonical keep: the min vec_id survives, everything else is the
+#      dedup candidate set.
+#
+# Oracle: the k-means CTE chain (shared with emb_kmeans_clusters), the
+# same integer pair gate, and the min-reachable-id RECURSIVE closure —
+# DuckDB pins every cluster id and keep flag exactly.
+# ---------------------------------------------------------------------------
+
+_SEM_SCALE = 127  # int8-style quantization: |dot| ≤ 64·127², dot²·10⁶ < 2⁶³
+_SEM_TAU_SQ_PPM = 122500  # τ = 0.35 → τ²·10⁶ (see threshold note above)
+#: Whole-cell-per-task ceiling for the SemDeDup gram pass (ADVICE r11):
+#: 200k 64-dim int64 vectors is ~100 MB of pandas frame per task - beyond
+#: that the k-means init has degenerated and the task raises with the fix.
+_SEM_MAX_CELL = 200_000
+
+
+def _semdedup_oracle() -> str:
+    sel = f"""
+, q8 AS (
+  SELECT vec_id,
+         list_transform(embedding,
+             x -> cast(floor(cast(x as double)*{_SEM_SCALE} + 0.5) as bigint)) AS q
+  FROM embeddings
+),
+e8 AS (
+  SELECT a2.cluster, q8.vec_id, unnest(range(1, {_KM_DIM + 1})) AS pos, unnest(q) AS v
+  FROM q8 JOIN a2 ON q8.vec_id = a2.vec_id
+),
+nn AS (SELECT vec_id, sum(v*v) AS n2 FROM e8 GROUP BY vec_id),
+dots AS (
+  SELECT a.vec_id AS va, b.vec_id AS vb, sum(a.v * b.v) AS dot
+  FROM e8 a JOIN e8 b ON a.cluster = b.cluster AND a.pos = b.pos AND a.vec_id < b.vec_id
+  GROUP BY a.vec_id, b.vec_id
+),
+sem_edges AS (
+  SELECT d.va, d.vb
+  FROM dots d JOIN nn na ON d.va = na.vec_id JOIN nn nb ON d.vb = nb.vec_id
+  WHERE d.dot > 0 AND d.dot * d.dot * 1000000 >= {_SEM_TAU_SQ_PPM} * na.n2 * nb.n2
+),
+bidir AS (
+  SELECT va AS src, vb AS dst FROM sem_edges
+  UNION
+  SELECT vb AS src, va AS dst FROM sem_edges
+),
+reach(node, origin) AS (
+  SELECT vec_id, vec_id FROM embeddings
+  UNION
+  SELECT b.dst AS node, r.origin FROM reach r JOIN bidir b ON b.src = r.node
+)
+SELECT r.node AS vec_id,
+       any_value(a2.cluster) AS cell,
+       min(r.origin) AS sem_cluster_id,
+       CAST(CASE WHEN r.node = min(r.origin) THEN 1 ELSE 0 END AS BIGINT) AS keep
+FROM reach r JOIN a2 ON r.node = a2.vec_id
+GROUP BY r.node
+ORDER BY vec_id
+"""
+    # The recursive closure rides the shared k-means CTE chain; RECURSIVE
+    # must head the WITH list (non-recursive members are fine under it).
+    return _kmeans_oracle(sel).replace("WITH q AS", "WITH RECURSIVE q AS", 1)
+
+
+@register(
+    "dedup_semantic_clusters",
+    _semdedup_oracle(),
+    tags=("llm", "dedup", "ann", "clustering", "iterative"),
+    bench=True,
+)
+def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup: k-means cells → exact-integer cosine gate (τ=0.35,
+    corpus-calibrated) within cells → per-cell connected components →
+    keep flag.
+
+    The similarity graph is a DISJOINT UNION of per-cell subgraphs by
+    construction (pairs are only gated within a cell), so transitive
+    closure never crosses a cell boundary — the generic distributed CC
+    loop (operators/components.py, ~8 materialized rounds of driver-side
+    fixed floors on this graph) is replaced by an exact union-find run
+    INSIDE the same per-cell gram task (r11 optimization; guide §1.2:
+    problem knowledge the optimizer doesn't have).  Cells are ~10⁴
+    vectors whatever the corpus size (data-driven k), so the in-task
+    union-find is bounded and the whole labeling is ONE shuffle keyed by
+    cell — strictly fewer global barriers than the loop at any scale.
+    Labels are min-reachable-vec-id, identical to connected_components'
+    contract (union order cannot change a component's min)."""
+    emb = load(spark, sf_dir, "embeddings")
+    cells = _kmeans_final_assignment(spark, sf_dir).select("vec_id", "cluster")
+
+    q8 = emb.select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda x: F.floor(x.cast("double") * _SEM_SCALE + F.lit(0.5)).cast("long"),
+        ).alias("q"),
+    )
+
+    # (vec_id, cell, q): vectors shuffle ONCE, keyed by cell.  The pair
+    # gate runs as a per-cell gram matrix (applyInPandas → one int64
+    # numpy matmul per cell) instead of a self-join — a join would copy
+    # BOTH 64-long arrays into every candidate pair row (|cell|² array
+    # materializations); the gram shape moves each vector once.  Exact
+    # by bounds: dot ≤ 64·127² ⇒ dot²·10⁶ < 2⁶³ and τ²ppm·‖a‖²·‖b‖²
+    # < 2⁶³, so int64 never wraps.
+    vecs = q8.join(cells, "vec_id").select(
+        "vec_id", F.col("cluster").alias("cell"), "q"
+    )
+
+    def cell_components(pdf):
+        import numpy as np
+        import pandas as pd
+
+        ids = pdf["vec_id"].to_numpy()
+        cell = pdf["cell"].to_numpy()
+        n = len(ids)
+        # Guard the whole-cell-per-task assumption (ADVICE r11): the
+        # data-driven k keeps cells ~10⁴ vectors, but a degenerate
+        # k-means init could concentrate the corpus in one cell and turn
+        # this task into a silent straggler/OOM.  The gram pass itself
+        # is block-bounded; the per-task pandas frame is not — fail
+        # loudly with the remedy instead.
+        if n > _SEM_MAX_CELL:  # pragma: no cover - degenerate clustering
+            raise ValueError(
+                f"SemDeDup cell {int(cell[0])} holds {n} vectors "
+                f"(> {_SEM_MAX_CELL}): k-means collapsed; raise k or fall "
+                "back to operators/components.connected_components for "
+                "this corpus"
+            )
+        m = np.asarray([np.asarray(v, dtype=np.int64) for v in pdf["q"]], dtype=np.int64)
+        n2 = np.einsum("ij,ij->i", m, m)
+        parent = np.arange(n)
+
+        def find(x: int) -> int:
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]  # path halving
+                x = parent[x]
+            return x
+
+        # Block-wise gram: memory stays O(B²) per block pair however big
+        # the cell grows (a whole-cell |cell|² int64 gram would be the
+        # OOM at production cell sizes); CPU is the same exact matmuls.
+        # Surviving pairs (~0.2% at τ=0.35) are unioned immediately —
+        # no edge list ever leaves the task.
+        B = 4096
+        for i0 in range(0, n, B):
+            mi, ni = m[i0 : i0 + B], n2[i0 : i0 + B]
+            for j0 in range(i0, n, B):
+                g = mi @ m[j0 : j0 + B].T  # exact int64 block gram
+                ok = (g > 0) & (g * g * 1000000 >= _SEM_TAU_SQ_PPM * np.outer(ni, n2[j0 : j0 + B]))
+                if i0 == j0:
+                    ok &= np.tri(*ok.shape, k=-1, dtype=bool).T  # strict upper
+                ii, jj = np.nonzero(ok)
+                for a, b in zip(ii + i0, jj + j0):
+                    ra, rb = find(int(a)), find(int(b))
+                    if ra != rb:
+                        parent[rb] = ra
+        roots = np.fromiter((find(i) for i in range(n)), dtype=np.int64, count=n)
+        comp = pd.Series(ids).groupby(roots).transform("min").to_numpy()
+        return pd.DataFrame({"vec_id": ids, "cell": cell, "sem_cluster_id": comp})
+
+    labeled = vecs.groupBy("cell").applyInPandas(
+        cell_components, "vec_id long, cell int, sem_cluster_id long"
+    )
+    return labeled.select(
+        "vec_id",
+        "cell",
+        "sem_cluster_id",
+        (F.col("vec_id") == F.col("sem_cluster_id")).cast("long").alias("keep"),
+    ).orderBy("vec_id")
+
+
+# ---------------------------------------------------------------------------
+# Deterministic training-batch shuffle: the LAST step of every
+# training-data pipeline — a global pseudo-random permutation of the
+# curated corpus, cut into fixed-size batches.  The permutation key is a
+# salted stable hash (epoch salt ⇒ a different but reproducible order per
+# epoch), NOT rand(): reproducibility across reruns/engines is the
+# whole point (and what makes it oracle-checkable).
+#
+# Scale shape: the global row number rides operators/ranks.py — range
+# buckets on the hash key (data-driven count), one O(#buckets) offsets
+# aggregate, bucket-local windows.  NO single-partition window over the
+# corpus, no driver-side permutation: at 100 TB this is one range
+# shuffle + metadata.  batch_id/pos_in_batch are pure arithmetic on the
+# row number.  A trainer shards by batch_id % n_readers — co-located
+# with this layout by construction.
+# ---------------------------------------------------------------------------
+
+_SHUF_BATCH = 64
+_SHUF_SALT = "epoch0"
+
+_SHUF_ORACLE = f"""
+WITH pos AS (
+  SELECT doc_id,
+         {sql_stable_hash32(f"cast(doc_id AS VARCHAR) || '#{_SHUF_SALT}'")} AS shuffle_pos
+  FROM documents
+),
+rn AS (
+  SELECT doc_id, shuffle_pos,
+         row_number() OVER (ORDER BY shuffle_pos, doc_id) AS rn
+  FROM pos
+)
+SELECT doc_id, shuffle_pos,
+       cast((rn - 1) // {_SHUF_BATCH} AS BIGINT) AS batch_id,
+       cast((rn - 1) % {_SHUF_BATCH} AS BIGINT) AS pos_in_batch
+FROM rn
+"""
+
+
+@register(
+    "docs_training_batches_shuffle",
+    _SHUF_ORACLE,
+    tags=("llm", "curation", "sampling", "rank"),
+)
+def docs_training_batches_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Salted-hash global shuffle of the corpus into fixed 64-doc
+    training batches — reproducible permutation, distributed rank."""
+    from event_streaming_spark.operators.ranks import with_global_row_number
+
+    docs = spread(load(spark, sf_dir, "documents"))
+    pos = docs.select(
+        "doc_id",
+        stable_hash32(
+            F.concat(F.col("doc_id").cast("string"), F.lit(f"#{_SHUF_SALT}"))
+        ).alias("shuffle_pos"),
+    )
+    ranked, _total = with_global_row_number(
+        pos, [F.col("shuffle_pos"), F.col("doc_id")], out_col="rn"
+    )
+    return ranked.select(
+        "doc_id",
+        "shuffle_pos",
+        ((F.col("rn") - 1) / _SHUF_BATCH).cast("long").alias("batch_id"),
+        ((F.col("rn") - 1) % _SHUF_BATCH).cast("long").alias("pos_in_batch"),
+    )
+
+
+# ===========================================================================
+# Curation / text-pipeline quality rules.
+#
+# * ``docs_gopher_quality_flags`` — the Gopher rule-based document
+#   filters (Rae et al., "Scaling Language Models: ... Gopher", 2021,
+#   §A1.1): word-count bounds, mean-word-length band, alphabetic-word
+#   ratio, stopword presence — per-source pass/fail breakdown.  All
+#   rules are exact-integer (µ-scaled ratios), so the gate is
+#   bit-reproducible across engines.
+# * ``docs_temperature_sampling_weights`` — the multilingual sampling
+#   recipe (XLM-R / mC4): per-language weight ∝ p_lang^α with α = 0.3,
+#   upsampling low-resource languages.  The single double op (p^α as
+#   exp(α·ln p)) is rounded to ppm BEFORE normalization, so the
+#   normalized weights and per-epoch doc budgets are exact integer
+#   arithmetic on identical inputs in both engines.
+# * ``docs_ldiversity_sensitive_audit`` — the governance complement of
+#   k-anonymity (`docs_kanon_quasi_identifier_risk`): per
+#   quasi-identifier group, distinct-l and entropy-l diversity of the
+#   sensitive attribute (Machanavajjhala et al., "l-Diversity", 2007).
+#   Entropy terms ride DECIMAL(18,6) (the Naive-Bayes order-independent
+#   summation recipe) so the per-group entropy is partition-order-proof.
+# * ``text_zipf_rank_slope_by_source`` — rank-frequency log-log OLS over
+#   each source's top-100 terms: the Zipf fit that screens synthetic /
+#   boilerplate-heavy sources (natural text slopes ≈ −1).  ln terms are
+#   rounded to DECIMAL(18,6) before the moment sums (exact decimal
+#   adds), one final double division chain rounded 6.
+# * ``text_bpe_fertility_by_lang`` — train the 8-merge BPE tokenizer
+#   (operators/bpe.py) then ENCODE the corpus with it and report
+#   per-language fertility (tokens per word, ppm) and compression
+#   (chars per token, ppm) — the end-to-end train→encode composition,
+#   and the readout a tokenizer team uses to detect languages the vocab
+#   underserves.  Oracle: the train chain's unrolled CTEs
+#   (``_bpe_chain_parts``) extended with an encode chain
+#   whose per-round replace is gated on the same min-count early-stop.
+#
+# Scale shapes: every query's corpus-sized stage is a tokenize +
+# wordcount-shaped shuffle or a pure per-row flag pass; the frames the
+# statistics run on are vocabulary-, language-, or group-bounded.
+# ===========================================================================
+
+# ---------------------------------------------------------------------------
+# Gopher quality flags
+# ---------------------------------------------------------------------------
+
+_GQ_STOP = ("the", "be", "to", "of", "and", "that", "have", "with", "a", "in")
+_GQ_MIN_WORDS, _GQ_MAX_WORDS = 10, 100_000
+_GQ_MWL_LO, _GQ_MWL_HI = 3_000_000, 12_000_000  # mean word length, µ-chars
+_GQ_ALPHA_MIN = 700_000  # ppm of words containing a letter
+_GQ_STOP_MIN = 2  # distinct stopwords required
+
+_GQ_STOP_SQL = "[" + ", ".join(f"'{s}'" for s in _GQ_STOP) + "]"
+
+_GQ_ORACLE = f"""
+WITH feat AS (
+  SELECT source,
+         ws,
+         cast(len(ws) AS BIGINT) AS n_words,
+         cast(list_aggregate(list_transform(ws, w -> length(w)), 'sum')
+              AS BIGINT) AS n_chars,
+         cast(len(list_filter(ws, w -> regexp_matches(w, '[a-z]')))
+              AS BIGINT) AS n_alpha,
+         cast(len(list_filter({_GQ_STOP_SQL},
+                              s -> list_contains(ws, s))) AS BIGINT) AS n_stop
+  FROM (
+    SELECT source,
+           string_split({sql_normalize_text('text')}, ' ') AS ws
+    FROM documents
+  )
+), flags AS (
+  SELECT source,
+         CASE WHEN n_words BETWEEN {_GQ_MIN_WORDS} AND {_GQ_MAX_WORDS}
+              THEN 1 ELSE 0 END AS words_ok,
+         CASE WHEN n_words > 0
+                   AND n_chars * 1000000 // n_words BETWEEN {_GQ_MWL_LO} AND {_GQ_MWL_HI}
+              THEN 1 ELSE 0 END AS mwl_ok,
+         CASE WHEN n_words > 0
+                   AND n_alpha * 1000000 // n_words >= {_GQ_ALPHA_MIN}
+              THEN 1 ELSE 0 END AS alpha_ok,
+         CASE WHEN n_stop >= {_GQ_STOP_MIN} THEN 1 ELSE 0 END AS stop_ok
+  FROM feat
+)
+SELECT source,
+       cast(count(*) AS BIGINT) AS n_docs,
+       cast(sum(1 - words_ok) AS BIGINT) AS fail_words,
+       cast(sum(1 - mwl_ok) AS BIGINT) AS fail_mwl,
+       cast(sum(1 - alpha_ok) AS BIGINT) AS fail_alpha,
+       cast(sum(1 - stop_ok) AS BIGINT) AS fail_stop,
+       cast(sum(words_ok * mwl_ok * alpha_ok * stop_ok) AS BIGINT) AS n_pass,
+       cast(sum(words_ok * mwl_ok * alpha_ok * stop_ok) * 1000000
+            // count(*) AS BIGINT) AS pass_ppm
+FROM flags
+GROUP BY source ORDER BY source
+"""
+
+
+@register(
+    "docs_gopher_quality_flags",
+    _GQ_ORACLE,
+    tags=("llm", "quality", "curation"),
+)
+def docs_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source Gopher filter report.  One tokenize pass; every rule
+    is a JVM-side array expression over the token list; the rollup is a
+    source-keyed partial aggregate — no UDFs, no second scan."""
+    docs = spread(load(spark, sf_dir, "documents"))
+    ws = tokens(F.col("text"))
+    feat = docs.select(
+        "source",
+        F.size(ws).cast("long").alias("n_words"),
+        F.aggregate(
+            F.transform(ws, lambda w: F.length(w).cast("long")),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        ).alias("n_chars"),
+        F.size(F.filter(ws, lambda w: w.rlike("[a-z]"))).cast("long").alias(
+            "n_alpha"
+        ),
+        F.size(
+            F.filter(
+                F.array(*[F.lit(s) for s in _GQ_STOP]),
+                lambda s: F.array_contains(ws, s),
+            )
+        )
+        .cast("long")
+        .alias("n_stop"),
+    )
+    mwl = (F.col("n_chars") * 1_000_000 / F.col("n_words")).cast("long")
+    alpha_ppm = (F.col("n_alpha") * 1_000_000 / F.col("n_words")).cast("long")
+    flags = feat.select(
+        "source",
+        F.when(
+            F.col("n_words").between(_GQ_MIN_WORDS, _GQ_MAX_WORDS), 1
+        )
+        .otherwise(0)
+        .alias("words_ok"),
+        F.when(
+            (F.col("n_words") > 0) & mwl.between(_GQ_MWL_LO, _GQ_MWL_HI), 1
+        )
+        .otherwise(0)
+        .alias("mwl_ok"),
+        F.when((F.col("n_words") > 0) & (alpha_ppm >= _GQ_ALPHA_MIN), 1)
+        .otherwise(0)
+        .alias("alpha_ok"),
+        F.when(F.col("n_stop") >= _GQ_STOP_MIN, 1).otherwise(0).alias("stop_ok"),
+    )
+    allpass = (
+        F.col("words_ok") * F.col("mwl_ok") * F.col("alpha_ok") * F.col("stop_ok")
+    )
+    return (
+        flags.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum(1 - F.col("words_ok")).cast("long").alias("fail_words"),
+            F.sum(1 - F.col("mwl_ok")).cast("long").alias("fail_mwl"),
+            F.sum(1 - F.col("alpha_ok")).cast("long").alias("fail_alpha"),
+            F.sum(1 - F.col("stop_ok")).cast("long").alias("fail_stop"),
+            F.sum(allpass).cast("long").alias("n_pass"),
+        )
+        .select(
+            "source",
+            "n_docs",
+            "fail_words",
+            "fail_mwl",
+            "fail_alpha",
+            "fail_stop",
+            "n_pass",
+            (F.col("n_pass") * 1_000_000 / F.col("n_docs"))
+            .cast("long")
+            .alias("pass_ppm"),
+        )
+        .orderBy("source")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Temperature sampling weights (α = 0.3)
+# ---------------------------------------------------------------------------
+
+_TEMP_ALPHA = "0.3"  # shared literal — identical double in both engines
+
+_TEMP_ORACLE = f"""
+WITH per_lang AS (
+  SELECT lang,
+         cast(count(*) AS BIGINT) AS n_docs,
+         cast(sum(len(string_split({sql_normalize_text('text')}, ' ')))
+              AS BIGINT) AS n_tokens
+  FROM documents GROUP BY lang
+), tot AS (
+  SELECT lang, n_docs, n_tokens,
+         cast(sum(n_tokens) OVER () AS BIGINT) AS tot_tokens,
+         cast(sum(n_docs) OVER () AS BIGINT) AS tot_docs
+  FROM per_lang
+), raw AS (
+  SELECT lang, n_docs, n_tokens,
+         cast(n_tokens * 1000000 // tot_tokens AS BIGINT) AS share_ppm,
+         cast(round(1000000 * exp({_TEMP_ALPHA} * ln(
+           cast(n_tokens AS DOUBLE) / cast(tot_tokens AS DOUBLE)
+         ))) AS BIGINT) AS raw_ppm,
+         tot_docs
+  FROM tot
+)
+SELECT lang, n_docs, n_tokens, share_ppm,
+       cast(raw_ppm * 1000000 // (sum(raw_ppm) OVER ()) AS BIGINT)
+         AS weight_ppm,
+       cast(raw_ppm * 1000000 // (sum(raw_ppm) OVER ()) * tot_docs
+            // 1000000 AS BIGINT) AS docs_per_epoch
+FROM raw
+ORDER BY lang
+"""
+
+
+@register(
+    "docs_temperature_sampling_weights",
+    _TEMP_ORACLE,
+    tags=("llm", "sampling", "mixing"),
+)
+def docs_temperature_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """p_lang^0.3 mixing weights.  The ONLY double op (exp(α·ln p)) is
+    rounded to ppm before normalization; the window sums are exact
+    integer adds over the language-bounded frame, so normalized weights
+    and epoch budgets are deterministic.  Scale: one tokenize-count
+    scan; everything after runs on ≤ |languages| rows."""
+    docs = load(spark, sf_dir, "documents")
+    per_lang = docs.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum(F.size(tokens(F.col("text"))).cast("long"))
+        .cast("long")
+        .alias("n_tokens"),
+    )
+    wall = Window.partitionBy()
+    tot = per_lang.select(
+        "lang",
+        "n_docs",
+        "n_tokens",
+        F.sum("n_tokens").over(wall).cast("long").alias("tot_tokens"),
+        F.sum("n_docs").over(wall).cast("long").alias("tot_docs"),
+    )
+    p = F.col("n_tokens").cast("double") / F.col("tot_tokens").cast("double")
+    raw = tot.select(
+        "lang",
+        "n_docs",
+        "n_tokens",
+        # exact integer div — token-count numerators (n_tokens * 1e6) cross
+        # 2^53 near ~9e9 corpus tokens, where double / + cast('long') would
+        # silently round; `div` matches the oracle's `//` at any scale.
+        F.expr("(n_tokens * CAST(1000000 AS BIGINT)) div tot_tokens")
+        .cast("long")
+        .alias("share_ppm"),
+        F.round(1_000_000 * F.exp(F.lit(float(_TEMP_ALPHA)) * F.log(p)))
+        .cast("long")
+        .alias("raw_ppm"),
+        "tot_docs",
+    )
+    w = raw.withColumn("sum_raw", F.sum("raw_ppm").over(wall).cast("long"))
+    w_ppm = F.expr("(raw_ppm * CAST(1000000 AS BIGINT)) div sum_raw")
+    return w.select(
+        "lang",
+        "n_docs",
+        "n_tokens",
+        "share_ppm",
+        w_ppm.cast("long").alias("weight_ppm"),
+        F.expr(
+            "((raw_ppm * CAST(1000000 AS BIGINT)) div sum_raw * tot_docs)"
+            " div CAST(1000000 AS BIGINT)"
+        )
+        .cast("long")
+        .alias("docs_per_epoch"),
+    ).orderBy("lang")
+
+
+# ---------------------------------------------------------------------------
+# l-diversity audit over the k-anonymity quasi-identifier
+# ---------------------------------------------------------------------------
+
+_LDIV_BUCKET = 50  # n_chars bucket width — matches the k-anon audit
+
+_LDIV_ORACLE = f"""
+WITH cell AS (
+  SELECT source, n_chars // {_LDIV_BUCKET} AS len_bucket, lang,
+         cast(count(*) AS BIGINT) AS c
+  FROM documents GROUP BY source, n_chars // {_LDIV_BUCKET}, lang
+), grp AS (
+  SELECT source, len_bucket,
+         cast(sum(c) AS BIGINT) AS k,
+         cast(count(*) AS BIGINT) AS l_distinct,
+         sum(cast(round(c * ln(cast(c AS DOUBLE)), 6) AS DECIMAL(18,6)))
+           AS s_clnc
+  FROM cell GROUP BY source, len_bucket
+)
+SELECT source, len_bucket, k, l_distinct,
+       round(ln(cast(k AS DOUBLE)) - cast(s_clnc AS DOUBLE)
+             / cast(k AS DOUBLE), 6) + 0.0 AS entropy_l,
+       CASE WHEN l_distinct < 2 THEN 1 ELSE 0 END AS risky
+FROM grp
+ORDER BY source, len_bucket
+"""
+
+
+@register(
+    "docs_ldiversity_sensitive_audit",
+    _LDIV_ORACLE,
+    tags=("llm", "privacy", "audit"),
+)
+def docs_ldiversity_sensitive_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct-l and entropy-l per (source, length-bucket) QI group,
+    sensitive attribute = lang.  H = ln k − (Σ c·ln c)/k; each c·ln c
+    term is rounded to DECIMAL(18,6) so the Σ is an exact decimal add
+    (order-independent), then one final double chain rounded 6.  Scale:
+    one groupBy to cells, one to groups — both map-side combined."""
+    docs = load(spark, sf_dir, "documents")
+    cell = docs.groupBy(
+        "source",
+        F.expr(f"n_chars div {_LDIV_BUCKET}").alias("len_bucket"),
+        "lang",
+    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
+    term = F.round(
+        F.col("c") * F.log(F.col("c").cast("double")), 6
+    ).cast("decimal(18,6)")
+    grp = cell.groupBy("source", "len_bucket").agg(
+        F.sum("c").cast("long").alias("k"),
+        F.count(F.lit(1)).cast("long").alias("l_distinct"),
+        F.sum(term).alias("s_clnc"),
+    )
+    # + 0.0 normalizes IEEE -0.0 (a 1-language group rounds to a tiny
+    # negative) so both engines emit the same sign — mirrored in the
+    # oracle.
+    entropy = (
+        F.round(
+            F.log(F.col("k").cast("double"))
+            - F.col("s_clnc").cast("double") / F.col("k").cast("double"),
+            6,
+        )
+        + F.lit(0.0)
+    )
+    return grp.select(
+        "source",
+        "len_bucket",
+        "k",
+        "l_distinct",
+        entropy.alias("entropy_l"),
+        F.when(F.col("l_distinct") < 2, 1).otherwise(0).alias("risky"),
+    ).orderBy("source", "len_bucket")
+
+
+# ---------------------------------------------------------------------------
+# Zipf rank-frequency slope per source
+# ---------------------------------------------------------------------------
+
+_ZIPF_TOPK = 100
+
+_ZIPF_ORACLE = f"""
+WITH tf AS (
+  SELECT source, term, cast(count(*) AS BIGINT) AS cnt
+  FROM (
+    SELECT source,
+           unnest(string_split({sql_normalize_text('text')}, ' ')) AS term
+    FROM documents
+  ) WHERE length(term) > 0
+  GROUP BY source, term
+), ranked AS (
+  SELECT source, cnt,
+         row_number() OVER (PARTITION BY source
+                            ORDER BY cnt DESC, term) AS rnk
+  FROM tf
+), pts AS (
+  SELECT source,
+         cast(round(ln(cast(rnk AS DOUBLE)), 6) AS DECIMAL(18,6)) AS x,
+         cast(round(ln(cast(cnt AS DOUBLE)), 6) AS DECIMAL(18,6)) AS y
+  FROM ranked WHERE rnk <= {_ZIPF_TOPK}
+), mom AS (
+  SELECT source,
+         cast(count(*) AS BIGINT) AS n,
+         sum(x) AS sx, sum(y) AS sy,
+         sum(x * y) AS sxy, sum(x * x) AS sxx
+  FROM pts GROUP BY source
+)
+SELECT source, n,
+       round((cast(n AS DOUBLE) * cast(sxy AS DOUBLE)
+              - cast(sx AS DOUBLE) * cast(sy AS DOUBLE))
+             / (cast(n AS DOUBLE) * cast(sxx AS DOUBLE)
+                - cast(sx AS DOUBLE) * cast(sx AS DOUBLE)), 6) AS slope,
+       round((cast(sy AS DOUBLE) - ((cast(n AS DOUBLE) * cast(sxy AS DOUBLE)
+              - cast(sx AS DOUBLE) * cast(sy AS DOUBLE))
+             / (cast(n AS DOUBLE) * cast(sxx AS DOUBLE)
+                - cast(sx AS DOUBLE) * cast(sx AS DOUBLE)))
+              * cast(sx AS DOUBLE)) / cast(n AS DOUBLE), 6) AS intercept
+FROM mom
+ORDER BY source
+"""
+
+
+@register(
+    "text_zipf_rank_slope_by_source",
+    _ZIPF_ORACLE,
+    tags=("llm", "text", "stats"),
+)
+def text_zipf_rank_slope_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """log-log OLS over each source's top-100 terms.  ln terms round to
+    DECIMAL(18,6) before the moment sums (exact adds — the NB recipe),
+    so Σx, Σy, Σxy, Σx² are order-independent; the slope/intercept
+    chain is fixed IEEE ops on identical doubles.  Scale: wordcount
+    shuffle + two-stage top-k per source; the OLS runs on 100 rows per
+    source."""
+    from event_streaming_spark.operators.ranks import topk_per_group
+
+    docs = spread(load(spark, sf_dir, "documents"))
+    tf = (
+        docs.select(
+            "source", F.explode(tokens(F.col("text"))).alias("term")
+        )
+        .where(F.length("term") > 0)
+        .groupBy("source", "term")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
+    ranked = topk_per_group(
+        tf, "source", [F.desc("cnt"), F.asc("term")], _ZIPF_TOPK, rn_col="rnk"
+    )
+    dec = lambda c: F.round(F.log(c.cast("double")), 6).cast("decimal(18,6)")
+    pts = ranked.select(
+        "source", dec(F.col("rnk")).alias("x"), dec(F.col("cnt")).alias("y")
+    )
+    mom = pts.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("x").alias("sx"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("x") * F.col("y")).alias("sxy"),
+        F.sum(F.col("x") * F.col("x")).alias("sxx"),
+    )
+    nd = F.col("n").cast("double")
+    sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
+    sxy, sxx = F.col("sxy").cast("double"), F.col("sxx").cast("double")
+    slope = (nd * sxy - sx * sy) / (nd * sxx - sx * sx)
+    return mom.select(
+        "source",
+        "n",
+        F.round(slope, 6).alias("slope"),
+        F.round((sy - slope * sx) / nd, 6).alias("intercept"),
+    ).orderBy("source")
+
+
+# ---------------------------------------------------------------------------
+# BPE fertility by language (train → encode composition)
+# ---------------------------------------------------------------------------
+
+
+_BPE_MERGES = 8
+_BPE_MIN_COUNT = 2
+
+
+def _bpe_chain_parts(n: int = _BPE_MERGES) -> list[str]:
+    """The shared unrolled training chain (w0..w{n}, pc*/best* per
+    round) as CTE fragments — composed by the fertility oracle below,
+    which extends it with an encode chain over the same best{k} tables,
+    and by the train-merges oracle in plans/scale.py (its section
+    comment explains the unroll)."""
+    parts = [
+        f"""w0 AS MATERIALIZED (
+  SELECT '|' || regexp_replace(word, '(.)', '|\\1|', 'g') || '|' AS w, wc
+  FROM (
+    SELECT word, count(*) AS wc FROM (
+      SELECT unnest(string_split({sql_normalize_text('text')}, ' ')) AS word
+      FROM documents
+    ) WHERE length(word) > 0 GROUP BY word
+  )
+)"""
+    ]
+    for k in range(1, n + 1):
+        parts.append(
+            f"""pc{k} AS MATERIALIZED (
+  SELECT l, r, cast(sum(wc) AS BIGINT) AS cnt
+  FROM (
+    SELECT wc, unnest(s[1:len(s)-1]) AS l, unnest(s[2:len(s)]) AS r
+    FROM (SELECT wc, string_split(trim(w, '|'), '||') AS s FROM w{k-1})
+  ) GROUP BY l, r
+),
+best{k} AS MATERIALIZED (
+  SELECT {k} AS step, l, r, cnt FROM pc{k} ORDER BY cnt DESC, l, r LIMIT 1
+),
+w{k} AS MATERIALIZED (
+  SELECT wc, replace(w, '|' || b.l || '||' || b.r || '|',
+                     '|' || b.l || b.r || '|') AS w
+  FROM w{k-1}, best{k} b
+)"""
+        )
+    return parts
+
+
+def _fertility_oracle() -> str:
+    parts = _bpe_chain_parts(_BPE_MERGES)
+    parts.append(
+        f"""lw AS MATERIALIZED (
+  SELECT lang, word, cast(count(*) AS BIGINT) AS wc
+  FROM (
+    SELECT lang,
+           unnest(string_split({sql_normalize_text('text')}, ' ')) AS word
+    FROM documents
+  ) WHERE length(word) > 0 GROUP BY lang, word
+),
+e0 AS MATERIALIZED (
+  SELECT lang, wc, cast(length(word) AS BIGINT) AS wlen,
+         '|' || regexp_replace(word, '(.)', '|\\1|', 'g') || '|' AS w
+  FROM lw
+)"""
+    )
+    for k in range(1, _BPE_MERGES + 1):
+        parts.append(
+            f"""e{k} AS MATERIALIZED (
+  SELECT lang, wc, wlen,
+         CASE WHEN b.cnt >= {_BPE_MIN_COUNT}
+              THEN replace(w, '|' || b.l || '||' || b.r || '|',
+                           '|' || b.l || b.r || '|')
+              ELSE w END AS w
+  FROM e{k-1}, best{k} b
+)"""
+        )
+    return (
+        "WITH "
+        + ",\n".join(parts)
+        + f"""
+SELECT lang,
+       cast(sum(wc) AS BIGINT) AS n_words,
+       cast(sum(wc * n_toks) AS BIGINT) AS n_tokens,
+       cast(sum(wc * n_toks) * 1000000 // sum(wc) AS BIGINT)
+         AS fertility_ppm,
+       cast(sum(wc * wlen) * 1000000 // sum(wc * n_toks) AS BIGINT)
+         AS chars_per_token_ppm
+FROM (
+  SELECT lang, wc, wlen,
+         cast(len(string_split(trim(w, '|'), '||')) AS BIGINT) AS n_toks
+  FROM e{_BPE_MERGES}
+)
+GROUP BY lang ORDER BY lang"""
+    )
+
+
+@register(
+    "text_bpe_fertility_by_lang",
+    _fertility_oracle(),
+    tags=("llm", "text", "tokenizer"),
+    bench=True,
+)
+def text_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Train the corpus BPE (8 merges, global word-frequency table) and
+    encode every (lang, word) with it; report per-language tokens-per-
+    word and chars-per-token in exact ppm.  Scale: training touches
+    only the vocabulary table (operators/bpe.py module doc); encode is
+    a narrow per-row fold; the readout is language-bounded."""
+    from event_streaming_spark.operators.bpe import bpe_encode, bpe_train
+
+    from event_streaming_spark.operators.materialize import materialize
+
+    docs = spread(load(spark, sf_dir, "documents"))
+    # pin the (lang, word) frequency table: BOTH the trainer (via the
+    # global rollup) and the encoder consume it — without the pin each
+    # consumer re-tokenizes the corpus (its plan dump showed 2 fact scans).
+    lang_words = materialize(
+        docs.select("lang", F.explode(tokens(F.col("text"))).alias("word"))
+        .where(F.length("word") > 0)
+        .groupBy("lang", "word")
+        .agg(F.count(F.lit(1)).cast("long").alias("wc")),
+        "fertility-lang-words",
+    )
+    gwords = lang_words.groupBy("word").agg(F.sum("wc").cast("long").alias("wc"))
+    merges = bpe_train(gwords, _BPE_MERGES)
+    enc = lang_words.select(
+        "lang",
+        "wc",
+        F.length("word").cast("long").alias("wlen"),
+        F.size(bpe_encode(F.col("word"), merges)).cast("long").alias("n_toks"),
+    )
+    return (
+        enc.groupBy("lang")
+        .agg(
+            F.sum("wc").cast("long").alias("n_words"),
+            F.sum(F.col("wc") * F.col("n_toks")).cast("long").alias("n_tokens"),
+            F.sum(F.col("wc") * F.col("wlen")).cast("long").alias("n_wchars"),
+        )
+        .select(
+            "lang",
+            "n_words",
+            "n_tokens",
+            (F.col("n_tokens") * 1_000_000 / F.col("n_words"))
+            .cast("long")
+            .alias("fertility_ppm"),
+            (F.col("n_wchars") * 1_000_000 / F.col("n_tokens"))
+            .cast("long")
+            .alias("chars_per_token_ppm"),
+        )
+        .orderBy("lang")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Dedup survivorship report — the production OUTPUT of the near-dup
+# pipeline.  The cluster queries (plans/curation.py) label documents;
+# this one decides WHO SURVIVES and accounts for what was dropped: per
+# multi-member cluster, the survivor under the deterministic policy
+# (longest text wins, doc_id breaks ties) plus kept/dropped volumes.
+# The policy intentionally differs from the min-id canonical used by
+# corpus_curation_end_to_end — min-id is the cheap label; longest-text
+# is what a quality-first pipeline ships, and the report is the diff a
+# curator signs off on.
+# Scale: the cluster labels come from the pointer-doubled CC (never
+# all-pairs); the survivor pick is ONE max_by-style aggregate per
+# cluster key (no per-cluster window sort), the report is
+# clusters-sized.
+# ---------------------------------------------------------------------------
+
+
+def _survivorship_oracle() -> str:
+    return f"""
+WITH clu AS MATERIALIZED ({_CC_ORACLE}),
+mem AS (
+  SELECT l.cluster_id, d.doc_id, d.n_chars
+  FROM documents d JOIN clu l ON d.doc_id = l.doc_id
+), ranked AS (
+  SELECT cluster_id, doc_id, n_chars,
+         row_number() OVER (PARTITION BY cluster_id
+                            ORDER BY n_chars DESC, doc_id) AS rn
+  FROM mem
+)
+SELECT cluster_id,
+       cast(count(*) AS BIGINT) AS n_members,
+       cast(max(CASE WHEN rn = 1 THEN doc_id END) AS BIGINT) AS survivor_doc,
+       cast(max(CASE WHEN rn = 1 THEN n_chars END) AS BIGINT)
+         AS survivor_chars,
+       cast(sum(CASE WHEN rn > 1 THEN n_chars ELSE 0 END) AS BIGINT)
+         AS chars_dropped,
+       cast(sum(CASE WHEN rn > 1 THEN n_chars ELSE 0 END) * 1000000
+            // sum(n_chars) AS BIGINT) AS drop_ppm
+FROM ranked
+GROUP BY cluster_id
+HAVING count(*) >= 2
+ORDER BY cluster_id
+"""
+
+
+@register(
+    "docs_dedup_survivorship_report",
+    _survivorship_oracle(),
+    tags=("llm", "dedup", "curation"),
+    # bench-tagged (VERDICT r9 #8): at 27.2 s/10x this is one of the two
+    # heaviest catalog entries — the regression trail must cover it.
+    bench=True,
+)
+def docs_dedup_survivorship_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Longest-text survivor per near-dup cluster + dropped-volume
+    accounting.  The survivor pick is a single max(struct) aggregate —
+    (n_chars, -doc_id) lexicographic max == longest-then-lowest-id —
+    no per-cluster row_number sort pass."""
+
+    docs = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    labels = dedup_near_dup_clusters(spark, sf_dir)
+    mem = labels.join(docs, "doc_id")
+    pick = F.max(
+        F.struct(
+            F.col("n_chars").alias("c"), (-F.col("doc_id")).alias("negid")
+        )
+    )
+    out = (
+        mem.groupBy("cluster_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_members"),
+            pick.alias("best"),
+            F.sum("n_chars").cast("long").alias("chars_total"),
+        )
+        .where(F.col("n_members") >= 2)
+        .select(
+            "cluster_id",
+            "n_members",
+            (-F.col("best.negid")).cast("long").alias("survivor_doc"),
+            F.col("best.c").cast("long").alias("survivor_chars"),
+            (F.col("chars_total") - F.col("best.c"))
+            .cast("long")
+            .alias("chars_dropped"),
+            (
+                (F.col("chars_total") - F.col("best.c"))
+                * 1_000_000
+                / F.col("chars_total")
+            )
+            .cast("long")
+            .alias("drop_ppm"),
+        )
+        .orderBy("cluster_id")
+    )
+    return out
+
+
+# ===========================================================================
+# Curation analytics: exact-substring dedup spans, corpus
+# novelty by position, quality-signal correlation, and PMI collocations.
+#
+# * ``docs_exact_substring_dedup_spans`` — the Lee et al. (2022,
+#   "Deduplicating Training Data Makes Language Models Better")
+#   exact-substring primitive: positional 3-token shingles hashed, a
+#   position is DUPLICATED when its shingle occurs in >= 2 distinct
+#   documents, and adjacent duplicated positions merge into cut spans
+#   (gaps-and-islands on the per-doc position list).  Per document:
+#   span count, duplicated-token total, and dup_token_ppm — the table a
+#   dedup job turns into byte ranges to cut.  ``text_dup_span_fraction``
+#   (plans/scale.py) reports the shared-shingle RATIO; this emits
+#   the merged SPANS, which is what the cutter needs.
+# * ``text_ngram_novelty_by_decile`` — dataset-ordering readout: for
+#   each corpus-position decile (by doc_id), the fraction of its
+#   distinct 3-gram shingles whose FIRST corpus occurrence is in that
+#   decile's own documents.  A front-loaded corpus shows novelty
+#   collapsing in late deciles — the curriculum/ordering diagnostic.
+# * ``docs_quality_signal_correlation`` — exact Pearson correlations
+#   between the three cheap quality signals (token count, normalized
+#   char length, distinct-token count) from DECIMAL-exact sums; the
+#   readout that says which signals are redundant before anyone adds
+#   them to a filter ensemble.
+# * ``text_token_pmi_top_pairs`` — top-20 adjacent-token collocations by
+#   pointwise mutual information (min support 20): the classic
+#   phrase-mining primitive (Church & Hanks 1990).
+#
+# 100 TB shape: every query is one tokenize pass over documents feeding
+# wordcount-shaped shuffles (shingle/bigram/unigram counts), then
+# doc-keyed windows (spans) or grid-sized frames (deciles: 10 rows,
+# corr: 1 row, PMI: vocab²-bounded after the min-support filter, top-20
+# via TakeOrdered).  No unpartitioned windows, no corpus-sized frames.
+#
+# Reference parity note: the reference engine (SURVEY §2) has no text
+# surface; these extend the LLM-pipeline mandate alongside
+# plans/curation*.py.
+# ===========================================================================
+
+# ---------------------------------------------------------------------------
+# Exact-substring dedup spans.
+#
+# A flagged position i covers tokens [i, i+2] (3-token shingles); two
+# flagged positions p < q belong to one span iff q <= p + 3 (their
+# coverage is contiguous or overlapping).  Span token count =
+# last - first + 3.  Only CROSS-document duplication flags a position
+# (within-doc repetition is text_repetition_metrics' job).
+# ---------------------------------------------------------------------------
+
+_SPAN_GAP = 3  # max position step that keeps 3-token coverage contiguous
+
+
+def _spans_oracle() -> str:
+    toks = f"string_split({sql_normalize_text('text')}, ' ')"
+    return f"""
+WITH base AS MATERIALIZED (
+  SELECT doc_id, {toks} AS tk, cast(len({toks}) AS BIGINT) AS n_tokens
+  FROM documents
+), shp AS MATERIALIZED (
+  SELECT doc_id, n_tokens,
+         unnest(sarr) AS s,
+         generate_subscripts(sarr, 1) AS pos
+  FROM (
+    SELECT doc_id, n_tokens,
+           list_transform(generate_series(1, greatest(len(tk) - 2, 0)),
+                          i -> array_to_string(tk[i:i+2], ' ')) AS sarr
+    FROM base)
+), sh AS MATERIALIZED (
+  SELECT doc_id, n_tokens, pos, {sql_stable_hash32('s')} AS h FROM shp
+), duph AS MATERIALIZED (
+  SELECT h FROM sh GROUP BY h HAVING count(DISTINCT doc_id) >= 2
+), flagged AS MATERIALIZED (
+  SELECT doc_id, pos FROM sh JOIN duph USING (h)
+), isl AS (
+  SELECT doc_id, pos,
+         sum(CASE WHEN prev IS NULL OR pos - prev > {_SPAN_GAP}
+                  THEN 1 ELSE 0 END)
+           OVER (PARTITION BY doc_id ORDER BY pos
+                 ROWS UNBOUNDED PRECEDING) AS span_id
+  FROM (SELECT doc_id, pos,
+               lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
+        FROM flagged)
+), spans AS (
+  SELECT doc_id, span_id,
+         max(pos) - min(pos) + 3 AS span_tokens
+  FROM isl GROUP BY doc_id, span_id
+), per_doc AS (
+  SELECT doc_id, cast(count(*) AS BIGINT) AS n_spans,
+         cast(sum(span_tokens) AS BIGINT) AS dup_tokens
+  FROM spans GROUP BY doc_id
+)
+SELECT b.doc_id AS doc_id, b.n_tokens AS n_tokens,
+       cast(coalesce(p.n_spans, 0) AS BIGINT) AS n_spans,
+       cast(coalesce(p.dup_tokens, 0) AS BIGINT) AS dup_tokens,
+       cast(coalesce(p.dup_tokens, 0) * 1000000 // b.n_tokens AS BIGINT)
+         AS dup_token_ppm
+FROM base b LEFT JOIN per_doc p ON p.doc_id = b.doc_id
+ORDER BY doc_id
+"""
+
+
+@register(
+    "docs_exact_substring_dedup_spans",
+    _spans_oracle(),
+    tags=("llm", "dedup", "text", "curation"),
+    bench=True,
+)
+def docs_exact_substring_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Merged cross-doc duplicated 3-gram spans per document.
+
+    Scale design: the positional shingle table is corpus-linear (one
+    row per token position); duplicated-hash detection is a wordcount
+    shuffle; the islands window is PARTITIONED BY doc_id, so state per
+    task is one document's flagged positions.  No corpus window, no
+    all-pairs stage — the candidate set is position-flag joins on h.
+    """
+    from event_streaming_spark.operators.materialize import materialize
+
+    docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
+    base = docs.select(
+        "doc_id",
+        tokens(F.col("text")).alias("tk"),
+    ).select("doc_id", "tk", F.size("tk").cast("long").alias("n_tokens"))
+    # positional shingles: 1-based pos, guarded so <3-token docs emit none
+    # (Spark's sequence(1, 0) would DESCEND — never feed it stop < start)
+    sarr = F.expr(
+        "CASE WHEN size(tk) >= 3 THEN "
+        "transform(sequence(1, size(tk) - 2), "
+        "          i -> concat_ws(' ', slice(tk, i, 3))) "
+        "ELSE array() END"
+    )
+    # pin the positional-shingle table: three consumers (dup-hash agg,
+    # flag join, per-doc totals) must not re-run the tokenize+explode
+    # lineage (the multi-branch rescan lesson — one "Scan parquet" each
+    # would triple the corpus pass)
+    sh = materialize(
+        base.select(
+            "doc_id", "n_tokens", F.posexplode(sarr).alias("pos0", "s")
+        ).select(
+            "doc_id",
+            "n_tokens",
+            (F.col("pos0") + 1).alias("pos"),
+            stable_hash32(F.col("s")).alias("h"),
+        ),
+        name="substr-dedup-shingles",
+    )
+    # r12 (guide §2.4): "shared by ≥2 distinct docs" ⟺ min(doc_id) ≠
+    # max(doc_id) over the h-partition — ONE window exchange of the
+    # positional table replaces the countDistinct aggregate PLUS the
+    # join-back (which re-shuffled the corpus-linear sh frame by h a
+    # second time).  Same task placement per h as the join's shuffle;
+    # per-task state is one hash's postings, bounded as before.  What the
+    # rewrite lost: AQE could split a hot h's skewed JOIN partition, and
+    # the aggregate leg had partial aggregation; a window partition is
+    # never split, so a very hot shingle hash runs on one task.
+    wdup = Window.partitionBy("h")
+    flagged = (
+        sh.select("doc_id", "pos", "h")
+        .withColumn("_mn", F.min("doc_id").over(wdup))
+        .withColumn("_mx", F.max("doc_id").over(wdup))
+        .where(F.col("_mn") != F.col("_mx"))
+        .select("doc_id", "pos")
+    )
+    wlag = Window.partitionBy("doc_id").orderBy("pos")
+    wrun = (
+        Window.partitionBy("doc_id")
+        .orderBy("pos")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    isl = flagged.withColumn("prev", F.lag("pos").over(wlag)).withColumn(
+        "span_id",
+        F.sum(
+            F.when(
+                F.col("prev").isNull() | (F.col("pos") - F.col("prev") > _SPAN_GAP),
+                1,
+            ).otherwise(0)
+        ).over(wrun),
+    )
+    spans = isl.groupBy("doc_id", "span_id").agg(
+        (F.max("pos") - F.min("pos") + 3).alias("span_tokens")
+    )
+    per_doc = spans.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_spans"),
+        F.sum("span_tokens").cast("long").alias("dup_tokens"),
+    )
+    return (
+        base.select("doc_id", "n_tokens")
+        .join(per_doc, "doc_id", "left")
+        .select(
+            "doc_id",
+            "n_tokens",
+            F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
+            F.coalesce("dup_tokens", F.lit(0)).cast("long").alias("dup_tokens"),
+            F.expr(
+                "(coalesce(dup_tokens, 0) * CAST(1000000 AS BIGINT))"
+                " div n_tokens"
+            )
+            .cast("long")
+            .alias("dup_token_ppm"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+# ---------------------------------------------------------------------------
+# N-gram novelty by corpus-position decile.
+# ---------------------------------------------------------------------------
+
+def _novelty_oracle() -> str:
+    # EXACTLY sql_shingle_hashes (distinct shingle STRINGS, then hash):
+    # dedup must happen before hashing on both engines, or a 32-bit
+    # collision inside one document would diverge the counts.
+    from event_streaming_spark.operators.similarity import sql_shingle_hashes
+
+    return _NOVELTY_ORACLE.replace("{SHINGLES}", sql_shingle_hashes("text"))
+
+
+_NOVELTY_ORACLE = """
+WITH sh AS MATERIALIZED (
+  SELECT doc_id, unnest({SHINGLES}) AS h FROM documents
+), firsts AS MATERIALIZED (
+  SELECT h, min(doc_id) AS first_doc FROM sh GROUP BY h
+), bounds AS (
+  SELECT min(doc_id) AS dmin, max(doc_id) AS dmax FROM documents
+), per_doc AS (
+  SELECT sh.doc_id,
+         count(*) AS n_sh,
+         sum(CASE WHEN f.first_doc = sh.doc_id THEN 1 ELSE 0 END) AS n_novel
+  FROM sh JOIN firsts f USING (h)
+  GROUP BY sh.doc_id
+), ddec AS (
+  SELECT d.doc_id,
+         least(9, (d.doc_id - b.dmin) * 10 // (b.dmax - b.dmin + 1)) AS decile
+  FROM documents d CROSS JOIN bounds b
+), dcount AS (
+  SELECT decile, cast(count(*) AS BIGINT) AS n_docs FROM ddec GROUP BY decile
+), dsh AS (
+  SELECT dd.decile,
+         cast(sum(p.n_sh) AS BIGINT) AS n_shingles,
+         cast(sum(p.n_novel) AS BIGINT) AS n_novel
+  FROM per_doc p JOIN ddec dd USING (doc_id)
+  GROUP BY dd.decile
+)
+SELECT c.decile, c.n_docs,
+       cast(coalesce(s.n_shingles, 0) AS BIGINT) AS n_shingles,
+       cast(coalesce(s.n_novel, 0) AS BIGINT) AS n_novel,
+       cast(CASE WHEN coalesce(s.n_shingles, 0) > 0
+                 THEN s.n_novel * 1000000 // s.n_shingles
+                 ELSE 0 END AS BIGINT) AS novelty_ppm
+FROM dcount c LEFT JOIN dsh s USING (decile)
+ORDER BY decile
+"""
+
+
+@register(
+    "text_ngram_novelty_by_decile",
+    _novelty_oracle(),
+    tags=("llm", "text", "curation", "audit"),
+)
+def text_ngram_novelty_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fraction of each doc_id-decile's distinct shingles first seen in
+    that decile.
+
+    Scale design: first-occurrence is min(doc_id) per shingle hash (one
+    wordcount shuffle), joined back on h; the decile key comes from a
+    broadcast 1-row min/max — NOT an ntile window, which would be a
+    corpus-sized unpartitioned sort.  Deciles are a 10-row frame.
+    """
+    from event_streaming_spark.operators.materialize import materialize
+    from event_streaming_spark.operators.similarity import shingle_hashes
+
+    docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
+    # spread + pin: the md5-shingle explode is the cost center (50 s
+    # single-task at 10x — the fixture parquet is one row group) and
+    # TWO consumers (firsts, the join) would re-run it
+    sh = materialize(
+        docs.select(
+            "doc_id", F.explode(shingle_hashes(F.col("text"))).alias("h")
+        ),
+        name="novelty-shingles",
+    )
+    firsts = sh.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
+    per_doc = (
+        sh.join(firsts, "h")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_sh"),
+            F.sum(
+                F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)
+            ).alias("n_novel"),
+        )
+    )
+    bounds = docs.agg(
+        F.min("doc_id").alias("dmin"), F.max("doc_id").alias("dmax")
+    ).coalesce(1)
+    ddec = docs.select("doc_id").crossJoin(F.broadcast(bounds)).select(
+        "doc_id",
+        F.least(
+            F.lit(9),
+            F.expr("(doc_id - dmin) * 10 div (dmax - dmin + 1)"),
+        ).alias("decile"),
+    )
+    dcount = ddec.groupBy("decile").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs")
+    )
+    dsh = (
+        per_doc.join(ddec, "doc_id")
+        .groupBy("decile")
+        .agg(
+            F.sum("n_sh").cast("long").alias("n_shingles"),
+            F.sum("n_novel").cast("long").alias("n_novel"),
+        )
+    )
+    return (
+        dcount.join(dsh, "decile", "left")
+        .select(
+            "decile",
+            "n_docs",
+            F.coalesce("n_shingles", F.lit(0)).cast("long").alias("n_shingles"),
+            F.coalesce("n_novel", F.lit(0)).cast("long").alias("n_novel"),
+            F.when(
+                F.coalesce("n_shingles", F.lit(0)) > 0,
+                F.expr("(n_novel * CAST(1000000 AS BIGINT)) div n_shingles"),
+            )
+            .otherwise(F.lit(0))
+            .cast("long")
+            .alias("novelty_ppm"),
+        )
+        .orderBy("decile")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Quality-signal Pearson correlation (DECIMAL-exact sums).
+# ---------------------------------------------------------------------------
+
+
+def _corr_sql_expr(x: str, y: str) -> str:
+    """Pearson corr from the exact DECIMAL sums s_{x,y,xy,xx,yy} and n —
+    identical operation order on both engines: exact integer moments,
+    ONE double conversion, one division, round 6."""
+    num = f"cast(n * s_{x}{y} - s_{x} * s_{y} AS DOUBLE)"
+    d1 = f"cast(n * s_{x}{x} - s_{x} * s_{x} AS DOUBLE)"
+    d2 = f"cast(n * s_{y}{y} - s_{y} * s_{y} AS DOUBLE)"
+    return f"round({num} / (sqrt({d1}) * sqrt({d2})), 6)"
+
+
+_CORR_ORACLE = f"""
+WITH sig AS (
+  SELECT cast(len(tk) AS DECIMAL(38,0)) AS t,
+         cast(length(norm) AS DECIMAL(38,0)) AS c,
+         cast(len(list_distinct(tk)) AS DECIMAL(38,0)) AS u
+  FROM (SELECT {sql_normalize_text('text')} AS norm,
+               string_split({sql_normalize_text('text')}, ' ') AS tk
+        FROM documents)
+), m AS (
+  SELECT cast(count(*) AS DECIMAL(38,0)) AS n,
+         sum(t) AS s_t, sum(c) AS s_c, sum(u) AS s_u,
+         sum(t*c) AS s_tc, sum(t*u) AS s_tu, sum(c*u) AS s_cu,
+         sum(t*t) AS s_tt, sum(c*c) AS s_cc, sum(u*u) AS s_uu
+  FROM sig
+)
+SELECT cast(n AS BIGINT) AS n_docs,
+       {_corr_sql_expr('t', 'c')} AS corr_tokens_chars,
+       {_corr_sql_expr('t', 'u')} AS corr_tokens_uniq,
+       {_corr_sql_expr('c', 'u')} AS corr_chars_uniq
+FROM m
+"""
+
+
+@register(
+    "docs_quality_signal_correlation",
+    _CORR_ORACLE,
+    tags=("llm", "curation", "stats"),
+)
+def docs_quality_signal_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise Pearson correlation of (token count, char length,
+    distinct-token count).
+
+    Scale design: ONE map-side-combined aggregate over documents
+    producing ten DECIMAL(38,0) moments (exact past 2^53 — corpus char
+    sums cross int64 territory at 100 TB), then a 1-row arithmetic
+    epilogue.  No window, no join, no second scan.
+    """
+
+    docs = spread(load(spark, sf_dir, "documents"))
+    norm = normalize_text(F.col("text"))
+    tk = F.split(norm, " ")
+    dec = "decimal(38,0)"
+    sig = docs.select(
+        F.size(tk).cast(dec).alias("t"),
+        F.length(norm).cast(dec).alias("c"),
+        F.size(F.array_distinct(tk)).cast(dec).alias("u"),
+    )
+    m = sig.agg(
+        F.count(F.lit(1)).cast(dec).alias("n"),
+        F.sum("t").cast(dec).alias("s_t"),
+        F.sum("c").cast(dec).alias("s_c"),
+        F.sum("u").cast(dec).alias("s_u"),
+        F.sum(F.col("t") * F.col("c")).cast(dec).alias("s_tc"),
+        F.sum(F.col("t") * F.col("u")).cast(dec).alias("s_tu"),
+        F.sum(F.col("c") * F.col("u")).cast(dec).alias("s_cu"),
+        F.sum(F.col("t") * F.col("t")).cast(dec).alias("s_tt"),
+        F.sum(F.col("c") * F.col("c")).cast(dec).alias("s_cc"),
+        F.sum(F.col("u") * F.col("u")).cast(dec).alias("s_uu"),
+    )
+    return m.select(
+        F.col("n").cast("long").alias("n_docs"),
+        F.expr(_corr_sql_expr("t", "c")).alias("corr_tokens_chars"),
+        F.expr(_corr_sql_expr("t", "u")).alias("corr_tokens_uniq"),
+        F.expr(_corr_sql_expr("c", "u")).alias("corr_chars_uniq"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# PMI collocations (Church & Hanks 1990), min support 20, top-20.
+# ---------------------------------------------------------------------------
+
+_PMI_MIN_COUNT = 20
+
+_PMI_ORACLE = f"""
+WITH tk AS MATERIALIZED (
+  SELECT doc_id, string_split({sql_normalize_text('text')}, ' ') AS tks
+  FROM documents
+), uni AS MATERIALIZED (
+  SELECT w, cast(count(*) AS BIGINT) AS c_w
+  FROM (SELECT unnest(tks) AS w FROM tk) GROUP BY w
+), bi AS MATERIALIZED (
+  SELECT a, b, cast(count(*) AS BIGINT) AS c_ab
+  FROM (
+    -- aligned unnest of the two shifted slices unrolls pairwise
+    SELECT unnest(tks[1:len(tks)-1]) AS a, unnest(tks[2:len(tks)]) AS b
+    FROM tk
+  ) GROUP BY a, b
+), tot AS (
+  SELECT cast(sum(len(tks)) AS BIGINT) AS n1,
+         cast(sum(len(tks) - 1) AS BIGINT) AS n2
+  FROM tk
+)
+SELECT a, b, c_ab,
+       round(ln((cast(c_ab AS DOUBLE) * cast(n1 AS DOUBLE) * cast(n1 AS DOUBLE))
+                / (cast(ua.c_w AS DOUBLE) * cast(ub.c_w AS DOUBLE)
+                   * cast(n2 AS DOUBLE))), 6) AS pmi
+FROM bi JOIN uni ua ON ua.w = bi.a
+        JOIN uni ub ON ub.w = bi.b
+        CROSS JOIN tot
+WHERE c_ab >= {_PMI_MIN_COUNT}
+ORDER BY pmi DESC, a, b LIMIT 20
+"""
+
+
+@register(
+    "text_token_pmi_top_pairs",
+    _PMI_ORACLE,
+    tags=("llm", "text", "stats"),
+)
+def text_token_pmi_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-20 adjacent-token pairs by PMI (min support ``_PMI_MIN_COUNT``).
+
+    Scale design: unigram/bigram counts are wordcount shuffles; the
+    min-support filter bounds the pair table BEFORE the unigram joins
+    (vocab-sized, broadcast); totals are broadcast 1-row aggregates;
+    the top-20 is orderBy+limit (TakeOrdered — no global window, no
+    single-partition sort).  PMI is computed all-double with one
+    operation order on both engines, rounded at 6dp.
+    """
+
+    docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
+    tk = docs.select("doc_id", tokens(F.col("text")).alias("tks"))
+    uni = (
+        tk.select(F.explode("tks").alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).cast("long").alias("c_w"))
+    )
+    # Spark arrays are 0-indexed (DuckDB's are 1-indexed — the oracle
+    # mirrors with tks[i]/tks[i+1] over a 1-based i)
+    pairs = tk.select(
+        F.explode(
+            F.expr(
+                "CASE WHEN size(tks) >= 2 THEN "
+                "transform(sequence(0, size(tks) - 2), "
+                "          i -> struct(tks[i] AS a, tks[i+1] AS b)) "
+                "ELSE array() END"
+            )
+        ).alias("p")
+    ).select("p.a", "p.b")
+    bi = (
+        pairs.groupBy("a", "b")
+        .agg(F.count(F.lit(1)).cast("long").alias("c_ab"))
+        .where(F.col("c_ab") >= _PMI_MIN_COUNT)
+    )
+    # totals in ONE 1-row aggregate over the token-array frame (n1 = sum
+    # of lengths = sum(c_w); n2 = sum(len-1) = total adjacent pairs) —
+    # no second explode pass over the corpus
+    tot = tk.agg(
+        F.sum(F.size("tks")).cast("long").alias("n1"),
+        F.sum(F.size("tks") - 1).cast("long").alias("n2"),
+    )
+    ua = uni.select(F.col("w").alias("a"), F.col("c_w").alias("ca"))
+    ub = uni.select(F.col("w").alias("b"), F.col("c_w").alias("cb"))
+    pmi = F.round(
+        F.log(
+            (
+                F.col("c_ab").cast("double")
+                * F.col("n1").cast("double")
+                * F.col("n1").cast("double")
+            )
+            / (
+                F.col("ca").cast("double")
+                * F.col("cb").cast("double")
+                * F.col("n2").cast("double")
+            )
+        ),
+        6,
+    )
+    return (
+        # ua/ub are vocabulary-scale (they grow with the corpus), so no
+        # explicit broadcast hint: AQE picks broadcast when the measured
+        # size fits and a shuffle join when it doesn't — a forced hint
+        # here is an OOM risk at large sf.  The 1-row scalar `tot` stays
+        # broadcast.
+        bi.join(ua, "a")
+        .join(ub, "b")
+        .crossJoin(F.broadcast(tot))
+        .select("a", "b", "c_ab", pmi.alias("pmi"))
+        .orderBy(F.desc("pmi"), "a", "b")
+        .limit(20)
+    )
+
+
+# ===========================================================================
+# Curation analytics, contamination: cross-source contamination,
+# dedup threshold sensitivity, vocabulary profiles, and the perplexity
+# filter curve.
+#
+# * ``docs_cross_source_contamination_matrix`` — for every source pair,
+#   the shared distinct 3-gram shingles and the overlap coefficient
+#   (shared / min(|A|, |B|)) in exact ppm: the WIMBD-style readout that
+#   says which sources to cross-deduplicate before mixing them into a
+#   training set.
+# * ``docs_near_dup_threshold_sensitivity`` — the dedup tuning curve:
+#   over the LSH candidate pairs, EXACT shingle Jaccard is computed once
+#   and swept over thresholds 40..90% with integer cross-multiplied
+#   tests (inter * 100 >= t * union — no division, no doubles), emitting
+#   pair counts and affected-doc counts per threshold.  The shipped
+#   near-dup pipeline's 0.7 point sits on this curve.
+# * ``text_vocabulary_profile_by_source`` — per source: token count,
+#   vocabulary size, hapax legomena, type-token ratio and hapax share in
+#   exact ppm — the Heaps/Zipf-adjacent corpus health profile.
+# * ``docs_perplexity_filter_curve`` — the CCNet-style filter tuned: the
+#   per-document bigram-LM perplexity (same add-1 reference model as
+#   ``text_lm_perplexity_vs_reference``) swept over keep cutoffts,
+#   emitting docs/tokens kept per cutoff.  Cutoffs compare the rounded
+#   per-doc cross-entropy h against ln(cutoff) so the gate is exact on
+#   both engines.
+#
+# 100 TB shape: everything rides wordcount-shaped shuffles (shingle /
+# token / pair-type counts); the contamination matrix's self-join fans
+# each shingle hash to at most C(#sources, 2) rows (source-count-, not
+# corpus-, bounded); the sensitivity curve touches only LSH candidates;
+# the perplexity model tables are vocab²-bounded broadcasts.  Outputs
+# are source-pair / threshold / source-sized frames.
+#
+# Reference parity note: the reference engine has no text surface
+# (SURVEY §2); these extend the curation pack (plans/curation*.py).
+# ===========================================================================
+
+# ---------------------------------------------------------------------------
+# Cross-source contamination matrix.
+# ---------------------------------------------------------------------------
+
+_XSRC_CONTAMINATION_ORACLE = f"""
+WITH sh AS MATERIALIZED (
+  SELECT DISTINCT source, h FROM (
+    SELECT source, unnest({S.sql_shingle_hashes('text')}) AS h FROM documents)
+), tot AS MATERIALIZED (
+  SELECT source, cast(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY source
+), shared AS (
+  SELECT a.source AS source_a, b.source AS source_b,
+         cast(count(*) AS BIGINT) AS n_shared
+  FROM sh a JOIN sh b ON b.h = a.h AND a.source < b.source
+  GROUP BY a.source, b.source
+)
+SELECT s.source_a, s.source_b, s.n_shared,
+       ta.n_sh AS n_a, tb.n_sh AS n_b,
+       cast(s.n_shared * 1000000 // least(ta.n_sh, tb.n_sh) AS BIGINT)
+         AS overlap_ppm
+FROM shared s
+JOIN tot ta ON ta.source = s.source_a
+JOIN tot tb ON tb.source = s.source_b
+ORDER BY source_a, source_b
+"""
+
+
+@register(
+    "docs_cross_source_contamination_matrix",
+    _XSRC_CONTAMINATION_ORACLE,
+    tags=("llm", "dedup", "curation", "audit"),
+)
+def docs_cross_source_contamination_matrix(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Shared distinct shingles + overlap coefficient per source pair.
+
+    Scale design: the (source, h) table is distinct-deduped before the
+    self-join, so each hash fans out to at most C(#sources, 2) pairs —
+    a constant multiplier, never a doc-pair explosion; per-source
+    totals are a wordcount aggregate joined back on the tiny
+    source-pair frame.
+    """
+    docs = spread(load(spark, sf_dir, "documents").select("source", "text"))
+    sh = materialize(
+        docs.select(
+            "source", F.explode(S.shingle_hashes(F.col("text"))).alias("h")
+        ).distinct(),
+        name="xsrc-shingles",
+    )
+    tot = sh.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
+    a = sh.select(F.col("source").alias("source_a"), "h")
+    b = sh.select(F.col("source").alias("source_b"), "h")
+    shared = (
+        a.join(b, "h")
+        .where(F.col("source_a") < F.col("source_b"))
+        .groupBy("source_a", "source_b")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+    )
+    ta = tot.select(F.col("source").alias("source_a"), F.col("n_sh").alias("n_a"))
+    tb = tot.select(F.col("source").alias("source_b"), F.col("n_sh").alias("n_b"))
+    return (
+        shared.join(F.broadcast(ta), "source_a")
+        .join(F.broadcast(tb), "source_b")
+        .select(
+            "source_a",
+            "source_b",
+            "n_shared",
+            "n_a",
+            "n_b",
+            F.expr(
+                "(n_shared * CAST(1000000 AS BIGINT)) div least(n_a, n_b)"
+            )
+            .cast("long")
+            .alias("overlap_ppm"),
+        )
+        .orderBy("source_a", "source_b")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Near-dup threshold sensitivity.
+# ---------------------------------------------------------------------------
+
+_NDT_THRESHOLDS = (40, 50, 60, 70, 80, 90)  # Jaccard * 100
+
+
+def _ndt_oracle() -> str:
+    vals = ", ".join(f"({t})" for t in _NDT_THRESHOLDS)
+    return f"""
+WITH sh AS MATERIALIZED (
+  SELECT doc_id, unnest({S.sql_shingle_hashes('text')}) AS h FROM documents
+), nsh AS MATERIALIZED (
+  SELECT doc_id, cast(count(*) AS BIGINT) AS n FROM sh GROUP BY doc_id
+), cand AS MATERIALIZED (
+  SELECT doc_a, doc_b FROM ({_LSH_ORACLE}) x
+), inter AS MATERIALIZED (
+  SELECT c.doc_a, c.doc_b, cast(count(*) AS BIGINT) AS i
+  FROM cand c
+  JOIN sh a ON a.doc_id = c.doc_a
+  JOIN sh b ON b.doc_id = c.doc_b AND b.h = a.h
+  GROUP BY c.doc_a, c.doc_b
+), jac AS MATERIALIZED (
+  SELECT c.doc_a, c.doc_b,
+         coalesce(i.i, 0) AS inter,
+         na.n + nb.n - coalesce(i.i, 0) AS un
+  FROM cand c
+  LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
+  JOIN nsh na ON na.doc_id = c.doc_a
+  JOIN nsh nb ON nb.doc_id = c.doc_b
+)
+SELECT cast(t.thr AS BIGINT) AS threshold_pct,
+       cast(count(*) FILTER (WHERE inter * 100 >= cast(t.thr AS BIGINT) * un)
+            AS BIGINT) AS n_pairs,
+       cast(count(DISTINCT CASE WHEN inter * 100 >= cast(t.thr AS BIGINT) * un
+                                THEN doc_a END)
+            + count(DISTINCT CASE WHEN inter * 100 >= cast(t.thr AS BIGINT) * un
+                                  THEN doc_b END) AS BIGINT) AS n_doc_slots
+FROM jac, (VALUES {vals}) t(thr)
+GROUP BY t.thr
+ORDER BY threshold_pct
+"""
+
+
+@register(
+    "docs_near_dup_threshold_sensitivity",
+    _ndt_oracle(),
+    tags=("llm", "dedup", "lsh", "tuning"),
+)
+def docs_near_dup_threshold_sensitivity(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Exact-Jaccard pair counts per dedup threshold over the LSH
+    candidates.
+
+    Scale design: exact Jaccard is computed ONCE per candidate pair
+    (the LSH band join bounds candidates; the intersection is an
+    equi-join of the two endpoints' shingle rows on h, never a
+    cross-join); the six thresholds are integer cross-multiplied
+    conditional counts over the candidate-sized frame — no rescoring
+    per threshold.  ``n_doc_slots`` counts distinct left + distinct
+    right endpoints (the dedup workload estimate).
+    """
+
+    docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
+    sh = materialize(
+        docs.select(
+            "doc_id", F.explode(S.shingle_hashes(F.col("text"))).alias("h")
+        ),
+        name="ndt-shingles",
+    )
+    nsh = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n"))
+    cand = minhash_lsh_near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    sha = sh.select(F.col("doc_id").alias("doc_a"), "h")
+    shb = sh.select(F.col("doc_id").alias("doc_b"), "h")
+    inter = (
+        cand.join(sha, "doc_a")
+        .join(shb, ["doc_b", "h"])
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).cast("long").alias("i"))
+    )
+    na = nsh.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
+    nb = nsh.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    jac = (
+        cand.join(inter, ["doc_a", "doc_b"], "left")
+        .join(na, "doc_a")
+        .join(nb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.coalesce("i", F.lit(0)).cast("long").alias("inter"),
+            (F.col("na") + F.col("nb") - F.coalesce("i", F.lit(0)))
+            .cast("long")
+            .alias("un"),
+        )
+    )
+    thr = F.explode(
+        F.array(*[F.lit(t).cast("long") for t in _NDT_THRESHOLDS])
+    ).alias("thr")
+    fanned = jac.select("*", thr)
+    keep = F.col("inter") * 100 >= F.col("thr") * F.col("un")
+    return (
+        fanned.groupBy("thr")
+        .agg(
+            F.sum(F.when(keep, 1).otherwise(0)).cast("long").alias("n_pairs"),
+            (
+                F.countDistinct(F.when(keep, F.col("doc_a")))
+                + F.countDistinct(F.when(keep, F.col("doc_b")))
+            )
+            .cast("long")
+            .alias("n_doc_slots"),
+        )
+        .select(
+            F.col("thr").alias("threshold_pct"), "n_pairs", "n_doc_slots"
+        )
+        .orderBy("threshold_pct")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Vocabulary profile per source.
+# ---------------------------------------------------------------------------
+
+_VOCAB_ORACLE = f"""
+WITH wc AS MATERIALIZED (
+  SELECT source, w, cast(count(*) AS BIGINT) AS c
+  FROM (SELECT source, unnest(string_split({sql_normalize_text('text')}, ' ')) AS w
+        FROM documents)
+  GROUP BY source, w
+)
+SELECT source,
+       cast(sum(c) AS BIGINT) AS n_tokens,
+       cast(count(*) AS BIGINT) AS vocab,
+       cast(count(*) FILTER (WHERE c = 1) AS BIGINT) AS hapax,
+       cast(count(*) * 1000000 // sum(c) AS BIGINT) AS ttr_ppm,
+       cast(count(*) FILTER (WHERE c = 1) * 1000000 // count(*) AS BIGINT)
+         AS hapax_ppm
+FROM wc GROUP BY source ORDER BY source
+"""
+
+
+@register(
+    "text_vocabulary_profile_by_source",
+    _VOCAB_ORACLE,
+    tags=("llm", "text", "stats"),
+)
+def text_vocabulary_profile_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token count, vocabulary, hapax legomena, TTR per source — one
+    wordcount shuffle feeding a source-sized rollup."""
+    docs = spread(load(spark, sf_dir, "documents").select("source", "text"))
+    wc = (
+        docs.select("source", F.explode(tokens(F.col("text"))).alias("w"))
+        .groupBy("source", "w")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+    )
+    hapax = F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).cast("long")
+    return (
+        wc.groupBy("source")
+        .agg(
+            F.sum("c").cast("long").alias("n_tokens"),
+            F.count(F.lit(1)).cast("long").alias("vocab"),
+            hapax.alias("hapax"),
+        )
+        .select(
+            "source",
+            "n_tokens",
+            "vocab",
+            "hapax",
+            F.expr("(vocab * CAST(1000000 AS BIGINT)) div n_tokens")
+            .cast("long")
+            .alias("ttr_ppm"),
+            F.expr("(hapax * CAST(1000000 AS BIGINT)) div vocab")
+            .cast("long")
+            .alias("hapax_ppm"),
+        )
+        .orderBy("source")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Perplexity filter curve (per-doc CCNet gate).
+# ---------------------------------------------------------------------------
+
+_PPL_CUTOFFS = (5, 10, 15, 20, 30)
+_PPL_REF_SOURCE = "src0"  # same reference slice as text_lm_perplexity_vs_reference
+
+
+# Shared CTE prefix: tokenized bigram pairs -> per-doc add-1 bigram
+# cross-entropy h.  Used by the filter curve here and the CCNet-style
+# head/middle/tail bucket query (``docs_ccnet_perplexity_buckets``) — ONE definition keeps the
+# rounded-double h identical everywhere it is hash-gated.
+PPL_CORE_CTES = f"""pairs AS MATERIALIZED (
+  SELECT doc_id, source,
+         unnest(tk[1:len(tk)-1]) AS w1,
+         unnest(tk[2:len(tk)]) AS w2
+  FROM (SELECT doc_id, source,
+               string_split({sql_normalize_text('text')}, ' ') AS tk
+        FROM documents)
+), ptype AS MATERIALIZED (
+  SELECT doc_id, w1, w2, cast(count(*) AS BIGINT) AS m
+  FROM pairs GROUP BY doc_id, w1, w2
+), refp AS MATERIALIZED (
+  SELECT w1, w2, cast(count(*) AS BIGINT) AS cb
+  FROM pairs WHERE source = '{_PPL_REF_SOURCE}' GROUP BY w1, w2
+), refu AS MATERIALIZED (
+  SELECT w1, cast(count(*) AS BIGINT) AS cu
+  FROM pairs WHERE source = '{_PPL_REF_SOURCE}' GROUP BY w1
+), vocab AS (
+  SELECT cast(count(DISTINCT t) AS BIGINT) AS v FROM (
+    SELECT w1 AS t FROM pairs WHERE source = '{_PPL_REF_SOURCE}'
+    UNION SELECT w2 FROM pairs WHERE source = '{_PPL_REF_SOURCE}')
+), scored AS MATERIALIZED (
+  SELECT p.doc_id, p.m,
+         cast(round(ln((coalesce(r.cb, 0) + 1.0)
+                       / (coalesce(u.cu, 0) + vocab.v)), 6)
+              AS DECIMAL(18,6)) AS lp
+  FROM ptype p
+  LEFT JOIN refp r ON r.w1 = p.w1 AND r.w2 = p.w2
+  LEFT JOIN refu u ON u.w1 = p.w1
+  CROSS JOIN vocab
+), perdoc AS MATERIALIZED (
+  SELECT doc_id, cast(sum(m) AS BIGINT) AS n_pairs,
+         round(-cast(sum(lp * m) AS DOUBLE) / cast(sum(m) AS DOUBLE), 6) AS h
+  FROM scored GROUP BY doc_id
+)"""
+
+
+def ppl_perdoc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, n_pairs, h): per-document add-1 bigram cross-entropy
+    against the `_PPL_REF_SOURCE` reference LM — the Spark twin of
+    `PPL_CORE_CTES`, factored so every consumer shares ONE definition
+    of the rounded-double h (moved verbatim from the filter curve)."""
+    docs = spread(load(spark, sf_dir, "documents"))
+    pairs = (
+        docs.select("doc_id", "source", tokens(F.col("text")).alias("s"))
+        .select(
+            "doc_id",
+            "source",
+            F.explode(
+                F.expr(
+                    "CASE WHEN size(s) < 2 THEN "
+                    "cast(array() as array<struct<w1:string,w2:string>>) "
+                    "ELSE transform(sequence(1, size(s) - 1), "
+                    "i -> struct(s[i-1] AS w1, s[i] AS w2)) END"
+                )
+            ).alias("p"),
+        )
+        .select("doc_id", "source", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+    )
+    pairs = materialize(pairs, "pplcurve-pairs")
+    ptype = pairs.groupBy("doc_id", "w1", "w2").agg(
+        F.count(F.lit(1)).cast("long").alias("m")
+    )
+    ref = pairs.where(F.col("source") == _PPL_REF_SOURCE)
+    refp = ref.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("cb"))
+    refu = ref.groupBy("w1").agg(F.count(F.lit(1)).cast("long").alias("cu"))
+    vocab = (
+        ref.select(F.col("w1").alias("t"))
+        .union(ref.select(F.col("w2").alias("t")))
+        .agg(F.countDistinct("t").cast("long").alias("v"))
+    )
+    scored = (
+        # refp (reference bigrams) is corpus-dependent — it can far
+        # exceed vocabulary size — and refu is vocabulary-scale, so no
+        # forced broadcast on either: AQE decides from measured sizes.
+        # Only the 1-row `vocab` scalar keeps the broadcast hint.
+        ptype.join(refp, ["w1", "w2"], "left")
+        .join(refu, ["w1"], "left")
+        .crossJoin(F.broadcast(vocab))
+        .select(
+            "doc_id",
+            "m",
+            F.round(
+                F.log(
+                    (F.coalesce(F.col("cb"), F.lit(0)) + F.lit(1.0))
+                    / (F.coalesce(F.col("cu"), F.lit(0)) + F.col("v"))
+                ),
+                6,
+            )
+            .cast("decimal(18,6)")
+            .alias("lp"),
+        )
+    )
+    return scored.groupBy("doc_id").agg(
+        F.sum("m").cast("long").alias("n_pairs"),
+        F.round(
+            -F.sum(F.col("lp") * F.col("m")).cast("double")
+            / F.sum("m").cast("double"),
+            6,
+        ).alias("h"),
+    )
+
+
+def _ppl_oracle() -> str:
+    cuts = ", ".join(f"({c}, {math.log(c)!r})" for c in _PPL_CUTOFFS)
+    return f"""
+WITH {PPL_CORE_CTES}, tot AS (
+  SELECT cast(count(*) AS BIGINT) AS n_docs,
+         cast(sum(n_pairs) AS BIGINT) AS n_pairs_tot
+  FROM perdoc
+)
+SELECT cast(c.cutoff AS BIGINT) AS ppl_cutoff,
+       cast(count(*) FILTER (WHERE p.h <= c.lnc) AS BIGINT) AS n_docs_kept,
+       cast(coalesce(sum(p.n_pairs) FILTER (WHERE p.h <= c.lnc), 0) AS BIGINT)
+         AS pairs_kept,
+       cast(count(*) FILTER (WHERE p.h <= c.lnc) * 1000000 // t.n_docs
+            AS BIGINT) AS keep_ppm
+FROM perdoc p, (VALUES {cuts}) c(cutoff, lnc), tot t
+GROUP BY c.cutoff, t.n_docs
+ORDER BY ppl_cutoff
+"""
+
+
+@register(
+    "docs_perplexity_filter_curve",
+    _ppl_oracle(),
+    tags=("llm", "text", "quality", "tuning"),
+)
+def docs_perplexity_filter_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Docs/tokens kept per perplexity cutoff under the add-1 bigram
+    reference LM (CCNet-style filter, tuned instead of asserted).
+
+    Scale design: one tokenize pass feeds the per-doc pair-TYPE counts
+    and the vocab-bounded reference model (broadcast joins); the gate
+    compares the 6dp-rounded per-doc cross-entropy h against ln(cutoff)
+    literals, so the sweep is conditional sums over the doc-sized
+    frame — no exp(), no per-cutoff rescoring.  Docs with < 2 tokens
+    have no bigrams and are outside the scored population (the same
+    contract as the per-source perplexity query).
+    """
+    perdoc = ppl_perdoc(spark, sf_dir)
+    tot = perdoc.agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("n_pairs").cast("long").alias("n_pairs_tot"),
+    ).coalesce(1)
+    cut = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(c).cast("long").alias("cutoff"),
+                    F.lit(math.log(c)).alias("lnc"),
+                )
+                for c in _PPL_CUTOFFS
+            ]
+        )
+    ).alias("c")
+    fanned = perdoc.select("*", cut).crossJoin(F.broadcast(tot))
+    keep = F.col("h") <= F.col("c.lnc")
+    return (
+        fanned.groupBy("c.cutoff", "n_docs")
+        .agg(
+            F.sum(F.when(keep, 1).otherwise(0)).cast("long").alias("n_docs_kept"),
+            F.coalesce(F.sum(F.when(keep, F.col("n_pairs"))), F.lit(0))
+            .cast("long")
+            .alias("pairs_kept"),
+        )
+        .select(
+            F.col("cutoff").alias("ppl_cutoff"),
+            "n_docs_kept",
+            "pairs_kept",
+            F.expr(
+                "(n_docs_kept * CAST(1000000 AS BIGINT)) div n_docs"
+            )
+            .cast("long")
+            .alias("keep_ppm"),
+        )
+        .orderBy("ppl_cutoff")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Jensen-Shannon divergence between source unigram distributions — the
+# distributional companion to the shingle-overlap contamination matrix
+# above: overlap says "these sources share text"; JS says "these
+# sources are the same KIND of text".  Both feed the mixing decision.
+#
+# Decomposition that needs only the SHARED-word equi-join (never a
+# per-pair full outer): for words in A∩B the contribution is
+# pa·ln(2pa/(pa+pb)); for words only in A it collapses to pa·ln2, and
+# Σ_{A\B} pa = 1 − Σ_{A∩B} pa — so exclusive mass falls out of the
+# shared sums.  2pa/(pa+pb) = 2·ca·nb / (ca·nb + cb·na) is an EXACT
+# integer ratio; each term is rounded to DECIMAL(18,9) before the sum
+# (the order-independent lp convention from the LM queries), and the
+# final assembly is one fixed-shape double expression rounded at 6dp.
+# ---------------------------------------------------------------------------
+
+_JS_ORACLE = f"""
+WITH wc AS MATERIALIZED (
+  SELECT source, w, cast(count(*) AS BIGINT) AS c
+  FROM (SELECT source, unnest(string_split({sql_normalize_text('text')}, ' ')) AS w
+        FROM documents)
+  GROUP BY source, w
+), tot AS MATERIALIZED (
+  SELECT source, cast(sum(c) AS BIGINT) AS n FROM wc GROUP BY source
+), shared AS MATERIALIZED (
+  SELECT a.source AS source_a, b.source AS source_b,
+         a.c AS ca, b.c AS cb, ta.n AS na, tb.n AS nb
+  FROM wc a
+  JOIN wc b ON b.w = a.w AND a.source < b.source
+  JOIN tot ta ON ta.source = a.source
+  JOIN tot tb ON tb.source = b.source
+), sums AS (
+  SELECT source_a, source_b,
+         cast(count(*) AS BIGINT) AS n_shared_words,
+         cast(sum(ca) AS BIGINT) AS ca_shared,
+         cast(sum(cb) AS BIGINT) AS cb_shared,
+         sum(cast(round((cast(ca AS DOUBLE) / cast(na AS DOUBLE))
+               * ln(cast(2 * ca * nb AS DOUBLE)
+                    / cast(ca * nb + cb * na AS DOUBLE)), 9)
+             AS DECIMAL(18,9))) AS s_a,
+         sum(cast(round((cast(cb AS DOUBLE) / cast(nb AS DOUBLE))
+               * ln(cast(2 * cb * na AS DOUBLE)
+                    / cast(ca * nb + cb * na AS DOUBLE)), 9)
+             AS DECIMAL(18,9))) AS s_b,
+         max(na) AS na, max(nb) AS nb
+  FROM shared GROUP BY source_a, source_b
+)
+SELECT source_a, source_b, n_shared_words,
+       round(0.5 * (cast(s_a AS DOUBLE)
+                    + ln(2) * (1.0 - cast(ca_shared AS DOUBLE) / cast(na AS DOUBLE)))
+             + 0.5 * (cast(s_b AS DOUBLE)
+                    + ln(2) * (1.0 - cast(cb_shared AS DOUBLE) / cast(nb AS DOUBLE))),
+             6) AS js_divergence
+FROM sums
+ORDER BY source_a, source_b
+"""
+
+
+@register(
+    "text_js_divergence_between_sources",
+    _JS_ORACLE,
+    tags=("llm", "text", "stats", "curation"),
+)
+def text_js_divergence_between_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise Jensen-Shannon divergence of source unigram
+    distributions (see the decomposition note above).
+
+    Pairs sharing NO words carry no join rows and are omitted — their
+    JS is the trivial maximum ln 2; the matrix lists interacting pairs
+    only (identical join-driven behaviour on both engines, pinned by
+    tests/test_r10_ops.py).
+
+    Scale design: one wordcount shuffle; the pair join is on the WORD
+    key (each word fans to at most C(#sources, 2) pairs); per-term
+    DECIMAL(18,9) rounding before the keyed sum keeps the reduction
+    order-independent; exclusive-mass terms come from the shared sums,
+    so no full-outer join and no second corpus pass exist.
+    """
+    docs = spread(load(spark, sf_dir, "documents").select("source", "text"))
+    wc = materialize(
+        docs.select("source", F.explode(tokens(F.col("text"))).alias("w"))
+        .groupBy("source", "w")
+        .agg(F.count(F.lit(1)).cast("long").alias("c")),
+        name="js-wordcounts",
+    )
+    tot = wc.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
+    a = wc.select(F.col("source").alias("source_a"), "w", F.col("c").alias("ca"))
+    b = wc.select(F.col("source").alias("source_b"), "w", F.col("c").alias("cb"))
+    ta = tot.select(F.col("source").alias("source_a"), F.col("n").alias("na"))
+    tb = tot.select(F.col("source").alias("source_b"), F.col("n").alias("nb"))
+    shared = (
+        a.join(b, "w")
+        .where(F.col("source_a") < F.col("source_b"))
+        .join(F.broadcast(ta), "source_a")
+        .join(F.broadcast(tb), "source_b")
+    )
+    term = lambda cx, nx, cy, ny: F.round(  # noqa: E731 - local formula alias
+        (F.col(cx).cast("double") / F.col(nx).cast("double"))
+        * F.log(
+            (2 * F.col(cx) * F.col(ny)).cast("double")
+            / (F.col("ca") * F.col("nb") + F.col("cb") * F.col("na")).cast("double")
+        ),
+        9,
+    ).cast("decimal(18,9)")
+    sums = shared.groupBy("source_a", "source_b").agg(
+        F.count(F.lit(1)).cast("long").alias("n_shared_words"),
+        F.sum("ca").cast("long").alias("ca_shared"),
+        F.sum("cb").cast("long").alias("cb_shared"),
+        F.sum(term("ca", "na", "cb", "nb")).alias("s_a"),
+        F.sum(term("cb", "nb", "ca", "na")).alias("s_b"),
+        F.max("na").cast("long").alias("na"),
+        F.max("nb").cast("long").alias("nb"),
+    )
+    ln2 = F.lit(math.log(2.0))
+    return sums.select(
+        "source_a",
+        "source_b",
+        "n_shared_words",
+        F.round(
+            F.lit(0.5)
+            * (
+                F.col("s_a").cast("double")
+                + ln2
+                * (
+                    F.lit(1.0)
+                    - F.col("ca_shared").cast("double") / F.col("na").cast("double")
+                )
+            )
+            + F.lit(0.5)
+            * (
+                F.col("s_b").cast("double")
+                + ln2
+                * (
+                    F.lit(1.0)
+                    - F.col("cb_shared").cast("double") / F.col("nb").cast("double")
+                )
+            ),
+            6,
+        ).alias("js_divergence"),
+    ).orderBy("source_a", "source_b")
+
+
+# ===========================================================================
+# Curation analytics, decontamination: eval-set decontamination, the quality
+# filter funnel, and CCNet-style perplexity buckets.
+#
+# * ``docs_eval_decontamination_manifest`` — the decontamination pass
+#   every training pipeline runs before a model ships (GPT-3 appendix C /
+#   Llama-2 style): two deterministic held-out eval sets are carved from
+#   the corpus, corpus documents sharing >= ``_DECON_MIN`` distinct
+#   ``_DECON_K``-token shingles with an eval set are flagged, and the
+#   output is the per-(source, eval_set) attrition manifest — corpus
+#   docs, flagged docs, flagged tokens, flagged ppm — including explicit
+#   zero rows so a clean source is visible as clean.
+# * ``docs_quality_filter_funnel`` — the RefinedWeb/FineWeb-style
+#   CUMULATIVE gate attrition table: one row per pipeline stage (all →
+#   min-words → mean-word-length → alpha-ratio → stopwords →
+#   repetition), each with surviving docs, surviving tokens, and kept
+#   ppm vs the raw corpus.  The per-stage drop is what a curation run
+#   reports; the single-pass gate flags are the same integer-exact ppm
+#   tests as ``docs_gopher_quality_flags``.
+# * ``docs_ccnet_perplexity_buckets`` — CCNet's head/middle/tail split:
+#   per source, documents are ranked by the SAME per-doc add-1 bigram
+#   cross-entropy h as ``docs_perplexity_filter_curve`` (shared
+#   ``ppl_perdoc`` / ``PPL_CORE_CTES`` definition) and cut into terciles
+#   with ntile(3); buckets report docs, bigram tokens, and exact-decimal
+#   mean h.
+#
+# 100 TB shape: decontamination is the canonical broadcast-semi-join —
+# the eval-set shingle table is bounded by the (tiny) eval fraction, so
+# the corpus is scanned once and never shuffled; the funnel is one
+# tokenize pass + a single 1-row aggregate unpivoted to 6 stage rows;
+# the buckets ride the shared perplexity model (vocab-bounded) plus one
+# source-partitioned window over the doc-sized perdoc frame.
+#
+# Reference parity note: the reference engine has no text surface
+# (SURVEY §2); these extend the curation pack (plans/curation*.py).
+# ===========================================================================
+
+# ---------------------------------------------------------------------------
+# Eval-set decontamination manifest.
+# ---------------------------------------------------------------------------
+
+_DECON_K = 5  # shingle width (tokens) — long enough to be evidential
+_DECON_MIN = 2  # flag a doc at >= this many distinct shared shingles
+_DECON_MOD = 17  # eval carve-out: doc_id % 17 == 0 -> dev, == 5 -> test
+
+_DECON_SH_SQL = (
+    "list_distinct(list_transform("
+    "generate_series(1, greatest(len(ws) - {km1}, 0)),"
+    " i -> array_to_string(ws[i:i+{km1}], ' ')))"
+).format(km1=_DECON_K - 1)
+
+_DECON_ORACLE = f"""
+WITH base AS MATERIALIZED (
+  SELECT doc_id, source, cast(len(ws) AS BIGINT) AS n_words,
+         {_DECON_SH_SQL} AS sh
+  FROM (SELECT doc_id, source,
+               string_split({sql_normalize_text('text')}, ' ') AS ws
+        FROM documents)
+), ev AS MATERIALIZED (
+  SELECT DISTINCT
+         CASE WHEN doc_id % {_DECON_MOD} = 0 THEN 'dev' ELSE 'test' END
+           AS eval_set,
+         unnest(sh) AS s
+  FROM base WHERE doc_id % {_DECON_MOD} IN (0, 5)
+), corp AS MATERIALIZED (
+  SELECT doc_id, unnest(sh) AS s
+  FROM base WHERE doc_id % {_DECON_MOD} NOT IN (0, 5)
+), flagged AS (
+  SELECT doc_id, eval_set FROM (
+    SELECT c.doc_id, e.eval_set, cast(count(*) AS BIGINT) AS k
+    FROM corp c JOIN ev e ON e.s = c.s
+    GROUP BY c.doc_id, e.eval_set
+  ) WHERE k >= {_DECON_MIN}
+), srctot AS (
+  SELECT source, cast(count(*) AS BIGINT) AS n_corpus_docs
+  FROM base WHERE doc_id % {_DECON_MOD} NOT IN (0, 5) GROUP BY source
+), fl AS (
+  SELECT b.source, f.eval_set,
+         cast(count(*) AS BIGINT) AS n_flagged_docs,
+         cast(sum(b.n_words) AS BIGINT) AS flagged_tokens
+  FROM flagged f JOIN base b ON b.doc_id = f.doc_id
+  GROUP BY b.source, f.eval_set
+)
+SELECT g.source, g.eval_set, g.n_corpus_docs,
+       coalesce(fl.n_flagged_docs, 0) AS n_flagged_docs,
+       coalesce(fl.flagged_tokens, 0) AS flagged_tokens,
+       cast(coalesce(fl.n_flagged_docs, 0) * 1000000 // g.n_corpus_docs
+            AS BIGINT) AS flagged_ppm
+FROM (SELECT source, n_corpus_docs, eval_set
+      FROM srctot CROSS JOIN (VALUES ('dev'), ('test')) e(eval_set)) g
+LEFT JOIN fl ON fl.source = g.source AND fl.eval_set = g.eval_set
+ORDER BY g.source, g.eval_set
+"""
+
+
+@register(
+    "docs_eval_decontamination_manifest",
+    _DECON_ORACLE,
+    tags=("llm", "dedup", "curation", "audit"),
+    bench=True,
+)
+def docs_eval_decontamination_manifest(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Per-(source, eval_set) decontamination attrition manifest.
+
+    Scale design: the eval-set shingle table is bounded by the eval
+    carve-out fraction, so it BROADCASTS; the corpus shingle stream is
+    scanned once, joined map-side, and reduced by (doc, eval_set) —
+    the corpus itself is never shuffled.  The flag threshold
+    (>= _DECON_MIN distinct shared _DECON_K-shingles) is an integer
+    count; zero rows come from the (source x eval_set) grid so a clean
+    source appears explicitly with flagged_ppm = 0.
+    """
+    docs = spread(load(spark, sf_dir, "documents"))
+    # base feeds FOUR branches (eval shingles, corpus shingles, source
+    # totals, flagged-doc meta): without a pin the tokenize+shingle
+    # pass re-runs once per branch (the multi-branch re-scan gotcha —
+    # 79.7 s -> materialized single pass at 10x).
+    base = materialize(
+        docs.select(
+            "doc_id",
+            "source",
+            F.size(tokens(F.col("text"))).cast("long").alias("n_words"),
+            shingles(F.col("text"), _DECON_K).alias("sh"),
+        ),
+        name="decon-base",
+    )
+    in_eval = F.pmod(F.col("doc_id"), F.lit(_DECON_MOD)).isin(0, 5)
+    ev = (
+        base.where(in_eval)
+        .select(
+            F.when(F.pmod(F.col("doc_id"), F.lit(_DECON_MOD)) == 0, "dev")
+            .otherwise("test")
+            .alias("eval_set"),
+            F.explode("sh").alias("s"),
+        )
+        .distinct()
+    )
+    corp_docs = base.where(~in_eval)
+    corp = corp_docs.select("doc_id", F.explode("sh").alias("s"))
+    flagged = (
+        corp.join(F.broadcast(ev), "s")
+        .groupBy("doc_id", "eval_set")
+        .agg(F.count(F.lit(1)).cast("long").alias("k"))
+        .where(F.col("k") >= _DECON_MIN)
+        .select("doc_id", "eval_set")
+    )
+    srctot = corp_docs.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_corpus_docs")
+    )
+    fl = (
+        flagged.join(corp_docs.select("doc_id", "source", "n_words"), "doc_id")
+        .groupBy("source", "eval_set")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_flagged_docs"),
+            F.sum("n_words").cast("long").alias("flagged_tokens"),
+        )
+    )
+    grid = srctot.select(
+        "source",
+        "n_corpus_docs",
+        F.explode(F.array(F.lit("dev"), F.lit("test"))).alias("eval_set"),
+    )
+    return (
+        grid.join(fl, ["source", "eval_set"], "left")
+        .select(
+            "source",
+            "eval_set",
+            "n_corpus_docs",
+            F.coalesce("n_flagged_docs", F.lit(0)).cast("long").alias(
+                "n_flagged_docs"
+            ),
+            F.coalesce("flagged_tokens", F.lit(0)).cast("long").alias(
+                "flagged_tokens"
+            ),
+            F.expr(
+                "coalesce(n_flagged_docs, 0) * CAST(1000000 AS BIGINT)"
+                " div n_corpus_docs"
+            )
+            .cast("long")
+            .alias("flagged_ppm"),
+        )
+        .orderBy("source", "eval_set")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Quality filter funnel.
+# ---------------------------------------------------------------------------
+
+_FUN_STOP = ("the", "be", "to", "of", "and", "that", "have", "with", "a", "in")
+_FUN_MIN_WORDS, _FUN_MAX_WORDS = 20, 100_000
+_FUN_MWL_LO, _FUN_MWL_HI = 4_300_000, 12_000_000  # mean word length, µ-chars
+_FUN_ALPHA_MIN = 700_000  # ppm of words containing a letter
+_FUN_STOP_MIN = 2  # distinct stopwords required
+_FUN_DUP2_MAX = 80_000  # ppm of repeated (non-first-occurrence) 2-grams
+
+_FUN_STOP_SQL = "[" + ", ".join(f"'{s}'" for s in _FUN_STOP) + "]"
+
+_FUN_STAGES = (
+    "0_all",
+    "1_min_words",
+    "2_mean_word_len",
+    "3_alpha_ratio",
+    "4_stopwords",
+    "5_repetition",
+)
+
+
+def _funnel_oracle() -> str:
+    d2 = (
+        "len(list_distinct(list_transform("
+        "generate_series(1, greatest(len(ws) - 1, 0)),"
+        " i -> array_to_string(ws[i:i+1], ' '))))"
+    )
+    stage_rows = "\nUNION ALL\n".join(
+        f"SELECT '{s}' AS stage, d{i} AS n_docs, t{i} AS n_tokens,"
+        f" cast(d{i} * 1000000 // d0 AS BIGINT) AS kept_ppm FROM agg"
+        for i, s in enumerate(_FUN_STAGES)
+    )
+    return f"""
+WITH f AS MATERIALIZED (
+  SELECT cast(len(ws) AS BIGINT) AS nw,
+         cast(list_aggregate(list_transform(ws, w -> length(w)), 'sum')
+              AS BIGINT) AS nc,
+         cast(len(list_filter(ws, w -> regexp_matches(w, '[a-z]')))
+              AS BIGINT) AS na,
+         cast(len(list_filter({_FUN_STOP_SQL},
+                              s -> list_contains(ws, s))) AS BIGINT) AS ns,
+         cast(len(ws) - 1 AS BIGINT) AS n2,
+         cast({d2} AS BIGINT) AS d2
+  FROM (SELECT string_split({sql_normalize_text('text')}, ' ') AS ws
+        FROM documents)
+), g AS (
+  SELECT nw,
+    CASE WHEN nw BETWEEN {_FUN_MIN_WORDS} AND {_FUN_MAX_WORDS}
+         THEN 1 ELSE 0 END AS g1,
+    CASE WHEN nw > 0
+              AND nc * 1000000 // nw BETWEEN {_FUN_MWL_LO} AND {_FUN_MWL_HI}
+         THEN 1 ELSE 0 END AS g2,
+    CASE WHEN nw > 0 AND na * 1000000 // nw >= {_FUN_ALPHA_MIN}
+         THEN 1 ELSE 0 END AS g3,
+    CASE WHEN ns >= {_FUN_STOP_MIN} THEN 1 ELSE 0 END AS g4,
+    CASE WHEN n2 > 0 AND (n2 - d2) * 1000000 // n2 <= {_FUN_DUP2_MAX}
+         THEN 1 ELSE 0 END AS g5
+  FROM f
+), agg AS (
+  SELECT cast(count(*) AS BIGINT) AS d0, cast(sum(nw) AS BIGINT) AS t0,
+         cast(sum(g1) AS BIGINT) AS d1, cast(sum(g1 * nw) AS BIGINT) AS t1,
+         cast(sum(g1 * g2) AS BIGINT) AS d2,
+         cast(sum(g1 * g2 * nw) AS BIGINT) AS t2,
+         cast(sum(g1 * g2 * g3) AS BIGINT) AS d3,
+         cast(sum(g1 * g2 * g3 * nw) AS BIGINT) AS t3,
+         cast(sum(g1 * g2 * g3 * g4) AS BIGINT) AS d4,
+         cast(sum(g1 * g2 * g3 * g4 * nw) AS BIGINT) AS t4,
+         cast(sum(g1 * g2 * g3 * g4 * g5) AS BIGINT) AS d5,
+         cast(sum(g1 * g2 * g3 * g4 * g5 * nw) AS BIGINT) AS t5
+  FROM g
+)
+{stage_rows}
+ORDER BY stage
+"""
+
+
+@register(
+    "docs_quality_filter_funnel",
+    _funnel_oracle(),
+    tags=("llm", "quality", "curation"),
+)
+def docs_quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cumulative quality-gate attrition: one row per pipeline stage.
+
+    Scale design: ONE tokenize pass computes every per-doc feature as
+    JVM-side array expressions (no UDFs, no second scan); the funnel
+    itself is a single map-side-combining aggregate producing one row
+    of 12 counters, unpivoted to the 6 stage rows with `stack` — the
+    output is stage-count-sized regardless of corpus size.  Gates
+    reuse the integer-exact ppm tests of docs_gopher_quality_flags;
+    the repetition gate counts repeated 2-grams via the shared
+    distinct-shingle helper.
+    """
+    docs = spread(load(spark, sf_dir, "documents"))
+    ws = tokens(F.col("text"))
+    f = docs.select(
+        F.size(ws).cast("long").alias("nw"),
+        F.aggregate(
+            F.transform(ws, lambda w: F.length(w).cast("long")),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        ).alias("nc"),
+        F.size(F.filter(ws, lambda w: w.rlike("[a-z]"))).cast("long").alias("na"),
+        F.size(
+            F.filter(
+                F.array(*[F.lit(s) for s in _FUN_STOP]),
+                lambda s: F.array_contains(ws, s),
+            )
+        )
+        .cast("long")
+        .alias("ns"),
+        (F.size(ws) - 1).cast("long").alias("n2"),
+        F.size(shingles(F.col("text"), 2)).cast("long").alias("d2"),
+    )
+    g = f.select(
+        "nw",
+        F.when(F.col("nw").between(_FUN_MIN_WORDS, _FUN_MAX_WORDS), 1)
+        .otherwise(0)
+        .alias("g1"),
+        F.when(
+            (F.col("nw") > 0)
+            & F.expr("nc * CAST(1000000 AS BIGINT) div nw").between(
+                _FUN_MWL_LO, _FUN_MWL_HI
+            ),
+            1,
+        )
+        .otherwise(0)
+        .alias("g2"),
+        F.when(
+            (F.col("nw") > 0)
+            & (F.expr("na * CAST(1000000 AS BIGINT) div nw") >= _FUN_ALPHA_MIN),
+            1,
+        )
+        .otherwise(0)
+        .alias("g3"),
+        F.when(F.col("ns") >= _FUN_STOP_MIN, 1).otherwise(0).alias("g4"),
+        F.when(
+            (F.col("n2") > 0)
+            & (
+                F.expr("(n2 - d2) * CAST(1000000 AS BIGINT) div n2")
+                <= _FUN_DUP2_MAX
+            ),
+            1,
+        )
+        .otherwise(0)
+        .alias("g5"),
+    )
+    agg = g.agg(
+        F.count(F.lit(1)).cast("long").alias("d0"),
+        F.sum("nw").cast("long").alias("t0"),
+        *[
+            c
+            for i in range(1, 6)
+            for c in (
+                F.sum(
+                    F.expr(" * ".join(f"g{j}" for j in range(1, i + 1)))
+                )
+                .cast("long")
+                .alias(f"d{i}"),
+                F.sum(
+                    F.expr(" * ".join(f"g{j}" for j in range(1, i + 1)) + " * nw")
+                )
+                .cast("long")
+                .alias(f"t{i}"),
+            )
+        ],
+    ).repartition(1)
+    stack_expr = "stack(6, " + ", ".join(
+        f"'{s}', d{i}, t{i}" for i, s in enumerate(_FUN_STAGES)
+    ) + ") AS (stage, n_docs, n_tokens)"
+    return (
+        agg.select(F.expr(stack_expr), F.col("d0"))
+        .select(
+            "stage",
+            "n_docs",
+            "n_tokens",
+            F.expr("n_docs * CAST(1000000 AS BIGINT) div d0")
+            .cast("long")
+            .alias("kept_ppm"),
+        )
+        .orderBy("stage")
+    )
+
+
+# ---------------------------------------------------------------------------
+# CCNet perplexity buckets (head / middle / tail terciles per source).
+# ---------------------------------------------------------------------------
+
+_PPLB_ORACLE = f"""
+WITH {PPL_CORE_CTES}, b AS (
+  SELECT s.source, p.n_pairs, p.h,
+         ntile(3) OVER (PARTITION BY s.source ORDER BY p.h, p.doc_id)
+           AS bucket
+  FROM perdoc p JOIN (SELECT doc_id, source FROM documents) s
+    USING (doc_id)
+)
+SELECT source, cast(bucket AS BIGINT) AS bucket,
+       cast(count(*) AS BIGINT) AS n_docs,
+       cast(sum(n_pairs) AS BIGINT) AS n_pairs,
+       round(cast(sum(cast(h AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6)
+         AS mean_h
+FROM b GROUP BY source, bucket
+ORDER BY source, bucket
+"""
+
+
+@register(
+    "docs_ccnet_perplexity_buckets",
+    _PPLB_ORACLE,
+    tags=("llm", "text", "quality", "curation"),
+    bench=True,
+)
+def docs_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CCNet head/middle/tail: per-source perplexity terciles.
+
+    Scale design: rides the shared add-1 bigram model (`ppl_perdoc` —
+    same rounded-double h as the filter curve, so the tercile cuts are
+    reproducible across engines); the only new work is ONE
+    source-partitioned ntile window over the doc-sized perdoc frame
+    and a (source x 3)-row rollup.  mean_h accumulates in
+    DECIMAL(18,6) so the per-bucket average is order-independent and
+    bit-identical.
+    """
+    perdoc = ppl_perdoc(spark, sf_dir)
+    src = load(spark, sf_dir, "documents").select("doc_id", "source")
+    w = Window.partitionBy("source").orderBy("h", "doc_id")
+    b = perdoc.join(src, "doc_id").select(
+        "source", "n_pairs", "h", F.ntile(3).over(w).alias("bucket")
+    )
+    return (
+        b.groupBy("source", F.col("bucket").cast("long").alias("bucket"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("n_pairs").cast("long").alias("n_pairs"),
+            F.round(
+                F.sum(F.col("h").cast("decimal(18,6)")).cast("double")
+                / F.count(F.lit(1)),
+                6,
+            ).alias("mean_h"),
+        )
+        .orderBy("source", "bucket")
+    )
+
+
+# ===========================================================================
+# Lexical statistics: term burstiness and the
+# Kneser-Ney bigram reference model.
+#
+# * ``text_term_burstiness_topk`` — Church & Gale's burstiness readout:
+#   the variance-to-mean ratio (VMR) of per-document term counts, with
+#   absent documents counted as zeros (the whole point — a bursty term
+#   concentrates its occurrences in few documents, so VMR >> 1 even when
+#   total frequency matches a uniform term).  Boilerplate and templated
+#   content light up here before any dedup pass sees them.  Moments are
+#   exact integer sums over the (term, doc) count table; the zero-docs
+#   correction enters arithmetically (sum over absent docs of 0 and 0²),
+#   so no dense vocab x docs grid is ever built.
+# * ``text_kneser_ney_surprisal_by_source`` — per-source corpus surprisal
+#   under an interpolated Kneser-Ney bigram LM (Kneser & Ney 1995; Chen &
+#   Goodman 1999) fit on the same reference slice as the add-1 model
+#   (``_PPL_REF_SOURCE``): absolute discount D = 0.75, continuation
+#   probability from distinct-predecessor counts with an add-1 floor so
+#   unseen events stay finite.  The defining KN property — a bigram's
+#   backoff weight uses how many DISTINCT contexts a word completes, not
+#   its raw frequency — is what the add-1 twin cannot express; scoring
+#   both (same pairs, same rounding discipline) makes the model-choice
+#   delta measurable per source.
+#
+# 100 TB shape: both ride wordcount-shaped shuffles ((term, doc) /
+# (source, w1, w2) count tables); every model table is vocab- or
+# vocab²-bounded and joins under AQE; outputs are top-k / source-sized.
+#
+# Reference parity note: the reference engine has no text surface
+# (SURVEY §2); these extend the curation pack (plans/curation*.py).
+# ===========================================================================
+
+# ---------------------------------------------------------------------------
+# Term burstiness (VMR) top-k.
+# ---------------------------------------------------------------------------
+
+_BURST_MIN_DF = 25  # support floor: VMR of a 3-doc term is noise
+_BURST_K = 20
+
+_BURST_ORACLE = f"""
+WITH dtf AS MATERIALIZED (
+  SELECT w, doc_id, cast(count(*) AS BIGINT) AS c FROM (
+    SELECT doc_id, unnest(string_split({sql_normalize_text('text')}, ' ')) AS w
+    FROM documents)
+  GROUP BY w, doc_id
+), nd AS (
+  SELECT cast(count(*) AS BIGINT) AS n FROM documents
+), t AS (
+  SELECT w, cast(count(*) AS BIGINT) AS df,
+         cast(sum(c) AS BIGINT) AS tf,
+         cast(sum(c * c) AS BIGINT) AS tf2
+  FROM dtf GROUP BY w
+)
+SELECT w AS term, df, tf,
+       round(((cast(tf2 AS DOUBLE) - cast(tf AS DOUBLE) * cast(tf AS DOUBLE)
+                                      / nd.n) / (nd.n - 1))
+             / (cast(tf AS DOUBLE) / nd.n), 6) AS vmr
+FROM t, nd
+WHERE df >= {_BURST_MIN_DF}
+ORDER BY vmr DESC, term
+LIMIT {_BURST_K}
+"""
+
+
+@register(
+    "text_term_burstiness_topk",
+    _BURST_ORACLE,
+    tags=("llm", "text", "quality", "stats"),
+)
+def text_term_burstiness_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-k terms by variance-to-mean ratio of per-doc counts.
+
+    Scale design: one tokenize pass → a (term, doc)-keyed wordcount
+    aggregate → a vocab-sized moment rollup.  Zero-count documents
+    enter the variance arithmetically through N (sum and sum-of-squares
+    of absent docs are 0), so the dense vocab x docs grid never
+    materializes.  tf² fits int64 (per-doc counts are tiny); the VMR
+    is one fixed double chain over exact integers, rounded to 6dp.
+    """
+    docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
+    dtf = (
+        docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("w"))
+        .groupBy("w", "doc_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+    )
+    nd = load(spark, sf_dir, "documents").agg(
+        F.count(F.lit(1)).cast("long").alias("n")
+    )
+    t = dtf.groupBy("w").agg(
+        F.count(F.lit(1)).cast("long").alias("df"),
+        F.sum("c").cast("long").alias("tf"),
+        F.sum(F.col("c") * F.col("c")).cast("long").alias("tf2"),
+    )
+    vmr = F.round(
+        (
+            (
+                F.col("tf2").cast("double")
+                - F.col("tf").cast("double")
+                * F.col("tf").cast("double")
+                / F.col("n")
+            )
+            / (F.col("n") - 1)
+        )
+        / (F.col("tf").cast("double") / F.col("n")),
+        6,
+    )
+    return (
+        t.where(F.col("df") >= _BURST_MIN_DF)
+        .crossJoin(F.broadcast(nd))
+        .select(F.col("w").alias("term"), "df", "tf", vmr.alias("vmr"))
+        .orderBy(F.desc("vmr"), "term")
+        .limit(_BURST_K)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Kneser-Ney bigram surprisal by source.
+# ---------------------------------------------------------------------------
+
+_KN_D = 0.75  # absolute discount
+
+_KN_ORACLE = f"""
+WITH pairs AS MATERIALIZED (
+  SELECT doc_id, source,
+         unnest(tk[1:len(tk)-1]) AS w1,
+         unnest(tk[2:len(tk)]) AS w2
+  FROM (SELECT doc_id, source,
+               string_split({sql_normalize_text('text')}, ' ') AS tk
+        FROM documents)
+), ptype AS MATERIALIZED (
+  SELECT source, w1, w2, cast(count(*) AS BIGINT) AS m
+  FROM pairs GROUP BY source, w1, w2
+), refb AS MATERIALIZED (
+  SELECT w1, w2, cast(count(*) AS BIGINT) AS cb
+  FROM pairs WHERE source = '{_PPL_REF_SOURCE}' GROUP BY w1, w2
+), refc1 AS MATERIALIZED (
+  SELECT w1, cast(count(*) AS BIGINT) AS c1,
+         cast(count(DISTINCT w2) AS BIGINT) AS n1p
+  FROM pairs WHERE source = '{_PPL_REF_SOURCE}' GROUP BY w1
+), refpre AS MATERIALIZED (
+  SELECT w2, cast(count(DISTINCT w1) AS BIGINT) AS npre
+  FROM pairs WHERE source = '{_PPL_REF_SOURCE}' GROUP BY w2
+), gkn AS (
+  SELECT cast(count(*) AS BIGINT) AS nbi,
+         cast(count(DISTINCT w2) + 1 AS BIGINT) AS vc
+  FROM refb
+), scored AS MATERIALIZED (
+  SELECT p.source, p.m,
+         cast(round(ln(
+           CASE WHEN coalesce(u.c1, 0) > 0 THEN
+             greatest(cast(coalesce(b.cb, 0) AS DOUBLE) - {_KN_D!r}, 0.0)
+               / u.c1
+             + {_KN_D!r} * u.n1p / u.c1
+               * ((cast(coalesce(r.npre, 0) AS DOUBLE) + 1.0)
+                  / (g.nbi + g.vc))
+           ELSE
+             (cast(coalesce(r.npre, 0) AS DOUBLE) + 1.0) / (g.nbi + g.vc)
+           END), 6) AS DECIMAL(18,6)) AS lp
+  FROM ptype p
+  LEFT JOIN refb b ON b.w1 = p.w1 AND b.w2 = p.w2
+  LEFT JOIN refc1 u ON u.w1 = p.w1
+  LEFT JOIN refpre r ON r.w2 = p.w2
+  CROSS JOIN gkn g
+)
+SELECT source, cast(sum(m) AS BIGINT) AS n_pairs,
+       round(-cast(sum(lp * m) AS DOUBLE) / cast(sum(m) AS DOUBLE), 6)
+         AS h_kn
+FROM scored GROUP BY source ORDER BY source
+"""
+
+
+@register(
+    "text_kneser_ney_surprisal_by_source",
+    _KN_ORACLE,
+    tags=("llm", "text", "quality", "stats"),
+)
+def text_kneser_ney_surprisal_by_source(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Per-source cross-entropy under an interpolated KN bigram LM.
+
+    Scale design: same single tokenize pass and (source, w1, w2)
+    pair-type rollup as the add-1 model; the KN tables (bigram counts,
+    per-context token/continuation counts, per-word predecessor
+    counts) are all vocab- or vocab²-bounded and join under AQE (no
+    forced broadcast — the r10 lesson); the interpolation is one fixed
+    double chain per pair TYPE, rounded into DECIMAL(18,6) before the
+    order-free weighted sum.  Unseen contexts fall back to the add-1
+    floored continuation distribution, so every scored pair is finite.
+    """
+    docs = spread(load(spark, sf_dir, "documents"))
+    pairs = (
+        docs.select("doc_id", "source", tokens(F.col("text")).alias("s"))
+        .select(
+            "doc_id",
+            "source",
+            F.explode(
+                F.expr(
+                    "CASE WHEN size(s) < 2 THEN "
+                    "cast(array() as array<struct<w1:string,w2:string>>) "
+                    "ELSE transform(sequence(1, size(s) - 1), "
+                    "i -> struct(s[i-1] AS w1, s[i] AS w2)) END"
+                )
+            ).alias("p"),
+        )
+        .select("source", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+    )
+    pairs = materialize(pairs, "kn-pairs")
+    ptype = pairs.groupBy("source", "w1", "w2").agg(
+        F.count(F.lit(1)).cast("long").alias("m")
+    )
+    ref = pairs.where(F.col("source") == _PPL_REF_SOURCE)
+    refb = ref.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("cb"))
+    refc1 = ref.groupBy("w1").agg(
+        F.count(F.lit(1)).cast("long").alias("c1"),
+        F.countDistinct("w2").cast("long").alias("n1p"),
+    )
+    refpre = ref.groupBy("w2").agg(
+        F.countDistinct("w1").cast("long").alias("npre")
+    )
+    glob = refb.agg(
+        F.count(F.lit(1)).cast("long").alias("nbi"),
+        (F.countDistinct("w2") + 1).cast("long").alias("vc"),
+    )
+    pcont = (F.coalesce(F.col("npre"), F.lit(0)).cast("double") + F.lit(1.0)) / (
+        F.col("nbi") + F.col("vc")
+    )
+    p_kn = F.when(
+        F.coalesce(F.col("c1"), F.lit(0)) > 0,
+        F.greatest(
+            F.coalesce(F.col("cb"), F.lit(0)).cast("double") - F.lit(_KN_D),
+            F.lit(0.0),
+        )
+        / F.col("c1")
+        + F.lit(_KN_D) * F.col("n1p") / F.col("c1") * pcont,
+    ).otherwise(pcont)
+    scored = (
+        ptype.join(refb, ["w1", "w2"], "left")
+        .join(refc1, ["w1"], "left")
+        .join(refpre, ["w2"], "left")
+        .crossJoin(F.broadcast(glob))
+        .select(
+            "source",
+            "m",
+            F.round(F.log(p_kn), 6).cast("decimal(18,6)").alias("lp"),
+        )
+    )
+    return (
+        scored.groupBy("source")
+        .agg(
+            F.sum("m").cast("long").alias("n_pairs"),
+            F.round(
+                -F.sum(F.col("lp") * F.col("m")).cast("double")
+                / F.sum("m").cast("double"),
+                6,
+            ).alias("h_kn"),
+        )
+        .orderBy("source")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Context-length truncation-waste curve.
+# ---------------------------------------------------------------------------
+
+_TRUNC_LENS = (64, 128, 256, 512)
+
+_TRUNC_ORACLE = f"""
+WITH dt AS MATERIALIZED (
+  SELECT source,
+         cast(len(string_split({sql_normalize_text('text')}, ' ')) AS BIGINT)
+           AS n_tok
+  FROM documents
+), grid AS (
+  SELECT d.source, d.n_tok, l.context_len
+  FROM dt d, (VALUES {', '.join(f'({L})' for L in _TRUNC_LENS)}) l(context_len)
+), agg AS (
+  SELECT source, cast(context_len AS BIGINT) AS context_len,
+         cast(count(*) AS BIGINT) AS n_docs,
+         cast(coalesce(sum(CASE WHEN n_tok > context_len THEN 1 END), 0)
+              AS BIGINT) AS docs_over,
+         cast(sum(n_tok) AS BIGINT) AS tot_tokens,
+         cast(coalesce(sum(CASE WHEN n_tok > context_len
+                                THEN n_tok - context_len END), 0) AS BIGINT)
+           AS tokens_lost
+  FROM grid GROUP BY source, context_len
+)
+SELECT source, context_len, n_docs, docs_over,
+       cast((2000000 * cast(docs_over AS HUGEINT) + n_docs)
+            // (2 * cast(n_docs AS HUGEINT)) AS BIGINT) AS docs_over_ppm,
+       cast((2000000 * cast(tokens_lost AS HUGEINT) + tot_tokens)
+            // (2 * cast(tot_tokens AS HUGEINT)) AS BIGINT) AS tokens_lost_ppm
+FROM agg
+ORDER BY source, context_len
+"""
+
+
+@register(
+    "docs_truncation_waste_curve",
+    _TRUNC_ORACLE,
+    tags=("llm", "text", "quality", "curve"),
+)
+def docs_truncation_waste_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokens lost to truncation per (source, context length) — the
+    curve a pretraining team reads before fixing the sequence length.
+
+    Scale design: ONE tokenize pass reduces the corpus to a per-doc
+    token count (no token rows ever shuffle — only (source, n_tok)
+    pairs); the 4-length grid is a literal-VALUES fanout of the
+    already-aggregated per-doc frame, and the ppm arithmetic is
+    HUGEINT/DECIMAL round-half-up division (token totals at 100 TB
+    exceed int64·10⁶).
+    """
+    docs = spread(load(spark, sf_dir, "documents").select("source", "text"))
+    dt = docs.select(
+        "source", F.size(tokens(F.col("text"))).cast("long").alias("n_tok")
+    )
+    lens = local_frame(docs.sparkSession, 
+        [(L,) for L in _TRUNC_LENS], "context_len long"
+    ).coalesce(1)
+    agg = (
+        dt.crossJoin(F.broadcast(lens))
+        .groupBy("source", "context_len")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.coalesce(
+                F.sum(F.when(F.col("n_tok") > F.col("context_len"), 1)),
+                F.lit(0),
+            )
+            .cast("long")
+            .alias("docs_over"),
+            F.sum("n_tok").cast("long").alias("tot_tokens"),
+            F.coalesce(
+                F.sum(
+                    F.when(
+                        F.col("n_tok") > F.col("context_len"),
+                        F.col("n_tok") - F.col("context_len"),
+                    )
+                ),
+                F.lit(0),
+            )
+            .cast("long")
+            .alias("tokens_lost"),
+        )
+    )
+    over_ppm = F.expr(
+        "cast((2000000 * cast(docs_over as decimal(38,0)) + n_docs)"
+        " div (2 * cast(n_docs as decimal(38,0))) as bigint)"
+    )
+    lost_ppm = F.expr(
+        "cast((2000000 * cast(tokens_lost as decimal(38,0)) + tot_tokens)"
+        " div (2 * cast(tot_tokens as decimal(38,0))) as bigint)"
+    )
+    return agg.select(
+        "source",
+        "context_len",
+        "n_docs",
+        "docs_over",
+        over_ppm.alias("docs_over_ppm"),
+        lost_ppm.alias("tokens_lost_ppm"),
+    ).orderBy("source", "context_len")
+
+
+# ---------------------------------------------------------------------------
+# DoReMi-style excess-loss domain weights.
+# ---------------------------------------------------------------------------
+
+_DRM_ORACLE = f"""
+WITH pairs AS MATERIALIZED (
+  SELECT source,
+         unnest(tk[1:len(tk)-1]) AS w1,
+         unnest(tk[2:len(tk)]) AS w2
+  FROM (SELECT source, string_split({sql_normalize_text('text')}, ' ') AS tk
+        FROM documents)
+), ptype AS MATERIALIZED (
+  SELECT source, w1, w2, cast(count(*) AS BIGINT) AS m
+  FROM pairs GROUP BY source, w1, w2
+), refp AS MATERIALIZED (
+  SELECT w1, w2, cast(count(*) AS BIGINT) AS cb
+  FROM pairs WHERE source = '{_PPL_REF_SOURCE}' GROUP BY w1, w2
+), refu AS MATERIALIZED (
+  SELECT w1, cast(count(*) AS BIGINT) AS cu
+  FROM pairs WHERE source = '{_PPL_REF_SOURCE}' GROUP BY w1
+), reft AS MATERIALIZED (
+  SELECT w2 AS t, cast(count(*) AS BIGINT) AS ct
+  FROM pairs WHERE source = '{_PPL_REF_SOURCE}' GROUP BY w2
+), refn AS (
+  SELECT cast(count(*) AS BIGINT) AS nref FROM pairs
+  WHERE source = '{_PPL_REF_SOURCE}'
+), vocab AS (
+  SELECT cast(count(DISTINCT t) AS BIGINT) AS v FROM (
+    SELECT w1 AS t FROM pairs WHERE source = '{_PPL_REF_SOURCE}'
+    UNION SELECT w2 FROM pairs WHERE source = '{_PPL_REF_SOURCE}')
+), scored AS MATERIALIZED (
+  SELECT p.source, p.m,
+         cast(round(ln((coalesce(r.cb, 0) + 1.0)
+                       / (coalesce(u.cu, 0) + vocab.v)), 6)
+              AS DECIMAL(18,6)) AS lpb,
+         cast(round(ln((coalesce(t.ct, 0) + 1.0)
+                       / (refn.nref + vocab.v)), 6)
+              AS DECIMAL(18,6)) AS lpu
+  FROM ptype p
+  LEFT JOIN refp r ON r.w1 = p.w1 AND r.w2 = p.w2
+  LEFT JOIN refu u ON u.w1 = p.w1
+  LEFT JOIN reft t ON t.t = p.w2
+  CROSS JOIN vocab CROSS JOIN refn
+), persrc AS MATERIALIZED (
+  SELECT source, cast(sum(m) AS BIGINT) AS n_pairs,
+         round(-cast(sum(lpb * m) AS DOUBLE) / cast(sum(m) AS DOUBLE), 6)
+           AS h_bigram,
+         round(-cast(sum(lpu * m) AS DOUBLE) / cast(sum(m) AS DOUBLE), 6)
+           AS h_unigram
+  FROM scored GROUP BY source
+), ex AS (
+  SELECT source, n_pairs, h_bigram, h_unigram,
+         greatest(0, cast(round(h_unigram * 1e6) AS BIGINT)
+                     - cast(round(h_bigram * 1e6) AS BIGINT)) AS excess_fp6
+  FROM persrc
+), tot AS (SELECT cast(sum(excess_fp6) AS BIGINT) AS te FROM ex)
+SELECT source, n_pairs, h_bigram, h_unigram, excess_fp6,
+       cast(CASE WHEN tot.te > 0 THEN
+         (2000000 * excess_fp6 + tot.te) // (2 * tot.te) ELSE 0 END
+         AS BIGINT) AS weight_ppm
+FROM ex, tot
+ORDER BY source
+"""
+
+
+@register(
+    "docs_doremi_excess_loss_weights",
+    _DRM_ORACLE,
+    tags=("llm", "text", "sampling", "stats"),
+)
+def docs_doremi_excess_loss_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source mixture weights from reducible excess loss.
+
+    DoReMi (Xie et al. 2023) upweights domains where a stronger proxy
+    model still beats the reference — the reducible-loss signal (RHO:
+    Mindermann et al. 2022).  Instantiated on the repo's exact LM
+    stack: reference = add-1 unigram, proxy = add-1 bigram, both fit
+    on the shared ``_PPL_REF_SOURCE`` slice; a source's excess
+    H(unigram) − H(bigram) is how much context structure the domain
+    has left to teach, and weights normalize the clamped excesses.
+
+    Scale design: ONE tokenize pass → a (source, w1, w2)-keyed
+    wordcount shuffle; every model table is vocab/vocab²-bounded and
+    joins under AQE; per-pair log-probs round to DECIMAL(18,6) BEFORE
+    the weighted sums, so both engines sum identical fixed-point
+    values in any order; the excess/weight arithmetic is integer ppm
+    on the source-sized frame.
+    """
+    docs = spread(load(spark, sf_dir, "documents").select("source", "text"))
+    tk = docs.select("source", tokens(F.col("text")).alias("tk"))
+    pairs = tk.select(
+        "source",
+        F.explode(
+            F.arrays_zip(
+                F.slice(F.col("tk"), 1, F.greatest(F.size("tk") - 1, F.lit(0))),
+                F.slice(F.col("tk"), 2, F.greatest(F.size("tk") - 1, F.lit(0))),
+            )
+        ).alias("p"),
+    ).select("source", F.col("p.0").alias("w1"), F.col("p.1").alias("w2"))
+    # SIX consumers (ptype + 5 reference tables) — pin the pair stream
+    # once or the tokenize/explode pass re-runs per consumer (the
+    # ppl_perdoc convention).
+    pairs = materialize(pairs, "doremi-pairs")
+    ptype = pairs.groupBy("source", "w1", "w2").agg(
+        F.count(F.lit(1)).cast("long").alias("m")
+    )
+    ref = pairs.where(F.col("source") == _PPL_REF_SOURCE)
+    refp = ref.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("cb"))
+    refu = ref.groupBy("w1").agg(F.count(F.lit(1)).cast("long").alias("cu"))
+    reft = (
+        ref.groupBy(F.col("w2").alias("t"))
+        .agg(F.count(F.lit(1)).cast("long").alias("ct"))
+    )
+    refn = ref.agg(F.count(F.lit(1)).cast("long").alias("nref"))
+    vocab = (
+        ref.select(F.col("w1").alias("t"))
+        .union(ref.select(F.col("w2").alias("t")))
+        .distinct()
+        .agg(F.count(F.lit(1)).cast("long").alias("v"))
+    )
+    lpb = F.round(
+        F.log(
+            (F.coalesce(F.col("cb"), F.lit(0)) + 1.0)
+            / (F.coalesce(F.col("cu"), F.lit(0)) + F.col("v"))
+        ),
+        6,
+    ).cast("decimal(18,6)")
+    lpu = F.round(
+        F.log(
+            (F.coalesce(F.col("ct"), F.lit(0)) + 1.0)
+            / (F.col("nref") + F.col("v"))
+        ),
+        6,
+    ).cast("decimal(18,6)")
+    scored = (
+        ptype.join(refp, ["w1", "w2"], "left")
+        .join(refu, ["w1"], "left")
+        .join(reft, ptype["w2"] == reft["t"], "left")
+        .crossJoin(F.broadcast(vocab))
+        .crossJoin(F.broadcast(refn))
+        .select("source", "m", lpb.alias("lpb"), lpu.alias("lpu"))
+    )
+    persrc = scored.groupBy("source").agg(
+        F.sum("m").cast("long").alias("n_pairs"),
+        F.round(
+            -F.sum(F.col("lpb") * F.col("m")).cast("double")
+            / F.sum("m").cast("double"),
+            6,
+        ).alias("h_bigram"),
+        F.round(
+            -F.sum(F.col("lpu") * F.col("m")).cast("double")
+            / F.sum("m").cast("double"),
+            6,
+        ).alias("h_unigram"),
+    )
+    ex = persrc.select(
+        "source",
+        "n_pairs",
+        "h_bigram",
+        "h_unigram",
+        F.greatest(
+            F.lit(0),
+            F.round(F.col("h_unigram") * 1e6).cast("long")
+            - F.round(F.col("h_bigram") * 1e6).cast("long"),
+        ).alias("excess_fp6"),
+    )
+    tot = ex.agg(F.sum("excess_fp6").cast("long").alias("te"))
+    weight = F.when(
+        F.col("te") > 0,
+        F.expr("(2000000 * excess_fp6 + te) div (2 * te)"),
+    ).otherwise(F.lit(0))
+    return (
+        ex.crossJoin(F.broadcast(tot))
+        .select(
+            "source",
+            "n_pairs",
+            "h_bigram",
+            "h_unigram",
+            "excess_fp6",
+            weight.cast("long").alias("weight_ppm"),
+        )
+        .orderBy("source")
+    )
+
+
+# ===========================================================================
+# Pipeline-hygiene operators for LLM training data (SURVEY §2.5 extension):
+# data-quality constraint reporting, sub-document (passage) dedup, and
+# train/test contamination checking.
+#
+# These are the operators a 100 TB curation pipeline runs between ingest
+# and training — all pure relational plans, all oracle-paired.
+# ===========================================================================
+
+# ---------------------------------------------------------------------------
+# Data-quality constraint report: null rates, range violations, referential
+# integrity — one row per constraint.  Scale: each constraint is a
+# map-side count over one scan; the FK check is a broadcast anti-join.
+# ---------------------------------------------------------------------------
+
+_QUALITY_ORACLE = """
+SELECT 'orders.custkey_fk_violations' AS constraint_name,
+       (SELECT count(*) FROM orders o
+        WHERE o_custkey NOT IN (SELECT c_custkey FROM customer)) AS violations
+UNION ALL
+SELECT 'lineitem.qty_range_1_50',
+       (SELECT count(*) FROM lineitem WHERE l_quantity < 1 OR l_quantity > 50)
+UNION ALL
+SELECT 'lineitem.discount_range_0_01',
+       (SELECT count(*) FROM lineitem WHERE l_discount < 0 OR l_discount > 0.1)
+UNION ALL
+SELECT 'events.null_event_type',
+       (SELECT count(*) FROM events WHERE event_type IS NULL)
+UNION ALL
+SELECT 'events.value_nonpositive',
+       (SELECT count(*) FROM events WHERE value <= 0)
+UNION ALL
+SELECT 'documents.empty_text',
+       (SELECT count(*) FROM documents WHERE len(trim(text)) = 0)
+"""
+
+
+@register("quality_constraint_report", _QUALITY_ORACLE, tags=("llm", "quality"))
+def quality_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load(spark, sf_dir, "orders")
+    cust = load(spark, sf_dir, "customer")
+    li = load(spark, sf_dir, "lineitem")
+    ev = load(spark, sf_dir, "events")
+    docs = load(spark, sf_dir, "documents")
+
+    def count_row(name: str, df: DataFrame) -> DataFrame:
+        return df.agg(F.count(F.lit(1)).alias("violations")).select(
+            F.lit(name).alias("constraint_name"), "violations"
+        )
+
+    fk = orders.join(
+        cust.select("c_custkey"),
+        orders.o_custkey == F.col("c_custkey"),
+        "left_anti",
+    )
+    checks = [
+        count_row("orders.custkey_fk_violations", fk),
+        count_row(
+            "lineitem.qty_range_1_50",
+            li.filter((F.col("l_quantity") < 1) | (F.col("l_quantity") > 50)),
+        ),
+        count_row(
+            "lineitem.discount_range_0_01",
+            li.filter((F.col("l_discount") < 0) | (F.col("l_discount") > 0.1)),
+        ),
+        count_row("events.null_event_type", ev.filter(F.col("event_type").isNull())),
+        count_row("events.value_nonpositive", ev.filter(F.col("value") <= 0)),
+        count_row(
+            "documents.empty_text",
+            docs.filter(F.length(F.trim(F.col("text"))) == 0),
+        ),
+    ]
+    out = checks[0]
+    for c in checks[1:]:
+        out = out.unionByName(c)
+    return out
+
+
+# ---------------------------------------------------------------------------
+# Sub-document dedup: PASSAGE-level exact duplication across the corpus —
+# the boilerplate-removal pass (repeated passages across docs are
+# navigation chrome / licenses / templates).  Passages = non-overlapping
+# 10-token windows (the fixtures carry no sentence punctuation; on real
+# prose, split on sentence boundaries first).  Scale: explode to
+# passages, hash, one shuffle on the hash; emit only cross-doc repeats.
+# ---------------------------------------------------------------------------
+
+_PASSAGE_W = 10
+
+_PASSAGE_SQL = (
+    "list_transform(generate_series(1, greatest(cast(floor(len(__toks) / {w}.0) as bigint), 0)),"
+    " i -> array_to_string((__toks)[(i-1)*{w}+1:i*{w}], ' '))"
+).format(w=_PASSAGE_W)
+
+_SENT_ORACLE = f"""
+WITH passages AS (
+  SELECT doc_id, unnest({_PASSAGE_SQL}) AS passage
+  FROM (SELECT doc_id, string_split({sql_normalize_text('text')}, ' ') AS __toks
+        FROM documents)
+)
+SELECT md5(passage) AS passage_hash,
+       count(*) AS n_occurrences,
+       count(DISTINCT doc_id) AS n_docs,
+       min(doc_id) AS first_doc_id
+FROM passages
+GROUP BY md5(passage)
+HAVING count(DISTINCT doc_id) >= 2
+"""
+
+
+@register("passage_cross_doc_dedup", _SENT_ORACLE, tags=("llm", "dedup", "text"))
+def passage_cross_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from event_streaming_spark.functions.hashing import tokens
+
+    docs = spread(load(spark, sf_dir, "documents"))
+    toks = tokens(F.col("text"))
+    n_pass = F.floor(F.size(toks) / F.lit(_PASSAGE_W)).cast("int")
+    idx = F.sequence(F.lit(1), F.greatest(n_pass, F.lit(0)))
+    passages = docs.select(
+        "doc_id",
+        F.explode(
+            F.transform(
+                idx,
+                lambda i: F.array_join(
+                    F.slice(toks, (i - 1) * _PASSAGE_W + 1, _PASSAGE_W), " "
+                ),
+            )
+        ).alias("passage"),
+    )
+    return (
+        passages.groupBy(F.md5("passage").alias("passage_hash"))
+        .agg(
+            F.count(F.lit(1)).alias("n_occurrences"),
+            F.countDistinct("doc_id").alias("n_docs"),
+            F.min("doc_id").alias("first_doc_id"),
+        )
+        .filter(F.col("n_docs") >= 2)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Train/test contamination check: which corpus documents share long (5-token)
+# shingles with a benchmark set (here: doc_id < 10 stands in for the eval
+# set).  Scale: the benchmark shingle set is tiny → broadcast semi-join
+# against the exploded corpus shingles; the corpus is scanned once, never
+# shuffled.  This is the decontamination pass every training pipeline runs.
+# ---------------------------------------------------------------------------
+
+_CONTAM_K = 5
+
+_CONTAM_SHINGLES = (
+    "list_distinct(list_transform("
+    "generate_series(1, greatest(len(string_split({norm}, ' ')) - {km1}, 0)),"
+    " i -> array_to_string((string_split({norm}, ' '))[i:i+{km1}], ' ')))"
+).format(norm=sql_normalize_text("text"), km1=_CONTAM_K - 1)
+
+_CONTAM_ORACLE = f"""
+WITH bench AS (
+  SELECT DISTINCT unnest({_CONTAM_SHINGLES}) AS shingle
+  FROM documents WHERE doc_id < 10
+), corpus AS (
+  SELECT doc_id, unnest({_CONTAM_SHINGLES}) AS shingle
+  FROM documents WHERE doc_id >= 10
+)
+SELECT corpus.doc_id AS doc_id,
+       count(*) AS n_contaminated_shingles
+FROM corpus JOIN bench USING (shingle)
+GROUP BY corpus.doc_id
+"""
+
+
+@register("contamination_check_vs_benchmark", _CONTAM_ORACLE, tags=("llm", "dedup", "text"))
+def contamination_check_vs_benchmark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from event_streaming_spark.functions.hashing import shingles
+
+    docs = spread(load(spark, sf_dir, "documents"))
+    sh = docs.select("doc_id", F.explode(shingles(F.col("text"), _CONTAM_K)).alias("shingle"))
+    bench = (
+        sh.filter(F.col("doc_id") < 10).select("shingle").distinct()
+    )
+    corpus = sh.filter(F.col("doc_id") >= 10)
+    return (
+        corpus.join(F.broadcast(bench), "shingle")
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_contaminated_shingles"))
     )

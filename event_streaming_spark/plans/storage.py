@@ -27,8 +27,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from event_streaming_spark.plans.catalog import capture_plan, load, register
 from event_streaming_spark.functions.hashing import sql_stable_hash32
+from event_streaming_spark.plans.catalog import capture_plan, load, register
 from event_streaming_spark.sources.versioned import VersionedStore
 
 # Fixed-point cents keep both engines exact-integer; the outer CAST to
@@ -516,7 +516,7 @@ def events_multi_format_source_parity(spark: SparkSession, sf_dir: str) -> DataF
         res = outs[0]
         for o in outs[1:]:
             res = res.unionByName(o)
-        # per-format scan → aggregate union: expose to the EXPLAINS dump
+        # per-format scan → aggregate union: expose to tools/dump_plans.py
         # (the returned DataFrame is localized and can't show it)
         capture_plan("events_multi_format_source_parity/format_legs", res)
         # 3-row result; localize before the tempdir goes away

@@ -1,43 +1,92 @@
-"""Oracle-paired STREAMING queries — the publish → log → window → drain
-path graded by the driver's correctness harness, not just pytest.
+"""Oracle-paired streaming queries: publish → log → micro-batch → drain.
 
-The engine's headline capability (reference: the events-agency pub/sub
-loop, /root/reference/src/events-agency.c:142-243 + the consumer callback
-contract include/events-agency.h:29-52) is a streaming pipeline:
-``publish(events)`` appends to a durable topic log; ``consume`` drains it
-through Structured Streaming with a windowed aggregation and hands each
-micro-batch to the subscriber callback.
-
-``streaming_drain_equals_batch`` runs that WHOLE pipeline batch-callably:
-it publishes the events table to a fresh parquet topic log, drains it
-with an availableNow trigger through a watermarked 1-day window
-aggregate, keeps the LAST update per (window, event_type) key — update
-mode emits the running aggregate per key per micro-batch, so the final
-emission per key equals the batch aggregate — and returns the drained
-result as a DataFrame.  The oracle is the same daily aggregate in ANSI
-SQL over the raw parquet: stream ≡ batch, verified by the driver's
-value-hash, not only by tests/test_streaming.py.
-
-Scale notes: everything data-sized happens inside Structured Streaming
-(the published log is drained by executors; state lives in the state
-store sized to state cardinality).  The only driver-side collection is
-the AGGREGATE rows (windows × event_types — ~150 at any SF; state-sized,
-not data-sized), which is exactly what a subscriber callback receives.
+The windowed drains, the incremental dedup indexes and the HTTP gateway
+round trip, each graded by the driver's value-hash gate.  Drains that
+emit in update mode fold their batches through ``UpdateModeFold``.
+Each section below opens with its design notes.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
+import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from event_streaming_spark.functions.numeric import sql_exact_sum
 from event_streaming_spark.functions.localframe import local_frame
+from event_streaming_spark.functions.numeric import exact_sum, sql_exact_sum
+from event_streaming_spark.operators import similarity as S
 from event_streaming_spark.plans.catalog import capture_plan, load, register
+from event_streaming_spark.plans.curation import _SEM_SCALE, _SEM_TAU_SQ_PPM
+from event_streaming_spark.plans.llm import _EQ_SUM
+
+
+class UpdateModeFold:
+    """Structured Streaming's update-mode output, folded on the driver
+    (Armbrust et al., SIGMOD 2018): each micro-batch emits the RUNNING
+    aggregate of the keys it touched, so the last emission per key is the
+    final, batch-equal value.
+
+    ``collect`` is a drain callback's body: it localizes one batch's
+    update rows (state-sized, never event-sized).  ``frame`` keeps the
+    last emission per ``keys`` in batch order, maps it through
+    ``finish`` and returns it as a frame of ``schema``; an empty frame
+    when no batch emitted."""
+
+    def __init__(self, keys: list[str]):
+        self.keys = keys
+        self._batches: list = []
+
+    def collect(self, batch_df: DataFrame, batch_id: int) -> None:
+        pdf = batch_df.toPandas()
+        pdf["batch_id"] = batch_id
+        self._batches.append(pdf)
+
+    def frame(self, spark: SparkSession, schema, finish) -> DataFrame:
+        if not self._batches:
+            return local_frame(spark, [], schema)
+        import pandas as pd
+
+        last = (
+            pd.concat(self._batches, ignore_index=True)
+            .sort_values("batch_id", kind="stable")
+            .groupby(self.keys, as_index=False)
+            .last()
+        )
+        return local_frame(spark, finish(last), schema)
+
+# ===========================================================================
+# Oracle-paired STREAMING queries — the publish → log → window → drain
+# path graded by the driver's correctness harness, not just pytest.
+#
+# The engine's headline capability (reference: the events-agency pub/sub
+# loop, reference/src/events-agency.c:142-243 + the consumer callback
+# contract include/events-agency.h:29-52) is a streaming pipeline:
+# ``publish(events)`` appends to a durable topic log; ``consume`` drains it
+# through Structured Streaming with a windowed aggregation and hands each
+# micro-batch to the subscriber callback.
+#
+# ``streaming_drain_equals_batch`` runs that WHOLE pipeline batch-callably:
+# it publishes the events table to a fresh parquet topic log, drains it
+# with an availableNow trigger through a watermarked 1-day window
+# aggregate, keeps the LAST update per (window, event_type) key — update
+# mode emits the running aggregate per key per micro-batch, so the final
+# emission per key equals the batch aggregate — and returns the drained
+# result as a DataFrame.  The oracle is the same daily aggregate in ANSI
+# SQL over the raw parquet: stream ≡ batch, verified by the driver's
+# value-hash, not only by tests/test_streaming.py.
+#
+# Scale notes: everything data-sized happens inside Structured Streaming
+# (the published log is drained by executors; state lives in the state
+# store sized to state cardinality).  The only driver-side collection is
+# the AGGREGATE rows (windows × event_types — ~150 at any SF; state-sized,
+# not data-sized), which is exactly what a subscriber callback receives.
+# ===========================================================================
 
 _DRAIN_ORACLE = f"""
 SELECT CAST(ts AS DATE) AS event_date,
@@ -48,7 +97,7 @@ FROM events
 GROUP BY CAST(ts AS DATE), event_type
 """
 
-_RESULT_SCHEMA = T.StructType(
+_DRAIN_RESULT_SCHEMA = T.StructType(
     [
         T.StructField("event_date", T.DateType()),
         T.StructField("event_type", T.StringType()),
@@ -69,7 +118,7 @@ def streaming_drain_equals_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from event_streaming_spark.streaming.agency import EventsAgency
 
     root = tempfile.mkdtemp(prefix="est-drain-")
-    batches: list = []
+    fold = UpdateModeFold(["event_date", "event_type"])
     try:
         agency = EventsAgency(spark, root=root, log_format="parquet")
         ctx = agency.topic("driver-gate", "events")
@@ -92,14 +141,15 @@ def streaming_drain_equals_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         def on_notify(c, batch_df: DataFrame, batch_id: int) -> None:
             # The subscriber callback (O3 contract): receives the per-batch
             # UPDATED aggregate rows — state-sized, safe to localize.
-            pdf = batch_df.select(
-                F.to_date(F.col("window.start")).alias("event_date"),
-                "event_type",
-                "n_events",
-                "sv",
-            ).toPandas()
-            pdf["batch_id"] = batch_id
-            batches.append(pdf)
+            fold.collect(
+                batch_df.select(
+                    F.to_date(F.col("window.start")).alias("event_date"),
+                    "event_type",
+                    "n_events",
+                    "sv",
+                ),
+                batch_id,
+            )
 
         ctx.consume(
             on_notify,
@@ -114,21 +164,13 @@ def streaming_drain_equals_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
-    import pandas as pd
-
-    if not batches:
-        return local_frame(spark, [], _RESULT_SCHEMA)
-    all_updates = pd.concat(batches, ignore_index=True)
-    # update mode: each micro-batch emits the RUNNING aggregate for keys it
-    # touched; the last emission per key is the final (batch-equal) value.
-    last = (
-        all_updates.sort_values("batch_id", kind="stable")
-        .groupby(["event_date", "event_type"], as_index=False)
-        .last()
+    return fold.frame(
+        spark,
+        _DRAIN_RESULT_SCHEMA,
+        lambda last: last.assign(total_value=(last["sv"] / 1e6).round(2))[
+            ["event_date", "event_type", "n_events", "total_value"]
+        ],
     )
-    last["total_value"] = (last["sv"] / 1e6).round(2)
-    out = last[["event_date", "event_type", "n_events", "total_value"]]
-    return spark.createDataFrame(out, _RESULT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -845,7 +887,7 @@ def streaming_static_enrich_drain(spark: SparkSession, sf_dir: str) -> DataFrame
     from event_streaming_spark.streaming.agency import EventsAgency
 
     root = tempfile.mkdtemp(prefix="est-enrich-")
-    batches: list = []
+    fold = UpdateModeFold(["event_date", "nation"])
     try:
         agency = EventsAgency(spark, root=root, log_format="parquet")
         ctx = agency.topic("driver-gate", "events-enrich")
@@ -873,14 +915,15 @@ def streaming_static_enrich_drain(spark: SparkSession, sf_dir: str) -> DataFrame
             )
 
         def on_notify(c, batch_df: DataFrame, batch_id: int) -> None:
-            pdf = batch_df.select(
-                F.to_date(F.col("window.start")).alias("event_date"),
-                "nation",
-                "n_events",
-                "sv",
-            ).toPandas()
-            pdf["batch_id"] = batch_id
-            batches.append(pdf)
+            fold.collect(
+                batch_df.select(
+                    F.to_date(F.col("window.start")).alias("event_date"),
+                    "nation",
+                    "n_events",
+                    "sv",
+                ),
+                batch_id,
+            )
 
         ctx.consume(
             on_notify,
@@ -893,19 +936,13 @@ def streaming_static_enrich_drain(spark: SparkSession, sf_dir: str) -> DataFrame
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
-    import pandas as pd
-
-    if not batches:
-        return local_frame(spark, [], _ENRICH_SCHEMA)
-    all_updates = pd.concat(batches, ignore_index=True)
-    last = (
-        all_updates.sort_values("batch_id", kind="stable")
-        .groupby(["event_date", "nation"], as_index=False)
-        .last()
+    return fold.frame(
+        spark,
+        _ENRICH_SCHEMA,
+        lambda last: last.assign(total_value=(last["sv"] / 1e6).round(2))[
+            ["event_date", "nation", "n_events", "total_value"]
+        ],
     )
-    last["total_value"] = (last["sv"] / 1e6).round(2)
-    out = last[["event_date", "nation", "n_events", "total_value"]]
-    return spark.createDataFrame(out, _ENRICH_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -943,7 +980,7 @@ def streaming_hopping_window_drain(spark: SparkSession, sf_dir: str) -> DataFram
     from event_streaming_spark.streaming.agency import EventsAgency
 
     root = tempfile.mkdtemp(prefix="est-hopw-")
-    batches: list = []
+    fold = UpdateModeFold(["window_start_ms", "event_type"])
     try:
         agency = EventsAgency(spark, root=root, log_format="parquet")
         ctx = agency.topic("driver-gate", "events-hopping")
@@ -961,14 +998,15 @@ def streaming_hopping_window_drain(spark: SparkSession, sf_dir: str) -> DataFram
             )
 
         def on_notify(c, batch_df: DataFrame, batch_id: int) -> None:
-            pdf = batch_df.select(
-                F.unix_millis(F.col("window.start")).alias("window_start_ms"),
-                "event_type",
-                "n_events",
-                "sv",
-            ).toPandas()
-            pdf["batch_id"] = batch_id
-            batches.append(pdf)
+            fold.collect(
+                batch_df.select(
+                    F.unix_millis(F.col("window.start")).alias("window_start_ms"),
+                    "event_type",
+                    "n_events",
+                    "sv",
+                ),
+                batch_id,
+            )
 
         ctx.consume(
             on_notify,
@@ -983,30 +1021,12 @@ def streaming_hopping_window_drain(spark: SparkSession, sf_dir: str) -> DataFram
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
-    import pandas as pd
-
-    if not batches:
-        return local_frame(spark, 
-            [],
-            T.StructType(
-                [
-                    T.StructField("window_start_ms", T.LongType()),
-                    T.StructField("event_type", T.StringType()),
-                    T.StructField("n_events", T.LongType()),
-                    T.StructField("total_value", T.DoubleType()),
-                ]
-            ),
-        )
-    all_updates = pd.concat(batches, ignore_index=True)
-    last = (
-        all_updates.sort_values("batch_id", kind="stable")
-        .groupby(["window_start_ms", "event_type"], as_index=False)
-        .last()
-    )
-    last["total_value"] = (last["sv"] / 1e6).round(2)
-    return spark.createDataFrame(
-        last[["window_start_ms", "event_type", "n_events", "total_value"]],
+    return fold.frame(
+        spark,
         "window_start_ms long, event_type string, n_events long, total_value double",
+        lambda last: last.assign(total_value=(last["sv"] / 1e6).round(2))[
+            ["window_start_ms", "event_type", "n_events", "total_value"]
+        ],
     )
 
 
@@ -1597,8 +1617,6 @@ def streaming_hll_distinct_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the topic log through a windowed HLL-register aggregate
     (see section comment); finalize the drained registers and audit
     against the batch exact distinct."""
-    import pandas as pd
-
     from event_streaming_spark.functions.hashing import stable_hash32
     from event_streaming_spark.operators.sketches import hll_finalize_by
     from event_streaming_spark.streaming.agency import EventsAgency
@@ -1606,7 +1624,7 @@ def streaming_hll_distinct_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = 6
     w_bits = 32 - b
     root = tempfile.mkdtemp(prefix="est-hlldrain-")
-    batches: list = []
+    fold = UpdateModeFold(["day", "bucket"])
     try:
         agency = EventsAgency(spark, root=root, log_format="parquet")
         ctx = agency.topic("driver-gate", "hll-distinct")
@@ -1632,11 +1650,10 @@ def streaming_hll_distinct_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         def on_notify(c, batch_df: DataFrame, batch_id: int) -> None:
-            pdf = batch_df.select(
-                F.to_date(F.col("window.start")).alias("day"), "bucket", "reg"
-            ).toPandas()
-            pdf["_b"] = len(batches)
-            batches.append(pdf)
+            fold.collect(
+                batch_df.select(F.to_date(F.col("window.start")).alias("day"), "bucket", "reg"),
+                batch_id,
+            )
 
         ctx.consume(
             on_notify,
@@ -1650,13 +1667,9 @@ def streaming_hll_distinct_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
-    allu = pd.concat(batches, ignore_index=True)
-    final_regs = (
-        allu.sort_values("_b", kind="stable")
-        .groupby(["day", "bucket"], as_index=False)
-        .last()[["day", "bucket", "reg"]]
+    regs_df = fold.frame(
+        spark, "day date, bucket long, reg long", lambda last: last[["day", "bucket", "reg"]]
     )
-    regs_df = local_frame(spark, final_regs, "day date, bucket long, reg long")
     est = hll_finalize_by(regs_df, ["day"], b).withColumnRenamed(
         "hll_estimate", "hll_users"
     )
@@ -1915,3 +1928,776 @@ def streaming_heavy_hitters_restart_drain(spark: SparkSession, sf_dir: str) -> D
     oracle as the single-run variant: restart is an execution detail,
     not a semantic one."""
     return _run_heavy_hitters(spark, sf_dir, restart=True)
+
+
+# ===========================================================================
+# Streaming incremental MinHash-LSH dedup: a continuously-maintained
+# band index that dedups each arriving micro-batch against ALL history at
+# delta cost — the production shape for deduplicating a continuous crawl
+# feed without ever recomputing the full pair join.
+#
+# Three "arrival waves" of the documents table (wave = doc_id % 3) are
+# published to a topic log and drained with availableNow micro-batches.
+# Per micro-batch, inside the subscriber callback (the O3 contract):
+#
+# 1. band the batch's docs (same k=16 minhash / LSH_BANDS machinery as
+#    ``minhash_lsh_near_dup_pairs``);
+# 2. PROBE the pre-update index store for cross-batch candidates — an
+#    equi-join on (band_idx, band_hash) against only the new docs' bands;
+# 3. self-join within the batch for same-batch candidates;
+# 4. verify candidates by estimated Jaccard and emit pairs ≥ 0.3;
+# 5. append the batch's bands to the index — a BUCKETED managed table
+#    keyed by (band_idx, band_hash) (``sources/bucketed.py``); the index
+#    itself never leaves the cluster.
+#
+# The graded invariant: the union of incrementally-found pairs equals the
+# FULL batch LSH pair set, with each pair labeled canonically by arrival
+# order (earlier = smaller (wave, doc_id)) — and this holds for ANY
+# micro-batch partitioning of the log, which is exactly what makes the
+# incremental index trustworthy in production: Spark's file-source
+# batching is an execution detail, not a semantic one.
+#
+# Reference parity: topic publish/consume + subscriber callback
+# (include/events-agency.h:52, src/events-agency.c) carrying the LLM-dedup
+# workload end to end.
+#
+# Scale: per batch the probe is bands(batch) ⋈ index — candidate-bounded,
+# never all-pairs.  The index IS bucketed by (band_idx, band_hash)
+# (``sources/bucketed.py``; r6, VERDICT r5 #6): each batch's append pays
+# one delta-sized bucket shuffle at write time, and the probe join plans
+# with NO Exchange on the index side — the accumulated history never
+# reshuffles, so per-batch cost tracks the DELTA (new docs × bands), not
+# history (asserted on the physical plan in
+# tests/test_bucketed_and_streamjoin.py).
+# ===========================================================================
+
+# Same pair set as the batch LSH oracle — only the labeling differs:
+# each unordered candidate pair maps to (earlier, later) by the arrival
+# key (wave = doc_id % 3, doc_id).
+_SDEDUP_ORACLE = f"""
+WITH hs AS (
+  SELECT doc_id, {S.sql_shingle_hashes('text')} AS hs FROM documents
+), sig AS (
+  SELECT doc_id, {', '.join(S.sql_minhash_exprs('hs'))} FROM hs
+), banded AS (
+  SELECT doc_id, {', '.join(S.sql_band_hash_exprs())} FROM sig
+), bands AS (
+  {' UNION ALL '.join(f"SELECT doc_id, {j} AS band_idx, band{j} AS bh FROM banded" for j in range(S.LSH_BANDS))}
+), cand AS (
+  SELECT DISTINCT a.doc_id AS earlier_doc, b.doc_id AS later_doc
+  FROM bands a JOIN bands b ON a.band_idx = b.band_idx AND a.bh = b.bh
+   AND ((a.doc_id % 3 < b.doc_id % 3)
+        OR (a.doc_id % 3 = b.doc_id % 3 AND a.doc_id < b.doc_id))
+)
+SELECT earlier_doc, later_doc, est_jaccard FROM (
+  SELECT earlier_doc, later_doc,
+         round(cast({_EQ_SUM} as double) / {S.MINHASH_K}, 6) AS est_jaccard
+  FROM cand JOIN sig sa ON sa.doc_id = earlier_doc JOIN sig sb ON sb.doc_id = later_doc
+) WHERE est_jaccard >= 0.3
+ORDER BY earlier_doc, later_doc
+"""
+
+_PAIR_SCHEMA = T.StructType(
+    [
+        T.StructField("earlier_doc", T.LongType()),
+        T.StructField("later_doc", T.LongType()),
+        T.StructField("est_jaccard", T.DoubleType()),
+    ]
+)
+
+
+def _banded(df: DataFrame) -> DataFrame:
+    """(doc_id, wave, text) → exploded band rows carrying the signature."""
+    hs = df.select(
+        "doc_id", "wave", S.shingle_hashes(F.col("text")).alias("hs")
+    )
+    sig = hs.select(
+        "doc_id", "wave", F.array(*S.minhash_cols(F.col("hs"))).alias("sig")
+    )
+    return sig.select(
+        "doc_id",
+        "wave",
+        "sig",
+        F.posexplode(F.array(*S.band_hashes_over(F.col("sig")))).alias("band_idx", "bh"),
+    )
+
+
+def _arrival_lt(a_wave, a_doc, b_wave, b_doc):
+    return (a_wave < b_wave) | ((a_wave == b_wave) & (a_doc < b_doc))
+
+
+def _run_minhash_index(spark: SparkSession, sf_dir: str, restart: bool) -> DataFrame:
+    import uuid
+
+    from event_streaming_spark.sources.bucketed import write_bucketed
+    from event_streaming_spark.streaming.agency import EventsAgency
+
+    docs = load(spark, sf_dir, "documents").select(
+        "doc_id", (F.col("doc_id") % 3).cast("int").alias("wave"), "text"
+    )
+
+    root = tempfile.mkdtemp(prefix="est-sdedup-")
+    # The band index is a BUCKETED managed table keyed by the probe's
+    # join columns: history never reshuffles at probe time, each append
+    # pays only its own delta-sized bucket shuffle (VERDICT r5 #6).
+    idx_table = f"sdedup_band_index_{uuid.uuid4().hex[:12]}"
+    idx_appended = [False]
+    phase = [1]  # restart path: 1 = first run, 2 = resumed-from-checkpoint
+    found: list = []  # bounded: the final near-dup PAIR set, not the corpus
+    try:
+        agency = EventsAgency(spark, root=root, log_format="parquet")
+        ctx = agency.topic("driver-gate", "docs")
+        # topic payload is documents, not the default event envelope
+        ctx.schema = T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("wave", T.IntegerType()),
+                T.StructField("text", T.StringType()),
+            ]
+        )
+        # arrival schedule: the restart variant holds wave 2 back until
+        # the first query instance has been killed
+        for w in range(2 if restart else 3):
+            ctx.publish(docs.filter(F.col("wave") == w))
+
+        def on_notify(c, batch_df: DataFrame, batch_id: int) -> None:
+            if restart and phase[0] == 2:
+                # Graded restart invariant: the resumed query must see
+                # ONLY the delta published after the kill — a re-delivery
+                # of waves 0/1 would mean the checkpoint's source offsets
+                # were lost (the final dropDuplicates would mask it, so
+                # assert it in-plan like the gateway's 401 check).
+                early = batch_df.filter(F.col("wave") < 2).count()
+                if early != 0:  # -O-safe, like the gateway's 401 check
+                    raise AssertionError(f"restart re-delivered {early} pre-kill docs")
+            bands = _banded(batch_df).localCheckpoint()
+            sig_b = bands.select("doc_id", "wave", "sig").dropDuplicates(["doc_id"])
+            pair_frames = []
+            # cross-batch: probe the PRE-update index (disjoint from batch).
+            # Read through the BATCH's session: the managed table lives in
+            # the shared catalog, but each session caches the relation's
+            # file list — the batch session is the one whose cache the
+            # append invalidates, so it alone is guaranteed fresh.
+            if idx_appended[0]:
+                idx = batch_df.sparkSession.table(idx_table).alias("x")
+                n = bands.alias("n")
+                pair_frames.append(
+                    n.join(
+                        idx,
+                        (F.col("n.band_idx") == F.col("x.band_idx"))
+                        & (F.col("n.bh") == F.col("x.bh")),
+                    ).select(
+                        F.col("n.doc_id").alias("da"), F.col("n.wave").alias("wa"),
+                        F.col("n.sig").alias("sig_a"),
+                        F.col("x.doc_id").alias("db"), F.col("x.wave").alias("wb"),
+                        F.col("x.sig").alias("sig_b"),
+                    )
+                )
+            # same-batch: half self-join by arrival key
+            a, b = bands.alias("a"), bands.alias("b")
+            pair_frames.append(
+                a.join(
+                    b,
+                    (F.col("a.band_idx") == F.col("b.band_idx"))
+                    & (F.col("a.bh") == F.col("b.bh"))
+                    & _arrival_lt(
+                        F.col("a.wave"), F.col("a.doc_id"),
+                        F.col("b.wave"), F.col("b.doc_id"),
+                    ),
+                ).select(
+                    F.col("a.doc_id").alias("da"), F.col("a.wave").alias("wa"),
+                    F.col("a.sig").alias("sig_a"),
+                    F.col("b.doc_id").alias("db"), F.col("b.wave").alias("wb"),
+                    F.col("b.sig").alias("sig_b"),
+                )
+            )
+            cand = pair_frames[0]
+            for extra in pair_frames[1:]:
+                cand = cand.unionByName(extra)
+            # canonical (earlier, later) labels + Jaccard verify
+            flip = _arrival_lt(F.col("wb"), F.col("db"), F.col("wa"), F.col("da"))
+            scored = (
+                cand.select(
+                    F.when(flip, F.col("db")).otherwise(F.col("da")).alias("earlier_doc"),
+                    F.when(flip, F.col("da")).otherwise(F.col("db")).alias("later_doc"),
+                    S.minhash_est_jaccard_arrays(
+                        F.col("sig_a"), F.col("sig_b")
+                    ).alias("est_jaccard"),
+                )
+                .dropDuplicates(["earlier_doc", "later_doc"])
+                .filter(F.col("est_jaccard") >= 0.3)
+            )
+            # expose the per-batch probe plan (delta ⋈ bucketed index, no
+            # Exchange on the index side) to tools/dump_plans.py — the
+            # drain's returned DataFrame is localized and can't show it
+            if idx_appended[0]:
+                capture_plan(
+                    "streaming_minhash_index"
+                    + ("_restart" if restart else "")
+                    + "_drain/cross_batch_probe",
+                    scored,
+                )
+            # result-sized localization (the pair set), same bound as the
+            # other drains' callback collections
+            found.append(scored.toPandas())
+            # index update AFTER the probe: append this batch's bands into
+            # the same bucket layout (delta-sized shuffle, history untouched)
+            write_bucketed(
+                bands.select("doc_id", "wave", "band_idx", "bh", "sig"),
+                idx_table,
+                ["band_idx", "bh"],
+                n_buckets=8,
+                sort=False,
+                mode="append" if idx_appended[0] else "overwrite",
+            )
+            idx_appended[0] = True
+
+        ctx.consume(
+            on_notify,
+            once=True,
+            transform=None,
+            max_files_per_trigger=16,  # force >1 micro-batch: the pair set must not depend on the split
+        )
+        if restart:
+            # KILL the query instance (availableNow already terminated it;
+            # stop() drops the handle so nothing survives but the
+            # checkpoint + the index table), publish the held-back wave,
+            # and RESUME from the same checkpoint: the restarted instance
+            # must process only the new files and probe the index built
+            # by its predecessor.
+            ctx.stop()
+            n_before = len(found)
+            phase[0] = 2
+            ctx.publish(docs.filter(F.col("wave") == 2))
+            ctx.consume(on_notify, once=True, transform=None, max_files_per_trigger=16)
+            if len(found) <= n_before:  # -O-safe
+                raise AssertionError("resumed query processed no batches")
+        agency.close(remove_logs=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+        spark.sql(f"DROP TABLE IF EXISTS {idx_table}")
+
+    import pandas as pd
+
+    if not found:
+        return local_frame(spark, [], _PAIR_SCHEMA)
+    allp = pd.concat(found, ignore_index=True)
+    if allp.empty:
+        return local_frame(spark, [], _PAIR_SCHEMA)
+    return (
+        spark.createDataFrame(allp, _PAIR_SCHEMA)
+        .dropDuplicates(["earlier_doc", "later_doc"])
+        .orderBy("earlier_doc", "later_doc")
+    )
+
+
+@register(
+    "streaming_minhash_index_drain",
+    _SDEDUP_ORACLE,
+    tags=("streaming", "llm", "dedup", "join"),
+)
+def streaming_minhash_index_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental MinHash-LSH dedup over three arrival waves drained in
+    one availableNow pass — see the module docstring."""
+    return _run_minhash_index(spark, sf_dir, restart=False)
+
+
+@register(
+    "streaming_minhash_index_restart_drain",
+    _SDEDUP_ORACLE,
+    tags=("streaming", "llm", "dedup", "join", "restart"),
+)
+def streaming_minhash_index_restart_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The PRODUCTION restart path under the gate (VERDICT r5 #8): drain
+    waves 0-1, KILL the query, publish wave 2, resume a new query
+    instance from the same checkpoint.  Graded invariant: the union of
+    pairs across both instances equals the full batch LSH pair set — and
+    the resumed instance processes ONLY the post-kill delta (asserted
+    in-plan: a wave<2 doc in phase 2 raises), probing the band index its
+    predecessor built.  Same oracle as the single-drain variant: restart
+    is an execution detail, not a semantic one."""
+    return _run_minhash_index(spark, sf_dir, restart=True)
+
+
+# ---------------------------------------------------------------------------
+# Streaming incremental SEMANTIC dedup — the embedding-space complement
+# of the MinHash index drain above.  Textual LSH can't see paraphrases;
+# this index catches them as they ARRIVE, at delta cost:
+#
+#   * cell key = the stateless hyperplane bucket (operators/similarity
+#     sign-pattern LSH): no centroids to train, so the quantizer is
+#     identical for every batch by construction — the property that
+#     makes semantic dedup incremental (SemDeDup's k-means cells would
+#     drift as history grows);
+#   * pair gate = the exact-integer cosine test SemDeDup uses
+#     (int8-style quantization, dot>0 ∧ dot²·10⁶ ≥ τ²ppm·‖a‖²·‖b‖²,
+#     all int64 — bit-identical on any engine/partitioning);
+#   * per batch: probe the PRE-update bucket index for cross-batch
+#     candidates (equi-join on bucket), self-join within the batch,
+#     gate, emit (earlier, later) by arrival order, append the batch
+#     to the index (bucketed managed table — delta-sized write shuffle,
+#     history never reshuffles).
+#
+# Graded invariant: the union of incrementally-found pairs equals the
+# batch recompute over the full corpus — for ANY micro-batch split.
+# Recall vs exact cosine is a separate, already-audited property
+# (emb_lsh_recall_audit); THIS gate pins the incremental-index algebra.
+# ---------------------------------------------------------------------------
+
+
+_SEM_STREAM_ORACLE = f"""
+WITH q8 AS (
+  SELECT vec_id, vec_id % 3 AS wave,
+         {S.sql_hyperplane_bucket('embedding')} AS bucket,
+         list_transform(embedding,
+             x -> cast(floor(cast(x as double)*{_SEM_SCALE} + 0.5) as bigint)) AS q
+  FROM embeddings
+), nn AS (
+  SELECT vec_id, wave, bucket, q,
+         list_sum(list_transform(q, x -> x*x)) AS n2
+  FROM q8
+), pairs AS (
+  SELECT a.vec_id AS va, a.wave AS wa, b.vec_id AS vb, b.wave AS wb,
+         list_sum(list_transform(list_zip(a.q, b.q),
+                  t -> t[1] * t[2])) AS dot,
+         a.n2 AS n2a, b.n2 AS n2b
+  FROM nn a JOIN nn b ON a.bucket = b.bucket
+   AND ((a.wave < b.wave) OR (a.wave = b.wave AND a.vec_id < b.vec_id))
+)
+SELECT va AS earlier_vec, vb AS later_vec,
+       cast((dot * dot * 1000000) // (n2a * n2b) AS BIGINT) AS cos_sq_ppm
+FROM pairs
+WHERE dot > 0 AND dot * dot * 1000000 >= {_SEM_TAU_SQ_PPM} * n2a * n2b
+ORDER BY earlier_vec, later_vec
+"""
+
+_SEMPAIR_SCHEMA = T.StructType(
+    [
+        T.StructField("earlier_vec", T.LongType()),
+        T.StructField("later_vec", T.LongType()),
+        T.StructField("cos_sq_ppm", T.LongType()),
+    ]
+)
+
+
+def _run_semantic_index(spark: SparkSession, sf_dir: str, restart: bool) -> DataFrame:
+    import uuid
+
+    from event_streaming_spark.operators.similarity import hyperplane_bucket
+    from event_streaming_spark.sources.bucketed import write_bucketed
+    from event_streaming_spark.streaming.agency import EventsAgency
+
+    emb = load(spark, sf_dir, "embeddings").select(
+        "vec_id", (F.col("vec_id") % 3).cast("int").alias("wave"), "embedding"
+    )
+
+    root = tempfile.mkdtemp(prefix="est-semidx-")
+    idx_table = f"sem_bucket_index_{uuid.uuid4().hex[:12]}"
+    idx_appended = [False]
+    phase = [1]  # restart path: 1 = first run, 2 = resumed-from-checkpoint
+    found: list = []
+    try:
+        agency = EventsAgency(spark, root=root, log_format="parquet")
+        ctx = agency.topic("driver-gate", "vecs")
+        ctx.schema = T.StructType(
+            [
+                T.StructField("vec_id", T.LongType()),
+                T.StructField("wave", T.IntegerType()),
+                T.StructField("embedding", T.ArrayType(T.FloatType())),
+            ]
+        )
+        # arrival schedule: the restart variant holds wave 2 back until
+        # the first query instance has been killed
+        for w in range(2 if restart else 3):
+            ctx.publish(emb.filter(F.col("wave") == w))
+
+        def _featurize(df: DataFrame) -> DataFrame:
+            q = F.transform(
+                "embedding",
+                lambda x: F.floor(x.cast("double") * _SEM_SCALE + F.lit(0.5)).cast("long"),
+            )
+            out = df.select(
+                "vec_id",
+                "wave",
+                hyperplane_bucket(F.col("embedding")).alias("bucket"),
+                q.alias("q"),
+            )
+            n2 = F.aggregate(
+                F.transform("q", lambda x: x * x),
+                F.lit(0).cast("long"),
+                lambda acc, x: acc + x,
+            )
+            return out.withColumn("n2", n2)
+
+        def _gate_and_label(cand: DataFrame) -> DataFrame:
+            dot = F.aggregate(
+                F.zip_with("qa", "qb", lambda x, y: x * y),
+                F.lit(0).cast("long"),
+                lambda acc, x: acc + x,
+            )
+            scored = cand.withColumn("dot", dot).filter(
+                (F.col("dot") > 0)
+                & (
+                    F.col("dot") * F.col("dot") * F.lit(1_000_000)
+                    >= F.lit(_SEM_TAU_SQ_PPM) * F.col("n2a") * F.col("n2b")
+                )
+            )
+            flip = _arrival_lt(F.col("wb"), F.col("vb"), F.col("wa"), F.col("va"))
+            return scored.select(
+                F.when(flip, F.col("vb")).otherwise(F.col("va")).alias("earlier_vec"),
+                F.when(flip, F.col("va")).otherwise(F.col("vb")).alias("later_vec"),
+                F.expr("(dot * dot * 1000000) div (n2a * n2b)").alias("cos_sq_ppm"),
+            ).dropDuplicates(["earlier_vec", "later_vec"])
+
+        def on_notify(c, batch_df: DataFrame, batch_id: int) -> None:
+            if restart and phase[0] == 2:
+                # Graded restart invariant (same as the minhash variant):
+                # the resumed query must see ONLY the post-kill delta —
+                # a wave<2 vector here means the checkpoint's source
+                # offsets were lost (the final dropDuplicates would mask
+                # it, so assert in-plan).
+                early = batch_df.filter(F.col("wave") < 2).count()
+                if early != 0:  # -O-safe
+                    raise AssertionError(f"restart re-delivered {early} pre-kill vecs")
+            feats = _featurize(batch_df).localCheckpoint()
+            pair_frames = []
+            if idx_appended[0]:
+                idx = batch_df.sparkSession.table(idx_table).alias("x")
+                n = feats.alias("n")
+                pair_frames.append(
+                    n.join(idx, F.col("n.bucket") == F.col("x.bucket")).select(
+                        F.col("n.vec_id").alias("va"), F.col("n.wave").alias("wa"),
+                        F.col("n.q").alias("qa"), F.col("n.n2").alias("n2a"),
+                        F.col("x.vec_id").alias("vb"), F.col("x.wave").alias("wb"),
+                        F.col("x.q").alias("qb"), F.col("x.n2").alias("n2b"),
+                    )
+                )
+            a, b = feats.alias("a"), feats.alias("b")
+            pair_frames.append(
+                a.join(
+                    b,
+                    (F.col("a.bucket") == F.col("b.bucket"))
+                    & _arrival_lt(
+                        F.col("a.wave"), F.col("a.vec_id"),
+                        F.col("b.wave"), F.col("b.vec_id"),
+                    ),
+                ).select(
+                    F.col("a.vec_id").alias("va"), F.col("a.wave").alias("wa"),
+                    F.col("a.q").alias("qa"), F.col("a.n2").alias("n2a"),
+                    F.col("b.vec_id").alias("vb"), F.col("b.wave").alias("wb"),
+                    F.col("b.q").alias("qb"), F.col("b.n2").alias("n2b"),
+                )
+            )
+            cand = pair_frames[0]
+            for extra in pair_frames[1:]:
+                cand = cand.unionByName(extra)
+            gated = _gate_and_label(cand)
+            if idx_appended[0]:
+                capture_plan(
+                    "streaming_semantic_index"
+                    + ("_restart" if restart else "")
+                    + "_drain/cross_batch_probe",
+                    gated,
+                )
+            found.append(gated.toPandas())
+            write_bucketed(
+                feats.select("vec_id", "wave", "bucket", "q", "n2"),
+                idx_table,
+                ["bucket"],
+                n_buckets=8,
+                sort=False,
+                mode="append" if idx_appended[0] else "overwrite",
+            )
+            idx_appended[0] = True
+
+        ctx.consume(on_notify, once=True, transform=None, max_files_per_trigger=16)
+        if restart:
+            # KILL the query instance (availableNow already terminated it;
+            # stop() drops the handle so nothing survives but the
+            # checkpoint + the index table), publish the held-back wave,
+            # and RESUME from the same checkpoint: the restarted instance
+            # must process only the new files and probe the bucket index
+            # built by its predecessor.
+            ctx.stop()
+            n_before = len(found)
+            phase[0] = 2
+            ctx.publish(emb.filter(F.col("wave") == 2))
+            ctx.consume(on_notify, once=True, transform=None, max_files_per_trigger=16)
+            if len(found) <= n_before:  # -O-safe
+                raise AssertionError("resumed query processed no batches")
+        agency.close(remove_logs=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+        spark.sql(f"DROP TABLE IF EXISTS {idx_table}")
+
+    import pandas as pd
+
+    if not found:
+        return local_frame(spark, [], _SEMPAIR_SCHEMA)
+    allp = pd.concat(found, ignore_index=True)
+    if allp.empty:
+        return local_frame(spark, [], _SEMPAIR_SCHEMA)
+    return (
+        spark.createDataFrame(allp, _SEMPAIR_SCHEMA)
+        .dropDuplicates(["earlier_vec", "later_vec"])
+        .orderBy("earlier_vec", "later_vec")
+    )
+
+
+@register(
+    "streaming_semantic_index_drain",
+    _SEM_STREAM_ORACLE,
+    tags=("streaming", "llm", "dedup", "ann"),
+)
+def streaming_semantic_index_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental semantic dedup over three arrival waves drained in one
+    availableNow pass — see the section comment above."""
+    return _run_semantic_index(spark, sf_dir, restart=False)
+
+
+@register(
+    "streaming_semantic_index_restart_drain",
+    _SEM_STREAM_ORACLE,
+    tags=("streaming", "llm", "dedup", "ann", "restart"),
+)
+def streaming_semantic_index_restart_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The restart path for the SEMANTIC index (VERDICT r6 #5), mirroring
+    ``streaming_minhash_index_restart_drain``: drain waves 0-1, KILL the
+    query, publish wave 2, resume a new query instance from the same
+    checkpoint.  Graded invariant: the union of pairs across both
+    instances equals the full batch recompute — and the resumed instance
+    processes ONLY the post-kill delta (asserted in-plan), probing the
+    hyperplane-bucket index its predecessor built.  Same oracle as the
+    single-drain variant: restart is an execution detail, not a semantic
+    one."""
+    return _run_semantic_index(spark, sf_dir, restart=True)
+
+
+# ---------------------------------------------------------------------------
+# INCREMENTAL cluster-label maintenance: near-dup pairs arrive in waves
+# (the streaming index's output shape) and the cluster labeling advances
+# per wave by running connected components over the CONTRACTED graph —
+# current labels as star edges (node → component, O(nodes)) plus ONLY
+# the new wave's pairs.  Component contraction preserves connectivity,
+# so after every wave the labels provably equal the batch CC over all
+# pairs seen so far; the final state must hash-equal the full batch
+# clustering (same oracle as dedup_near_dup_clusters).  At scale this is
+# the maintenance story for the dedup cluster table: historical PAIRS
+# (which dwarf nodes) are never reprocessed — each wave costs
+# O(|Δpairs| + |nodes|) edges through the log-diameter CC rounds, and
+# the near-converged input collapses those rounds to 1-2.
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "dedup_cluster_incremental_maintenance",
+    None,  # set right below (reuses the batch CC oracle)
+    tags=("streaming", "llm", "dedup", "iterative", "incremental"),
+)
+def dedup_cluster_incremental_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from event_streaming_spark.operators.components import connected_components
+    from event_streaming_spark.plans.llm import (
+        minhash_lsh_near_dup_pairs,
+    )
+
+    docs = load(spark, sf_dir, "documents").select("doc_id")
+    pairs = minhash_lsh_near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    labels = docs.select(
+        F.col("doc_id").alias("node"), F.col("doc_id").alias("component")
+    )
+    # three deterministic arrival waves over the pair stream
+    for w in range(3):
+        wave = pairs.where((F.col("doc_a") + F.col("doc_b")) % 3 == w)
+        star = labels.where(F.col("node") != F.col("component")).select(
+            F.col("node").alias("doc_a"), F.col("component").alias("doc_b")
+        )
+        labels = connected_components(docs, star.unionByName(wave))
+        # keep the label frame a small materialized table between waves
+        # (connected_components materializes internally; the frame is
+        # O(nodes) either way)
+    return labels.select(
+        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
+    )
+
+
+# reuse the batch clustering oracle: incremental maintenance is an
+# execution strategy, not a semantic one
+def _set_cluster_maint_oracle() -> None:
+    import dataclasses
+
+    from event_streaming_spark.plans.catalog import REGISTRY
+    from event_streaming_spark.plans.curation import _CC_ORACLE
+
+    q = REGISTRY["dedup_cluster_incremental_maintenance"]
+    REGISTRY["dedup_cluster_incremental_maintenance"] = dataclasses.replace(
+        q, oracle=_CC_ORACLE
+    )
+
+
+_set_cluster_maint_oracle()
+
+
+# ===========================================================================
+# Oracle-paired GATEWAY query — the HTTP ingest front door under the
+# driver's value-hash gate, not just pytest.
+#
+# Reference parity: the gateway is the reference's ONE external entry
+# point (libsoup server, reference/src/main.c:82-120; declared
+# intent parse → JWT authn → publish).  ``gateway_ingest_roundtrip``
+# exercises that whole deployment story as a batch-callable query:
+#
+#     events.parquet → HTTP POST (JWT bearer, batched JSON bodies)
+#       → ApiGateway → topic log (parquet) → availableNow drain
+#       → date-partitioned EventStore → daily rollup over the STORE
+#
+# The oracle is the same daily rollup in ANSI SQL over the raw parquet —
+# so a value-hash match proves no event was lost, duplicated, retyped or
+# time-shifted anywhere along the ingest chain (JSON serialization, HTTP
+# framing, gateway parse, arrow-typed log append, streaming drain,
+# store partitioning).
+#
+# Scale notes: the HTTP client role is inherently driver-side — in a real
+# deployment a fleet of off-cluster producers plays it; here one loop
+# POSTs the sf-dir events (10k rows at sf0.01, bounded by the gate's SF
+# and documented as the ingest-client boundary, not a data-plane
+# collect).  Everything after the gateway is the engine's normal scale
+# path: the topic log is parquet (columnar, vectorized scan), the drain
+# runs through Structured Streaming on executors, the store append is a
+# partitioned distributed write, and the final rollup is a key-partitioned
+# aggregate whose output is state-sized (days × event_types).
+# ===========================================================================
+
+_ROUNDTRIP_ORACLE = f"""
+SELECT CAST(ts AS DATE) AS event_date,
+       event_type,
+       count(*) AS n_events,
+       count(DISTINCT user_id) AS n_users,
+       {sql_exact_sum('value')} AS total_value
+FROM events
+GROUP BY CAST(ts AS DATE), event_type
+ORDER BY event_date, event_type
+"""
+
+_GATEWAY_RESULT_SCHEMA = T.StructType(
+    [
+        T.StructField("event_date", T.DateType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("n_events", T.LongType()),
+        T.StructField("n_users", T.LongType()),
+        T.StructField("total_value", T.DoubleType()),
+    ]
+)
+
+#: Events per POST body.  4 MiB body cap / ~150 B per JSON event leaves
+#: ample headroom; 1000 keeps the request count low (10 at sf0.01).
+_POST_BATCH = 1000
+
+
+def _post(url: str, payload, token: str | None) -> tuple[int, dict]:
+    """POST a JSON body; ``payload`` is either a Python list (dumped here)
+    or an already-encoded JSON string (the batch fast path)."""
+    headers = {"Content-Type": "application/json"}
+    if token is not None:
+        headers["Authorization"] = f"Bearer {token}"
+    body = payload if isinstance(payload, str) else json.dumps(payload)
+    req = urllib.request.Request(
+        url, data=body.encode(), headers=headers, method="POST"
+    )
+    try:
+        with urllib.request.urlopen(req) as r:
+            return r.status, json.loads(r.read() or b"{}")
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read() or b"{}")
+
+
+@register(
+    "gateway_ingest_roundtrip",
+    _ROUNDTRIP_ORACLE,
+    tags=("gateway", "streaming", "store", "ingest"),
+)
+def gateway_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HTTP POST → gateway → topic log → drain → store → rollup; the
+    rollup must hash-equal the same aggregate over the raw parquet."""
+    from event_streaming_spark.functions.auth import mint_hs256
+    from event_streaming_spark.sources.store import EventStore
+    from event_streaming_spark.streaming.agency import EventsAgency
+    from event_streaming_spark.streaming.gateway import ApiGateway
+
+    # The ingest-client role: serialize the events table to JSON rows.
+    # Driver-side by design (the producer is off-cluster in deployment);
+    # bounded by the gate's SF — 10k rows at sf0.01.
+    ev = load(spark, sf_dir, "events")
+    pdf = ev.select("event_id", "ts", "user_id", "event_type", "value", "props").toPandas()
+    # Vectorized batch encoding (VERDICT r5 #9): one pandas to_json call
+    # per POST body — NaN→null and ISO-8601 timestamps handled natively —
+    # instead of a per-record dict comprehension + per-batch json.dumps.
+    # µs date_unit: Spark timestamps are µs and the gateway's publish
+    # parses ≤6 fractional digits; the events table is µs-aligned
+    # (asserted below), so nothing truncates.
+    n_rows = len(pdf)
+    # NaT-safe alignment guard (a NULL ts converts to the int64 min
+    # sentinel, which is NOT a precision violation — it rides through
+    # to_json as null exactly like the old per-record path)
+    ts_ns = pdf["ts"].dropna().astype("int64")
+    if int((ts_ns % 1000 != 0).sum()) != 0:
+        raise AssertionError("events.ts carries sub-µs precision; µs JSON would truncate")
+    bodies = [
+        pdf.iloc[i : i + _POST_BATCH].to_json(
+            orient="records", date_format="iso", date_unit="us"
+        )
+        for i in range(0, n_rows, _POST_BATCH)
+    ] or ["[]"]  # empty table: still exercise the 401 contract below
+
+    root = tempfile.mkdtemp(prefix="est-gateway-")
+    agency = EventsAgency(spark, root=root, log_format="parquet")
+    gw = ApiGateway(agency, port=0, jwt_secret="driver-gate").start()
+    try:
+        host, port = gw.address
+        url = f"http://{host}:{port}/topics/prod/events"
+
+        # The authn boundary must actually gate: no token → 401, and the
+        # rejected batch must NOT reach the log (the oracle would catch
+        # a duplicate, but assert the status contract here too).
+        code, _ = _post(url, bodies[0], token=None)
+        if code != 401:
+            raise AssertionError(f"gateway accepted unauthenticated POST: {code}")
+
+        token = mint_hs256({"iss": "driver-gate", "sub": "ingester"}, "driver-gate")
+        accepted = 0
+        for i, body_json in enumerate(bodies):
+            code, body = _post(url, body_json, token=token)
+            if code != 202:
+                raise AssertionError(f"gateway refused batch {i}: {code} {body}")
+            accepted += body["accepted"]
+        if accepted != n_rows:
+            raise AssertionError(f"accepted {accepted} != posted {n_rows}")
+
+        # Drain the topic log to the date-partitioned store (the
+        # reference's consumer → BDB-store leg), then aggregate the STORE.
+        store = EventStore(spark, f"{root}/store")
+        ctx = agency.find_topic("prod", "events")
+
+        def on_notify(c, batch_df: DataFrame, batch_id: int) -> None:
+            store.append(batch_df)
+
+        ctx.consume(on_notify, once=True)
+
+        agg = (
+            store.read()
+            .groupBy("event_date", "event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.countDistinct("user_id").alias("n_users"),
+                exact_sum("value").alias("total_value"),
+            )
+            .orderBy("event_date", "event_type")
+        )
+        # The aggregate is state-sized (days × event_types, ~150 rows at
+        # any SF); localize it before the tmpdir backing the store goes
+        # away, then re-enter a DataFrame for the gate.
+        out = agg.toPandas()
+    finally:
+        gw.stop()
+        agency.close()
+        shutil.rmtree(root, ignore_errors=True)
+    return spark.createDataFrame(out, _GATEWAY_RESULT_SCHEMA)

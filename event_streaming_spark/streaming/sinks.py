@@ -6,7 +6,7 @@ Reference parity:
     (/root/reference/utils/email-sender-libcurl.c:111-193, TLS/port
     selection utils/email-sender.c:271-300).
   - O45 payload serialization (utils/email-sender.c:387-495) — reused via
-    the same concat/format pipeline as plans/reference_ops.py.
+    the same concat/format pipeline as plans/relational.py.
 
 Design (SURVEY §7.4): an outward side-effecting sink can't be
 exactly-once, so it is (a) DISABLED unless a transport is injected,

@@ -57,6 +57,8 @@ class _SketchLog:
 
     spark: SparkSession
     path: str
+    key_col: str
+    group_cols: list[str] | tuple[str, ...] = ()
     _ledger: str
 
     def _batch_frame(self, batch_df: DataFrame) -> DataFrame:
@@ -98,6 +100,16 @@ class _SketchLog:
 
     def _merged(self) -> DataFrame:
         self._recover()
+        if not os.path.isdir(self.path) or all(
+            n.startswith((".", "_")) for n in os.listdir(self.path)
+        ):
+            # nothing published yet: the batch sketch over zero rows (keys
+            # are hashed as strings, so a string-typed empty input is exact)
+            cols = [*self.group_cols, self.key_col]
+            empty = self.spark.range(0).select(
+                *[F.lit(None).cast("string").alias(c) for c in cols]
+            )
+            return self._fold(self._batch_frame(empty))
         # per-batch subdirs + compacted top-level files in one listing
         raw = self.spark.read.option("recursiveFileLookup", "true").parquet(self.path)
         return self._fold(raw)
@@ -206,7 +218,7 @@ class ThetaStreamingSketch(_SketchLog):
     unlike HLL — also supports direct SET OPERATIONS between two
     sketches (union / intersection estimates), the streaming twin of
     the batch queries ``sketch_theta_set_ops_users`` /
-    ``sketch_theta_overlap_daily`` (plans/scale_ops3.py).
+    ``sketch_theta_overlap_daily`` (plans/scale.py).
 
     Monoid: bottom-k of a union = bottom-k of the combined bottom-k's,
     so each micro-batch appends its own ≤ k smallest distinct hashes
@@ -244,6 +256,7 @@ class ThetaStreamingSketch(_SketchLog):
     def hashes(self) -> DataFrame:
         """Merged sketch: the k smallest distinct hashes across batches."""
         return self._merged()
+
     def estimate(self) -> int:
         rows = [r["h"] for r in self.hashes().collect()]
         return self._estimate_from(sorted(rows))

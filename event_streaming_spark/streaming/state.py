@@ -108,7 +108,7 @@ def sessionize_stream(
 ) -> DataFrame:
     """CUSTOM stateful sessionizer via ``applyInPandasWithState`` — the
     arbitrary-state complement of the built-in ``session_window``
-    (plans/streaming_queries.py drains): the operator owns its state
+    (plans/streaming.py drains): the operator owns its state
     record (open session: start, last-seen, count, µ-scaled value sum)
     and its eviction policy (event-time timeout at last_ts + gap), which
     is the shape every custom streaming operator takes when the built-in

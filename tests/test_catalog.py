@@ -6,6 +6,8 @@ names + order-insensitive canonical values) — see tools/check_oracle.py.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from event_streaming_spark.plans import REGISTRY
@@ -61,3 +63,20 @@ def test_entry_smoke(spark):
     df = e.entry(spark)
     assert df.count() > 0
     assert set(e.oracle_sql()) <= set(e.queries())
+
+
+def test_registry_order_guard_rejects_missing_unknown_and_repeated_names():
+    """``plans.ORDER`` alone fixes the registry (= grading) order: the
+    import-time check refuses an ORDER that leaves a registered query out,
+    names an unregistered one, or repeats a name."""
+    from event_streaming_spark.plans import ORDER, _in_order
+
+    assert list(_in_order(REGISTRY, ORDER)) == list(REGISTRY) == list(ORDER)
+    first = ORDER[0]
+    for bad, why in (
+        (ORDER[1:], f"missing=['{first}']"),
+        (ORDER + ("no_such_query",), "unknown=['no_such_query']"),
+        (ORDER + (first,), f"repeated=['{first}']"),
+    ):
+        with pytest.raises(RuntimeError, match=re.escape(why)):
+            _in_order(REGISTRY, bad)

@@ -258,7 +258,7 @@ def test_semdedup_cell_count_is_data_driven(spark, duck):
     path where k > the minimum.  Shrink the per-cell divisor so the tiny
     fixture corpus (500 vectors) already exercises derived k = 10 > 8 on
     BOTH engines, and assert the full SemDeDup output still hash-matches."""
-    import event_streaming_spark.plans.curation3 as c3
+    import event_streaming_spark.plans.curation as c3
     from tools.check_oracle import normalize
 
     assert c3._km_k(500) == 8                      # floor at tiny corpora
@@ -310,6 +310,39 @@ def test_ivf_persisted_index_prunes_unprobed_cells(spark, tmp_path):
     assert probed_dirs == {"0", "1"}, probed_dirs
     # and the semantics: exactly the vectors of those cells
     assert pruned.count() == emb.filter(F.col("label").isin(probed)).count()
+
+
+def test_dsir_broadcasts_feature_weights(spark):
+    """DSIR importance sampling joins every document's features to the
+    ≤ _DSIR_B-row weight table: that side must broadcast by hint, so the
+    corpus never shuffles for the weighting at any SF.  Size-based
+    broadcasts are switched off, so only a hinted join can broadcast."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        p = _plan(spark, "sample_importance_dsir")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert "BroadcastHashJoin" in p
+
+
+def test_ivf_persisted_search_leg_prunes_cells(spark):
+    """The catalog's persisted-IVF search captures its search leg (the
+    returned frame is the localized answer): that scan must prune by a
+    literal ``cell IN (...)`` over the probed cells, not read the whole
+    index (a dynamic-pruning filter alone still lists every cell)."""
+    import re
+
+    from event_streaming_spark.plans import catalog as _catalog
+
+    _catalog.PLAN_SINK = {}
+    try:
+        REGISTRY["emb_ivf_persisted_index_search"].fn(spark, SF_SMALL)
+        plan = _catalog.PLAN_SINK["emb_ivf_persisted_index_search/search_leg"]
+    finally:
+        _catalog.PLAN_SINK = None
+    pruning = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
+    assert any(re.search(r"\bcell#\d+ IN \(", ln) for ln in pruning), pruning
 
 
 def test_ivf_batch_mode_prunes_at_production_cell_count(spark, tmp_path):
@@ -628,15 +661,14 @@ def test_markov_transition_build_single_scan(spark):
 # file (relative to event_streaming_spark/) -> expected count of
 # unpartitioned Window constructions, each justified inline.
 _GLOBAL_WINDOW_SITES = {
-    "plans/events2.py": 1,        # skew report: top-20 limit head
-    "plans/events5.py": 1,        # top session paths: top-10 limit head
-    "plans/events6.py": 4,        # STL day spine; KM day grid x2; bootstrap B-row table
-    "plans/events7.py": 1,        # peak-hour 7x24 grid
-    "plans/events10.py": 2,       # shapley channel dict (≤|types| rows); mSPRT day spine
-    "plans/curation4.py": 1,      # temperature weights: per-lang table
-    "plans/relational4.py": 2,    # trailing-7d day spine; basket top-20 limit head
-    "plans/llm_similarity.py": 2, # RRF fusion: two top-20 limit heads
-    "plans/streaming_queries.py": 1,  # heavy hitters: top-20 limit head
+    # skew report: top-20 limit head; top session paths: top-10 limit head;
+    # STL day spine; KM day grid x2; bootstrap B-row table; peak-hour 7x24
+    # grid; shapley channel dict (≤|types| rows); mSPRT day spine
+    "plans/events.py": 9,
+    "plans/curation.py": 1,       # temperature weights: per-lang table
+    "plans/relational.py": 2,     # trailing-7d day spine; basket top-20 limit head
+    "plans/llm.py": 2,            # RRF fusion: two top-20 limit heads
+    "plans/streaming.py": 1,      # heavy hitters: top-20 limit head
 }
 
 
@@ -681,7 +713,7 @@ def test_global_window_inputs_are_data_bounded(spark):
     or schema-constants, limit heads are k, the bootstrap table is B."""
     from pyspark.sql import functions as F
 
-    from event_streaming_spark.plans import events6
+    from event_streaming_spark.plans import events as events6
     from event_streaming_spark.plans.catalog import load
 
     ev = load(spark, SF_SMALL, "events")

@@ -325,7 +325,7 @@ def test_bpe_train_matches_reference(spark, words, n):
 @SETTINGS
 def test_theta_unsaturated_exact_on_random_sets(spark, tmp_path_factory, a, b):
     """Below k the estimator must be EXACT on any overlap structure."""
-    from event_streaming_spark.plans.scale_ops3 import sketch_theta_set_ops_users
+    from event_streaming_spark.plans.scale import sketch_theta_set_ops_users
 
     tmp = tmp_path_factory.mktemp("theta-prop")
     rows = [(u, "view") for u in a] + [(u, "purchase") for u in b]
@@ -358,7 +358,7 @@ def test_theta_unsaturated_exact_on_random_sets(spark, tmp_path_factory, a, b):
 @SETTINGS
 def test_ppjoin_matches_bruteforce_on_random_corpora(spark, tmp_path_factory, texts):
     from event_streaming_spark.operators.similarity import shingle_hashes
-    from event_streaming_spark.plans.scale_ops3 import docs_prefix_filter_jaccard_join
+    from event_streaming_spark.plans.scale import docs_prefix_filter_jaccard_join
 
     tmp = tmp_path_factory.mktemp("ppjoin-prop")
     rows = [(i, t, "en", "s0", len(t)) for i, t in enumerate(texts)]
@@ -739,7 +739,7 @@ def test_mg_rescan_fails_loudly_when_capacity_too_small(spark):
     a silently-approximate top-5."""
     import pytest
 
-    import event_streaming_spark.plans.llm_text as lt
+    import event_streaming_spark.plans.llm as lt
 
     old = lt._MG_CAPACITY
     lt._MG_CAPACITY = 1

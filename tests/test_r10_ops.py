@@ -42,7 +42,7 @@ def _write_events(spark, tmp_path, rows):
 
 
 def test_substring_spans_merge_overlapping_positions(spark, tmp_path):
-    from event_streaming_spark.plans.curation5 import (
+    from event_streaming_spark.plans.curation import (
         docs_exact_substring_dedup_spans,
     )
 
@@ -74,7 +74,7 @@ def test_substring_spans_merge_overlapping_positions(spark, tmp_path):
 
 
 def test_session_gap_sensitivity_boundary_exclusive(spark, tmp_path):
-    from event_streaming_spark.plans.events8 import (
+    from event_streaming_spark.plans.events import (
         events_session_gap_sensitivity,
     )
 
@@ -101,7 +101,7 @@ def test_session_gap_sensitivity_boundary_exclusive(spark, tmp_path):
 
 
 def test_dau_wau_mau_window_edges(spark, tmp_path):
-    from event_streaming_spark.plans.events8 import (
+    from event_streaming_spark.plans.events import (
         events_dau_wau_mau_stickiness,
     )
 
@@ -128,7 +128,7 @@ def test_dau_wau_mau_window_edges(spark, tmp_path):
 
 
 def test_js_divergence_identical_sources_is_zero(spark, tmp_path):
-    from event_streaming_spark.plans.curation6 import (
+    from event_streaming_spark.plans.curation import (
         text_js_divergence_between_sources,
     )
 
@@ -154,7 +154,7 @@ def test_js_divergence_identical_sources_is_zero(spark, tmp_path):
 
 
 def test_outage_profile_hole_and_healthy_type(spark, tmp_path):
-    from event_streaming_spark.plans.events8 import (
+    from event_streaming_spark.plans.events import (
         events_zero_activity_outage_runs,
     )
 

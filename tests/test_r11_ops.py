@@ -54,7 +54,7 @@ def _write_embeddings(spark, tmp_path, rows):
 
 
 def test_decontamination_threshold_and_grid_zero_rows(spark, tmp_path):
-    from event_streaming_spark.plans.curation7 import (
+    from event_streaming_spark.plans.curation import (
         docs_eval_decontamination_manifest,
     )
 
@@ -90,7 +90,7 @@ def test_decontamination_threshold_and_grid_zero_rows(spark, tmp_path):
 
 
 def test_quality_funnel_stage_attrition(spark, tmp_path):
-    from event_streaming_spark.plans.curation7 import docs_quality_filter_funnel
+    from event_streaming_spark.plans.curation import docs_quality_filter_funnel
 
     five = [
         "alpha", "betas", "gamma", "delta", "sigma", "omega", "kappa",
@@ -124,7 +124,7 @@ def test_quality_funnel_stage_attrition(spark, tmp_path):
 
 
 def test_cuped_identical_pre_post_gives_full_reduction(spark, tmp_path):
-    from event_streaming_spark.plans.events9 import events_cuped_variance_reduction
+    from event_streaming_spark.plans.events import events_cuped_variance_reduction
 
     # span = 2 days -> pre = day 0, post = day 1.  Every user repeats the
     # same value in both halves, so x == y per user: theta = 1, the
@@ -147,7 +147,7 @@ def test_cuped_identical_pre_post_gives_full_reduction(spark, tmp_path):
 
 
 def test_psi_zero_on_baseline_and_positive_on_shift(spark, tmp_path):
-    from event_streaming_spark.plans.events9 import events_value_psi_daily
+    from event_streaming_spark.plans.events import events_value_psi_daily
 
     # One day only: the day IS the baseline, dc == bc and dn == bn for
     # every bin, so each (q - p) * ln(q / p) term is EXACTLY zero.
@@ -169,7 +169,7 @@ def test_psi_zero_on_baseline_and_positive_on_shift(spark, tmp_path):
 
 
 def test_mahalanobis_matches_pure_python_replication(spark, tmp_path):
-    from event_streaming_spark.plans.llm_audits4 import emb_ood_mahalanobis_diag
+    from event_streaming_spark.plans.llm import emb_ood_mahalanobis_diag
 
     # label 0: 12 vectors tight in dim 0 / spread in dim 1, plus ONE
     # probe with a large deviation in the TIGHT dimension (a cohort big
@@ -234,7 +234,7 @@ def test_mahalanobis_matches_pure_python_replication(spark, tmp_path):
 
 
 def test_ccnet_buckets_are_terciles_with_monotone_mean_h(spark):
-    from event_streaming_spark.plans.curation7 import docs_ccnet_perplexity_buckets
+    from event_streaming_spark.plans.curation import docs_ccnet_perplexity_buckets
 
     rows = docs_ccnet_perplexity_buckets(spark, "/root/testdata/sf0.001").collect()
     by_source: dict[str, list] = {}
@@ -253,7 +253,7 @@ def test_ccnet_buckets_are_terciles_with_monotone_mean_h(spark):
 
 
 def test_burstiness_matches_pure_python_replication(spark, tmp_path):
-    from event_streaming_spark.plans.curation8 import (
+    from event_streaming_spark.plans.curation import (
         _BURST_MIN_DF,
         text_term_burstiness_topk,
     )
@@ -301,7 +301,7 @@ def test_burstiness_matches_pure_python_replication(spark, tmp_path):
 
 
 def test_kneser_ney_matches_pure_python_replication(spark, tmp_path):
-    from event_streaming_spark.plans.curation8 import (
+    from event_streaming_spark.plans.curation import (
         _KN_D,
         text_kneser_ney_surprisal_by_source,
     )
@@ -358,7 +358,7 @@ def test_kneser_ney_matches_pure_python_replication(spark, tmp_path):
 
 
 def test_phash_hamming_curve_monotone(spark):
-    from event_streaming_spark.plans.multimodal_dedup import (
+    from event_streaming_spark.plans.multimodal import (
         _HTC_RADII,
         multimodal_phash_hamming_threshold_curve,
     )
@@ -374,7 +374,7 @@ def test_phash_hamming_curve_monotone(spark):
 
 
 def test_streaming_psi_drain_equals_batch(spark, tmp_path):
-    from event_streaming_spark.plans.events9 import (
+    from event_streaming_spark.plans.events import (
         events_value_psi_daily,
         streaming_psi_drift_drain,
     )

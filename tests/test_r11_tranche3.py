@@ -35,7 +35,7 @@ def _write_events(spark, tmp_path, rows):
 
 
 def test_shapley_two_channel_lattice_by_hand(spark, tmp_path):
-    from event_streaming_spark.plans.events10 import events_attribution_shapley
+    from event_streaming_spark.plans.events import events_attribution_shapley
 
     rows = [
         # u1: click, view before purchase; a view AFTER purchase (excluded)
@@ -66,7 +66,7 @@ def test_shapley_two_channel_lattice_by_hand(spark, tmp_path):
 
 
 def test_shapley_efficiency_on_fixture(spark):
-    from event_streaming_spark.plans.events10 import events_attribution_shapley
+    from event_streaming_spark.plans.events import events_attribution_shapley
 
     rows = events_attribution_shapley(spark, SF_SMALL).collect()
     assert rows, "fixture has converting journeys"
@@ -78,7 +78,7 @@ def test_shapley_efficiency_on_fixture(spark):
 
 
 def test_msprt_identical_arms_never_rejects(spark, tmp_path):
-    from event_streaming_spark.plans.events10 import events_msprt_always_valid
+    from event_streaming_spark.plans.events import events_msprt_always_valid
 
     rows = [
         # arm 0 (user 0) and arm 1 (user 1) see identical samples
@@ -100,7 +100,7 @@ def test_msprt_identical_arms_never_rejects(spark, tmp_path):
 
 
 def test_msprt_large_separation_rejects_with_closed_form(spark, tmp_path):
-    from event_streaming_spark.plans.events10 import (
+    from event_streaming_spark.plans.events import (
         _MSPRT_TAU2,
         events_msprt_always_valid,
     )
@@ -127,7 +127,7 @@ def test_msprt_large_separation_rejects_with_closed_form(spark, tmp_path):
 
 
 def test_msprt_fixture_invariants(spark):
-    from event_streaming_spark.plans.events10 import events_msprt_always_valid
+    from event_streaming_spark.plans.events import events_msprt_always_valid
 
     out = events_msprt_always_valid(spark, SF_SMALL).collect()
     assert len(out) == 30  # one row per fixture day
@@ -149,7 +149,7 @@ def _write_embeddings(spark, tmp_path, rows):
 def test_knn_reciprocity_complete_graph(spark, tmp_path):
     """6 nodes, k=5: every node lists all others, so every edge is mutual —
     reciprocity exactly 10^6 ppm, in-degree exactly k, no hubs."""
-    from event_streaming_spark.plans.llm_audits4 import emb_knn_graph_reciprocity
+    from event_streaming_spark.plans.llm import emb_knn_graph_reciprocity
 
     rows = [
         (i, [float(1 + i), float(2 * i + 1), 0.5, float(i * i + 1)], i // 3)
@@ -168,7 +168,7 @@ def test_knn_reciprocity_complete_graph(spark, tmp_path):
 
 
 def test_knn_reciprocity_fixture_invariants(spark):
-    from event_streaming_spark.plans.llm_audits4 import (
+    from event_streaming_spark.plans.llm import (
         _REC_K,
         emb_knn_graph_reciprocity,
     )
@@ -183,7 +183,7 @@ def test_knn_reciprocity_fixture_invariants(spark):
 
 
 def test_market_basket_lift_by_hand(spark, tmp_path):
-    from event_streaming_spark.plans.relational4 import orders_market_basket_lift
+    from event_streaming_spark.plans.relational import orders_market_basket_lift
 
     parts = spark.createDataFrame(
         [(1, "BrandA"), (2, "BrandB"), (3, "BrandC")],
@@ -213,7 +213,7 @@ def test_market_basket_lift_by_hand(spark, tmp_path):
 
 
 def test_market_basket_fixture_sanity(spark):
-    from event_streaming_spark.plans.relational4 import (
+    from event_streaming_spark.plans.relational import (
         _MB_K,
         _MB_MIN_SUPPORT,
         orders_market_basket_lift,
@@ -227,7 +227,7 @@ def test_market_basket_fixture_sanity(spark):
 
 
 def test_video_scene_segments_invariants(spark):
-    from event_streaming_spark.plans.multimodal_video import (
+    from event_streaming_spark.plans.multimodal import (
         _VS_FRAMES,
         _VS_N_DOCS,
         multimodal_video_scene_segments,
@@ -255,7 +255,7 @@ def test_video_scene_segments_invariants(spark):
 
 
 def test_truncation_waste_curve_by_hand(spark, tmp_path):
-    from event_streaming_spark.plans.curation8 import docs_truncation_waste_curve
+    from event_streaming_spark.plans.curation import docs_truncation_waste_curve
 
     docs = spark.createDataFrame(
         [
@@ -278,7 +278,7 @@ def test_truncation_waste_curve_by_hand(spark, tmp_path):
 
 
 def test_streaming_msprt_equals_batch(spark):
-    from event_streaming_spark.plans.events10 import (
+    from event_streaming_spark.plans.events import (
         events_msprt_always_valid,
         streaming_msprt_drain,
     )
@@ -289,7 +289,7 @@ def test_streaming_msprt_equals_batch(spark):
 
 
 def test_audio_fingerprint_matches_are_within_class(spark):
-    from event_streaming_spark.plans.codec_av import (
+    from event_streaming_spark.plans.multimodal import (
         _AFP_GROUPS,
         _AFP_N_DOCS,
         multimodal_audio_fingerprint_match,
@@ -307,7 +307,7 @@ def test_audio_fingerprint_matches_are_within_class(spark):
 
 
 def test_doremi_weights_identical_sources_split_evenly(spark, tmp_path):
-    from event_streaming_spark.plans.curation8 import (
+    from event_streaming_spark.plans.curation import (
         docs_doremi_excess_loss_weights,
     )
 
@@ -329,7 +329,7 @@ def test_doremi_weights_identical_sources_split_evenly(spark, tmp_path):
 
 
 def test_doremi_fixture_invariants(spark):
-    from event_streaming_spark.plans.curation8 import (
+    from event_streaming_spark.plans.curation import (
         docs_doremi_excess_loss_weights,
     )
 
@@ -344,7 +344,7 @@ def test_doremi_fixture_invariants(spark):
 
 
 def test_supplier_hhi_by_hand(spark, tmp_path):
-    from event_streaming_spark.plans.relational4 import orders_supplier_hhi_by_brand
+    from event_streaming_spark.plans.relational import orders_supplier_hhi_by_brand
 
     spark.createDataFrame(
         [(1, "BrandA")], "p_partkey long, p_brand string"
@@ -362,7 +362,7 @@ def test_supplier_hhi_by_hand(spark, tmp_path):
 def test_markov_entropy_rate_by_hand(spark, tmp_path):
     import math
 
-    from event_streaming_spark.plans.events10 import events_markov_entropy_rate
+    from event_streaming_spark.plans.events import events_markov_entropy_rate
 
     rows = [
         # u1 day1: a b a b  -> a->b, b->a, a->b

@@ -31,7 +31,7 @@ def _delim(syms: list[str]) -> str:
 
 
 def _sql_merge(w: str, left: str, right: str) -> str:
-    # exactly the oracle's round step (plans/scale_ops3._bpe_chain_parts)
+    # exactly the oracle's round step (plans/scale._bpe_chain_parts)
     return w.replace(f"|{left}||{right}|", f"|{left}{right}|")
 
 
@@ -103,7 +103,7 @@ def test_ppr_sql_parity(spark, tiny_ppr):
 def test_binary_sign_bit_layout(spark):
     from pyspark.sql import functions as F
 
-    from event_streaming_spark.plans.llm_audits import _BSQ_SIGN
+    from event_streaming_spark.plans.llm import _BSQ_SIGN
 
     # dim 1 positive -> sign bit; dim 64 positive -> bit 0
     vq = [0] * 64

@@ -1,6 +1,6 @@
 """Operator-level tests for the scale-technique tranche.
 
-(The four catalog queries in plans/scale_ops.py are additionally
+(The four catalog queries in plans/scale.py are additionally
 differential-tested against DuckDB by tests/test_catalog.py.)
 """
 
@@ -576,6 +576,39 @@ def test_streaming_hll_estimate_on_empty_log_batches(spark, tmp_path):
         spark.createDataFrame([(None,)], "k string"), F.col("k")
     ).write.mode("append").parquet(sk.path)
     assert sk.estimate() == 0.0
+
+
+@pytest.mark.parametrize(
+    "sketch", ["HllStreamingSketch", "CountMinStreamingSketch", "ThetaStreamingSketch"]
+)
+def test_streaming_sketch_with_no_published_batch_reads_as_empty(spark, tmp_path, sketch):
+    """A log no batch has published to (a drain that saw no input; a
+    crash before the first publish left only the directory) reads as the
+    batch sketch over zero rows, not PATH_NOT_FOUND."""
+    import os as _os
+
+    from event_streaming_spark.operators.sketches import (
+        count_min_table,
+        hll_finalize,
+        hll_registers,
+    )
+    from event_streaming_spark.streaming import sketches
+
+    sk = getattr(sketches, sketch)(spark, str(tmp_path / "log"), "k")
+    none = spark.createDataFrame([], "k string")
+    for _ in ("no directory", "empty directory"):
+        if sketch == "HllStreamingSketch":
+            assert sk.registers().collect() == []
+            empty_est = hll_finalize(hll_registers(none, F.col("k"))).collect()[0][0]
+            assert sk.estimate() == float(empty_est)
+        elif sketch == "CountMinStreamingSketch":
+            assert sk.table().collect() == count_min_table(none, F.col("k")).collect() == []
+            keys = spark.createDataFrame([("a",), ("b",)], "k string")
+            assert {r["cm_estimate"] for r in sk.lookup(keys, "k").collect()} == {0}
+        else:
+            assert sk.hashes().collect() == []
+            assert sk.estimate() == 0
+        _os.makedirs(sk.path, exist_ok=True)
 
 
 def test_bloom_semi_join_mixed_integral_key_dtypes(spark):

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from event_streaming_spark.operators import zonemap as Z
 from event_streaming_spark.operators.graph import triangles
 from event_streaming_spark.plans.curation import docs_weighted_priority_sample
-from event_streaming_spark.plans.scale_ops3 import (
+from event_streaming_spark.plans.scale import (
     _SEARCH_TERMS,
     docs_keyword_search_postings,
     docs_prefix_filter_jaccard_join,
@@ -260,7 +260,7 @@ def test_theta_overlap_daily_two_days_exact_regime(spark, tmp_path):
         F.lit("{}").alias("props"),
     )
     df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    from event_streaming_spark.plans.scale_ops3 import sketch_theta_overlap_daily
+    from event_streaming_spark.plans.scale import sketch_theta_overlap_daily
 
     out = sketch_theta_overlap_daily(spark, str(tmp_path)).collect()
     assert len(out) == 1
@@ -271,7 +271,7 @@ def test_theta_overlap_daily_two_days_exact_regime(spark, tmp_path):
 
 
 def test_theta_overlap_daily_full_matrix_shape(spark):
-    from event_streaming_spark.plans.scale_ops3 import sketch_theta_overlap_daily
+    from event_streaming_spark.plans.scale import sketch_theta_overlap_daily
 
     out = sketch_theta_overlap_daily(spark, SF_SMALL)
     rows = out.collect()
@@ -290,7 +290,7 @@ def test_theta_overlap_daily_full_matrix_shape(spark):
 
 
 def test_hard_negative_mining_contract(spark):
-    from event_streaming_spark.plans.scale_ops3 import emb_hard_negative_mining
+    from event_streaming_spark.plans.scale import emb_hard_negative_mining
 
     rows = emb_hard_negative_mining(spark, SF_SMALL).collect()
     emb = spark.read.parquet(os.path.join(SF_SMALL, "embeddings.parquet"))
@@ -423,7 +423,7 @@ def test_global_ntile_matches_window_ntile(spark):
     included — the fill rule is first N%tiles tiles get one extra row."""
     from pyspark.sql import Window
 
-    from event_streaming_spark.plans.events4 import _global_ntile
+    from event_streaming_spark.plans.events import _global_ntile
 
     df = spark.createDataFrame(
         [(i, (i * 7) % 13) for i in range(23)], "id long, v long"

@@ -600,7 +600,7 @@ def test_session_drain_wave_replay_equals_single_publish(spark):
     and the metrics hook must log one entry per micro-batch."""
     from tests.conftest import SF_SMALL
 
-    from event_streaming_spark.plans.streaming_queries import (
+    from event_streaming_spark.plans.streaming import (
         streaming_session_window_drain,
     )
 

@@ -6,9 +6,11 @@ queries: python tools/gen_queries_md.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from event_streaming_spark.plans import REGISTRY  # noqa: E402
 
@@ -33,7 +35,7 @@ def main() -> None:
             f"{'paired' if q.oracle is not None else 'rows-only'} | "
             f"{'yes' if q.bench else ''} |"
         )
-    with open("/root/repo/QUERIES.md", "w") as fh:
+    with open(os.path.join(REPO, "QUERIES.md"), "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print(f"wrote QUERIES.md ({len(REGISTRY)} rows)")
 

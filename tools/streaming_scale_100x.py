@@ -86,7 +86,7 @@ def main() -> int:
     print(f"events at {args.n}x: {n_events} rows", flush=True)
 
     from event_streaming_spark.plans import REGISTRY
-    from event_streaming_spark.plans.streaming_queries import (
+    from event_streaming_spark.plans.streaming import (
         streaming_session_window_drain,
     )
     from event_streaming_spark.session import get_spark
