@@ -1,8 +1,8 @@
 """One driver loop for every iterative operator.
 
 Spark has no loop construct, so a fixpoint (connected components, k-core
-peeling, shortest paths, PageRank, BPE training) is a driver-side loop
-over distributed rounds.  :func:`iterate` is that loop, once:
+peeling, shortest paths, PageRank, label propagation) is a driver-side
+loop over distributed rounds.  :func:`iterate` is that loop, once:
 
 - **Pinning.**  A round's frame is pinned through
   ``operators/materialize.py`` so the next round reads a checkpoint, not
@@ -13,8 +13,7 @@ over distributed rounds.  :func:`iterate` is that loop, once:
 - **Convergence.**  A round may declare an aggregate metric; it rides the
   round's pin as an observed metric (``DataFrame.observe``), so reading
   it costs no extra Spark job.  A ``done`` predicate over the observed
-  values ends the loop.  A round that knows it is done before any Spark
-  work (BPE's argmax found nothing to merge) says so with ``done=True``.
+  values ends the loop.
 - **Exhaustion.**  ``bound`` says what ``max_rounds`` means.  ``"cap"`` is
   a safety cap on a loop that should reach its fixpoint: running out
   returns the last state, a best-effort answer, and emits
@@ -42,12 +41,12 @@ class Round(NamedTuple):
     """What one step hands back to :func:`iterate`.
 
     ``frame``: the next state.  ``metric``: aggregate column(s), each
-    aliased, observed on the round's pin.  ``done``: ``True``/``False``,
-    or a predicate over the observed values (a name → value dict)."""
+    aliased, observed on the round's pin.  ``done``: a predicate over the
+    observed values (a name → value dict); it needs a ``metric``."""
 
     frame: DataFrame
     metric: Column | tuple[Column, ...] | None = None
-    done: bool | Callable[[dict[str, Any]], bool] = False
+    done: Callable[[dict[str, Any]], bool] | None = None
 
 
 def pin_observed(df: DataFrame, name: str, *metrics: Column) -> tuple[DataFrame, dict[str, Any]]:
@@ -71,8 +70,6 @@ def iterate(
     ``max_rounds`` rounds have run; return the last state."""
     for rnd in range(max_rounds):
         r = step(state, rnd)
-        if r.done is True:
-            return r.frame
         if r.metric is not None:
             metric = r.metric if isinstance(r.metric, tuple) else (r.metric,)
             state, observed = pin_observed(r.frame, f"{name}-{rnd}", *metric)

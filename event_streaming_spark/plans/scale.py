@@ -2455,7 +2455,8 @@ def emb_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exactly.  min_count=2 early-stop mirrors as WHERE cnt >= 2 on the
 # union: once a round's best pair is < 2, every later round's best is
 # too (a merged symbol's adjacency count is bounded by the merged pair's
-# count), so the filter keeps exactly the contiguous prefix Spark emits.
+# count), so the filter keeps exactly the contiguous prefix the trainer
+# emits.
 # AS MATERIALIZED is load-bearing: each w{k} is referenced twice
 # (pair-count + next merge) and DuckDB would otherwise inline the chain
 # into a 2^8 expression tree.
@@ -3165,7 +3166,7 @@ def graph_bfs_blast_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   * word state = space-joined symbol string (words are whitespace
 #     tokens, so ' ' never occurs inside a symbol);
 #   * per-round pair counts = lateral-unnest of adjacent symbol pairs
-#     (overlaps all count, as in operators/bpe.py::pair_counts);
+#     (overlaps all count, as in operators/bpe.py::bpe_train);
 #   * the leftmost non-overlapping merge = `list_reduce` whose
 #     accumulator replays operators/bpe.py::_merge_once's fold exactly
 #     (a plain string replace would diverge on odd runs like 'aaa');

@@ -230,31 +230,9 @@ _SESSIONW_SCHEMA = T.StructType(
     _SESSIONW_ORACLE,
     tags=("streaming", "window", "session"),
 )
-def streaming_session_window_drain(
-    spark: SparkSession,
-    sf_dir: str,
-    metrics: list | None = None,
-    max_files_per_trigger: int | None = None,
-    publish_waves: int | None = None,
-    state_partitions: int = 8,
-) -> DataFrame:
+def streaming_session_window_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Publish events (+ watermark sentinel) → session_window drain in
-    append mode; finalized sessions must hash-equal the batch islands.
-
-    ``metrics``/``max_files_per_trigger``/``publish_waves`` are
-    measurement hooks for tools/streaming_scale_100x.py (per-batch wall +
-    finalized-session count at the 100× replica); all default off — the
-    graded path is unchanged.  ``publish_waves=N`` replays the table as N
-    ts-range waves, each published and DRAINED before the next is
-    published (checkpoint continuity carries the session state across the
-    sequential availableNow drains — the restart-drain pattern), so the
-    stateful operator sees events in event-time order, the production
-    arrival shape.  (An arbitrary file split across micro-batches would
-    interleave time ranges and the watermark would drop the late ones:
-    event-time streaming is order-sensitive by design, so the
-    measurement must feed it the order production would.)"""
-    import time as _time
-
+    append mode; finalized sessions must hash-equal the batch islands."""
     from event_streaming_spark.streaming.agency import EventsAgency
 
     root = tempfile.mkdtemp(prefix="est-sessw-")
@@ -264,46 +242,7 @@ def streaming_session_window_drain(
         ctx = agency.topic("driver-gate", "events-sessions")
         ev = load(spark, sf_dir, "events")
         max_ts = ev.agg(F.max("ts")).first()[0]  # 1-row scalar probe
-        waves: list[DataFrame] = []
-        if publish_waves:
-            us = ev.withColumn("us", F.unix_micros("ts"))
-            probs = [i / publish_waves for i in range(1, publish_waves)]
-            # Dedupe the quantile bounds (and drop any bound at the max
-            # ts): on a skewed ts distribution two quantiles can coincide
-            # — or the top quantile can hit max(ts) — making a (lo, hi]
-            # range EMPTY, so the measurement would silently run fewer
-            # effective waves than requested.  Deduped interior edges keep
-            # every wave non-empty by construction (each upper edge is a
-            # present data value; the last wave contains max ts); the
-            # realized count is reported so the tool's "N waves" claim is
-            # the measured truth, not the requested parameter.
-            # max_ts is a naive datetime in the session TZ (pinned UTC by
-            # tune_session) — timegm, not .timestamp(), so a non-UTC box
-            # TZ can't shift the bound.
-            import calendar as _cal
-
-            max_us = (
-                _cal.timegm(max_ts.timetuple()) * 1_000_000 + max_ts.microsecond
-            )
-            bounds = sorted(
-                {b for b in us.approxQuantile("us", probs, 0.001) if b < max_us}
-            )
-            edges = [None, *bounds, None]
-            if len(edges) - 1 < publish_waves:
-                print(
-                    f"[publish_waves] ts quantiles coincide: realized "
-                    f"{len(edges) - 1} non-empty waves of {publish_waves} "
-                    "requested"
-                )
-            for lo, hi in zip(edges[:-1], edges[1:]):
-                cond = F.lit(True)
-                if lo is not None:
-                    cond = cond & (F.col("us") > lo)
-                if hi is not None:
-                    cond = cond & (F.col("us") <= hi)
-                waves.append(us.filter(cond).drop("us"))
-        else:
-            ctx.publish(ev)
+        ctx.publish(ev)
         sentinel = [
             {
                 "event_id": -1,
@@ -315,8 +254,7 @@ def streaming_session_window_drain(
                 "props": "{}",
             }
         ]
-        if not publish_waves:
-            ctx.publish(sentinel)
+        ctx.publish(sentinel)
 
         def sessioned(df: DataFrame) -> DataFrame:
             return (
@@ -329,7 +267,6 @@ def streaming_session_window_drain(
             )
 
         def on_notify(c, batch_df: DataFrame, batch_id: int) -> None:
-            t0 = _time.monotonic()
             # append mode: each finalized session arrives exactly once
             batches.append(
                 batch_df.select(
@@ -348,39 +285,16 @@ def streaming_session_window_drain(
                     "sv",
                 ).toPandas()
             )
-            if metrics is not None:
-                metrics.append(
-                    {
-                        "batch_id": batch_id,
-                        "wall_s": round(_time.monotonic() - t0, 3),
-                        "sessions": len(batches[-1]),
-                    }
-                )
 
-        def _drain() -> None:
-            ctx.consume(
-                on_notify,
-                once=True,
-                transform=sessioned,
-                output_mode="append",
-                max_files_per_trigger=max_files_per_trigger,
-                # default 8: state cardinality at 1× is ~100k sessions and
-                # the per-batch store-commit floor dominates; the
-                # state-partition SWEEP at 100× (tools/streaming_scale_100x.py
-                # --state-partitions, BASELINE.md round-8 table) measures
-                # how throughput moves with this knob at 10M events.
-                state_partitions=state_partitions,
-            )
-
-        if publish_waves:
-            # sequential publish→drain per ts-range wave: arrival order is
-            # enforced by the pump; the shared checkpoint carries session
-            # state and the watermark across the availableNow drains
-            for wdf in waves:
-                ctx.publish(wdf)
-                _drain()
-            ctx.publish(sentinel)
-        _drain()
+        ctx.consume(
+            on_notify,
+            once=True,
+            transform=sessioned,
+            output_mode="append",
+            # state cardinality at 1× is ~100k sessions and the per-batch
+            # store-commit floor dominates
+            state_partitions=8,
+        )
         agency.close(remove_logs=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)

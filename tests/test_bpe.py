@@ -1,7 +1,8 @@
-"""Differential + property tests for distributed BPE training.
+"""Differential + property tests for BPE training.
 
-The Spark trainer (operators/bpe.py) must agree EXACTLY with an
-independent pure-Python reference implementation — the same
+The trainer (operators/bpe.py: one collect, then incremental pair
+counts on the driver) must agree EXACTLY with an independent
+pure-Python reference that recounts every pair each round — the same
 two-implementations strategy as the connected-components pair.
 """
 
@@ -12,7 +13,8 @@ import collections
 import pytest
 from pyspark.sql import functions as F
 
-from event_streaming_spark.operators.bpe import bpe_encode, bpe_train, pair_counts
+from event_streaming_spark.operators import bpe
+from event_streaming_spark.operators.bpe import bpe_encode, bpe_train
 
 
 # --- independent reference implementation (classic Sennrich BPE) -----------
@@ -51,7 +53,7 @@ def ref_bpe_train(words: dict[str, int], n_merges: int, min_count: int = 2):
         counts = _ref_pair_counts(words)
         if not counts:
             break
-        # same total order as the Spark trainer: cnt DESC, l ASC, r ASC
+        # same total order as the trainer: cnt DESC, l ASC, r ASC
         (l, r), cnt = min(counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1]))
         if cnt < min_count:
             break
@@ -80,12 +82,17 @@ def test_bpe_matches_reference_simple(spark):
 
 
 def test_bpe_matches_reference_overlapping_runs(spark):
-    # 'aaaa' exercises overlapping pair counting ((a,a) counts 3 per
-    # word) AND leftmost non-overlapping merging ([aa, aa]).
-    words = {"aaaa": 4, "aaab": 3, "baaa": 2}
-    got = bpe_train(_words_df(spark, words), 5)
-    want = ref_bpe_train(words, 5)
-    assert got == want
+    for words in (
+        # 'aaaa' exercises overlapping pair counting ((a,a) counts 3 per
+        # word) AND leftmost non-overlapping merging ([aa, aa]).
+        {"aaaa": 4, "aaab": 3, "baaa": 2},
+        # a pair's count sums over words: no word reaches min_count=2 on
+        # its own, yet (a, b) does — words must not be filtered by wc
+        {"ab": 1, "xab": 1},
+    ):
+        got = bpe_train(_words_df(spark, words), 5)
+        want = ref_bpe_train(words, 5)
+        assert got == want and got, words
 
 
 def test_bpe_matches_reference_randomized(spark):
@@ -117,25 +124,27 @@ def test_bpe_deterministic_across_partitionings(spark):
 
 
 def test_bpe_encode_applies_merges(spark):
-    words = {"low": 10, "lowest": 6}
-    merges = bpe_train(_words_df(spark, words), 3)
-    assert merges == ref_bpe_train(words, 3)  # populates _SYMS
-    df = spark.createDataFrame([("low",), ("lowest",)], "word string")
-    out = {
-        r["word"]: r["enc"]
-        for r in df.select("word", bpe_encode(F.col("word"), merges).alias("enc")).collect()
-    }
-    # encode must reproduce the training segmentation
-    assert out["low"] == _SYMS["low"]
-    assert out["lowest"] == _SYMS["lowest"]
+    for words in (
+        {"low": 10, "lowest": 6},
+        # non-ASCII BMP characters are one symbol each
+        {"naïve": 5, "naïf": 3, "日本日本": 4, "日本": 2},
+    ):
+        merges = bpe_train(_words_df(spark, words), 3)
+        assert merges == ref_bpe_train(words, 3)  # populates _SYMS
+        df = spark.createDataFrame([(w,) for w in words], "word string")
+        out = {
+            r["word"]: r["enc"]
+            for r in df.select("word", bpe_encode(F.col("word"), merges).alias("enc")).collect()
+        }
+        # encode must reproduce the training segmentation
+        assert out == {w: _SYMS[w] for w in words}
 
 
-def test_pair_counts_weighted(spark):
-    df = spark.createDataFrame([("ab", 3), ("ba", 2)], "word string, wc long").select(
-        F.expr("filter(split(word, ''), x -> x <> '')").alias("s"), "wc"
-    )
-    got = {(r["l"], r["r"]): r["cnt"] for r in pair_counts(df).collect()}
-    assert got == {("a", "b"): 3, ("b", "a"): 2}
+def test_bpe_train_rejects_word_table_over_cap(spark, monkeypatch):
+    monkeypatch.setattr(bpe, "_MAX_WORDS", 3)
+    words = {"ab": 2, "abc": 2, "bc": 2, "ca": 2}
+    with pytest.raises(ValueError, match=r"more than 3 rows \(collected 4\)"):
+        bpe_train(_words_df(spark, words), 2)
 
 
 def test_bpe_encode_corpus_matches_reference(spark):

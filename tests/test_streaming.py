@@ -592,30 +592,6 @@ def test_tuned_clone_cached_per_partition_count(spark, tmp_path):
     assert s8.sparkContext is spark.sparkContext
 
 
-def test_session_drain_wave_replay_equals_single_publish(spark):
-    """r7 (VERDICT r6 #6 instrumentation): the `publish_waves` measurement
-    hook replays the table as sequential ts-range publish→drain rounds —
-    the result must be VALUE-equal to the graded single-publish drain
-    (arrival order is an execution detail when it respects event time),
-    and the metrics hook must log one entry per micro-batch."""
-    from tests.conftest import SF_SMALL
-
-    from event_streaming_spark.plans.streaming import (
-        streaming_session_window_drain,
-    )
-
-    metrics: list = []
-    waved = streaming_session_window_drain(
-        spark, SF_SMALL, metrics=metrics, publish_waves=3
-    )
-    plain = streaming_session_window_drain(spark, SF_SMALL)
-    a = sorted(map(tuple, waved.collect()))
-    b = sorted(map(tuple, plain.collect()))
-    assert a == b and len(a) > 0
-    assert len(metrics) >= 3  # at least one batch per wave
-    assert sum(m["sessions"] for m in metrics) >= len(a)  # sentinel rows included
-
-
 # ---------------------------------------------------------------------------
 # custom stateful sessionizer (streaming/state.py::sessionize_stream)
 # ---------------------------------------------------------------------------

@@ -20,7 +20,8 @@ from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from event_streaming_spark.plans.catalog import TABLES  # noqa: E402
 

@@ -17,10 +17,12 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SAMPLE = [
     "q1_pricing_summary",            # TPC sweep

@@ -1,4 +1,5 @@
-"""Build the 10x scaling replica used by tools/scale_check.py.
+"""Build an N-times replica of sf0.1 (default 10x at /tmp/sfbig), for
+checking catalog answers at a larger scale with tools/check_oracle.py.
 
 Replicates every sf0.1 table N times (default 10) with all key columns
 shifted by replica_index * key_domain_span, producing N disjoint
