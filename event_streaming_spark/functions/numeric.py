@@ -80,25 +80,43 @@ def sql_exact_sum_wide(expr: str, round_to: int = 2) -> str:
     return f"round(cast(sum(cast(({expr}) as decimal(30,6))) as double), {round_to})"
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Double-precision dot product of two float-array columns, computed
-    left-to-right (deterministic) entirely JVM-side.
+# Vector kernels.  Each is built from ONE SQL string through ``F.expr``:
+# a Python-lambda higher-order function costs tens of milliseconds of
+# py4j round trips to build, the parsed string under one, and both give
+# the same Catalyst expression.  Arguments are SQL column references
+# (``"embedding"``, ``"p.qv"``), spliced into the SQL unquoted.
 
-    ``F.aggregate(zip_with(a,b,*), 0.0, +)`` folds in array order, which
-    matches a simple in-order loop in the oracle.
-    """
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def l2_norm(a: Column) -> Column:
-    sq = F.transform(a, lambda x: x.cast("double") * x.cast("double"))
-    return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x))
+def _sum_sql(arr: str) -> str:
+    """Left-to-right double fold of an array<double>."""
+    return f"aggregate({arr}, 0.0D, (acc, x) -> acc + x)"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two float-array columns (double math)."""
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+def _dot_sql(a: str, b: str) -> str:
+    return _sum_sql(f"zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double))")
+
+
+def _l2_norm_sql(a: str) -> str:
+    squares = f"transform({a}, x -> cast(x as double) * cast(x as double))"
+    return f"sqrt({_sum_sql(squares)})"
+
+
+def dot(a: str, b: str) -> Column:
+    """Double-precision dot product of two float-array columns, folded
+    left-to-right (deterministic) entirely JVM-side — the in-order loop
+    the oracle runs."""
+    return F.expr(_dot_sql(a, b))
+
+
+def l2_norm(a: str) -> Column:
+    """Euclidean norm of a float-array column: the square root of the
+    left-to-right double fold of its squares."""
+    return F.expr(_l2_norm_sql(a))
+
+
+def cosine(a: str, b: str) -> Column:
+    """Cosine similarity of two float-array columns (double math): the
+    same folds as :func:`dot` and :func:`l2_norm`."""
+    return F.expr(f"{_dot_sql(a, b)} / ({_l2_norm_sql(a)} * {_l2_norm_sql(b)})")
 
 
 # ---------------------------------------------------------------------------

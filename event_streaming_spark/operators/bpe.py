@@ -23,7 +23,9 @@ loop, most of that the initial pair count) and the Python driver
 process peaked at 1.2 GB RSS.
 
 Encoding stays distributed: :func:`bpe_encode` compiles the merge table
-into one Column expression of chained folds (:func:`_merge_once`).
+into one SQL string of chained folds (:func:`_merge_once`), parsed once
+into a Column: building the same folds from Python lambdas costs tens of
+milliseconds of py4j round trips per merge.
 
 Determinism: the argmax tiebreak is (count DESC, left ASC, right ASC)
 — a total order, so any partitioning learns the identical merge table.
@@ -46,31 +48,39 @@ from pyspark.sql import functions as F
 _MAX_WORDS = 1_000_000
 
 
-def chars(c: Column) -> Column:
-    """Split a word into its character symbols (array<string>)."""
-    return F.filter(F.split(c, ""), lambda x: x != "")
+def _chars_sql(word: str) -> str:
+    return f"filter(split({word}, ''), x -> x != '')"
 
 
-def _merge_once(syms: Column, left: str, right: str) -> Column:
-    """Leftmost non-overlapping merge of the (left, right) pair inside
-    one symbol array — a pure fold, evaluated JVM-side.
+def chars(word: str) -> Column:
+    """Split the word column ``word`` into its character symbols
+    (array<string>)."""
+    return F.expr(_chars_sql(word))
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal.  Backslash and quote are
+    escaped, so any symbol (``'``, ``\\``, ``%``, ``_`` included)
+    round-trips under the default ``spark.sql.parser.escapedStringLiterals``
+    = false."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _merge_once(syms: str, left: str, right: str) -> str:
+    """SQL for the leftmost non-overlapping merge of the (left, right)
+    pair inside the symbol array ``syms`` — a pure fold, evaluated
+    JVM-side.
 
     The fold compares each incoming symbol against the accumulator's
     tail: replacing the tail consumes it, so an element produced by a
     merge is never re-used as the RIGHT half of an overlapping merge —
     exactly the classic leftmost scan."""
-    merged = left + right
-    return F.aggregate(
-        syms,
-        F.expr("cast(array() as array<string>)"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(left))
-            & (x == F.lit(right)),
-            F.concat(
-                F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(F.lit(merged))
-            ),
-        ).otherwise(F.concat(acc, F.array(x))),
+    l, r, m = _sql_str(left), _sql_str(right), _sql_str(left + right)
+    return (
+        f"aggregate({syms}, cast(array() as array<string>), (acc, x) ->"
+        f" CASE WHEN size(acc) > 0 AND element_at(acc, -1) = {l} AND x = {r}"
+        f" THEN concat(slice(acc, 1, size(acc) - 1), array({m}))"
+        f" ELSE concat(acc, array(x)) END)"
     )
 
 
@@ -95,7 +105,7 @@ def bpe_train(
     ``min_count``.  Raises ``ValueError`` on more than ``_MAX_WORDS``
     rows."""
     rows = (
-        words.select(chars(F.col("word")).alias("s"), F.col("wc").cast("long"))
+        words.select(chars("word").alias("s"), F.col("wc").cast("long"))
         .limit(_MAX_WORDS + 1)
         .collect()
     )
@@ -136,10 +146,11 @@ def bpe_train(
     return merges
 
 
-def bpe_encode(tokens: Column, merges: list[tuple[int, str, str, int]]) -> Column:
-    """Apply a learned merge table (in order) to a word's character
-    symbols — the tokenizer's encode step, as a Column expression."""
-    s = chars(tokens)
+def bpe_encode(word: str, merges: list[tuple[int, str, str, int]]) -> Column:
+    """Apply a learned merge table (in order) to the character symbols
+    of the word column ``word`` — the tokenizer's encode step, as ONE
+    Column expression parsed from one SQL string of chained folds."""
+    s = _chars_sql(word)
     for _step, left, right, _cnt in merges:
         s = _merge_once(s, left, right)
-    return s
+    return F.expr(s)

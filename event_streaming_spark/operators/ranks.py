@@ -214,35 +214,23 @@ def topk_per_group(
     k: int,
     rn_col: str = "rn",
 ) -> DataFrame:
-    """Top-k rows per group under ``order_cols`` — two-stage, so no task
-    ever sorts a whole group.
+    """Top-k rows per group under ``order_cols``: one ``row_number()``
+    window plus an ``rn <= k`` filter; no task sorts a whole group.
 
-    A bare ``row_number() OVER (PARTITION BY group ORDER BY ...)`` puts
-    each group through ONE task; for ANN-style plans where "group" is a
-    query id and the rows are corpus-scaled candidates, that is billions
-    of rows per task at 100 TB.  Stage 1 ranks within
-    (group, physical-partition) — same total shuffle volume as the naive
-    window but G×P-way parallel — and keeps only k rows per cell; stage 2
-    re-ranks the survivors, at most k × #partitions rows per group
-    (bounded by cluster config, not by data).
+    A bare rank window puts each group through ONE task; for ANN-style
+    plans where "group" is a query id and the rows are corpus-scaled
+    candidates, that is billions of rows per task at 100 TB.  Spark's
+    ``InferWindowGroupLimit`` rewrites this window-plus-filter shape into
+    a map-side ``WindowGroupLimit … Partial`` (each map partition keeps
+    its k best rows per group) below the group shuffle and a ``Final``
+    limit above it, so at most k × #map-partitions rows per group reach
+    one task — bounded by cluster config, not by data.  The rewrite needs
+    k ≤ ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000;
+    the catalog's largest k is 100); tests/test_scale_ops.py pins the
+    plan shape.
 
     ``order_cols`` must totally order rows within a group (include a
-    unique tiebreak) so both stages agree and the result is
-    deterministic — the same contract as the single-window form.
+    unique tiebreak) so the result is deterministic.
     """
-    if _PID in df.columns:
-        raise ValueError(
-            f"topk_per_group: input already carries {_PID!r} "
-            "(drop/rename it — silently clobbering it would corrupt the caller)"
-        )
-    w1 = Window.partitionBy(group_col, _PID).orderBy(*order_cols)
-    local = (
-        df.withColumn(_PID, F.spark_partition_id())
-        .withColumn("__lrn", F.row_number().over(w1))
-        .filter(F.col("__lrn") <= k)
-        .drop("__lrn", _PID)
-    )
-    w2 = Window.partitionBy(group_col).orderBy(*order_cols)
-    return local.withColumn(rn_col, F.row_number().over(w2)).filter(
-        F.col(rn_col) <= k
-    )
+    w = Window.partitionBy(group_col).orderBy(*order_cols)
+    return df.withColumn(rn_col, F.row_number().over(w)).filter(F.col(rn_col) <= k)

@@ -18,6 +18,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from event_streaming_spark.session import tune_session
 
@@ -80,8 +81,19 @@ def register(name: str, oracle: str | None, tags: tuple[str, ...] = (), bench: b
     return deco
 
 
+#: Schema inferred for each single-file table, keyed by the file's
+#: identity and the conf that decides how TIMESTAMP(NANOS) reads.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Parquet scan for one of the test tables (columnar, pushdown-capable).
+
+    Schema inference reads the footer in a Spark job; for a single-file
+    table the inferred schema is kept under ``(path, inode, size,
+    mtime_ns, nanosAsLong)`` and later loads read with it, so only the
+    first load of a file starts a job and a rewritten file is inferred
+    afresh.  A directory table is inferred on every load.
 
     ``events.ts`` is TIMESTAMP(NANOS) on disk; with ``nanosAsLong`` it scans
     as epoch-nanos LONG and we rebuild a (µs) timestamp via integer
@@ -89,7 +101,18 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    key = None
+    if os.path.isfile(path):
+        st = os.stat(path)
+        nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+        key = (path, st.st_ino, st.st_size, st.st_mtime_ns, nanos)
+    if key in _SCHEMAS:
+        df = spark.read.schema(_SCHEMAS[key]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if key:
+            _SCHEMAS[key] = df.schema
     if table == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":  # TIMESTAMP(NANOS) read via nanosAsLong

@@ -2559,7 +2559,7 @@ def text_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "wc",
         F.length("word").cast("long").alias("wlen"),
-        F.size(bpe_encode(F.col("word"), merges)).cast("long").alias("n_toks"),
+        F.size(bpe_encode("word", merges)).cast("long").alias("n_toks"),
     )
     return (
         enc.groupBy("lang")

@@ -862,7 +862,7 @@ def emb_cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qv"),
         # query norms ride the broadcast — computed once per query
-        l2_norm(F.col("embedding")).alias("q_nrm"),
+        l2_norm("embedding").alias("q_nrm"),
     )
     # corpus-side norms compute ONCE PER VECTOR before the fanout to
     # |q| pairs: the per-pair cosine is then one zip-fold (the dot)
@@ -871,13 +871,13 @@ def emb_cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hubness lesson).  l2_norm is the same fold as inside cosine(), so
     # every double (and the oracle hash) is unchanged.
     e = emb.select(
-        "vec_id", "embedding", l2_norm(F.col("embedding")).alias("e_nrm")
+        "vec_id", "embedding", l2_norm("embedding").alias("e_nrm")
     )
     pairs = e.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
         "qid",
         F.col("vec_id").alias("neighbor_id"),
         F.round(
-            dot(F.col("qv"), F.col("embedding"))
+            dot("qv", "embedding")
             / (F.col("q_nrm") * F.col("e_nrm")),
             6,
         ).alias("cos_sim"),
@@ -930,7 +930,7 @@ def emb_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qid",
         F.col("vec_id").alias("neighbor_id"),
         F.col("qb").alias("bucket"),
-        F.round(cosine(F.col("qv"), F.col("embedding")), 6).alias("cos_sim"),
+        F.round(cosine("qv", "embedding"), 6).alias("cos_sim"),
     )
     # two-stage top-k (operators/ranks.py): per-qid candidates are
     # bucket-bounded but still corpus/2^planes rows — never one task.
@@ -1043,7 +1043,7 @@ def emb_ivf_two_stage_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # stage 1: rank cells per query, keep nprobe=3
     scored_cells = q.crossJoin(F.broadcast(cent)).select(
-        "qid", "label", F.round(cosine(F.col("qv"), F.col("centroid")), 6).alias("csim")
+        "qid", "label", F.round(cosine("qv", "centroid"), 6).alias("csim")
     )
     wcell = Window.partitionBy("qid").orderBy(F.desc("csim"), F.asc("label"))
     probe = (
@@ -1059,7 +1059,7 @@ def emb_ivf_two_stage_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("p.qid").alias("qid"),
             F.col("e.vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("p.qv"), F.col("e.embedding")), 6).alias("cos_sim"),
+            F.round(cosine("p.qv", "e.embedding"), 6).alias("cos_sim"),
         )
     )
     # two-stage top-k (operators/ranks.py): probed-cell candidates scale
@@ -1390,7 +1390,7 @@ def emb_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = pre.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
         "qid",
         F.col("vec_id").alias("neighbor_id"),
-        F.round(cosine(F.col("qv"), F.col("p")), 6).alias("cos_sim"),
+        F.round(cosine("qv", "p"), 6).alias("cos_sim"),
     )
     prek = topk_per_group(
         pairs, "qid", [F.desc("cos_sim"), F.asc("neighbor_id")], 3, rn_col="rn"
@@ -1516,7 +1516,7 @@ def search_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(qv))
         .select(
             F.col("vec_id").alias("doc_id"),
-            F.round(cosine(F.col("q"), F.col("embedding")), 6).alias("cos_sim"),
+            F.round(cosine("q", "embedding"), 6).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), "doc_id")
         .limit(20)
@@ -1601,7 +1601,7 @@ def emb_ivf_persisted_index_search(spark: SparkSession, sf_dir: str) -> DataFram
         scored_cells = q.crossJoin(F.broadcast(cent)).select(
             "qid",
             "label",
-            F.round(cosine(F.col("qv"), F.col("centroid")), 6).alias("csim"),
+            F.round(cosine("qv", "centroid"), 6).alias("csim"),
         )
         wcell = Window.partitionBy("qid").orderBy(F.desc("csim"), F.asc("label"))
         probe = (
@@ -1622,7 +1622,7 @@ def emb_ivf_persisted_index_search(spark: SparkSession, sf_dir: str) -> DataFram
         ).select(
             F.col("p.qid").alias("qid"),
             F.col("e.vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("p.qv"), F.col("e.embedding")), 6).alias("cos_sim"),
+            F.round(cosine("p.qv", "e.embedding"), 6).alias("cos_sim"),
         )
         out = topk_per_group(
             cand, "qid", [F.desc("cos_sim"), F.asc("neighbor_id")], 5, rn_col="rn"
@@ -3142,8 +3142,9 @@ def events_power_law_fit_user_activity(spark: SparkSession, sf_dir: str) -> Data
 #
 # 100 TB shape: both queries broadcast the K-row centroid table and scan
 # the corpus once; the nprobe sweep bounds candidates by (max nprobe /
-# n_cells) of the corpus per query and ranks with the two-stage top-k
-# (operators/ranks.py — never one task per query id); the outlier audit
+# n_cells) of the corpus per query and ranks with ``topk_per_group``
+# (operators/ranks.py — a map-side group limit, never one task per
+# query id); the outlier audit
 # is two label-keyed aggregates over one distance pass (the per-label
 # mean joins back label-keyed, label-bounded).
 #
@@ -3240,8 +3241,12 @@ def emb_ivf_recall_vs_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LARGEST nprobe carries each candidate's cell_rank, so the
     sweep is a bounded ≤|_NPROBES|× fanout of the already-cell-bounded
     candidate table, not |_NPROBES| corpus scans; both rankings use
-    the two-stage top-k.  The brute-force leg is the audit's cost
-    ceiling by definition (it IS the baseline being scored against).
+    ``topk_per_group`` (a map-side limit below each group shuffle).  The
+    brute-force leg is the audit's cost ceiling by definition (it IS the
+    baseline being scored against).  The per-nprobe readout is
+    |_NPROBES| rows: ``hits`` (at most one row per nprobe) is broadcast
+    into the one-partition nprobe frame, so the readout adds no shuffle
+    and its ORDER BY needs no range exchange.
     """
 
     emb = load(spark, sf_dir, "embeddings")
@@ -3252,7 +3257,7 @@ def emb_ivf_recall_vs_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = q.crossJoin(F.broadcast(cent)).select(
         "qid",
         "label",
-        F.round(cosine(F.col("qv"), F.col("centroid")), 6).alias("csim"),
+        F.round(cosine("qv", "centroid"), 6).alias("csim"),
     )
     ranked_cells = topk_per_group(
         scored, "qid", [F.desc("csim"), F.asc("label")], max(_NPROBES),
@@ -3268,7 +3273,7 @@ def emb_ivf_recall_vs_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p.qid").alias("qid"),
         F.col("e.vec_id").alias("nid"),
         F.col("p.cell_rank").alias("cell_rank"),
-        F.round(cosine(F.col("p.qv"), F.col("e.embedding")), 6).alias("cos_sim"),
+        F.round(cosine("p.qv", "e.embedding"), 6).alias("cos_sim"),
     )
     nps = F.explode(
         F.array(*[F.lit(p_).cast("long") for p_ in _NPROBES])
@@ -3294,7 +3299,7 @@ def emb_ivf_recall_vs_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, [(int(p_),) for p_ in _NPROBES], "np long"
     ).coalesce(1)
     return (
-        npframe.join(hits, "np", "left")
+        npframe.join(F.broadcast(hits), "np", "left")
         .crossJoin(F.broadcast(nq))
         .select(
             F.col("np").alias("nprobe"),
@@ -3501,7 +3506,7 @@ def emb_knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qid",
         "qv",
         "clabel",
-        F.round(cosine(F.col("qv"), F.col("centroid")), 6).alias("csim"),
+        F.round(cosine("qv", "centroid"), 6).alias("csim"),
     )
     home = topk_per_group(
         scored, "qid", [F.desc("csim"), F.asc("clabel")], 1, rn_col="rn"
@@ -3522,10 +3527,10 @@ def emb_knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         "embedding",
-        l2_norm(F.col("embedding")).alias("e_nrm"),
+        l2_norm("embedding").alias("e_nrm"),
     ).alias("e")
     h_s = home.select(
-        "qid", "qv", "label", l2_norm(F.col("qv")).alias("q_nrm")
+        "qid", "qv", "label", l2_norm("qv").alias("q_nrm")
     ).alias("h")
     cand = e_s.join(
         F.broadcast(h_s),
@@ -3535,7 +3540,7 @@ def emb_knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("h.qid").alias("qid"),
         F.col("e.vec_id").alias("nid"),
         F.round(
-            dot(F.col("h.qv"), F.col("e.embedding"))
+            dot("h.qv", "e.embedding")
             / (F.col("h.q_nrm") * F.col("e.e_nrm")),
             6,
         ).alias("cos_sim"),
@@ -3925,7 +3930,7 @@ def emb_knn_graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("vec_id") % F.col("s") == 0)
         .select(
             "vec_id", "label", "embedding",
-            l2_norm(F.col("embedding")).alias("nrm"),
+            l2_norm("embedding").alias("nrm"),
         )
     )
     q = panel.select(
@@ -3939,7 +3944,7 @@ def emb_knn_graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qid",
         F.col("vec_id").alias("nid"),
         F.round(
-            dot(F.col("qv"), F.col("embedding"))
+            dot("qv", "embedding")
             / (F.col("q_nrm") * F.col("nrm")),
             6,
         ).alias("cos_sim"),

@@ -703,7 +703,7 @@ def emb_cosine_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least(F.col("a.vec_id"), F.col("b.vec_id")).alias("vec_a"),
             F.greatest(F.col("a.vec_id"), F.col("b.vec_id")).alias("vec_b"),
             F.col("a.label").alias("label"),
-            F.round(cosine(F.col("a.embedding"), F.col("b.embedding")), 6).alias("cos_sim"),
+            F.round(cosine("a.embedding", "b.embedding"), 6).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= 0.29)
     )

@@ -1473,7 +1473,7 @@ def emb_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     wcell = Window.partitionBy("qid").orderBy(F.desc("csim"), F.asc("label"))
     probe = (
         qrows.crossJoin(F.broadcast(cent))
-        .select("qid", "label", F.round(cosine(F.col("qv"), F.col("centroid")), 6).alias("csim"))
+        .select("qid", "label", F.round(cosine("qv", "centroid"), 6).alias("csim"))
         .withColumn("cell_rank", F.row_number().over(wcell))
         .filter(F.col("cell_rank") <= 3)
         .select("qid", "label")
@@ -1565,7 +1565,7 @@ def emb_ivf_pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "qid",
             F.col("e.vec_id").alias("neighbor"),
-            F.round(cosine(F.col("qv"), F.col("e.embedding")), 6).alias("cs"),
+            F.round(cosine("qv", "e.embedding"), 6).alias("cs"),
         )
     )
     # two-stage top-k (operators/ranks.py): the exact arm scores the
@@ -2414,7 +2414,7 @@ def emb_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q_label",
         F.col("vec_id").alias("neighbor_id"),
         F.col("label").alias("n_label"),
-        F.round(cosine(F.col("qv"), F.col("embedding")), 6).alias("cos_sim"),
+        F.round(cosine("qv", "embedding"), 6).alias("cos_sim"),
     )
     negs = topk_per_group(
         scored.where(F.col("n_label") != F.col("q_label")),
@@ -3256,7 +3256,7 @@ def text_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         words.select(
             "word",
             F.length("word").alias("n_chars"),
-            F.size(bpe_encode(F.col("word"), merges)).alias("n_tok"),
+            F.size(bpe_encode("word", merges)).alias("n_tok"),
         ),
         "bpe-vocab-encoded",
     )

@@ -66,6 +66,13 @@ def ref_bpe_train(words: dict[str, int], n_merges: int, min_count: int = 2):
 # --- tests -----------------------------------------------------------------
 
 
+#: Symbols that SQL string literals (quote, backslash) and LIKE patterns
+#: (``%``, ``_``) treat specially.  The first three merges, as Python
+#: reprs, are ('%', '_'), ('%_', '\\') and ("'", '%_\\'), so the encode
+#: folds quote all four.
+_QUOTED = {"'%_\\": 9, "it's": 5, "a\\_b'": 4, "%_%": 3}
+
+
 def _words_df(spark, words: dict[str, int]):
     return spark.createDataFrame(
         [(w, c) for w, c in words.items()], "word string, wc long"
@@ -89,6 +96,7 @@ def test_bpe_matches_reference_overlapping_runs(spark):
         # a pair's count sums over words: no word reaches min_count=2 on
         # its own, yet (a, b) does — words must not be filtered by wc
         {"ab": 1, "xab": 1},
+        _QUOTED,
     ):
         got = bpe_train(_words_df(spark, words), 5)
         want = ref_bpe_train(words, 5)
@@ -128,13 +136,14 @@ def test_bpe_encode_applies_merges(spark):
         {"low": 10, "lowest": 6},
         # non-ASCII BMP characters are one symbol each
         {"naïve": 5, "naïf": 3, "日本日本": 4, "日本": 2},
+        _QUOTED,
     ):
         merges = bpe_train(_words_df(spark, words), 3)
         assert merges == ref_bpe_train(words, 3)  # populates _SYMS
         df = spark.createDataFrame([(w,) for w in words], "word string")
         out = {
             r["word"]: r["enc"]
-            for r in df.select("word", bpe_encode(F.col("word"), merges).alias("enc")).collect()
+            for r in df.select("word", bpe_encode("word", merges).alias("enc")).collect()
         }
         # encode must reproduce the training segmentation
         assert out == {w: _SYMS[w] for w in words}

@@ -80,3 +80,48 @@ def test_registry_order_guard_rejects_missing_unknown_and_repeated_names():
     ):
         with pytest.raises(RuntimeError, match=re.escape(why)):
             _in_order(REGISTRY, bad)
+
+
+def _load_jobs(spark, sf_dir: str, table: str):
+    """``(load(...), ids of the Spark jobs the load started)``."""
+    import uuid
+
+    from event_streaming_spark.plans.catalog import load
+
+    sc = spark.sparkContext
+    group = f"load-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        df = load(spark, sf_dir, table)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_infers_a_table_schema_once(spark):
+    """Only the first load of a fixture file infers its schema (a Spark
+    job); a second load reads with the kept schema and starts none."""
+    first, _ = _load_jobs(spark, SF_SMALL, "events")
+    again, jobs = _load_jobs(spark, SF_SMALL, "events")
+    assert jobs == []
+    assert again.schema == first.schema
+    assert again.count() == first.count() > 0
+
+
+def test_load_reinfers_a_rewritten_file(spark, tmp_path):
+    """A parquet file rewritten at the same path with another schema is
+    read with the new schema, not the kept one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    old, _ = _load_jobs(spark, str(tmp_path), "t")
+    assert old.columns == ["a"]
+    pq.write_table(pa.table({"a": [3], "b": ["x"]}), path)
+    new, jobs = _load_jobs(spark, str(tmp_path), "t")
+    assert jobs, "a rewritten file must be inferred afresh"
+    assert [tuple(r) for r in new.collect()] == [(3, "x")]

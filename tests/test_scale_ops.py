@@ -701,6 +701,38 @@ def test_topk_per_group_k_larger_than_group(spark):
     ]
 
 
+def test_topk_per_group_limits_each_map_partition_before_the_group_shuffle(spark):
+    """At the catalog's largest k the executed plan has ONE hash
+    exchange, on the group, fed by a map-side ``WindowGroupLimit …
+    Partial``: each of the 8 input partitions ships at most k rows per
+    group, so no task receives a whole group.  A Spark upgrade, or a
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` below k, that drops
+    the partial limit fails here."""
+    import re
+
+    from event_streaming_spark.operators.ranks import topk_per_group
+    from event_streaming_spark.plans.curation import _ZIPF_TOPK
+
+    df = (
+        spark.range(5000)
+        .select(
+            (F.col("id") % 7).cast("string").alias("g"),
+            (F.col("id") % 13).alias("v"),
+            F.col("id").alias("tie"),
+        )
+        .repartition(8)
+    )
+    got = topk_per_group(df, "g", [F.desc("v"), F.asc("tie")], _ZIPF_TOPK)
+    assert len(got.collect()) == 7 * _ZIPF_TOPK
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+    hashed = [i for i, line in enumerate(lines) if "Exchange hashpartitioning" in line]
+    assert len(hashed) == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(g#\d+, ", lines[hashed[0]]), plan
+    below = lines[hashed[0] + 1]
+    assert "WindowGroupLimit [g#" in below and below.rstrip().endswith("Partial"), plan
+
+
 def test_streaming_theta_equals_batch_and_set_ops(spark, tmp_path):
     """The streamed bottom-k state must reproduce the exact distinct
     count while unsaturated, and two sketches must answer set ops."""
