@@ -11,9 +11,11 @@ import re
 import pytest
 
 from event_streaming_spark.plans import REGISTRY
+from event_streaming_spark.plans.catalog import load
 from tools.check_oracle import normalize
 
 from tests.conftest import SF_SMALL
+from tests.test_versioned import _job_ids
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
@@ -82,30 +84,11 @@ def test_registry_order_guard_rejects_missing_unknown_and_repeated_names():
             _in_order(REGISTRY, bad)
 
 
-def _load_jobs(spark, sf_dir: str, table: str):
-    """``(load(...), ids of the Spark jobs the load started)``."""
-    import uuid
-
-    from event_streaming_spark.plans.catalog import load
-
-    sc = spark.sparkContext
-    group = f"load-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        df = load(spark, sf_dir, table)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # job-start events reach the status store through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return df, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_load_infers_a_table_schema_once(spark):
     """Only the first load of a fixture file infers its schema (a Spark
     job); a second load reads with the kept schema and starts none."""
-    first, _ = _load_jobs(spark, SF_SMALL, "events")
-    again, jobs = _load_jobs(spark, SF_SMALL, "events")
+    first, _ = _job_ids(spark, lambda: load(spark, SF_SMALL, "events"))
+    again, jobs = _job_ids(spark, lambda: load(spark, SF_SMALL, "events"))
     assert jobs == []
     assert again.schema == first.schema
     assert again.count() == first.count() > 0
@@ -119,9 +102,9 @@ def test_load_reinfers_a_rewritten_file(spark, tmp_path):
 
     path = tmp_path / "t.parquet"
     pq.write_table(pa.table({"a": [1, 2]}), path)
-    old, _ = _load_jobs(spark, str(tmp_path), "t")
+    old, _ = _job_ids(spark, lambda: load(spark, str(tmp_path), "t"))
     assert old.columns == ["a"]
     pq.write_table(pa.table({"a": [3], "b": ["x"]}), path)
-    new, jobs = _load_jobs(spark, str(tmp_path), "t")
+    new, jobs = _job_ids(spark, lambda: load(spark, str(tmp_path), "t"))
     assert jobs, "a rewritten file must be inferred afresh"
     assert [tuple(r) for r in new.collect()] == [(3, "x")]

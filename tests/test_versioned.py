@@ -1226,6 +1226,8 @@ def _job_ids(spark, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
