@@ -25,17 +25,22 @@ that snapshot.
 
 Scale: a manifest holds file paths, not row data — O(#files), kept
 small by compact().  File-level delete granularity ("rewrite only files
-containing matching rows", found via the _metadata.file_path pseudo
-column) is exactly Delta's copy-on-write semantics.
+containing matching rows") is exactly Delta's copy-on-write semantics.
+Rows are traced to their file by the _metadata.file_path pseudo
+column: ``delete_where`` collects the files its predicate hits, then
+rewrites them; ``merge`` rewrites every candidate file in one write
+partitioned by source file and keeps only the hit files' output.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import json
 import os
 import shutil
 import uuid
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -123,6 +128,13 @@ def _may_match(r: tuple | None, span: tuple | None) -> bool:
     if r is None or span is None:
         return True
     return r[0] <= span[1] and span[0] <= r[1]
+
+
+def _file_name():
+    """The data file name of each scanned row: ``_metadata.file_path``
+    is a URI, and a name is unique by construction (every staged file
+    embeds a uuid)."""
+    return F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
 
 
 class CommitConflict(RuntimeError):
@@ -250,19 +262,34 @@ class VersionedStore:
             t for v, t in self._txn_by_version.items() if v in present and t is not None
         }
 
-    def _stage_files(self, df: DataFrame, tag: str) -> list[str]:
-        """Write ``df`` to immutable uniquely-named files in data/."""
+    @contextlib.contextmanager
+    def _staging_dir(self):
+        """A fresh ``_staging-*`` dir under the table path for one Spark
+        write, removed on every exit path: what is not adopted into
+        data/ by then is discarded."""
         staging = os.path.join(self.path, f"_staging-{uuid.uuid4().hex}")
-        df.write.parquet(staging)
+        try:
+            yield staging
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+
+    def _adopt(self, src: str, tag: str) -> list[str]:
+        """Move the parquet files of dir ``src`` into data/ under
+        immutable unique names; returns the new names."""
         moved = []
-        for name in sorted(os.listdir(staging)):
+        for name in sorted(os.listdir(src)):
             if not name.endswith(".parquet"):
                 continue
             unique = f"{tag}-{uuid.uuid4().hex}-{name}"
-            os.rename(os.path.join(staging, name), os.path.join(self.data_dir, unique))
+            os.rename(os.path.join(src, name), os.path.join(self.data_dir, unique))
             moved.append(unique)
-        shutil.rmtree(staging)
         return moved
+
+    def _stage_files(self, df: DataFrame, tag: str) -> list[str]:
+        """Write ``df`` to immutable uniquely-named files in data/."""
+        with self._staging_dir() as staging:
+            df.write.parquet(staging)
+            return self._adopt(staging, tag)
 
     # -- operations -----------------------------------------------------------
     def table_schema(self, version: int | None = None):
@@ -581,22 +608,24 @@ class VersionedStore:
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         base = self.latest_version()
         df = self.read(base)
-        # _metadata.file_path is a URI; compare by basename (unique by
-        # construction — every staged file embeds a uuid)
-        fname = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
         hit_files = {
             r["f"]
-            for r in df.filter(pred).select(fname.alias("f")).distinct().collect()
+            for r in df.filter(pred).select(_file_name().alias("f")).distinct().collect()
         }
         if not hit_files:
             return base
-        survivors = df.filter(fname.isin(*hit_files)).filter(
+        survivors = df.filter(_file_name().isin(*hit_files)).filter(
             ~F.coalesce(pred, F.lit(False))
-        ).persist()  # count + stage share ONE computation of the survivors
-        try:
-            new = self._stage_files(survivors, "delete") if survivors.count() else []
-        finally:
-            survivors.unpersist()
+        )
+        # The survivor count rides the staging write as an observed
+        # metric; an all-deleted rewrite just removes the 0-row file it
+        # staged.
+        obs = Observation(f"delete-surv-{uuid.uuid4().hex[:8]}")
+        new = self._stage_files(survivors.observe(obs, F.count(F.lit(1)).alias("n")), "delete")
+        if not obs.get["n"]:
+            for f in new:
+                os.remove(os.path.join(self.data_dir, f))
+            new = []
 
         def compute(prev: list[str]) -> list[str]:
             missing = hit_files - set(prev)
@@ -620,6 +649,45 @@ class VersionedStore:
             )
         return self._key_ranges[cache_key]
 
+    def _rewrite_hit_files(
+        self, candidates: list[str], upd_files: list[str], key: str, schema, base_v: int
+    ) -> tuple[set[str], list[str]]:
+        """One Spark write over the ``candidates`` of a merge: every row
+        is marked by whether the staged batch ``upd_files`` holds its key
+        (an existence join — no row is duplicated, no ``distinct``; a
+        NULL mark is "no"), unmarked rows are written partitioned by
+        their source file, and the files holding a marked row come back
+        on the same write as an observed ``collect_set``.  Returns
+        ``(hit files, their survivors adopted into data/)``; the copies
+        of candidates without a hit are discarded with the staging dir.
+        A hit file whose rows all matched leaves no survivor file
+        (partitioned writes emit no empty file)."""
+        staged = self._read_projected(
+            [os.path.join(self.data_dir, f) for f in upd_files], schema
+        )
+        marked = (
+            self.read_files([os.path.join(self.data_dir, f) for f in candidates], base_v)
+            # _metadata.file_path resolves only on the scan itself — pin
+            # it as an ordinary column before the join
+            .withColumn("__f", _file_name())
+            .withColumn("__hit", F.coalesce(F.col(key).isin(staged.select(key)), F.lit(False)))
+        )
+        obs = Observation(f"merge-hits-{uuid.uuid4().hex[:8]}")
+        survivors = (
+            marked.observe(obs, F.collect_set(F.when(F.col("__hit"), F.col("__f"))).alias("hit"))
+            .where(~F.col("__hit"))
+            .drop("__hit")
+        )
+        with self._staging_dir() as staging:
+            survivors.write.partitionBy("__f").parquet(staging)
+            hit_files = set(obs.get["hit"])
+            new = []
+            for d in sorted(os.listdir(staging)):
+                # a partition dir is ``__f=<escaped source file name>``
+                if d.startswith("__f=") and unquote(d[4:]) in hit_files:
+                    new += self._adopt(os.path.join(staging, d), "merge")
+        return hit_files, new
+
     def merge(self, updates: DataFrame, key: str, txn: str | None = None) -> int:
         """MERGE INTO (upsert by key), one atomic commit: rows whose key
         appears in ``updates`` are REPLACED, new keys are INSERTED.
@@ -635,12 +703,17 @@ class VersionedStore:
         size, not the base table: each data file's key ``(min, max)``
         comes from its parquet footer (driver-side, cached per immutable
         file), the batch's range from the footers of its staged files,
-        and only base files whose range overlaps the batch's are probed
-        and rewritten (``read_files`` keeps the tombstone anti-join and
-        the manifest schema).  A file whose footer gives no usable range
-        is always a candidate; with no candidate the batch commits
-        without a probe.  The first merge into an empty table records
-        the batch schema, so later reads never infer one."""
+        and only base files whose range overlaps the batch's are
+        candidates.  One Spark write over the candidates
+        (:meth:`_rewrite_hit_files`; ``read_files`` keeps the tombstone
+        anti-join and the manifest schema) both finds the hit files and
+        rewrites their survivors, so a merge runs three jobs: stage the
+        batch, broadcast its keys, rewrite.  The price: a candidate that
+        holds none of the batch's keys is read in full and written once,
+        then discarded.  A file whose footer gives no usable range is
+        always a candidate; with no candidate the batch commits without
+        a rewrite.  The first merge into an empty table records the
+        batch schema, so later reads never infer one."""
         if txn is not None and txn in self.committed_txns():
             return self.latest_version()
         base_v = self.latest_version()
@@ -655,12 +728,12 @@ class VersionedStore:
         elif base_files:  # pre-schema-tracking table
             updates = updates.select(*self.read(base_v).columns)
         # Stage the update batch FIRST: the staged parquet is the pinned
-        # copy every later probe reads, so the update subplan (behind a
+        # copy the rewrite reads, so the update subplan (behind a
         # dropDuplicates shuffle on the streaming path) evaluates exactly
-        # ONCE instead of once per probe job (r11).
+        # ONCE.
         upd_files = self._stage_files(updates, "merge")
         # Every file staged below is tracked so a failure AFTER staging
-        # (probe error, CommitConflict, retried streaming batch) deletes
+        # (rewrite error, CommitConflict, retried streaming batch) deletes
         # its orphans instead of leaving a full batch copy per attempt
         # for vacuum to find (ADVICE r11).  A hard crash still leaves
         # orphans — vacuum remains the backstop for that.
@@ -668,7 +741,7 @@ class VersionedStore:
         try:
             if not base_files:
                 # empty base (a new table, the cursor-origin v0): nothing
-                # can match — commit without a probe, recording the schema
+                # can match — commit without a rewrite, recording the schema
                 return self._commit(
                     lambda prev: prev + upd_files,
                     "merge",
@@ -680,51 +753,12 @@ class VersionedStore:
             candidates = [
                 f for f in base_files if _may_match(self._key_range(f, key, kind), span)
             ]
-            hit_files: set[str] = set()
-            new = []
+            hit_files, new = set(), []
             if candidates:
-                staged = self._read_projected(
-                    [os.path.join(self.data_dir, f) for f in upd_files], schema
+                hit_files, new = self._rewrite_hit_files(
+                    candidates, upd_files, key, schema, base_v
                 )
-                keys = staged.select(key).distinct()
-                df = self.read_files(
-                    [os.path.join(self.data_dir, f) for f in candidates], base_v
-                )
-                # _metadata.file_path resolves only on the scan itself —
-                # pin it as an ordinary column before any join drops the
-                # pseudo-column
-                hit_files = {
-                    r["__f"]
-                    for r in df.withColumn(
-                        "__f", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-                    )
-                    .join(keys, key, "left_semi")
-                    .select("__f")
-                    .distinct()
-                    .collect()
-                }
-            if hit_files:
-                survivors = self.read_files(
-                    [os.path.join(self.data_dir, f) for f in sorted(hit_files)], base_v
-                ).join(keys, key, "left_anti")
-                # The survivor count rides the staging WRITE as an
-                # observed metric (r12) — the r11 shape persisted the
-                # survivors and ran a separate count job first, one
-                # extra driver-synchronized pass (and an executor-memory
-                # pin of a base-table-sized frame) per merge.  An
-                # all-matched rewrite just deletes the 0-row files it
-                # staged.
-                obs = Observation(f"merge-surv-{uuid.uuid4().hex[:8]}")
-                surv_files = self._stage_files(
-                    survivors.observe(obs, F.count(F.lit(1)).alias("n")), "merge"
-                )
-                staged_files += surv_files
-                if (obs.get["n"] or 0) > 0:
-                    new += surv_files
-                else:
-                    for f in surv_files:
-                        os.remove(os.path.join(self.data_dir, f))
-                    staged_files = list(upd_files)
+                staged_files += new
             new += upd_files
 
             def compute(prev: list[str]) -> list[str]:

@@ -49,6 +49,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from event_streaming_spark.streaming.sinks import compact_batch_errors
+
 #: The event document shape (SURVEY D1 / FIXTURES §A events).  `props`
 #: stays a raw JSON string — schema-on-read, like the reference's
 #: json_get_value consumers (utils/utils.h:34-42).
@@ -310,6 +312,7 @@ class TopicContext:
         if transform is not None:
             df = transform(df)
 
+        @compact_batch_errors
         def _batch(batch_df: DataFrame, batch_id: int) -> None:
             on_notify(self, batch_df, batch_id)
 

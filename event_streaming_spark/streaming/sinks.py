@@ -18,14 +18,18 @@ bounded driver hop, never a data-plane move.
 Every batch-id-idempotent streaming writer in the package
 (``VersionedStore.sink``/``upsert_sink``, ``EventStore.sink`` and the
 three streaming sketches) runs through :func:`ledgered_sink`, and every
-per-batch ledger mark is named by :func:`_batch_mark`.
+per-batch ledger mark is named by :func:`_batch_mark`.  The long-lived
+callbacks (``ledgered_sink``, the agency consumer) are wrapped by
+:func:`compact_batch_errors`.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -41,6 +45,44 @@ def _write_mark(ledger: str, batch_id: int, content: str = "done") -> None:
     os.makedirs(ledger, exist_ok=True)
     with open(_batch_mark(ledger, batch_id), "w") as fh:
         fh.write(content)
+
+
+class BatchCallbackError(RuntimeError):
+    """A Java call inside a foreachBatch callback failed.  The message is
+    py4j's one-line header and at most 500 characters of the Java cause
+    chain (``class: message`` per cause, no stack frames)."""
+
+
+def compact_batch_errors(fn: Callable[[DataFrame, int], None]) -> Callable[[DataFrame, int], None]:
+    """Wrap the foreachBatch function ``fn`` so that a Java exception it
+    raises reaches the stream thread as a short :class:`BatchCallbackError`.
+
+    When a callback fails, Spark's stream thread decides whether
+    ``query.stop()`` caused it by matching ``StreamExecution.PROXY_ERROR``
+    (``py4j.protocol.Py4JJavaError: An error occurred while calling``,
+    then ``(.|\\r\\n|\\r|\\n)*``, then an interruption class name)
+    against the error text.  That loop recurses once per character, and
+    a ``Py4JJavaError`` text holds the whole Java stack trace, so a stop
+    that interrupted the callback's Spark job killed the thread with
+    ``StackOverflowError`` (about 1,500 characters after the header
+    overflow the default thread stack).  The short text keeps the header
+    and the interruption class, and what Spark's other stop test reads
+    (``org.apache.spark.SparkException``, ``cancelled`` and the query's
+    job group id), so such a stop ends the query cleanly."""
+
+    @functools.wraps(fn)
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        try:
+            fn(batch_df, batch_id)
+        except Py4JJavaError as e:
+            causes, t = [], e.java_exception
+            while t is not None and len(causes) < 8:
+                causes.append(str(t.toString()))
+                t = t.getCause()
+            chain = "\n".join(causes)[:500]
+            raise BatchCallbackError(f"py4j.protocol.Py4JJavaError: {e.errmsg}: {chain}") from None
+
+    return run
 
 
 def ledgered_sink(
@@ -76,6 +118,7 @@ def ledgered_sink(
     ledger = os.path.join(checkpoint, ledger_name)
     txn_scope = os.path.abspath(checkpoint)
 
+    @compact_batch_errors
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         if os.path.exists(_batch_mark(ledger, batch_id)):
             return

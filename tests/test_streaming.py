@@ -249,6 +249,33 @@ def test_continuous_consume_and_stop(agency, spark):
     assert q.isActive is False
 
 
+def test_stop_during_a_batch_job_ends_the_query_cleanly(agency, spark):
+    """Stopping a live consumer while its callback runs a Spark job ends
+    the query as stopped.  Spark decides that with a regex that recurses
+    once per character of the callback's error text; the raw
+    Py4JJavaError text (the whole Java stack trace) overflowed the stream
+    thread's stack, and the thread died before it recorded the stop."""
+    import threading
+    import time
+
+    started = threading.Event()
+
+    def on_notify(ctx, batch_df, batch_id):
+        started.set()
+        spark.range(0, 10**12, 1, 2).selectExpr("sum(id % 7)").collect()  # until cancelled
+
+    ctx = agency.topic("b", "stopped")
+    ctx.publish(ev(1, "2024-01-01T00:00:00", 1))
+    q = ctx.consume(on_notify, once=False)
+    try:
+        assert started.wait(60)
+        time.sleep(1)  # the callback's job is running
+    finally:
+        ctx.stop()
+    assert q.exception() is None
+    assert q.status["message"] == "Stopped"
+
+
 def test_checkpoint_resume_delivers_only_new_events(agency, spark):
     """Offsets live in the per-topic checkpoint: a second consume sees only
     events published after the first drain (at-least-once, no replay)."""

@@ -1256,17 +1256,34 @@ _step = st.tuples(
 )
 
 
-@given(key_type=st.sampled_from(["long", "string"]), steps=st.lists(_step, min_size=2, max_size=4))
+@given(
+    key_type=st.sampled_from(["long", "string"]),
+    steps=st.lists(_step, min_size=2, max_size=4),
+    broadcast=st.booleans(),
+)
 @settings(
     max_examples=8,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-def test_pruned_merge_matches_dict_upsert(spark, tmp_path_factory, key_type, steps):
+def test_pruned_merge_matches_dict_upsert(spark, tmp_path_factory, key_type, steps, broadcast):
     """Random appends and merges (clustered, scattered and NULL keys):
     after every step the table equals a Python dict upsert.  String keys
     are unpadded decimals, so their byte order differs from the numeric
-    one the files were clustered by."""
+    one the files were clustered by.  Without broadcast the merge's
+    existence join is a sort-merge join, which spreads one file's rows
+    across tasks."""
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(conf)
+    if not broadcast:
+        spark.conf.set(conf, "-1")
+    try:
+        _check_merges_match_dict_upsert(spark, tmp_path_factory, key_type, steps)
+    finally:
+        spark.conf.set(conf, prev)
+
+
+def _check_merges_match_dict_upsert(spark, tmp_path_factory, key_type, steps):
     store = VersionedStore(spark, str(tmp_path_factory.mktemp("prop") / "t"))
     as_key = int if key_type == "long" else str
     latest: dict = {}  # non-NULL key -> value
@@ -1315,6 +1332,64 @@ def test_merge_probes_only_files_whose_key_range_overlaps(spark, store, monkeypa
     assert len(rows) == 600
     want = {k: 99 if 310 <= k < 320 else 7 if k == 399 else k // 100 for k in range(600)}
     assert dict(rows) == want
+
+
+def _three_range_files(spark, store) -> list[str]:
+    """Appends keys [0, 100), [100, 200), [200, 300) as one file each;
+    returns the file names in key order."""
+    names = []
+    for i in range(3):
+        before = set(store._manifest(store.latest_version())["files"]) if i else set()
+        store.append(
+            spark.range(i * 100, (i + 1) * 100)
+            .select(F.col("id"), F.lit(i).alias("v"))
+            .coalesce(1)
+        )
+        (name,) = set(store._manifest(store.latest_version())["files"]) - before
+        names.append(name)
+    return names
+
+
+def test_merge_with_candidates_runs_stage_broadcast_and_rewrite_jobs(spark, store):
+    _three_range_files(spark, store)
+    batch = spark.range(110, 120).select(F.col("id"), F.lit(9).alias("v"))
+    v, jobs = _job_ids(spark, lambda: store.merge(batch, key="id"))
+    assert len(jobs) <= 3  # stage the batch, broadcast its keys, rewrite
+    want = {k: 9 if 110 <= k < 120 else k // 100 for k in range(300)}
+    assert {r["id"]: r["v"] for r in store.read(v).collect()} == want
+
+
+def test_merge_keeps_a_spanned_file_without_batch_keys_by_name(spark, store):
+    lo, mid, hi = _three_range_files(spark, store)
+    base = set(store._manifest(store.latest_version())["files"])
+    # the batch's key span [50, 250] covers the middle file, which holds
+    # none of its keys; key 250's file is hit
+    v = store.merge(spark.createDataFrame([(50, 7), (250, 8)], "id long, v int"), key="id")
+    after = set(store._manifest(v)["files"])
+    assert mid in after
+    assert lo not in after and hi not in after
+    # no rewritten copy of the middle file (or any other) left behind
+    assert set(os.listdir(store.data_dir)) == base | after
+    want = {k: 7 if k == 50 else 8 if k == 250 else k // 100 for k in range(300)}
+    assert {r["id"]: r["v"] for r in store.read(v).collect()} == want
+
+
+@pytest.mark.parametrize("fail_in", ["_commit", "_adopt"])
+def test_failed_merge_leaves_only_the_base_files(spark, store, monkeypatch, fail_in):
+    _three_range_files(spark, store)
+    base = set(store._manifest(store.latest_version())["files"])
+    orig = getattr(store, fail_in)
+
+    def fail_after_rewrite(*args, **kwargs):
+        if fail_in == "_adopt" and "__f=" not in args[0]:
+            return orig(*args, **kwargs)  # the batch's own staging write
+        raise CommitConflict("injected")
+
+    monkeypatch.setattr(store, fail_in, fail_after_rewrite)
+    with pytest.raises(CommitConflict):
+        store.merge(spark.createDataFrame([(50, 7), (250, 8)], "id long, v int"), key="id")
+    assert set(os.listdir(store.data_dir)) == base
+    assert not [d for d in os.listdir(store.path) if d.startswith("_staging-")]
 
 
 def test_merge_keeps_a_file_without_key_stats_as_candidate(spark, store, monkeypatch):
