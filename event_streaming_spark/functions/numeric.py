@@ -8,16 +8,11 @@ fixed-point accumulation: make each row's contribution an INTEGER
 (deterministic per-row), sum exactly (order no longer matters), convert
 back once at the end.
 
-Two implementations, one semantics:
-
-- ``exact_sum`` (default): scaled-long — ``sum(round(x·10⁶)::long)/10⁶``.
-  Stays inside whole-stage codegen (long arithmetic), ~2.5× faster than
-  the decimal path.  Domain bound: the scaled sum must fit int64, i.e.
-  Σ|x| < 2⁶³/10⁶ ≈ 9.2·10¹².  True by >6 orders of magnitude for every
-  test SF; per-group money sums at 100 TB can exceed it — use the wide
-  variant there.
-- ``exact_sum_wide``: DECIMAL(30,6) accumulation — unbounded domains
-  (Σ|x| < 10²⁴), pays BigDecimal cost.  Same cross-engine determinism.
+``exact_sum`` is scaled-long — ``sum(round(x·10⁶)::long)/10⁶``.  It
+stays inside whole-stage codegen (long arithmetic), ~2.5× faster than a
+decimal accumulation.  Domain bound: the scaled sum must fit int64, i.e.
+Σ|x| < 2⁶³/10⁶ ≈ 9.2·10¹².  True by >6 orders of magnitude for every
+test SF.
 
 The matching ANSI-SQL fragments for the DuckDB oracle are produced by
 ``sql_exact_sum`` / ``sql_exact_avg`` so the Spark plan and the oracle
@@ -67,17 +62,6 @@ def sql_exact_avg(expr: str, round_to: int = 6) -> str:
         f"round(cast(sum(cast(round(({expr}) * 1e6) as bigint)) as double)"
         f" / 1e6 / count(({expr})), {round_to})"
     )
-
-
-def exact_sum_wide(col: Column | str, round_to: int = 2) -> Column:
-    """Decimal-accumulated variant for domains where the scaled-long sum
-    could exceed int64 (Σ|x| ≥ ~9·10¹²): per-group money sums at extreme
-    scale, unbounded user values."""
-    return F.round(F.sum(_as_col(col).cast("decimal(30,6)")).cast("double"), round_to)
-
-
-def sql_exact_sum_wide(expr: str, round_to: int = 2) -> str:
-    return f"round(cast(sum(cast(({expr}) as decimal(30,6))) as double), {round_to})"
 
 
 # Vector kernels.  Each is built from ONE SQL string through ``F.expr``:

@@ -44,18 +44,15 @@ def _alpha(m: int) -> float:
     return _ALPHA.get(m, 0.7213 / (1 + 1.079 / m))
 
 
-def hll_estimate(df: DataFrame, key: Column, b: int = 6) -> DataFrame:
-    """One-row DataFrame ``(hll_estimate double)`` for ``key``'s
-    distinct count.  ``b`` index bits → m = 2^b registers."""
-    return hll_finalize(hll_registers(df, key, b), b)
-
-
-def hll_registers(df: DataFrame, key: Column, b: int = 6) -> DataFrame:
-    """The sketch STATE: ``(bucket, reg)`` rows, ≤ m of them.  Registers
-    of disjoint inputs merge by per-bucket max (a commutative,
-    idempotent monoid) — union + ``hll_merge`` gives the sketch of the
-    union of the inputs, which is what makes the sketch streamable and
-    partition-parallel."""
+def hll_registers_by(
+    df: DataFrame, group_cols: list[str], key: Column, b: int = 6
+) -> DataFrame:
+    """The sketch STATE: ``(*group_cols, bucket, reg)`` rows, ≤ m = 2^b
+    of them PER GROUP (with no group columns, one global register set).
+    Registers of disjoint inputs merge by per-(group, bucket) max (a
+    commutative, idempotent monoid) — union + :func:`hll_merge_by` gives
+    the sketch of the union of the inputs, which is what makes the
+    sketch streamable and partition-parallel."""
     w_bits = 32 - b
     h = stable_hash32(key.cast("string"))
     bucket = F.shiftright(h, w_bits)
@@ -69,27 +66,29 @@ def hll_registers(df: DataFrame, key: Column, b: int = 6) -> DataFrame:
     return (
         # NULL keys hash to NULL: drop them (COUNT(DISTINCT) semantics —
         # a NULL register row would inflate m_present in the finalizer)
-        df.select(bucket.alias("bucket"), rank.alias("rank"))
+        df.select(*group_cols, bucket.alias("bucket"), rank.alias("rank"))
         .where(F.col("bucket").isNotNull())
-        .groupBy("bucket")
+        .groupBy(*group_cols, "bucket")
         .agg(F.max("rank").alias("reg"))
     )
 
 
-def hll_merge(regs: DataFrame) -> DataFrame:
-    """Fold a union of register sets back to one register set."""
-    return regs.groupBy("bucket").agg(F.max("reg").alias("reg"))
+def hll_merge_by(regs: DataFrame, group_cols: list[str]) -> DataFrame:
+    """Fold a union of register sets back to one register set per group."""
+    return regs.groupBy(*group_cols, "bucket").agg(F.max("reg").alias("reg"))
 
 
-def hll_finalize(regs: DataFrame, b: int = 6) -> DataFrame:
-    """Estimate from a register set (see module doc for the arithmetic)."""
+def hll_finalize_by(regs: DataFrame, group_cols: list[str], b: int = 6) -> DataFrame:
+    """Estimates ``(*group_cols, hll_estimate)`` from register state (see
+    module doc for the arithmetic)."""
     m = 1 << b
     # Σ 2^(-reg) scaled by 2³² is an exact integer sum; empty registers
     # contribute 2^(-0) = 1 each, added as (m - #present)·2³².
-    # coalesce: an EMPTY register set (no input rows) must yield 0.0,
-    # not NULL — with s_scaled = 0 and m_present = 0 the linear-counting
-    # branch below evaluates to m·ln(m/m) = 0 in both engines.
-    acc = regs.agg(
+    # coalesce: with no group columns an EMPTY register set (no input
+    # rows) must yield 0.0, not NULL — with s_scaled = 0 and m_present =
+    # 0 the linear-counting branch below evaluates to m·ln(m/m) = 0 in
+    # both engines.  Every group of a grouped set has a register.
+    acc = regs.groupBy(*group_cols).agg(
         F.coalesce(
             F.sum(
                 F.call_function("shiftleft", F.lit(1).cast("long"), 32 - F.col("reg"))
@@ -98,8 +97,7 @@ def hll_finalize(regs: DataFrame, b: int = 6) -> DataFrame:
         ).alias("s_scaled"),
         F.count(F.lit(1)).alias("m_present"),
     )
-    two32 = float(1 << 32)
-    raw = (_alpha(m) * m * m * two32) / (
+    raw = (_alpha(m) * m * m * float(1 << 32)) / (
         F.col("s_scaled") + (F.lit(m) - F.col("m_present")) * F.lit(1 << 32)
     )
     zeros = F.lit(m) - F.col("m_present")  # registers still at 0
@@ -107,12 +105,14 @@ def hll_finalize(regs: DataFrame, b: int = 6) -> DataFrame:
         (raw <= 2.5 * m) & (zeros > 0),
         F.round(F.lit(float(m)) * F.log(F.lit(float(m)) / zeros), 4),
     ).otherwise(F.round(raw, 4))
-    return acc.select(est.alias("hll_estimate"))
+    return acc.select(*group_cols, est.alias("hll_estimate"))
 
 
 def sql_hll_estimate(key_expr: str, from_clause: str, b: int = 6) -> str:
-    """ANSI/DuckDB twin of :func:`hll_estimate` (one definition, two
-    engines — every constant below mirrors the Column version)."""
+    """ANSI/DuckDB estimate of ``key_expr``'s distinct count: the twin of
+    :func:`hll_finalize_by` over :func:`hll_registers_by` with no group
+    columns (one definition, two engines — every constant below mirrors
+    the Column version)."""
     m = 1 << b
     w_bits = 32 - b
     mask = (1 << w_bits) - 1
@@ -159,7 +159,7 @@ def count_min_table(
     seeds = F.explode(F.array(*[F.lit(i) for i in range(depth)])).alias("d")
     k = key.cast("string").alias("__k")
     return (
-        # NULL keys dropped (as hll_registers does): hashing NULL yields
+        # NULL keys dropped (as hll_registers_by does): hashing NULL yields
         # NULL positions — up to `depth` junk counter rows no lookup can
         # reach (NULL never equi-joins), silently breaking the d·width
         # row bound (r6 review).  count_min_lookup maps NULL to 0.
@@ -294,60 +294,12 @@ SELECT grp, h, val FROM ranked WHERE r <= {k}
 """
 
 
-def hll_registers_by(
-    df: DataFrame, group_cols: list[str], key: Column, b: int = 6
-) -> DataFrame:
-    """Grouped sketch state: ``(*group_cols, bucket, reg)`` — ≤ m rows
-    PER GROUP.  Merges across inputs/batches by per-(group, bucket) max
-    (``hll_merge_by``), exactly like the global registers."""
-    w_bits = 32 - b
-    h = stable_hash32(key.cast("string"))
-    bucket = F.shiftright(h, w_bits)
-    w = h.bitwiseAND(F.lit((1 << w_bits) - 1))
-    rank = F.when(w == 0, F.lit(w_bits + 1)).otherwise(
-        F.lit(w_bits + 1) - F.length(F.bin(w))
-    )
-    return (
-        # NULL keys dropped, as in the global form
-        df.select(*group_cols, bucket.alias("bucket"), rank.alias("rank"))
-        .where(F.col("bucket").isNotNull())
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("rank").alias("reg"))
-    )
-
-
-def hll_merge_by(regs: DataFrame, group_cols: list[str]) -> DataFrame:
-    return regs.groupBy(*group_cols, "bucket").agg(F.max("reg").alias("reg"))
-
-
-def hll_finalize_by(regs: DataFrame, group_cols: list[str], b: int = 6) -> DataFrame:
-    """Per-group estimates ``(*group_cols, hll_estimate)`` from grouped
-    register state; same exact-integer arithmetic as the global form."""
-    m = 1 << b
-    acc = regs.groupBy(*group_cols).agg(
-        F.sum(
-            F.call_function("shiftleft", F.lit(1).cast("long"), 32 - F.col("reg"))
-        ).alias("s_scaled"),
-        F.count(F.lit(1)).alias("m_present"),
-    )
-    raw = (_alpha(m) * m * m * float(1 << 32)) / (
-        F.col("s_scaled") + (F.lit(m) - F.col("m_present")) * F.lit(1 << 32)
-    )
-    zeros = F.lit(m) - F.col("m_present")
-    est = F.when(
-        (raw <= 2.5 * m) & (zeros > 0),
-        F.round(F.lit(float(m)) * F.log(F.lit(float(m)) / zeros), 4),
-    ).otherwise(F.round(raw, 4))
-    return acc.select(*group_cols, est.alias("hll_estimate"))
-
-
 def hll_estimate_by(
     df: DataFrame, group: Column, key: Column, b: int = 6
 ) -> DataFrame:
     """Per-group HLL estimates ``(grp, hll_estimate)`` — the grouped form
     (distinct users per day/type/source).  State: ≤ m registers PER
-    GROUP, one (grp, bucket) shuffle; same exact-integer finalizer as
-    the global sketch."""
+    GROUP, one (grp, bucket) shuffle."""
     regs = hll_registers_by(df.select(group.alias("grp"), key.alias("__k")), ["grp"], F.col("__k"), b)
     return hll_finalize_by(regs, ["grp"], b)
 

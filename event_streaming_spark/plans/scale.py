@@ -35,7 +35,8 @@ from event_streaming_spark.operators.materialize import materialize
 from event_streaming_spark.operators.sketches import (
     count_min_lookup,
     count_min_table,
-    hll_estimate,
+    hll_finalize_by,
+    hll_registers_by,
     sql_count_min_estimates,
     sql_hll_estimate,
 )
@@ -324,7 +325,7 @@ def sketch_hll_distinct_cross_engine(spark: SparkSession, sf_dir: str) -> DataFr
     ev = load(spark, sf_dir, "events")
     out = None
     for key in ("event_id", "user_id"):
-        est = hll_estimate(ev, F.col(key))
+        est = hll_finalize_by(hll_registers_by(ev, [], F.col(key)), [])
         exact = ev.agg(F.countDistinct(key).alias("exact_distinct"))
         branch = exact.crossJoin(est).select(
             F.lit(key).alias("key_name"), "exact_distinct", "hll_estimate"
@@ -754,21 +755,17 @@ FROM ({a}) a, ({b}) b, ({u}) u
 
 @register("sketch_hll_set_intersection", _hll_algebra_oracle(), tags=("sketch", "agg"))
 def sketch_hll_set_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from event_streaming_spark.operators.sketches import (
-        hll_finalize,
-        hll_merge,
-        hll_registers,
-    )
+    from event_streaming_spark.operators.sketches import hll_merge_by
 
     ev = load(spark, sf_dir, "events")
     views = ev.where(F.col("event_type") == "view")
     buys = ev.where(F.col("event_type") == "purchase")
-    ra = hll_registers(views, F.col("user_id"))
-    rb = hll_registers(buys, F.col("user_id"))
-    ea = hll_finalize(ra).select(F.col("hll_estimate").alias("est_view"))
-    eb = hll_finalize(rb).select(F.col("hll_estimate").alias("est_purchase"))
+    ra = hll_registers_by(views, [], F.col("user_id"))
+    rb = hll_registers_by(buys, [], F.col("user_id"))
+    ea = hll_finalize_by(ra, []).select(F.col("hll_estimate").alias("est_view"))
+    eb = hll_finalize_by(rb, []).select(F.col("hll_estimate").alias("est_purchase"))
     # union sketch = register-max merge; NOT a recount of the union rows
-    eu = hll_finalize(hll_merge(ra.union(rb))).select(
+    eu = hll_finalize_by(hll_merge_by(ra.union(rb), []), []).select(
         F.col("hll_estimate").alias("est_union")
     )
     exact = (

@@ -1468,8 +1468,10 @@ def streaming_custom_state_sessionizer(spark: SparkSession, sf_dir: str) -> Data
 # today, live" keeps ≤ m=64 REGISTER rows per window instead — the
 # register update (per-(window, bucket) max) is a plain streaming MAX
 # aggregate, so watermarks/update-mode/checkpointing all apply
-# unchanged.  The drain's final per-(window, bucket) updates are the
-# exact same registers the batch sketch computes (max is idempotent/
+# unchanged.  The registers come from the batch sketch's own builder
+# (operators/sketches.py::hll_registers_by, grouped by window): the
+# drain's final per-(window, bucket) updates are the exact same
+# registers the batch sketch computes (max is idempotent/
 # commutative — arrival order can't change it), so the finalized
 # estimate is bit-equal to the batch HLL AND the oracle can replay it
 # in SQL; the exact distinct rides along for the error audit.
@@ -1531,12 +1533,10 @@ def streaming_hll_distinct_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the topic log through a windowed HLL-register aggregate
     (see section comment); finalize the drained registers and audit
     against the batch exact distinct."""
-    from event_streaming_spark.functions.hashing import stable_hash32
-    from event_streaming_spark.operators.sketches import hll_finalize_by
+    from event_streaming_spark.operators.sketches import hll_finalize_by, hll_registers_by
     from event_streaming_spark.streaming.agency import EventsAgency
 
     b = 6
-    w_bits = 32 - b
     root = tempfile.mkdtemp(prefix="est-hlldrain-")
     fold = UpdateModeFold(["day", "bucket"])
     try:
@@ -1546,22 +1546,12 @@ def streaming_hll_distinct_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         ctx.publish(ev)
 
         def registered(df: DataFrame) -> DataFrame:
-            h = stable_hash32(F.col("user_id").cast("string"))
-            w = h.bitwiseAND(F.lit((1 << w_bits) - 1))
-            rank = F.when(w == 0, F.lit(w_bits + 1)).otherwise(
-                F.lit(w_bits + 1) - F.length(F.bin(w))
+            # the aliased window keeps the watermark's metadata, so
+            # update mode still evicts closed windows from the state
+            windowed = df.withWatermark("ts", "1 hour").select(
+                F.window("ts", "1 day").alias("window"), "user_id"
             )
-            return (
-                df.select(
-                    "ts",
-                    F.shiftright(h, w_bits).alias("bucket"),
-                    rank.alias("rank"),
-                )
-                .where(F.col("bucket").isNotNull())
-                .withWatermark("ts", "1 hour")
-                .groupBy(F.window("ts", "1 day"), "bucket")
-                .agg(F.max("rank").alias("reg"))
-            )
+            return hll_registers_by(windowed, ["window"], F.col("user_id"), b)
 
         def on_notify(c, batch_df: DataFrame, batch_id: int) -> None:
             fold.collect(

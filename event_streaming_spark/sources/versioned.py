@@ -291,6 +291,24 @@ class VersionedStore:
             df.write.parquet(staging)
             return self._adopt(staging, tag)
 
+    @contextlib.contextmanager
+    def _discard_on_failure(self):
+        """A list for the data/ names a writer stages before its commit:
+        if the block raises (a failed rewrite, SchemaConflict,
+        CommitConflict, a retried streaming batch), the listed files are
+        removed instead of waiting for vacuum as orphans.  A hard crash
+        still leaves them; vacuum remains the backstop for that."""
+        staged: list[str] = []
+        try:
+            yield staged
+        except BaseException:
+            for f in staged:
+                try:
+                    os.remove(os.path.join(self.data_dir, f))
+                except OSError:
+                    pass
+            raise
+
     # -- operations -----------------------------------------------------------
     def table_schema(self, version: int | None = None):
         """The snapshot's recorded StructType (schema time travel: an
@@ -348,13 +366,14 @@ class VersionedStore:
     def append(self, df: DataFrame, txn: str | None = None, merge_schema: bool = False) -> int:
         if txn is not None and txn in self.committed_txns():
             return self.latest_version()  # don't even stage replayed data
-        new = self._stage_files(df, "append")
-        return self._commit(
-            lambda prev: prev + new,
-            "append",
-            txn=txn,
-            compute_schema=self._schema_after(df.schema, merge_schema),
-        )
+        with self._discard_on_failure() as new:
+            new += self._stage_files(df, "append")
+            return self._commit(
+                lambda prev: prev + new,
+                "append",
+                txn=txn,
+                compute_schema=self._schema_after(df.schema, merge_schema),
+            )
 
     # -- tags (named immutable refs, Iceberg-style) ---------------------------
     @property
@@ -584,15 +603,16 @@ class VersionedStore:
         key means compacting first).
         """
         keys = self.read().where(predicate).select(key).distinct()
-        staged = self._stage_files(keys, "dkeys")
-        new_entries = [{"file": f, "key": key} for f in staged]
+        with self._discard_on_failure() as staged:
+            staged += self._stage_files(keys, "dkeys")
+            new_entries = [{"file": f, "key": key} for f in staged]
 
-        def compute_deletes(pm: dict) -> list:
-            return pm.get("delete_files", []) + new_entries
+            def compute_deletes(pm: dict) -> list:
+                return pm.get("delete_files", []) + new_entries
 
-        return self._commit(
-            lambda prev: prev, "delete_keys", compute_deletes=compute_deletes
-        )
+            return self._commit(
+                lambda prev: prev, "delete_keys", compute_deletes=compute_deletes
+            )
 
     def delete_where(self, predicate) -> int:
         """Copy-on-write delete: rewrite ONLY the files that contain
@@ -621,21 +641,24 @@ class VersionedStore:
         # metric; an all-deleted rewrite just removes the 0-row file it
         # staged.
         obs = Observation(f"delete-surv-{uuid.uuid4().hex[:8]}")
-        new = self._stage_files(survivors.observe(obs, F.count(F.lit(1)).alias("n")), "delete")
-        if not obs.get["n"]:
-            for f in new:
-                os.remove(os.path.join(self.data_dir, f))
-            new = []
+        with self._discard_on_failure() as new:
+            new += self._stage_files(
+                survivors.observe(obs, F.count(F.lit(1)).alias("n")), "delete"
+            )
+            if not obs.get["n"]:
+                for f in new:
+                    os.remove(os.path.join(self.data_dir, f))
+                new.clear()
 
-        def compute(prev: list[str]) -> list[str]:
-            missing = hit_files - set(prev)
-            if missing:
-                # a concurrent compact/delete replaced files under us —
-                # retrying blindly would resurrect deleted rows
-                raise CommitConflict(f"files vanished mid-delete: {sorted(missing)}")
-            return [f for f in prev if f not in hit_files] + new
+            def compute(prev: list[str]) -> list[str]:
+                missing = hit_files - set(prev)
+                if missing:
+                    # a concurrent compact/delete replaced files under us —
+                    # retrying blindly would resurrect deleted rows
+                    raise CommitConflict(f"files vanished mid-delete: {sorted(missing)}")
+                return [f for f in prev if f not in hit_files] + new
 
-        return self._commit(compute, "delete")
+            return self._commit(compute, "delete")
 
     def _key_range(self, name: str, key: str, kind: type | None) -> tuple | None:
         """:func:`_footer_key_range` of data file ``name``, cached per
@@ -731,14 +754,9 @@ class VersionedStore:
         # copy the rewrite reads, so the update subplan (behind a
         # dropDuplicates shuffle on the streaming path) evaluates exactly
         # ONCE.
-        upd_files = self._stage_files(updates, "merge")
-        # Every file staged below is tracked so a failure AFTER staging
-        # (rewrite error, CommitConflict, retried streaming batch) deletes
-        # its orphans instead of leaving a full batch copy per attempt
-        # for vacuum to find (ADVICE r11).  A hard crash still leaves
-        # orphans — vacuum remains the backstop for that.
-        staged_files = list(upd_files)
-        try:
+        with self._discard_on_failure() as staged_files:
+            upd_files = self._stage_files(updates, "merge")
+            staged_files += upd_files
             if not base_files:
                 # empty base (a new table, the cursor-origin v0): nothing
                 # can match — commit without a rewrite, recording the schema
@@ -768,13 +786,6 @@ class VersionedStore:
                 return [f for f in prev if f not in hit_files] + new
 
             return self._commit(compute, "merge", txn=txn)
-        except BaseException:
-            for f in staged_files:
-                try:
-                    os.remove(os.path.join(self.data_dir, f))
-                except OSError:
-                    pass
-            raise
 
     def compact(
         self,
@@ -819,26 +830,27 @@ class VersionedStore:
             laid_out = df.repartitionByRange(target_files, F.col(sort_by))
         else:
             laid_out = df.coalesce(target_files)
-        new = self._stage_files(laid_out, "compact")
+        with self._discard_on_failure() as new:
+            new += self._stage_files(laid_out, "compact")
 
-        def compute(prev: list[str]) -> list[str]:
-            if set(prev) != old:
-                raise CommitConflict("table changed under compact; rerun")
-            return new
+            def compute(prev: list[str]) -> list[str]:
+                if set(prev) != old:
+                    raise CommitConflict("table changed under compact; rerun")
+                return new
 
-        # The rewrite read through read() → the tombstones OBSERVED at
-        # read time are MATERIALIZED in the new files; clear them from the
-        # child manifest.  But a concurrent delete_keys_where changes
-        # delete_files WITHOUT changing the file list, so the file-set
-        # conflict check above is blind to it — accepting such a parent
-        # would wipe tombstones the rewrite never saw and resurrect their
-        # rows.  Conflict on any tombstone drift instead.
-        def compute_deletes(pm: dict) -> list:
-            if pm.get("delete_files", []) != observed_deletes:
-                raise CommitConflict("tombstones changed under compact; rerun")
-            return []
+            # The rewrite read through read() → the tombstones OBSERVED at
+            # read time are MATERIALIZED in the new files; clear them from
+            # the child manifest.  But a concurrent delete_keys_where
+            # changes delete_files WITHOUT changing the file list, so the
+            # file-set conflict check above is blind to it — accepting such
+            # a parent would wipe tombstones the rewrite never saw and
+            # resurrect their rows.  Conflict on any tombstone drift instead.
+            def compute_deletes(pm: dict) -> list:
+                if pm.get("delete_files", []) != observed_deletes:
+                    raise CommitConflict("tombstones changed under compact; rerun")
+                return []
 
-        return self._commit(compute, "compact", compute_deletes=compute_deletes)
+            return self._commit(compute, "compact", compute_deletes=compute_deletes)
 
     def optimize_small_files(self, min_bytes: int, target_files: int = 1) -> int:
         """Incremental bin-packing OPTIMIZE: rewrite ONLY data files
@@ -884,14 +896,15 @@ class VersionedStore:
             return base
         small_set = set(small)
         df = self.read_files([os.path.join(self.data_dir, f) for f in small], base)
-        new = self._stage_files(df.coalesce(target_files), "optimize")
+        with self._discard_on_failure() as new:
+            new += self._stage_files(df.coalesce(target_files), "optimize")
 
-        def compute(prev: list[str]) -> list[str]:
-            if not small_set <= set(prev):
-                raise CommitConflict("packed files changed under optimize; rerun")
-            return [f for f in prev if f not in small_set] + new
+            def compute(prev: list[str]) -> list[str]:
+                if not small_set <= set(prev):
+                    raise CommitConflict("packed files changed under optimize; rerun")
+                return [f for f in prev if f not in small_set] + new
 
-        return self._commit(compute, "optimize")
+            return self._commit(compute, "optimize")
 
     def rollback(self, to_version: int) -> int:
         """Restore an earlier snapshot as the NEW head (history preserved

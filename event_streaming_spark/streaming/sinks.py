@@ -16,8 +16,8 @@ aggressive filter — alerts are tiny by construction; the collect is a
 bounded driver hop, never a data-plane move.
 
 Every batch-id-idempotent streaming writer in the package
-(``VersionedStore.sink``/``upsert_sink``, ``EventStore.sink`` and the
-three streaming sketches) runs through :func:`ledgered_sink`, and every
+(``VersionedStore.sink``/``upsert_sink`` and ``EventStore.sink``) runs
+through :func:`ledgered_sink`, and every
 per-batch ledger mark is named by :func:`_batch_mark`.  The long-lived
 callbacks (``ledgered_sink``, the agency consumer) are wrapped by
 :func:`compact_batch_errors`.
@@ -102,8 +102,7 @@ def ledgered_sink(
     before the mark replays the batch.  Writers that must be exactly
     once make the commit itself idempotent: the versioned store records
     ``txn_scope`` (the absolute checkpoint path) with the batch id inside
-    the committed manifest, and the sketch logs publish each batch under
-    a batch-id-named directory.  For them the ledger is only a fast-path
+    the committed manifest.  For it the ledger is only a fast-path
     cache.
 
     ``available_now=False`` keeps ONE long-lived micro-batch query

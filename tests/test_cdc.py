@@ -1,68 +1,6 @@
-"""CDC apply + SCD2 history semantics."""
+"""Incremental rollup: partial-aggregate algebra (operators/rollup.py)."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from event_streaming_spark.operators.cdc import OPEN_END, apply_cdc, scd2_apply
-
-
-def test_apply_cdc_upsert_delete(spark):
-    snap = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], "k INT, name STRING, v DOUBLE"
-    )
-    changes = spark.createDataFrame(
-        [
-            (2, "b2", 21.0, 1, "upsert"),   # update key 2 (stale)
-            (2, "b3", 22.0, 2, "upsert"),   # update key 2 (latest wins)
-            (3, None, 0.0, 1, "delete"),    # delete key 3
-            (4, "d", 40.0, 1, "upsert"),    # insert key 4
-        ],
-        "k INT, name STRING, v DOUBLE, seq INT, op STRING",
-    )
-    out = apply_cdc(snap, changes, ["k"], [F.col("seq")])
-    got = {r["k"]: (r["name"], r["v"]) for r in out.collect()}
-    assert got == {1: ("a", 10.0), 2: ("b3", 22.0), 4: ("d", 40.0)}
-
-
-def test_scd2_apply_versions(spark):
-    hist = spark.createDataFrame(
-        [
-            (1, "a", "2024-01-01 00:00:00", OPEN_END),
-            (2, "b", "2024-01-01 00:00:00", OPEN_END),
-            (2, "b0", "2023-01-01 00:00:00", "2024-01-01 00:00:00"),  # old version
-        ],
-        "k INT, attr STRING, valid_from STRING, valid_to STRING",
-    ).select(
-        "k", "attr",
-        F.col("valid_from").cast("timestamp").alias("valid_from"),
-        F.col("valid_to").cast("timestamp").alias("valid_to"),
-    )
-    changes = spark.createDataFrame(
-        [(2, "b2", "2024-06-01 00:00:00")], "k INT, attr STRING, change_ts STRING"
-    ).select("k", "attr", F.col("change_ts").cast("timestamp").alias("change_ts"))
-
-    out = scd2_apply(hist, changes, ["k"])
-    rows = sorted(
-        ((r["k"], r["attr"], str(r["valid_from"]), str(r["valid_to"])) for r in out.collect())
-    )
-    assert rows == sorted([
-        (1, "a", "2024-01-01 00:00:00", str(F.lit(OPEN_END))) if False else
-        (1, "a", "2024-01-01 00:00:00", "9999-12-31 23:59:59"),
-        (2, "b0", "2023-01-01 00:00:00", "2024-01-01 00:00:00"),
-        (2, "b", "2024-01-01 00:00:00", "2024-06-01 00:00:00"),   # closed
-        (2, "b2", "2024-06-01 00:00:00", "9999-12-31 23:59:59"),  # new open
-    ])
-    # exactly one open version per key
-    open_counts = (
-        out.filter(F.col("valid_to") == OPEN_END).groupBy("k").count().collect()
-    )
-    assert all(r["count"] == 1 for r in open_counts)
-
-
-# ---------------------------------------------------------------------------
-# Incremental rollup: partial-aggregate algebra (operators/rollup.py).
-# ---------------------------------------------------------------------------
 
 
 def test_incremental_rollup_merge_invariance(spark):

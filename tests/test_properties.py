@@ -14,7 +14,6 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from event_streaming_spark.operators.cdc import apply_cdc
 from event_streaming_spark.operators.dedup import dedup_keep_latest
 from event_streaming_spark.operators.joins import asof_join
 
@@ -73,34 +72,23 @@ cdc_change = st.tuples(
 )
 
 
-@given(
-    snap=st.lists(st.tuples(st.integers(0, 4), st.integers(-10, 10)),
-                  max_size=5, unique_by=lambda t: t[0]),
-    changes=st.lists(cdc_change, min_size=1, max_size=12),
-)
+@given(changes=st.lists(cdc_change, min_size=1, max_size=12))
 @SETTINGS
-def test_apply_cdc_matches_replay(spark, snap, changes):
-    sdf = (
-        spark.createDataFrame([(k, float(v)) for k, v in snap], "k INT, v DOUBLE")
-        if snap else spark.createDataFrame([], "k INT, v DOUBLE")
-    )
+def test_dedup_keep_latest_matches_cdc_replay(spark, changes):
+    """A change batch reduced to one row per key: the latest change wins,
+    ties on ``seq`` broken by ``tie``, whatever its op."""
     cdata = [(k, seq, i, op, float(v)) for i, (k, seq, op, v) in enumerate(changes)]
     cdf = spark.createDataFrame(cdata, "k INT, seq INT, tie INT, op STRING, v DOUBLE")
-    out = apply_cdc(sdf, cdf, ["k"], [F.col("seq"), F.col("tie")])
-    got = {r["k"]: r["v"] for r in out.select("k", "v").collect()}
+    out = dedup_keep_latest(cdf, ["k"], [F.col("seq"), F.col("tie")])
+    got = {r["k"]: (r["op"], r["v"]) for r in out.collect()}
 
-    # replay reference: latest change per key wins; delete removes
-    state = {k: float(v) for k, v in snap}
+    # replay reference: apply the changes in arrival order, keeping a
+    # key's change only when it is later than the one kept so far
     latest: dict[int, tuple] = {}
     for k, seq, tie, op, v in cdata:
         if k not in latest or (seq, tie) > latest[k][:2]:
             latest[k] = (seq, tie, op, v)
-    for k, (_, _, op, v) in latest.items():
-        if op == "delete":
-            state.pop(k, None)
-        else:
-            state[k] = v
-    assert got == state
+    assert got == {k: (op, v) for k, (_, _, op, v) in latest.items()}
 
 
 # ---------------------------------------------------------------------------

@@ -188,13 +188,19 @@ def test_zorder_rejects_overflow():
 # ---------------------------------------------------------------------------
 
 
+def _hll_estimate(df, key: str) -> float:
+    """The global (ungrouped) HLL estimate of ``df[key]``."""
+    from event_streaming_spark.operators.sketches import hll_finalize_by, hll_registers_by
+
+    regs = hll_registers_by(df, [], F.col(key))
+    return hll_finalize_by(regs, []).collect()[0]["hll_estimate"]
+
+
 def test_hll_estimate_accuracy(spark):
     """m=64 registers → standard error ≈ 1.04/√64 = 13%; assert the
     estimate lands within 3σ of a 10k-key exact count."""
-    from event_streaming_spark.operators.sketches import hll_estimate
-
     df = spark.range(10_000).select(F.col("id"))
-    est = hll_estimate(df, F.col("id")).collect()[0]["hll_estimate"]
+    est = _hll_estimate(df, "id")
     assert abs(est - 10_000) / 10_000 < 0.4
 
 
@@ -217,6 +223,11 @@ def test_count_min_never_underestimates(spark):
     # keeps inflation bounded; median inflation should be modest
     infl = sorted(r["cm_estimate"] / r["t"] for r in joined)
     assert infl[len(infl) // 2] < 3.0
+    # an empty input's table is empty, and every key estimates 0 there
+    empty_cm = count_min_table(spark.createDataFrame([], "k string"), F.col("k"))
+    assert empty_cm.collect() == []
+    keys = spark.createDataFrame([("a",), ("b",)], "kk string")
+    assert {r["cm_estimate"] for r in count_min_lookup(empty_cm, keys, "kk").collect()} == {0}
 
 
 # ---------------------------------------------------------------------------
@@ -310,65 +321,6 @@ def test_pagerank_hub_outranks_leaves_and_singletons_get_base(spark):
     assert r[10] == BASE
 
 
-# ---------------------------------------------------------------------------
-# streaming HLL (mergeable registers)
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_hll_equals_batch_hll(spark, tmp_path):
-    """Three micro-batches of register appends must finalize to the
-    EXACT batch estimate over the union — max-merge is lossless."""
-    from event_streaming_spark.operators.sketches import hll_estimate
-    from event_streaming_spark.streaming.sketches import HllStreamingSketch
-
-    src = str(tmp_path / "src")
-    full = spark.range(9000).select((F.col("id") * 7919 % 100000).alias("k"))
-    # three files → three micro-batches with maxFilesPerTrigger=1
-    for i in range(3):
-        full.filter(F.col("id") % 3 == i).coalesce(1).write.mode("append").parquet(src)
-
-    sk = HllStreamingSketch(spark, str(tmp_path / "regs"), "k")
-    stream = (
-        spark.readStream.schema("k long").option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = sk.sink(stream, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    batch_est = hll_estimate(full, F.col("k")).collect()[0]["hll_estimate"]
-    assert sk.estimate() == batch_est
-
-    def log_rows():
-        return (
-            spark.read.option("recursiveFileLookup", "true").parquet(sk.path).count()
-        )
-
-    # replay: re-running the stream over the same source adds nothing
-    n_log = log_rows()
-    q2 = sk.sink(
-        spark.readStream.schema("k long").option("maxFilesPerTrigger", 1).parquet(src),
-        str(tmp_path / "ckpt"),
-    )
-    q2.awaitTermination(120)
-    assert log_rows() == n_log
-
-    # replay with the LEDGER lost (crash between publish and mark): the
-    # published batch dirs themselves dedupe — still no growth
-    import shutil as _sh
-
-    _sh.rmtree(str(tmp_path / "ckpt"))
-    q3 = sk.sink(
-        spark.readStream.schema("k long").option("maxFilesPerTrigger", 1).parquet(src),
-        str(tmp_path / "ckpt"),
-    )
-    q3.awaitTermination(120)
-    assert log_rows() == n_log
-
-    # compaction folds the log without changing the estimate
-    sk.compact()
-    assert log_rows() <= 64
-    assert sk.estimate() == batch_est
-
-
 def test_bottomk_sample_is_partitioning_invariant(spark):
     from event_streaming_spark.operators.sketches import bottomk_quantile_sample
 
@@ -383,32 +335,6 @@ def test_bottomk_sample_is_partitioning_invariant(spark):
         outs.append(sorted(map(tuple, samp.collect())))
     assert outs[0] == outs[1]
     assert len(outs[0]) == 3 * 32
-
-
-def test_streaming_count_min_equals_batch(spark, tmp_path):
-    from event_streaming_spark.operators.sketches import count_min_lookup, count_min_table
-    from event_streaming_spark.streaming.sketches import CountMinStreamingSketch
-
-    src = str(tmp_path / "cmsrc")
-    full = spark.range(12000).select((F.col("id") % 321).alias("k"))
-    for i in range(3):
-        full.filter(F.col("id") % 3 == i).coalesce(1).write.mode("append").parquet(src)
-
-    sk = CountMinStreamingSketch(spark, str(tmp_path / "cmregs"), "k")
-    q = sk.sink(
-        spark.readStream.schema("k long").option("maxFilesPerTrigger", 1).parquet(src),
-        str(tmp_path / "cmckpt"),
-    )
-    q.awaitTermination(120)
-
-    keys = full.select(F.col("k").cast("string").alias("kk")).distinct()
-    stream_est = {r["kk"]: r["cm_estimate"] for r in sk.lookup(keys, "kk").collect()}
-    batch_cm = count_min_table(full, F.col("k"))
-    batch_est = {
-        r["kk"]: r["cm_estimate"]
-        for r in count_min_lookup(batch_cm, keys, "kk").collect()
-    }
-    assert stream_est == batch_est
 
 
 def test_bloom_semi_join_string_and_null_keys(spark):
@@ -426,82 +352,36 @@ def test_bloom_semi_join_string_and_null_keys(spark):
 def test_hll_ignores_consistency_with_duckdb_on_null_keys(spark, duck):
     """NULL keys hash to NULL in BOTH engines (md5(NULL) = NULL), so the
     sketches stay bit-identical even with nulls present."""
-    from event_streaming_spark.operators.sketches import hll_estimate, sql_hll_estimate
+    from event_streaming_spark.operators.sketches import sql_hll_estimate
 
     df = spark.createDataFrame(
         [(i,) for i in range(200)] + [(None,)] * 5, "k int"
     )
-    spark_est = hll_estimate(df, F.col("k")).collect()[0]["hll_estimate"]
+    spark_est = _hll_estimate(df, "k")
     duck.sql("CREATE OR REPLACE TABLE _hllnull AS SELECT * FROM (VALUES " +
              ", ".join(f"({i})" for i in range(200)) + ", (NULL), (NULL), (NULL), (NULL), (NULL)) t(k)")
     duck_est = duck.sql(sql_hll_estimate("k", "_hllnull")).fetchone()[0]
     assert spark_est == duck_est
 
 
-@pytest.mark.parametrize("sketch", ["HllStreamingSketch", "ThetaStreamingSketch"])
-def test_streaming_hll_compact_crash_recovery(spark, tmp_path, sketch):
-    import os as _os
-    import shutil as _shutil
-
-    from event_streaming_spark.streaming import sketches
-
-    sk = getattr(sketches, sketch)(spark, str(tmp_path / "regs"), "k")
-    # seed the log directly with the rows a batch appends (no stream
-    # needed for this test)
-    from event_streaming_spark.functions.hashing import stable_hash32
-    from event_streaming_spark.operators.sketches import hll_registers
-    from pyspark.sql import functions as _F
-
-    keys = spark.range(5000).select(_F.col("id").alias("k"))
-    if sketch == "HllStreamingSketch":
-        rows = hll_registers(keys, _F.col("k"))
-    else:
-        theta_key = _F.concat(_F.lit("theta|"), _F.col("k").cast("string"))
-        rows = keys.select(stable_hash32(theta_key).alias("h"))
-    rows.write.mode("append").parquet(sk.path)
-    est = sk.estimate()
-    # simulate a crash between compact()'s two renames: live path moved
-    # to ._old, replacement never landed
-    _os.rename(sk.path, sk.path + "._old")
-    assert not _os.path.isdir(sk.path)
-    assert sk.estimate() == est  # _recover restored the log
-    # stale ._compacting garbage is swept as well
-    _shutil.copytree(sk.path, sk.path + "._compacting")
-    assert sk.estimate() == est
-    assert not _os.path.isdir(sk.path + "._compacting")
-
-
-def test_streaming_grouped_hll_windowed_distinct(spark, tmp_path):
-    """Segmented streaming distinct: per-day distinct users accumulated
-    across micro-batches must equal the batch grouped estimate — the
-    'distinct users per window' streaming metric with O(m·days) state."""
+def test_streaming_grouped_hll_windowed_distinct(spark):
+    """Segmented streaming distinct: the per-day estimates drained from
+    the windowed register stream must equal the batch grouped estimate
+    over the same events — the 'distinct users per window' streaming
+    metric with O(m·days) state."""
     from event_streaming_spark.operators.sketches import hll_estimate_by
-    from event_streaming_spark.streaming.sketches import HllStreamingSketch
+    from event_streaming_spark.plans import REGISTRY
+    from event_streaming_spark.plans.catalog import load
+    from tests.conftest import SF_SMALL
 
-    src = str(tmp_path / "gsrc")
-    full = spark.range(6000).select(
-        (F.col("id") % 7).alias("day"), (F.col("id") * 13 % 900).alias("user")
-    )
-    for i in range(3):
-        full.filter(F.col("id") % 3 == i).coalesce(1).write.mode("append").parquet(src)
-
-    sk = HllStreamingSketch(
-        spark, str(tmp_path / "gregs"), "user", group_cols=["day"]
-    )
-    q = sk.sink(
-        spark.readStream.schema("day long, user long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src),
-        str(tmp_path / "gck"),
-    )
-    q.awaitTermination(120)
-
-    streamed = {r["day"]: r["hll_estimate"] for r in sk.estimates().collect()}
+    drained = REGISTRY["streaming_hll_distinct_drain"].fn(spark, SF_SMALL)
+    streamed = {r["day"]: r["hll_users"] for r in drained.collect()}
+    ev = load(spark, SF_SMALL, "events")
     batch = {
         r["grp"]: r["hll_estimate"]
-        for r in hll_estimate_by(full, F.col("day"), F.col("user")).collect()
+        for r in hll_estimate_by(ev, F.to_date("ts"), F.col("user_id")).collect()
     }
-    assert streamed == batch and len(streamed) == 7
+    assert streamed == batch and len(streamed) > 1
 
 
 def test_bloom_rejects_ragged_bit_count(spark):
@@ -511,104 +391,24 @@ def test_bloom_rejects_ragged_bit_count(spark):
         )
 
 
-def test_streaming_count_min_replay_with_lost_ledger_does_not_inflate(spark, tmp_path):
-    """CM merge is ADDITION, so a double-appended batch would corrupt
-    counts.  The publish rename doubles as the idempotency mark, so even
-    a lost ledger (crash between publish and mark) cannot double-count."""
-    import shutil as _sh
-
-    from event_streaming_spark.operators.sketches import count_min_lookup, count_min_table
-    from event_streaming_spark.streaming.sketches import CountMinStreamingSketch
-
-    src = str(tmp_path / "cmr-src")
-    full = spark.range(6000).select((F.col("id") % 211).alias("k"))
-    for i in range(2):
-        full.filter(F.col("id") % 2 == i).coalesce(1).write.mode("append").parquet(src)
-    sk = CountMinStreamingSketch(spark, str(tmp_path / "cmr-log"), "k")
-    ckpt = str(tmp_path / "cmr-ckpt")
-
-    def run():
-        q = sk.sink(
-            spark.readStream.schema("k long").option("maxFilesPerTrigger", 1).parquet(src),
-            ckpt,
-        )
-        q.awaitTermination(120)
-
-    run()
-    _sh.rmtree(ckpt)  # ledger gone; batch ids 0,1 replay from scratch
-    run()
-    keys = full.select(F.col("k").cast("string").alias("kk")).distinct()
-    stream_est = {r["kk"]: r["cm_estimate"] for r in sk.lookup(keys, "kk").collect()}
-    batch_est = {
-        r["kk"]: r["cm_estimate"]
-        for r in count_min_lookup(count_min_table(full, F.col("k")), keys, "kk").collect()
-    }
-    assert stream_est == batch_est  # exactly the batch sketch — no inflation
-
-
 def test_hll_finalize_empty_input_is_zero(spark, duck):
-    from event_streaming_spark.operators.sketches import (
-        hll_estimate,
-        hll_finalize,
-        hll_registers,
-        sql_hll_estimate,
-    )
+    """No input rows, no typed rows at all, and only NULL keys (an
+    all-NULL batch): each gives an empty register set, and the
+    ungrouped finalizer turns that into 0.0, not NULL."""
+    from event_streaming_spark.operators.sketches import sql_hll_estimate
 
-    empty = spark.range(0).select(F.col("id").alias("k"))
-    assert hll_estimate(empty, F.col("k")).collect()[0]["hll_estimate"] == 0.0
-    # finalize over an empty register set directly
-    regs = hll_registers(empty, F.col("k"))
-    assert hll_finalize(regs).collect()[0]["hll_estimate"] == 0.0
+    empties = [
+        spark.range(0).select(F.col("id").alias("k")),
+        spark.createDataFrame([], "k string"),
+        spark.createDataFrame([(None,)], "k string"),
+    ]
+    for empty in empties:
+        assert _hll_estimate(empty, "k") == 0.0
     # SQL twin agrees
     duck.sql("CREATE OR REPLACE TABLE _hllempty (k BIGINT)")
     assert duck.sql(sql_hll_estimate("k", "_hllempty")).fetchone()[0] == 0.0
-
-
-def test_streaming_hll_estimate_on_empty_log_batches(spark, tmp_path):
-    """A stream whose batches contain only NULL keys produces registers
-    for nothing; estimate() must come back 0.0, not crash on NULL."""
-    from event_streaming_spark.operators.sketches import hll_registers
-    from event_streaming_spark.streaming.sketches import HllStreamingSketch
-
-    sk = HllStreamingSketch(spark, str(tmp_path / "regs0"), "k")
-    # seed an EMPTY register file (what an all-NULL batch appends)
-    hll_registers(
-        spark.createDataFrame([(None,)], "k string"), F.col("k")
-    ).write.mode("append").parquet(sk.path)
-    assert sk.estimate() == 0.0
-
-
-@pytest.mark.parametrize(
-    "sketch", ["HllStreamingSketch", "CountMinStreamingSketch", "ThetaStreamingSketch"]
-)
-def test_streaming_sketch_with_no_published_batch_reads_as_empty(spark, tmp_path, sketch):
-    """A log no batch has published to (a drain that saw no input; a
-    crash before the first publish left only the directory) reads as the
-    batch sketch over zero rows, not PATH_NOT_FOUND."""
-    import os as _os
-
-    from event_streaming_spark.operators.sketches import (
-        count_min_table,
-        hll_finalize,
-        hll_registers,
-    )
-    from event_streaming_spark.streaming import sketches
-
-    sk = getattr(sketches, sketch)(spark, str(tmp_path / "log"), "k")
-    none = spark.createDataFrame([], "k string")
-    for _ in ("no directory", "empty directory"):
-        if sketch == "HllStreamingSketch":
-            assert sk.registers().collect() == []
-            empty_est = hll_finalize(hll_registers(none, F.col("k"))).collect()[0][0]
-            assert sk.estimate() == float(empty_est)
-        elif sketch == "CountMinStreamingSketch":
-            assert sk.table().collect() == count_min_table(none, F.col("k")).collect() == []
-            keys = spark.createDataFrame([("a",), ("b",)], "k string")
-            assert {r["cm_estimate"] for r in sk.lookup(keys, "k").collect()} == {0}
-        else:
-            assert sk.hashes().collect() == []
-            assert sk.estimate() == 0
-        _os.makedirs(sk.path, exist_ok=True)
+    duck.sql("INSERT INTO _hllempty VALUES (NULL), (NULL)")
+    assert duck.sql(sql_hll_estimate("k", "_hllempty")).fetchone()[0] == 0.0
 
 
 def test_bloom_semi_join_mixed_integral_key_dtypes(spark):
@@ -732,64 +532,3 @@ def test_topk_per_group_limits_each_map_partition_before_the_group_shuffle(spark
     below = lines[hashed[0] + 1]
     assert "WindowGroupLimit [g#" in below and below.rstrip().endswith("Partial"), plan
 
-
-def test_streaming_theta_equals_batch_and_set_ops(spark, tmp_path):
-    """The streamed bottom-k state must reproduce the exact distinct
-    count while unsaturated, and two sketches must answer set ops."""
-    from event_streaming_spark.streaming.sketches import ThetaStreamingSketch
-
-    src_a, src_b = str(tmp_path / "a"), str(tmp_path / "b")
-    # |A|=200 (0..199), |B|=150 (100..249) → |A∩B|=100, |A∪B|=250
-    a = spark.range(0, 200).select(F.col("id").alias("k"))
-    b = spark.range(100, 250).select(F.col("id").alias("k"))
-    for i in range(2):  # two micro-batches each
-        a.filter(F.col("id") % 2 == i).coalesce(1).write.mode("append").parquet(src_a)
-        b.filter(F.col("id") % 2 == i).coalesce(1).write.mode("append").parquet(src_b)
-
-    ska = ThetaStreamingSketch(spark, str(tmp_path / "ska"), "k")
-    skb = ThetaStreamingSketch(spark, str(tmp_path / "skb"), "k")
-    for sk, src, ck in ((ska, src_a, "cka"), (skb, src_b, "ckb")):
-        stream = (
-            spark.readStream.schema("k long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        sk.sink(stream, str(tmp_path / ck)).awaitTermination(120)
-
-    assert ska.estimate() == 200   # < k=256 → exact
-    assert skb.estimate() == 150
-    ops = ska.set_ops(skb)
-    assert ops == {
-        "est_a": 200,
-        "est_b": 150,
-        "est_union": 250,
-        "est_intersection": 100,
-    }
-    # compact folds the log to <= k rows without changing anything
-    ska.compact()
-    assert ska.estimate() == 200
-    assert ska.set_ops(skb)["est_intersection"] == 100
-
-    # replay: re-running over the same source must not change state
-    stream = (
-        spark.readStream.schema("k long").option("maxFilesPerTrigger", 1).parquet(src_a)
-    )
-    ska.sink(stream, str(tmp_path / "cka2")).awaitTermination(120)
-    assert ska.estimate() == 200
-
-
-def test_streaming_theta_saturated_accuracy(spark, tmp_path):
-    """Past k the estimator is approximate: 3-RSE accuracy bound."""
-    from event_streaming_spark.streaming.sketches import ThetaStreamingSketch
-
-    src = str(tmp_path / "src")
-    spark.range(5000).select((F.col("id") * 104729 % 1000000).alias("k")).coalesce(
-        2
-    ).write.parquet(src)
-    sk = ThetaStreamingSketch(spark, str(tmp_path / "sk"), "k", k=256)
-    stream = (
-        spark.readStream.schema("k long").option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    sk.sink(stream, str(tmp_path / "ck")).awaitTermination(120)
-    est = sk.estimate()
-    assert abs(est - 5000) / 5000 < 0.20

@@ -402,43 +402,6 @@ def test_store_compaction_crash_recovery(spark, tmp_path):
     assert not os.path.exists(old) and not os.path.exists(tmp)
 
 
-def test_streaming_metrics_listener(spark, tmp_path):
-    from event_streaming_spark.streaming.agency import EventsAgency
-    from event_streaming_spark.streaming.metrics import ProgressCollector
-
-    collector = ProgressCollector().attach(spark)
-    try:
-        agency = EventsAgency(spark, root=str(tmp_path / "magency"))
-        ctx = agency.topic("b", "metrics")
-        ctx.publish({"event_id": 1, "ts": "2024-01-01T00:00:00", "user_id": 1,
-                     "event_type": "click", "value": 1.0, "props": "{}"})
-        ctx.consume(lambda c, df, i: df.count(), once=True)
-        agency.close()
-        import time
-        for _ in range(40):  # listener events are async
-            if collector.progress and collector.terminated:
-                break
-            time.sleep(0.25)
-        assert collector.started
-        assert any(p["num_input_rows"] == 1 for p in collector.progress)
-        mdf = collector.as_dataframe(spark)
-        assert mdf.filter(F.col("num_input_rows") > 0).count() >= 1
-        # the whole micro-batch phase map is kept, not just triggerExecution
-        assert "addBatch" in next(
-            p["duration_ms"] for p in collector.progress if p["num_input_rows"] == 1
-        )
-        assert {"duration_ms", "state_commit_ms", "state_memory_bytes",
-                "state_rows_total"} <= set(mdf.columns)
-        assert (
-            mdf.filter(F.col("num_input_rows") > 0)
-            .where(F.col("duration_ms")["addBatch"].isNotNull())
-            .count()
-            >= 1
-        )
-    finally:
-        collector.detach(spark)
-
-
 def test_csv_json_text_sources_roundtrip(spark, tmp_path):
     """SURVEY §2.4 scan row: csv/json/text sources with explicit schemas."""
     ev = load(spark, SF_SMALL, "events").limit(100)
@@ -497,24 +460,6 @@ def test_orc_roundtrip(spark, tmp_path):
     back = spark.read.orc(path)
     assert back.count() == 50
     assert dict(back.dtypes)["value"] == "double"
-
-
-def test_sql_front_door(spark):
-    from event_streaming_spark.sql import open_catalog, sql
-
-    views = open_catalog(spark, SF_SMALL)
-    assert "lineitem" in views and "events" in views
-    out = sql(spark, """
-        SELECT l_returnflag, count(*) AS n
-        FROM lineitem WHERE l_quantity > 25 GROUP BY l_returnflag
-    """).collect()
-    assert sum(r["n"] for r in out) > 0
-    # portable oracle SQL runs verbatim on the engine
-    exists_q = """
-        SELECT count(*) AS n FROM customer c
-        WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-    """
-    assert sql(spark, exists_q).collect()[0]["n"] > 0
 
 
 def test_kafka_backend_error_message(spark, tmp_path):

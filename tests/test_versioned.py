@@ -282,7 +282,7 @@ def test_cdc_to_ivm_to_sketch_end_to_end(spark, store, tmp_path):
     (== full recompute at every version) → HLL sketch over the final
     table (== exact distinct, small domain)."""
     from event_streaming_spark.operators.ivm import apply_group_delta, count_sum_view
-    from event_streaming_spark.operators.sketches import hll_estimate
+    from event_streaming_spark.operators.sketches import hll_finalize_by, hll_registers_by
 
     src = str(tmp_path / "cdc")
     spark.createDataFrame(
@@ -312,7 +312,8 @@ def test_cdc_to_ivm_to_sketch_end_to_end(spark, store, tmp_path):
 
     # sketch the final table: 80 keys ≪ 2.5·m → linear-counting branch,
     # which is EXACT while any register stays empty
-    est = hll_estimate(store.read(head), F.col("id")).collect()[0]["hll_estimate"]
+    regs = hll_registers_by(store.read(head), [], F.col("id"))
+    est = hll_finalize_by(regs, []).collect()[0]["hll_estimate"]
     assert abs(est - 80) / 80 < 0.25
 
 
@@ -1374,8 +1375,29 @@ def test_merge_keeps_a_spanned_file_without_batch_keys_by_name(spark, store):
     assert {r["id"]: r["v"] for r in store.read(v).collect()} == want
 
 
-@pytest.mark.parametrize("fail_in", ["_commit", "_adopt"])
-def test_failed_merge_leaves_only_the_base_files(spark, store, monkeypatch, fail_in):
+_WRITES = {
+    "merge": lambda spark, store: store.merge(
+        spark.createDataFrame([(50, 7), (250, 8)], "id long, v int"), key="id"
+    ),
+    "append": lambda spark, store: store.append(spark.range(300, 310).select("id", F.lit(3).alias("v"))),
+    "delete_keys_where": lambda spark, store: store.delete_keys_where("id < 10", "id"),
+    "delete_where": lambda spark, store: store.delete_where("id < 10"),
+    "compact": lambda spark, store: store.compact(),
+    "optimize_small_files": lambda spark, store: store.optimize_small_files(1 << 30),
+}
+
+
+@pytest.mark.parametrize(
+    "write, fail_in",
+    [
+        pytest.param("merge", "_commit", id="_commit"),
+        pytest.param("merge", "_adopt", id="_adopt"),
+        *(pytest.param(w, "_commit", id=w) for w in _WRITES if w != "merge"),
+    ],
+)
+def test_failed_merge_leaves_only_the_base_files(spark, store, monkeypatch, write, fail_in):
+    """Every writer that stages files into data/ removes them when its
+    commit (or, for merge, the rewrite of the hit files) raises."""
     _three_range_files(spark, store)
     base = set(store._manifest(store.latest_version())["files"])
     orig = getattr(store, fail_in)
@@ -1387,7 +1409,7 @@ def test_failed_merge_leaves_only_the_base_files(spark, store, monkeypatch, fail
 
     monkeypatch.setattr(store, fail_in, fail_after_rewrite)
     with pytest.raises(CommitConflict):
-        store.merge(spark.createDataFrame([(50, 7), (250, 8)], "id long, v int"), key="id")
+        _WRITES[write](spark, store)
     assert set(os.listdir(store.data_dir)) == base
     assert not [d for d in os.listdir(store.path) if d.startswith("_staging-")]
 
