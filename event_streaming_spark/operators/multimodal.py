@@ -11,15 +11,21 @@ Codec libraries (Pillow/librosa/ffmpeg) are NOT in this container, so
 the kernels are stdlib+numpy: REAL raster decode for PPM, BMP, PNG
 (zlib inflate + all five filters), baseline JPEG (Huffman + IDCT,
 operators/jpegcodec.py) and GIF (LZW, operators/gifcodec.py), REAL
-signal features for PCM WAV.  Formats
+signal features for PCM and G.711 WAV.  Formats
 that genuinely need an external codec (non-baseline JPEG, H.264)
 degrade to header metadata where possible and otherwise raise
 NotImplementedError — graded capability gates, never silent fakes.
-``select_image_kernel`` auto-upgrades to Pillow when it imports.
+
+One decode path per media kind: ``_decode_raster`` holds the per-format
+image decoders behind both ``decode_pixels`` and the metadata kernel
+``decode_image_meta``; ``_read_wav`` is the one RIFF/WAVE reader behind
+every audio kernel; ``_map_media`` is the one per-row degrade policy
+(-2 undecodable, -3 corrupt) of the four ``extract_*`` stages.
 """
 
 from __future__ import annotations
 
+import functools
 import struct
 from collections.abc import Callable, Iterator
 
@@ -82,126 +88,42 @@ def webp_dimensions(content: bytes) -> tuple[int, int]:
     raise ValueError(f"unrecognized WebP chunk {fourcc!r}")
 
 
-def decode_image_uncompressed(content: bytes) -> tuple[str, int, int, int]:
-    """REAL pixel decode for uncompressed formats, numpy only.
-
-    - PPM (P6, maxval ≤255): full raster decode; checksum64 = exact sum of
-      all pixel bytes (a stand-in pixel feature: replace with any
-      vectorized stat).
-    - BMP (24bpp uncompressed BI_RGB): raster rows are bottom-up and
-      4-byte padded; decode honors both.
-
-    Raises NotImplementedError for anything needing a codec library.
-    """
-    import numpy as np
-
-    if content[:2] == b"P6":
-        # header: "P6" <ws> width <ws> height <ws> maxval <single-ws> raster
-        parts, idx = [], 2
-        while len(parts) < 3:
-            while idx < len(content) and content[idx : idx + 1].isspace():
-                idx += 1
-            if content[idx : idx + 1] == b"#":  # comment line
-                idx = content.index(b"\n", idx) + 1
-                continue
-            start = idx
-            while idx < len(content) and not content[idx : idx + 1].isspace():
-                idx += 1
-            parts.append(int(content[start:idx]))
-        idx += 1  # the single whitespace before the raster
-        w, h, maxval = parts
-        if maxval > 255:
-            raise NotImplementedError("16-bit PPM not supported")
-        raster = np.frombuffer(content, dtype=np.uint8, count=w * h * 3, offset=idx)
-        return "ppm", w, h, int(raster.sum())
-    if content[:2] == b"BM" and len(content) >= 54:
-        data_off = struct.unpack("<I", content[10:14])[0]
-        w, h = struct.unpack("<ii", content[18:26])
-        bpp = struct.unpack("<H", content[28:30])[0]
-        compression = struct.unpack("<I", content[30:34])[0]
-        if bpp != 24 or compression != 0:
-            raise NotImplementedError(f"BMP bpp={bpp} compression={compression} needs a codec")
-        row_bytes = (w * 3 + 3) & ~3  # rows padded to 4 bytes
-        rows = np.frombuffer(
-            content, dtype=np.uint8, count=row_bytes * abs(h), offset=data_off
-        ).reshape(abs(h), row_bytes)[:, : w * 3]
-        return "bmp", int(w), abs(int(h)), int(rows.sum())
-    raise NotImplementedError("not an uncompressed format this kernel decodes")
-
-
-def decode_image_stub(content: bytes) -> tuple[str, int, int, int]:
-    """Deterministic fallback kernel: REAL decode for uncompressed formats
-    (PPM/BMP, above), real header parse for PNG dims, and a byte checksum
-    standing in for pixel features elsewhere.
-
-    Compressed pixel decode for riff payloads requires a codec
-    library — raise NotImplementedError past the header (baseline JPEG
-    and GIF have their own stdlib kernels, operators/jpegcodec.py and
-    gifcodec.py; this stub is the LAST-resort fallback below them);
-    see ``select_image_kernel`` for the Pillow auto-upgrade.
-    """
-    fmt = sniff_format(content)
-    if fmt in ("ppm", "bmp"):
-        return decode_image_uncompressed(content)
-    checksum = sum(content[:4096]) + len(content)
-    if fmt == "png" and len(content) >= 24:
-        # IHDR immediately follows the 8-byte signature: width/height at 16..24
-        w, h = struct.unpack(">II", content[16:24])
-        return fmt, int(w), int(h), checksum
-    if fmt == "jpeg" and len(content) >= 10:
-        try:
-            from event_streaming_spark.operators.jpegcodec import jpeg_dimensions
-
-            w, h = jpeg_dimensions(content)
-            return fmt, int(w), int(h), checksum
-        except Exception:
-            pass
-    if fmt == "gif" and len(content) >= 13:
-        try:
-            from event_streaming_spark.operators.gifcodec import gif_dimensions
-
-            w, h = gif_dimensions(content)
-            return fmt, int(w), int(h), checksum
-        except Exception:
-            pass
-    if fmt == "webp":
-        try:
-            w, h = webp_dimensions(content)
-            return fmt, int(w), int(h), checksum
-        except Exception:
-            pass
-    if fmt in ("jpeg", "gif", "riff", "webp"):
-        raise NotImplementedError(
-            f"{fmt} pixel decode needs a codec library (Pillow/ffmpeg) — "
-            "not available in this environment; plug a real kernel here"
-        )
-    return fmt, -1, -1, checksum
-
-
-def decode_image_pillow(content: bytes) -> tuple[str, int, int, int]:
-    """Full decode via Pillow (only reachable when PIL imports): true
-    format/dims plus a grayscale pixel-sum feature."""
-    import io
-
-    from PIL import Image
-
-    with Image.open(io.BytesIO(content)) as im:
-        fmt = (im.format or "unknown").lower()
-        w, h = im.size
-        pixels = im.convert("L").tobytes()
-        return fmt, int(w), int(h), int(sum(pixels))
-
-
 # ---------------------------------------------------------------------------
-# REAL PNG decode: like PCM WAV, a baseline PNG needs no codec library —
-# DEFLATE lives in stdlib zlib and filter reconstruction is bytewise
-# arithmetic.  This decodes the full raster for 8-bit gray / gray+alpha /
-# RGB / RGBA / palette, non-interlaced images (the overwhelming majority
-# of real-world PNGs), honoring all five scanline filters incl. Paeth.
-# checksum64 = exact sum of reconstructed pixel bytes (palette expanded),
-# the same pixel feature the PPM/BMP kernel reports.  16-bit and Adam7
-# raise NotImplementedError — graded degradation, same as non-PCM WAV.
+# Image decode: one raster decoder per format, stdlib + numpy only.  PPM
+# (P6, maxval ≤255) and 24bpp BI_RGB BMP are raw rasters; a baseline PNG
+# needs no codec library either — DEFLATE lives in stdlib zlib and filter
+# reconstruction is bytewise arithmetic (8-bit gray / gray+alpha / RGB /
+# RGBA / palette, non-interlaced, all five scanline filters incl. Paeth);
+# JPEG and GIF decode in operators/jpegcodec.py and gifcodec.py.  Each
+# returns the raster at its native channels: ``decode_pixels`` converts
+# it to RGB, and the metadata kernel sums it (checksum64 = exact sum of
+# pixel bytes, palette expanded, alpha counted, BMP row padding not).
+# 16-bit and Adam7 raise NotImplementedError — graded degradation, same
+# as non-PCM WAV.
 # ---------------------------------------------------------------------------
+
+
+def _ppm_header(content: bytes, offset: int = 0) -> tuple[int, int, int]:
+    """Parse one P6 header at ``offset`` → (w, h, raster_offset)."""
+    if content[offset : offset + 2] != b"P6":
+        raise NotImplementedError("not a P6 PPM frame")
+    # "P6" <ws> width <ws> height <ws> maxval <single-ws> raster
+    parts, idx = [], offset + 2
+    while len(parts) < 3:
+        while idx < len(content) and content[idx : idx + 1].isspace():
+            idx += 1
+        if content[idx : idx + 1] == b"#":  # comment line
+            idx = content.index(b"\n", idx) + 1
+            continue
+        start = idx
+        while idx < len(content) and not content[idx : idx + 1].isspace():
+            idx += 1
+        parts.append(int(content[start:idx]))
+    w, h, maxval = parts
+    if maxval > 255:
+        raise NotImplementedError("16-bit PPM not supported")
+    return w, h, idx + 1  # single whitespace before raster
+
 
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
@@ -263,51 +185,154 @@ def _png_defilter(raw: bytes, height: int, stride: int, bpp: int):
     return out
 
 
-def decode_png(content: bytes) -> tuple[str, int, int, int]:
-    """Full-raster PNG decode, stdlib zlib + numpy only.
+def _decode_raster(content: bytes, fmt: str):
+    """Full raster of a still image → (width, height, uint8 ndarray (h, w,
+    channels)) at its native channels: PPM and BMP RGB, PNG gray (1) /
+    gray+alpha (2) / RGB (3) / RGBA (4) with palettes expanded to RGB,
+    JPEG and GIF RGB.  Width and height are the header's.
 
-    Returns ("png", width, height, pixel_byte_sum) with palette images
-    expanded through PLTE so the checksum is over true RGB bytes."""
-    import zlib
-
+    Raises NotImplementedError for anything needing a codec library."""
     import numpy as np
 
-    if content[:8] != b"\x89PNG\r\n\x1a\n":
-        raise NotImplementedError("not a PNG")
-    ihdr = plte = None
-    idat = bytearray()
-    for ctype, data in _png_chunks(content):
-        if ctype == "IHDR":
-            ihdr = data
-        elif ctype == "PLTE":
-            plte = data
-        elif ctype == "IDAT":
-            idat.extend(data)
-    if ihdr is None or not idat:
-        raise NotImplementedError("missing IHDR/IDAT")
-    w, h, depth, color, _comp, _filt, interlace = struct.unpack(">IIBBBBB", ihdr)
-    if depth != 8 or interlace != 0 or color not in _PNG_CHANNELS:
-        raise NotImplementedError(
-            f"PNG depth={depth} color={color} interlace={interlace} beyond this kernel"
-        )
-    ch = _PNG_CHANNELS[color]
-    stride = w * ch
-    raw = zlib.decompress(bytes(idat))
-    if len(raw) != h * (stride + 1):
-        raise NotImplementedError("raster size mismatch (corrupt or exotic PNG)")
-    px = _png_defilter(raw, h, stride, bpp=ch)
-    if color == 3:  # palette indices → RGB triples
+    if fmt == "ppm":
+        w, h, off = _ppm_header(content)
+        raster = np.frombuffer(content, dtype=np.uint8, count=w * h * 3, offset=off)
+        return w, h, raster.reshape(h, w, 3)
+    if fmt == "bmp":
+        data_off = struct.unpack("<I", content[10:14])[0]
+        w, h = struct.unpack("<ii", content[18:26])
+        bpp = struct.unpack("<H", content[28:30])[0]
+        compression = struct.unpack("<I", content[30:34])[0]
+        if bpp != 24 or compression != 0:
+            raise NotImplementedError(f"BMP bpp={bpp} compression={compression} needs a codec")
+        row_bytes = (w * 3 + 3) & ~3  # rows padded to 4 bytes
+        rows = np.frombuffer(
+            content, dtype=np.uint8, count=row_bytes * abs(h), offset=data_off
+        ).reshape(abs(h), row_bytes)[:, : w * 3].reshape(abs(h), w, 3)
+        if h > 0:  # bottom-up storage
+            rows = rows[::-1]
+        return w, abs(h), rows[:, :, ::-1]  # BGR → RGB
+    if fmt == "png":
+        import zlib
+
+        ihdr = plte = None
+        idat = bytearray()
+        for ctype, data in _png_chunks(content):
+            if ctype == "IHDR":
+                ihdr = data
+            elif ctype == "PLTE":
+                plte = data
+            elif ctype == "IDAT":
+                idat.extend(data)
+        if ihdr is None or not idat:
+            raise NotImplementedError("missing IHDR/IDAT")
+        w, h, depth, color, _comp, _filt, interlace = struct.unpack(">IIBBBBB", ihdr)
+        if depth != 8 or interlace != 0 or color not in _PNG_CHANNELS:
+            raise NotImplementedError(
+                f"PNG depth={depth} color={color} interlace={interlace} beyond this kernel"
+            )
+        ch = _PNG_CHANNELS[color]
+        raw = zlib.decompress(bytes(idat))
+        if len(raw) != h * (w * ch + 1):
+            raise NotImplementedError("raster size mismatch (corrupt or exotic PNG)")
+        px = _png_defilter(raw, h, w * ch, bpp=ch).reshape(h, w, ch)
+        if color != 3:
+            return w, h, px
         if plte is None:
             raise NotImplementedError("palette PNG without PLTE")
-        pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
-        px = pal[px.reshape(-1)]
-    return "png", int(w), int(h), int(px.astype(np.int64).sum())
+        return w, h, np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)[px[:, :, 0]]
+    if fmt in ("jpeg", "gif"):
+        from event_streaming_spark.operators.gifcodec import decode_gif
+        from event_streaming_spark.operators.jpegcodec import decode_jpeg
+
+        px = (decode_jpeg if fmt == "jpeg" else decode_gif)(content)
+        return px.shape[1], px.shape[0], px
+    raise NotImplementedError(f"no pixel kernel for format {fmt!r}")
+
+
+def decode_pixels(content: bytes):
+    """Full raster → uint8 ndarray (h, w, 3), for PPM / BMP / PNG / JPEG /
+    GIF and the first frame of an MJPEG AVI.
+
+    Alpha channels are dropped, grayscale is expanded, palettes resolved,
+    BMP's bottom-up BGR rows flipped/reordered, JPEG entropy-decoded by
+    the stdlib+numpy baseline codec — callers always get RGB.
+    """
+    import numpy as np
+
+    fmt = sniff_format(content)
+    if fmt == "riff" and content[8:12] == b"AVI ":
+        # video still: first MJPEG frame (same first-frame semantics as
+        # GIF); non-MJPEG codecs raise through sample_mjpeg_frames' gate
+        from event_streaming_spark.operators.avidemux import avi_info, iter_video_frames
+        from event_streaming_spark.operators.jpegcodec import decode_jpeg
+
+        if avi_info(content)["video_codec"] not in ("mjpg", "mjpeg"):
+            raise NotImplementedError("AVI still-frame decode needs MJPEG")
+        for _idx, off, size in iter_video_frames(content):
+            return decode_jpeg(content[off : off + size])
+        raise NotImplementedError("AVI with no video frames")
+    _w, _h, px = _decode_raster(content, fmt)
+    if px.shape[2] < 3:  # gray / gray+alpha: the gray channel thrice
+        px = np.repeat(px[:, :, :1], 3, axis=2)
+    return px[:, :, :3].copy()
+
+
+def decode_image_meta(content: bytes) -> tuple[str, int, int, int]:
+    """The image metadata kernel → (format, width, height, checksum64).
+
+    Decodable rasters report true dims and their pixel sum.  A PNG, JPEG
+    or GIF that does not decode (16-bit, interlaced, progressive-only
+    features, corrupt data) degrades to header dims (PNG IHDR, JPEG SOF,
+    GIF screen; WebP from its VP8/VP8L/VP8X header) plus a byte checksum
+    instead of a sentinel; without header dims jpeg/gif/riff/webp raise
+    NotImplementedError, and other bytes read (format, -1, -1, checksum).
+    PPM/BMP errors propagate: there is no header fallback for them.
+    """
+    import numpy as np
+
+    fmt = sniff_format(content)
+    if fmt == "bmp" and len(content) < 54:  # no full header: a codec gap here
+        raise NotImplementedError("BMP shorter than its 54-byte header")
+    try:
+        w, h, px = _decode_raster(content, fmt)
+        return fmt, w, h, int(px.sum(dtype=np.int64))
+    except Exception:
+        if fmt in ("ppm", "bmp"):
+            raise
+    checksum = sum(content[:4096]) + len(content)
+    try:
+        if fmt == "png" and len(content) >= 24:
+            # IHDR immediately follows the 8-byte signature: width/height at 16..24
+            dims = struct.unpack(">II", content[16:24])
+        elif fmt == "jpeg" and len(content) >= 10:
+            from event_streaming_spark.operators.jpegcodec import jpeg_dimensions
+
+            dims = jpeg_dimensions(content)
+        elif fmt == "gif" and len(content) >= 13:
+            from event_streaming_spark.operators.gifcodec import gif_dimensions
+
+            dims = gif_dimensions(content)
+        elif fmt == "webp":
+            dims = webp_dimensions(content)
+        else:
+            dims = None
+    except Exception:
+        dims = None
+    if dims is not None:
+        return fmt, int(dims[0]), int(dims[1]), checksum
+    if fmt in ("jpeg", "gif", "riff", "webp"):
+        raise NotImplementedError(
+            f"{fmt} pixel decode needs a codec library (Pillow/ffmpeg) — "
+            "not available in this environment"
+        )
+    return fmt, -1, -1, checksum
 
 
 def encode_png(img, filters: tuple[int, ...] = (0, 1, 2, 3, 4)) -> bytes:
     """Minimal PNG encoder (stdlib zlib): 8-bit grayscale ``(H, W)`` or
     RGB ``(H, W, 3)``, no interlace.  ``filters`` cycles per scanline
-    (default: all five types) so an encode→``decode_png`` roundtrip
+    (default: all five types) so an encode→``decode_image_meta`` roundtrip
     exercises every defilter path, including the sequential Sub/Average/
     Paeth recurrences.  Forward filtering per the PNG spec operates on
     the ORIGINAL bytes of the current and prior scanlines — independent
@@ -373,93 +398,48 @@ def encode_png(img, filters: tuple[int, ...] = (0, 1, 2, 3, 4)) -> bytes:
     )
 
 
-def decode_image_stdlib(content: bytes) -> tuple[str, int, int, int]:
-    """Best no-dependency kernel: REAL raster decode for PPM/BMP/PNG and
-    baseline JPEG (operators/jpegcodec.py) and GIF (LZW,
-    operators/gifcodec.py)."""
-    import numpy as np
-
-    fmt = sniff_format(content)
-    if fmt in ("ppm", "bmp"):
-        return decode_image_uncompressed(content)
-    if fmt == "png":
-        try:
-            return decode_png(content)
-        except NotImplementedError:
-            # 16-bit / interlaced / truncated: degrade to the header
-            # parse (true dims, byte checksum) instead of a sentinel
-            return decode_image_stub(content)
-        except Exception:
-            # CORRUPT input (zlib.error, struct.error, bad palette
-            # index...): one bad image must never kill the batch —
-            # degrade like the capability gate does (r6 review)
-            return decode_image_stub(content)
-    if fmt == "jpeg":
-        from event_streaming_spark.operators.jpegcodec import decode_jpeg
-
-        try:
-            px = decode_jpeg(content)
-            return "jpeg", px.shape[1], px.shape[0], int(px.astype(np.int64).sum())
-        except Exception:
-            # non-baseline (progressive/arithmetic) or corrupt: degrade
-            # to the stub — true dims from the SOF header when
-            # parseable, NotImplementedError past that (a crawl shard
-            # with one bad image must never kill the batch).
-            return decode_image_stub(content)
-    if fmt == "gif":
-        from event_streaming_spark.operators.gifcodec import decode_gif
-
-        try:
-            px = decode_gif(content)
-            return "gif", px.shape[1], px.shape[0], int(px.astype(np.int64).sum())
-        except Exception:
-            return decode_image_stub(content)
-    return decode_image_stub(content)
-
-
-def select_image_kernel() -> tuple[str, Callable[[bytes], tuple[str, int, int, int]]]:
-    """Capability gate: the best image kernel this environment supports.
-
-    Pillow present → full codec decode (adds jpeg/gif/16-bit); otherwise
-    the stdlib kernel, which REALLY decodes PPM/BMP/PNG rasters."""
-    try:
-        import PIL.Image  # noqa: F401
-
-        return "pillow", decode_image_pillow
-    except ImportError:
-        return "stdlib", decode_image_stdlib
-
-
-def extract_image_meta(
+def _map_media(
     binary_df: DataFrame,
-    kernel: Callable[[bytes], tuple[str, int, int, int]] | None = None,
+    keys: list[str],
+    schema: T.StructType,
+    kernel: Callable[[bytes], tuple],
+    sentinel: Callable[[bytes, int], tuple],
 ) -> DataFrame:
-    """binaryFile rows → typed metadata via Arrow-batched mapInPandas.
+    """Run ``kernel`` over each row's ``content`` in Arrow-batched
+    mapInPandas → the ``keys`` columns followed by the kernel's output.
 
-    ``kernel=None`` auto-selects the best available decoder
-    (``select_image_kernel``)."""
-    if kernel is None:
-        _, kernel = select_image_kernel()
+    One bad file never kills the batch: a kernel that raises
+    NotImplementedError (the media needs a codec) yields
+    ``sentinel(content, -2)``; any other exception (corrupt bytes: a zlib
+    error, a short raster, a lying chunk size) ``sentinel(content, -3)``."""
+    columns = schema.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for path, length, content in zip(pdf["path"], pdf["length"], pdf["content"]):
+            for *key, content in zip(*(pdf[k] for k in keys), pdf["content"]):
+                content = bytes(content)
                 try:
-                    fmt, w, h, ck = kernel(bytes(content))
+                    values = kernel(content)
                 except NotImplementedError:
-                    fmt, w, h, ck = sniff_format(bytes(content)), -2, -2, -2
+                    values = sentinel(content, -2)
                 except Exception:
-                    # corrupt beyond even the stub parse: sentinel row,
-                    # never a dead task (r6 review)
-                    fmt, w, h, ck = sniff_format(bytes(content)), -3, -3, -3
-                out.append((path, int(length), fmt, w, h, ck))
-            yield pd.DataFrame(
-                out, columns=["path", "length", "format", "width", "height", "checksum64"]
-            )
+                    values = sentinel(content, -3)
+                out.append((*key, *values))
+            yield pd.DataFrame(out, columns=columns)
 
-    return binary_df.select("path", "length", "content").mapInPandas(
-        run, IMAGE_META_SCHEMA
+    return binary_df.select(*keys, "content").mapInPandas(run, schema)
+
+
+def extract_image_meta(binary_df: DataFrame) -> DataFrame:
+    """binaryFile rows → typed metadata (``decode_image_meta``) via
+    Arrow-batched mapInPandas; a failed row keeps its sniffed format."""
+    return _map_media(
+        binary_df,
+        ["path", "length"],
+        IMAGE_META_SCHEMA,
+        decode_image_meta,
+        lambda content, code: (sniff_format(content), code, code, code),
     )
 
 
@@ -529,6 +509,37 @@ def flac_stream_meta(content: bytes) -> tuple[int, int, int]:
     return sample_rate, n_channels, (total_samples * 1000) // sample_rate
 
 
+def _read_wav(content: bytes) -> tuple[int, int, int, int, int, bytes | None]:
+    """The one RIFF/WAVE reader → (audio_fmt, n_channels, sample_rate,
+    byte_rate, bits, data).
+
+    Walks the chunk list — fmt/data can be preceded by LIST/fact/cue
+    chunks, so a fixed 44-byte layout is a common parser bug; chunks are
+    word-aligned and the first of each id wins.  ``data`` is the data
+    chunk's payload cut at EOF, or None when there is no data chunk.
+    Raises NotImplementedError for non-RIFF/WAVE bytes and for a ``fmt ``
+    chunk that is missing, shorter than 16 bytes or cut off."""
+    if not (content[:4] == b"RIFF" and content[8:12] == b"WAVE"):
+        raise NotImplementedError("not a RIFF/WAVE container")
+    chunks: dict[bytes, tuple[int, int]] = {}  # id → (payload offset, size)
+    pos = 12  # past 'RIFF' <size> 'WAVE'
+    while pos + 8 <= len(content):
+        size = int.from_bytes(content[pos + 4 : pos + 8], "little")
+        chunks.setdefault(content[pos : pos + 4], (pos + 8, size))
+        pos += 8 + size + (size & 1)
+    off, size = chunks.get(b"fmt ", (0, 0))
+    if size < 16 or off + 16 > len(content):
+        raise NotImplementedError("WAV without a parsable fmt chunk")
+    audio_fmt, n_channels, sample_rate, byte_rate, _align, bits = struct.unpack_from(
+        "<HHIIHH", content, off
+    )
+    data = None
+    if b"data" in chunks:
+        doff, dsize = chunks[b"data"]
+        data = content[doff : doff + dsize]
+    return audio_fmt, n_channels, sample_rate, byte_rate, bits, data
+
+
 def decode_audio_stub(content: bytes) -> tuple[str, int, int, int]:
     """Header-level audio metadata, no codec: WAV (fmt chunk), MP3
     (MPEG-1 Layer III frame header + CBR duration estimate), FLAC
@@ -536,19 +547,10 @@ def decode_audio_stub(content: bytes) -> tuple[str, int, int, int]:
     raises NotImplementedError (that genuinely needs a codec; WAV incl.
     G.711 decodes fully via decode_audio_pcm)."""
     if content[:4] == b"RIFF" and content[8:12] == b"WAVE" and len(content) >= 44:
-        # Walk the chunk list — the fixed 44-byte layout is exactly the
-        # "common parser bug" documented below: a LIST/JUNK chunk before
-        # fmt would have been read as garbage rates (r6 review).
-        chunks = _walk_riff_chunks(content)
-        fm = chunks.get("fmt ")
-        if fm is None or fm[1] < 16 or fm[0] + 16 > len(content):
-            raise NotImplementedError("WAV without a parsable fmt chunk")
-        off = fm[0]
-        n_channels = int.from_bytes(content[off + 2 : off + 4], "little")
-        sample_rate = int.from_bytes(content[off + 4 : off + 8], "little")
-        byte_rate = int.from_bytes(content[off + 8 : off + 12], "little")
-        dc = chunks.get("data")
-        data_len = min(dc[1], max(len(content) - dc[0], 0)) if dc else 0
+        # the chunk walk, not the fixed 44-byte layout: a LIST/JUNK chunk
+        # before fmt would have been read as garbage rates
+        _fmt, n_channels, sample_rate, byte_rate, _bits, data = _read_wav(content)
+        data_len = len(data) if data is not None else 0
         duration_ms = (data_len * 1000) // byte_rate if byte_rate else 0
         return "wav", sample_rate, n_channels, duration_ms
     if content[:4] == b"fLaC":
@@ -566,26 +568,20 @@ def decode_audio_stub(content: bytes) -> tuple[str, int, int, int]:
     return "unknown", -1, -1, -1
 
 
-def extract_audio_meta(
-    binary_df: DataFrame,
-    kernel: Callable[[bytes], tuple[str, int, int, int]] = decode_audio_stub,
-) -> DataFrame:
-    """binaryFile rows → audio metadata via Arrow-batched mapInPandas."""
+#: format column of an audio row whose kernel failed, by sentinel code
+_FAILED_AUDIO = {-2: "undecodable", -3: "corrupt"}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    fmt, sr, ch, dur = kernel(bytes(content))
-                except NotImplementedError:
-                    fmt, sr, ch, dur = "undecodable", -2, -2, -2
-                out.append((path, fmt, sr, ch, dur))
-            yield pd.DataFrame(
-                out, columns=["path", "format", "sample_rate", "n_channels", "duration_ms"]
-            )
 
-    return binary_df.select("path", "content").mapInPandas(run, AUDIO_META_SCHEMA)
+def extract_audio_meta(binary_df: DataFrame) -> DataFrame:
+    """binaryFile rows → audio metadata (``decode_audio_stub``) via
+    Arrow-batched mapInPandas."""
+    return _map_media(
+        binary_df,
+        ["path"],
+        AUDIO_META_SCHEMA,
+        decode_audio_stub,
+        lambda _content, code: (_FAILED_AUDIO[code], code, code, code),
+    )
 
 
 def sample_frame_offsets(
@@ -616,9 +612,8 @@ def sample_frame_offsets(
 # ---------------------------------------------------------------------------
 # REAL audio decode: PCM WAV needs no codec library — the RIFF container
 # is a chunk list and the samples are raw little-endian integers, so
-# numpy alone yields the true waveform.  Unlike the header stub above,
-# this walks the chunk list (fmt/data can be preceded by LIST/fact/cue
-# chunks — a 44-byte fixed layout is a common parser bug) and computes
+# numpy alone yields the true waveform.  Through the same reader as the
+# header stub above (``_read_wav``), this decodes the samples and computes
 # signal-level features downstream models actually gate on: RMS energy,
 # peak amplitude, zero-crossing rate.  Compressed formats (mp3/ogg)
 # still raise NotImplementedError — that genuinely needs a codec.
@@ -639,21 +634,6 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def _walk_riff_chunks(content: bytes) -> dict[str, tuple[int, int]]:
-    """RIFF/WAVE chunk directory: id → (payload offset, payload size)."""
-    chunks: dict[str, tuple[int, int]] = {}
-    pos = 12  # past 'RIFF' <size> 'WAVE'
-    while pos + 8 <= len(content):
-        cid = content[pos : pos + 4].decode("latin-1")
-        size = int.from_bytes(content[pos + 4 : pos + 8], "little")
-        chunks.setdefault(cid, (pos + 8, size))
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    return chunks
-
-
-import functools
-
-
 @functools.lru_cache(maxsize=2)
 def _g711_table(audio_fmt: int):
     """256-entry G.711 expansion table (code byte → int16 PCM), memoized
@@ -662,8 +642,8 @@ def _g711_table(audio_fmt: int):
 
     ITU-T G.711 closed forms: µ-law (fmt 7) mag = ((mant·8+0x84)<<exp)−0x84
     over the complemented byte; A-law (fmt 6) after the 0x55 toggle with
-    the exp=0 special case.  Shared by the float feature decode below and
-    the exact-integer decode used for differential verification."""
+    the exp=0 special case.  Read only by ``_wav_samples``, so the float
+    feature decode and the exact-integer faces expand through one table."""
     import numpy as np
 
     codes = np.arange(256, dtype=np.uint8)
@@ -703,6 +683,47 @@ def encode_wav(payload: bytes, audio_fmt: int = 7, sample_rate: int = 8000,
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
+def _wav_samples(content: bytes):
+    """Decoded sample integers of a WAV → (audio_fmt, n_channels,
+    sample_rate, bits, samples): G.711 A-law/µ-law (fmt 6/7) expanded to
+    int16 PCM through the ITU-T table, linear PCM (fmt 1, 8/16/32-bit) as
+    stored.  Raises NotImplementedError without a data chunk and for
+    encodings that genuinely need a codec (ADPCM, mp3, ogg)."""
+    import numpy as np
+
+    audio_fmt, n_channels, sample_rate, _byte_rate, bits, data = _read_wav(content)
+    if data is None:
+        raise NotImplementedError("missing data chunk")
+    if audio_fmt in (6, 7):
+        # G.711 companded telephony audio: expansion is a pure closed
+        # form (ITU-T G.711), so "compressed" WAV still needs no codec
+        # library.  Expand via a 256-entry table to int16 PCM.
+        samples = _g711_table(audio_fmt)[np.frombuffer(data, dtype=np.uint8)]
+    elif audio_fmt == 1 and bits in (8, 16, 32):
+        dt = {8: np.uint8, 16: np.int16, 32: np.int32}[bits]
+        samples = np.frombuffer(data[: len(data) - len(data) % (bits // 8)], dtype=dt)
+    else:
+        raise NotImplementedError(f"non-PCM wav (fmt={audio_fmt}, bits={bits})")
+    return audio_fmt, n_channels, sample_rate, bits, samples
+
+
+def _g711_wav(content: bytes):
+    """(sample_rate, int64 PCM) of a G.711 WAV — the input of the two
+    exact-integer faces below."""
+    import numpy as np
+
+    audio_fmt, _n_channels, sample_rate, _bits, samples = _wav_samples(content)
+    if audio_fmt not in (6, 7):
+        raise NotImplementedError(f"not G.711 (fmt={audio_fmt})")
+    return sample_rate, samples.astype(np.int64)
+
+
+def _frame_sums(mag, frame_len: int):
+    """Σ over each complete frame of ``frame_len`` samples."""
+    n_frames = mag.size // frame_len
+    return mag[: n_frames * frame_len].reshape(n_frames, frame_len).sum(axis=1)
+
+
 def decode_audio_g711_integers(
     content: bytes, frame_len: int = 160, active_threshold: int | None = None
 ) -> tuple[int, int, int, int, int]:
@@ -715,28 +736,11 @@ def decode_audio_g711_integers(
     Σ|pcm| exceeds ``active_threshold`` (-1 when no threshold given)."""
     import numpy as np
 
-    if not (content[:4] == b"RIFF" and content[8:12] == b"WAVE"):
-        raise NotImplementedError("not a RIFF/WAVE container")
-    chunks = _walk_riff_chunks(content)
-    if "fmt " not in chunks or "data" not in chunks:
-        raise NotImplementedError("missing fmt/data chunk")
-    off, _size = chunks["fmt "]
-    audio_fmt, _n_channels, sample_rate = struct.unpack_from("<HHI", content, off)
-    if audio_fmt not in (6, 7):
-        raise NotImplementedError(f"not G.711 (fmt={audio_fmt})")
-    doff, dsize = chunks["data"]
-    pcm = _g711_table(audio_fmt)[
-        np.frombuffer(content[doff : doff + dsize], dtype=np.uint8)
-    ].astype(np.int64)
+    sample_rate, pcm = _g711_wav(content)
     mag = np.abs(pcm)
     n_active = -1
     if active_threshold is not None:
-        n_frames = pcm.size // frame_len
-        if n_frames:
-            fs = mag[: n_frames * frame_len].reshape(n_frames, frame_len).sum(axis=1)
-            n_active = int((fs > active_threshold).sum())
-        else:
-            n_active = 0
+        n_active = int((_frame_sums(mag, frame_len) > active_threshold).sum())
     return (
         int(sample_rate),
         int(pcm.size),
@@ -746,45 +750,40 @@ def decode_audio_g711_integers(
     )
 
 
+def decode_audio_frame_energies(content: bytes, frame_len: int = 160):
+    """Per-frame Σ|pcm| of a G.711 WAV — the exact-integer feature
+    sequence audio fingerprinting runs on (complete frames only).
+
+    Same RIFF chunk walk and ITU-T expansion table as
+    ``decode_audio_g711_integers``; returns an int64 numpy array so a
+    SQL oracle can reproduce every element bit-for-bit."""
+    import numpy as np
+
+    _sample_rate, pcm = _g711_wav(content)
+    return _frame_sums(np.abs(pcm), frame_len)
+
+
 def decode_audio_pcm(content: bytes) -> tuple[str, int, int, int, int, float, float, float]:
     """Decode a PCM WAV to (format, sample_rate, n_channels, n_samples,
     duration_ms, rms, peak, zero_crossing_rate).
 
     Samples normalized to [-1, 1]; rms/peak/zcr computed on the mono mix.
-    Handles linear PCM (8/16/32-bit) and G.711 A-law/µ-law companding
-    (closed-form expansion, no codec needed); raises NotImplementedError
-    for encodings that genuinely need one (ADPCM, mp3, ogg) and for
-    non-WAV media.
+    Handles linear PCM (8/16/32-bit) and 8-bit G.711 A-law/µ-law
+    companding (closed-form expansion, no codec needed); raises
+    NotImplementedError for encodings that genuinely need one (ADPCM,
+    mp3, ogg) and for non-WAV media.
     """
     import numpy as np
 
-    if not (content[:4] == b"RIFF" and content[8:12] == b"WAVE"):
-        raise NotImplementedError("not a RIFF/WAVE container")
-    chunks = _walk_riff_chunks(content)
-    if "fmt " not in chunks or "data" not in chunks:
-        raise NotImplementedError("missing fmt/data chunk")
-    off, size = chunks["fmt "]
-    audio_fmt, n_channels, sample_rate = struct.unpack_from("<HHI", content, off)
-    bits = struct.unpack_from("<H", content, off + 14)[0]
-    if not (
-        (audio_fmt == 1 and bits in (8, 16, 32))
-        or (audio_fmt in (6, 7) and bits == 8)  # G.711 A-law / µ-law
-    ):
-        raise NotImplementedError(f"non-PCM wav (fmt={audio_fmt}, bits={bits})")
-    doff, dsize = chunks["data"]
-    raw = content[doff : doff + dsize]
+    audio_fmt, n_channels, sample_rate, bits, pcm = _wav_samples(content)
     if audio_fmt in (6, 7):
-        # G.711 companded telephony audio: expansion is a pure closed
-        # form (ITU-T G.711), so "compressed" WAV still needs no codec
-        # library.  Expand via a 256-entry table to int16 PCM.
-        table = _g711_table(audio_fmt)
-        x = table[np.frombuffer(raw, dtype=np.uint8)].astype(np.float64) / 32768.0
+        if bits != 8:
+            raise NotImplementedError(f"non-PCM wav (fmt={audio_fmt}, bits={bits})")
+        x = pcm.astype(np.float64) / 32768.0
     elif bits == 8:  # unsigned
-        x = (np.frombuffer(raw, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
+        x = (pcm.astype(np.float64) - 128.0) / 128.0
     else:
-        dt = np.int16 if bits == 16 else np.int32
-        full = np.float64(2 ** (bits - 1))
-        x = np.frombuffer(raw[: len(raw) - len(raw) % (bits // 8)], dtype=dt).astype(np.float64) / full
+        x = pcm.astype(np.float64) / np.float64(2 ** (bits - 1))
     if n_channels > 1:
         x = x[: len(x) - len(x) % n_channels].reshape(-1, n_channels).mean(axis=1)
     n_samples = int(x.size)
@@ -797,151 +796,33 @@ def decode_audio_pcm(content: bytes) -> tuple[str, int, int, int, int, float, fl
     return ("wav", sample_rate, n_channels, n_samples, duration_ms, rms, peak, zcr)
 
 
+def _audio_features(content: bytes) -> tuple:
+    *head, rms, peak, zcr = decode_audio_pcm(content)
+    return (*head, round(rms, 6), round(peak, 6), round(zcr, 6))
+
+
 def extract_audio_features(binary_df: DataFrame) -> DataFrame:
     """binaryFile rows → decoded signal features via Arrow mapInPandas.
 
     Real numpy PCM decode per item; undecodable media degrade to a
     sentinel row rather than failing the batch (one bad file must not
     kill a 100 TB scan)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    fmt, sr, ch, ns, dur, rms, peak, zcr = decode_audio_pcm(bytes(content))
-                except NotImplementedError:
-                    fmt, sr, ch, ns, dur, rms, peak, zcr = "undecodable", -2, -2, -2, -2, -2.0, -2.0, -2.0
-                except Exception:
-                    # corrupt container (struct.error on a lying chunk
-                    # size...): sentinel row, never a dead task (r6)
-                    fmt, sr, ch, ns, dur, rms, peak, zcr = "corrupt", -3, -3, -3, -3, -3.0, -3.0, -3.0
-                out.append((path, fmt, sr, ch, ns, dur, round(rms, 6), round(peak, 6), round(zcr, 6)))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "path", "format", "sample_rate", "n_channels", "n_samples",
-                    "duration_ms", "rms", "peak", "zero_crossing_rate",
-                ],
-            )
-
-    return binary_df.select("path", "content").mapInPandas(run, AUDIO_FEATURES_SCHEMA)
+    return _map_media(
+        binary_df,
+        ["path"],
+        AUDIO_FEATURES_SCHEMA,
+        _audio_features,
+        lambda _content, code: (_FAILED_AUDIO[code],) + (code,) * 4 + (float(code),) * 3,
+    )
 
 
 # ---------------------------------------------------------------------------
-# Pixel-level kernels: full-raster decode → numpy array, nearest-neighbor
-# resize, and frame sampling over PPM streams (the `ffmpeg -f image2pipe
-# -c:v ppm` wire format: concatenated P6 frames).  All numpy + stdlib —
-# REAL implementations, not stubs (incl. the baseline JPEG codec in
-# operators/jpegcodec.py, LZW GIF in gifcodec.py); h264 remains codec-gated.
+# Pixel-level stages over the decoded raster (``decode_pixels``):
+# nearest-neighbor and box resize, thumbnails, and frame sampling over PPM
+# streams (the `ffmpeg -f image2pipe -c:v ppm` wire format: concatenated
+# P6 frames, each header parsed by ``_ppm_header``).  All numpy + stdlib;
+# h264 remains codec-gated.
 # ---------------------------------------------------------------------------
-
-
-def _ppm_header(content: bytes, offset: int = 0) -> tuple[int, int, int, int]:
-    """Parse one P6 header at ``offset`` → (w, h, maxval, raster_offset)."""
-    if content[offset : offset + 2] != b"P6":
-        raise NotImplementedError("not a P6 PPM frame")
-    parts, idx = [], offset + 2
-    while len(parts) < 3:
-        while idx < len(content) and content[idx : idx + 1].isspace():
-            idx += 1
-        if content[idx : idx + 1] == b"#":
-            idx = content.index(b"\n", idx) + 1
-            continue
-        start = idx
-        while idx < len(content) and not content[idx : idx + 1].isspace():
-            idx += 1
-        parts.append(int(content[start:idx]))
-    idx += 1  # single whitespace before raster
-    w, h, maxval = parts
-    return w, h, maxval, idx
-
-
-def decode_pixels(content: bytes):
-    """Full raster → uint8 ndarray (h, w, 3), for PPM / BMP / PNG / JPEG.
-
-    Alpha channels are dropped, grayscale is expanded, palettes resolved,
-    BMP's bottom-up BGR rows flipped/reordered, JPEG entropy-decoded by
-    the stdlib+numpy baseline codec — callers always get RGB.
-    """
-    import zlib
-
-    import numpy as np
-
-    fmt = sniff_format(content)
-    if fmt == "ppm":
-        w, h, maxval, off = _ppm_header(content)
-        if maxval > 255:
-            raise NotImplementedError("16-bit PPM not supported")
-        return (
-            np.frombuffer(content, dtype=np.uint8, count=w * h * 3, offset=off)
-            .reshape(h, w, 3)
-            .copy()
-        )
-    if fmt == "bmp":
-        data_off = struct.unpack("<I", content[10:14])[0]
-        w, h = struct.unpack("<ii", content[18:26])
-        bpp = struct.unpack("<H", content[28:30])[0]
-        compression = struct.unpack("<I", content[30:34])[0]
-        if bpp != 24 or compression != 0:
-            raise NotImplementedError("BMP beyond 24bpp BI_RGB needs a codec")
-        row_bytes = (w * 3 + 3) & ~3
-        rows = np.frombuffer(
-            content, dtype=np.uint8, count=row_bytes * abs(h), offset=data_off
-        ).reshape(abs(h), row_bytes)[:, : w * 3].reshape(abs(h), w, 3)
-        if h > 0:  # bottom-up storage
-            rows = rows[::-1]
-        return rows[:, :, ::-1].copy()  # BGR → RGB
-    if fmt == "png":
-        ihdr = plte = None
-        idat = bytearray()
-        for ctype, data in _png_chunks(content):
-            if ctype == "IHDR":
-                ihdr = data
-            elif ctype == "PLTE":
-                plte = data
-            elif ctype == "IDAT":
-                idat.extend(data)
-        if ihdr is None or not idat:
-            raise NotImplementedError("missing IHDR/IDAT")
-        w, h, depth, color, _c, _f, interlace = struct.unpack(">IIBBBBB", ihdr)
-        if depth != 8 or interlace != 0 or color not in _PNG_CHANNELS:
-            raise NotImplementedError("PNG variant beyond this kernel")
-        ch = _PNG_CHANNELS[color]
-        raw = zlib.decompress(bytes(idat))
-        if len(raw) != h * (w * ch + 1):
-            raise NotImplementedError("raster size mismatch")
-        px = _png_defilter(raw, h, w * ch, bpp=ch).reshape(h, w, ch)
-        if color == 3:
-            if plte is None:
-                raise NotImplementedError("palette PNG without PLTE")
-            pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
-            return pal[px.reshape(h, w)].copy()
-        if ch == 1:
-            return np.repeat(px, 3, axis=2).copy()
-        if ch == 2:  # gray + alpha: drop alpha, expand
-            return np.repeat(px[:, :, :1], 3, axis=2).copy()
-        return px[:, :, :3].copy()  # RGB / RGBA
-    if fmt == "jpeg":
-        from event_streaming_spark.operators.jpegcodec import decode_jpeg
-
-        return decode_jpeg(content)
-    if fmt == "gif":
-        from event_streaming_spark.operators.gifcodec import decode_gif
-
-        return decode_gif(content)
-    if fmt == "riff" and content[8:12] == b"AVI ":
-        # video still: first MJPEG frame (same first-frame semantics as
-        # GIF); non-MJPEG codecs raise through sample_mjpeg_frames' gate
-        from event_streaming_spark.operators.avidemux import avi_info, iter_video_frames
-        from event_streaming_spark.operators.jpegcodec import decode_jpeg
-
-        if avi_info(content)["video_codec"] not in ("mjpg", "mjpeg"):
-            raise NotImplementedError("AVI still-frame decode needs MJPEG")
-        for _idx, off, size in iter_video_frames(content):
-            return decode_jpeg(content[off : off + size])
-        raise NotImplementedError("AVI with no video frames")
-    raise NotImplementedError(f"no pixel kernel for format {fmt!r}")
 
 
 def resize_nearest(px, out_w: int, out_h: int):
@@ -988,9 +869,7 @@ def iter_ppm_stream(content: bytes):
     """Frames of a concatenated-P6 stream → yields (idx, w, h, offset)."""
     off, idx = 0, 0
     while off < len(content):
-        w, h, maxval, roff = _ppm_header(content, off)
-        if maxval > 255:
-            raise NotImplementedError("16-bit PPM stream")
+        w, h, roff = _ppm_header(content, off)
         yield idx, w, h, roff
         off = roff + w * h * 3
         idx += 1
@@ -1011,66 +890,36 @@ def sample_frames(content: bytes, every_n: int = 2) -> list[tuple[int, int, int,
     return out
 
 
-def extract_thumbnails(
-    binary_df: DataFrame, thumb_w: int = 8, thumb_h: int = 8, scaler=None
-) -> DataFrame:
+THUMBNAIL_SCHEMA = T.StructType(
+    [
+        T.StructField("path", T.StringType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("thumb_w", T.IntegerType()),
+        T.StructField("thumb_h", T.IntegerType()),
+        T.StructField("thumb_checksum64", T.LongType()),
+    ]
+)
+
+
+def extract_thumbnails(binary_df: DataFrame, thumb_w: int = 8, thumb_h: int = 8) -> DataFrame:
     """binaryFile rows → (path, width, height, thumb_w, thumb_h,
     thumb_checksum64) via Arrow-batched mapInPandas: decode → resize →
     feature, the shape of every image-preprocessing stage (batch-wise
     Python on binary columns, schema declared, partition-parallel).
     Thumbnails downscale through the anti-aliased box filter
-    (resize_box); pass ``scaler=resize_nearest`` for the aliasing-exact
-    integer mapping instead."""
-    schema = (
-        "path string, width int, height int, thumb_w int, thumb_h int, "
-        "thumb_checksum64 long"
+    (resize_box).  A codec gap reads -1 in every column, corrupt bytes
+    -3."""
+
+    def thumbnail(content: bytes) -> tuple[int, int, int, int, int]:
+        px = decode_pixels(content)
+        th = resize_box(px, thumb_w, thumb_h)
+        return px.shape[1], px.shape[0], thumb_w, thumb_h, int(th.astype("int64").sum())
+
+    return _map_media(
+        binary_df,
+        ["path"],
+        THUMBNAIL_SCHEMA,
+        thumbnail,
+        lambda _content, code: (-1 if code == -2 else code,) * 5,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    px = decode_pixels(bytes(content))
-                    th = (scaler or resize_box)(px, thumb_w, thumb_h)
-                    rows.append(
-                        (path, px.shape[1], px.shape[0], thumb_w, thumb_h,
-                         int(th.astype("int64").sum()))
-                    )
-                except NotImplementedError:
-                    rows.append((path, -1, -1, -1, -1, -1))
-            yield pd.DataFrame(
-                rows,
-                columns=["path", "width", "height", "thumb_w", "thumb_h",
-                         "thumb_checksum64"],
-            )
-
-    return binary_df.select("path", "content").mapInPandas(run, schema)
-
-
-def decode_audio_frame_energies(content: bytes, frame_len: int = 160):
-    """Per-frame Σ|pcm| of a G.711 WAV — the exact-integer feature
-    sequence audio fingerprinting runs on (complete frames only).
-
-    Same RIFF chunk walk and ITU-T expansion table as
-    ``decode_audio_g711_integers``; returns an int64 numpy array so a
-    SQL oracle can reproduce every element bit-for-bit."""
-    import numpy as np
-
-    if not (content[:4] == b"RIFF" and content[8:12] == b"WAVE"):
-        raise NotImplementedError("not a RIFF/WAVE container")
-    chunks = _walk_riff_chunks(content)
-    if "fmt " not in chunks or "data" not in chunks:
-        raise NotImplementedError("missing fmt/data chunk")
-    off, _size = chunks["fmt "]
-    audio_fmt, _n_channels, _sample_rate = struct.unpack_from("<HHI", content, off)
-    if audio_fmt not in (6, 7):
-        raise NotImplementedError(f"not G.711 (fmt={audio_fmt})")
-    doff, dsize = chunks["data"]
-    pcm = _g711_table(audio_fmt)[
-        np.frombuffer(content[doff : doff + dsize], dtype=np.uint8)
-    ].astype(np.int64)
-    n_frames = pcm.size // frame_len
-    if not n_frames:
-        return np.zeros(0, dtype=np.int64)
-    return np.abs(pcm[: n_frames * frame_len]).reshape(n_frames, frame_len).sum(axis=1)

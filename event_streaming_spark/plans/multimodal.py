@@ -653,7 +653,7 @@ def multimodal_phash_hamming_threshold_curve(
 # ---------------------------------------------------------------------------
 # PNG: content-addressed test pattern (size and seed derived from doc_id
 # and the document's text length) → encode_png (filters cycling 0-4) →
-# decode_png → (width, height, pixel byte sum).  Lossless codec ⇒ the
+# decode_image_meta → (width, height, pixel byte sum).  Lossless codec ⇒ the
 # oracle computes the same sum straight from the generator formula.
 # ---------------------------------------------------------------------------
 
@@ -694,14 +694,14 @@ def multimodal_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _roundtrip(w: pd.Series, h: pd.Series, seed: pd.Series) -> pd.DataFrame:
         import numpy as np
 
-        from event_streaming_spark.operators.multimodal import decode_png, encode_png
+        from event_streaming_spark.operators.multimodal import decode_image_meta, encode_png
 
         ws, hs, ss = [], [], []
         for w_, h_, sd in zip(w, h, seed):
             w_, h_, sd = int(w_), int(h_), int(sd)
             y, x, c = np.ogrid[0:h_, 0:w_, 0:3]
             img = ((sd + 7 * y + 3 * x + 11 * c) % 256).astype(np.uint8)
-            _fmt, w_px, h_px, px_sum = decode_png(encode_png(img))
+            _fmt, w_px, h_px, px_sum = decode_image_meta(encode_png(img))
             ws.append(w_px)
             hs.append(h_px)
             ss.append(px_sum)

@@ -17,7 +17,7 @@ from event_streaming_spark.operators.multimodal import (
     _g711_table,
     decode_audio_g711_integers,
     decode_audio_pcm,
-    decode_png,
+    decode_image_meta,
     encode_png,
     encode_wav,
 )
@@ -26,17 +26,17 @@ from event_streaming_spark.operators.multimodal import (
 @pytest.mark.parametrize("h,w", [(1, 1), (1, 7), (5, 1), (5, 6), (14, 16), (11, 3)])
 def test_png_roundtrip_rgb_all_filters(h, w):
     img = ((np.arange(h * w * 3).reshape(h, w, 3) * 7 + 3) % 256).astype(np.uint8)
-    fmt, ww, hh, s = decode_png(encode_png(img))
+    fmt, ww, hh, s = decode_image_meta(encode_png(img))
     assert (fmt, ww, hh, s) == ("png", w, h, int(img.astype(np.int64).sum()))
 
 
 def test_png_roundtrip_gray_and_single_filter():
     img = ((np.arange(12 * 9).reshape(12, 9) * 11 + 5) % 256).astype(np.uint8)
-    assert decode_png(encode_png(img)) == ("png", 9, 12, int(img.astype(np.int64).sum()))
+    assert decode_image_meta(encode_png(img)) == ("png", 9, 12, int(img.astype(np.int64).sum()))
     # every filter type alone must also roundtrip (isolates a broken branch)
     rgb = ((np.arange(6 * 5 * 3).reshape(6, 5, 3) * 13 + 1) % 256).astype(np.uint8)
     for f in range(5):
-        assert decode_png(encode_png(rgb, filters=(f,)))[3] == int(
+        assert decode_image_meta(encode_png(rgb, filters=(f,)))[3] == int(
             rgb.astype(np.int64).sum()
         )
 

@@ -20,7 +20,7 @@ from event_streaming_spark.operators.gifcodec import (
     gif_frame_count,
 )
 from event_streaming_spark.operators.multimodal import (
-    decode_image_stdlib,
+    decode_image_meta,
     decode_pixels,
     sniff_format,
 )
@@ -161,5 +161,5 @@ def test_multimodal_kernel_wiring():
     data = _encode_gif(grid, PALETTE)
     want = np.array(PALETTE, dtype=np.uint8)[grid]
     assert np.array_equal(decode_pixels(data), want)
-    fmt, w, h, ck = decode_image_stdlib(data)
+    fmt, w, h, ck = decode_image_meta(data)
     assert (fmt, w, h, ck) == ("gif", 12, 10, int(want.astype(np.int64).sum()))

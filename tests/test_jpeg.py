@@ -15,7 +15,7 @@ from event_streaming_spark.operators.jpegcodec import (
     jpeg_dimensions,
 )
 from event_streaming_spark.operators.multimodal import (
-    decode_image_stdlib,
+    decode_image_meta,
     decode_pixels,
     sniff_format,
 )
@@ -110,12 +110,12 @@ def test_multimodal_kernel_wiring():
     px = decode_pixels(data)
     assert px.shape == (16, 16, 3) and _psnr(px, img) > 27
     # the stdlib metadata kernel reports true dims + pixel-sum feature
-    fmt, w, h, ck = decode_image_stdlib(data)
+    fmt, w, h, ck = decode_image_meta(data)
     assert (fmt, w, h) == ("jpeg", 16, 16)
     assert ck == int(px.astype(np.int64).sum())
     # corrupt jpeg degrades through the stub (dims unparseable → gate)
     with pytest.raises(NotImplementedError):
-        decode_image_stdlib(b"\xff\xd8\xff\xe0" + b"\x00" * 8)
+        decode_image_meta(b"\xff\xd8\xff\xe0" + b"\x00" * 8)
 
 
 def test_extract_image_meta_decodes_jpeg_in_spark(spark, tmp_path):

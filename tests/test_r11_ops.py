@@ -357,22 +357,6 @@ def test_kneser_ney_matches_pure_python_replication(spark, tmp_path):
     assert got == expected
 
 
-def test_phash_hamming_curve_monotone(spark):
-    from event_streaming_spark.plans.multimodal import (
-        _HTC_RADII,
-        multimodal_phash_hamming_threshold_curve,
-    )
-
-    rows = multimodal_phash_hamming_threshold_curve(
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    assert [r.hamming_radius for r in rows] == list(_HTC_RADII)
-    pair_counts = [r.n_pairs for r in rows]
-    slot_counts = [r.n_doc_slots for r in rows]
-    assert pair_counts == sorted(pair_counts)
-    assert slot_counts == sorted(slot_counts)
-
-
 def test_streaming_psi_drain_equals_batch(spark, tmp_path):
     from event_streaming_spark.plans.events import (
         events_value_psi_daily,

@@ -226,34 +226,6 @@ def test_market_basket_fixture_sanity(spark):
     assert lifts == sorted(lifts, reverse=True)
 
 
-def test_video_scene_segments_invariants(spark):
-    from event_streaming_spark.plans.multimodal import (
-        _VS_FRAMES,
-        _VS_N_DOCS,
-        multimodal_video_scene_segments,
-    )
-
-    rows = multimodal_video_scene_segments(spark, SF_SMALL).collect()
-    assert len(rows) == _VS_N_DOCS
-    seen_multi = False
-    for r in rows:
-        assert r.n_frames == _VS_FRAMES
-        assert 1 <= r.n_scenes <= _VS_FRAMES
-        assert 1 <= r.longest_scene_frames <= _VS_FRAMES
-        # first cut exists iff there is more than one scene
-        assert (r.first_cut_idx == -1) == (r.n_scenes == 1)
-        if r.first_cut_idx != -1:
-            assert 1 <= r.first_cut_idx < _VS_FRAMES
-        seen_multi = seen_multi or r.n_scenes > 1
-    assert seen_multi, "seed bits should plant cuts in most videos"
-    # videos in the same residue class share the seed => identical structure
-    by_group = {}
-    for r in rows:
-        key = r.video_id % 30
-        val = (r.n_scenes, r.longest_scene_frames, r.first_cut_idx)
-        assert by_group.setdefault(key, val) == val
-
-
 def test_truncation_waste_curve_by_hand(spark, tmp_path):
     from event_streaming_spark.plans.curation import docs_truncation_waste_curve
 
@@ -286,24 +258,6 @@ def test_streaming_msprt_equals_batch(spark):
     batch = [tuple(r) for r in events_msprt_always_valid(spark, SF_SMALL).collect()]
     stream = [tuple(r) for r in streaming_msprt_drain(spark, SF_SMALL).collect()]
     assert stream == batch
-
-
-def test_audio_fingerprint_matches_are_within_class(spark):
-    from event_streaming_spark.plans.multimodal import (
-        _AFP_GROUPS,
-        _AFP_N_DOCS,
-        multimodal_audio_fingerprint_match,
-    )
-
-    rows = multimodal_audio_fingerprint_match(spark, SF_SMALL).collect()
-    # every clip pair sharing a landmark hash is a replica pair: classes
-    # walk distinct Z256 permutations, so cross-class energy collisions
-    # do not happen — all C(6,2) pairs per class match, nothing else
-    n_per_class = _AFP_N_DOCS // _AFP_GROUPS
-    assert len(rows) == _AFP_GROUPS * n_per_class * (n_per_class - 1) // 2
-    for r in rows:
-        assert r.clip_a % _AFP_GROUPS == r.clip_b % _AFP_GROUPS
-        assert r.n_shared >= 1
 
 
 def test_doremi_weights_identical_sources_split_evenly(spark, tmp_path):
